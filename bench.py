@@ -5,9 +5,8 @@
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 ``value`` is total wall-clock over the headline suite; ``queries``
-holds per-query seconds. The docs/sec north metric and the N-vs-4N
-scaling protocol live in tools/bench_scaling.py (writes BENCH/
-BASELINE.md evidence).
+holds per-query seconds. The per-layer engine benchmark is
+``perfbench/`` (see BENCHMARK.json).
 """
 
 from __future__ import annotations
@@ -32,63 +31,18 @@ HEADLINE = [
     "rasterize_grid",
     "crop",
     "xyz_lookup",
-    "tpch_q1",
-    "revenue_join",
-    "window_topk",
-    "sessionize",
-    "text_stats",
-    "dedup_exact",
-    "minhash_lsh",
-    "embedding_topk",
-    "simhash_pairs",
-    "ann_ivf",
-    "asof_join",
-    "media_features",
-    "media_jpeg_decode",
-    "media_wav_decode",
-    "media_video_decode",
-    "media_vp8_decode",
-    "media_mp3_meta",
-    "raster_ingest",
     "pmtiles_webp_ingest",
-    "text_entropy",
-    "pii_scrub",
-    "repeated_ngrams",
-    "hll_registers",
-    "cms_topk",
     "focal_stats",
-    "interval_join",
-    "bm25_score",
-    "embedding_centroids",
-    "funnel_steps",
-    "pagerank",
     "hillshade",
     "ice_merge",
-    "weighted_sample",
-    "ann_pq",
     "resample_bilinear",
-    "cohort_retention",
-    "decontaminate",
     "idw_grid",
-    "exact_substr",
-    "url_dedup",
     "slope_aspect",
     "coord_interop",
-    "paragraph_dedup",
-    "semdedup",
     "flow_direction",
     "flow_accum",
     "flow_accum_fix",
-    "tfidf_topterms",
-    "stratified_sample",
-    "stratified_exact_n",
     "warc_ingest",
-    "stream_warc",
-    "robots_filter",
-    "crawl_frontier",
-    "anchor_topk",
-    "main_content",
-    "crawl_delta",
 ]
 
 

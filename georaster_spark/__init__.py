@@ -2,9 +2,9 @@
 
 A from-scratch engine with the query semantics of pka/georaster
 (raster grids, geotransforms, tiled pixel access, web-mercator tiles)
-re-expressed over Spark DataFrames, plus the spatial-join / kNN /
-dedup / similarity operators a web-scale (100 TB-class) training-data
-pipeline needs.
+re-expressed over Spark DataFrames, plus the point-in-polygon / kNN
+joins and the checkpointed snapshot-table ingest that a web-scale
+(100 TB-class) geocoded-document pipeline needs.
 
 Design rules (see SURVEY.md):
 - DataFrame/SQL first; Catalyst does pushdown/pruning/broadcast.

@@ -783,7 +783,7 @@ def d8_accumulation_k(flow: DataFrame, k: int = 4) -> DataFrame:
     driver state; the frontier only SHRINKS (paths that hit a sink or
     the boundary drop out). The union of per-step arrivals is a
     single groupBy count. This is the fixed-iteration house pattern
-    (pagerank, graph.py) with an exactly-unrollable SQL twin. FULL
+    with an exactly-unrollable SQL twin. FULL
     accumulation needs O(max path length) peeling rounds or an
     Euler-tour doubling — out of scope for a catalog query; at 100 TB
     you'd run this same plan with localCheckpoint every few rounds

@@ -8,9 +8,9 @@ cell-encode→tile-fetch→local-sample lifecycle, ``src/pmtiles.rs:37-51``):
    NumPy and **broadcast** (the polygon side is always the small
    side; no shuffle). Cells fully inside a polygon are marked
    ``full`` — documents landing there skip the exact test entirely.
-2. **Exact ray-cast** (fine): candidates from partial cells run a
-   vectorized even-odd test inside an Arrow-batched pandas UDF (no
-   per-row Python).
+2. **Exact ray-cast** (fine): candidates from partial cells run an
+   even-odd test as flat Column arithmetic over the polygon edges
+   that ride along in the cover (no Python).
 
 Skew: hot cells concentrate candidates. The join itself is broadcast
 (no shuffle to skew), but downstream per-cell aggregations shuffle on
@@ -25,10 +25,7 @@ unless the caller aggregates.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -89,28 +86,6 @@ def build_cover(polys: list[Polygon], res: int) -> list[tuple[int, str, bool]]:
                 )
                 out.append((cell, p.poly_id, full))
     return out
-
-
-def ray_cast_udf(spark, polys: list[Polygon]):
-    """Vectorized exact point-in-polygon as a scalar pandas UDF.
-
-    Polygon rings ship once per executor via a broadcast variable —
-    closures would re-pickle per task.
-    """
-    rings_bc = spark.sparkContext.broadcast({p.poly_id: p.ring for p in polys})
-
-    @F.pandas_udf("boolean")
-    def _inside(poly_id: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        rings = rings_bc.value
-        lonv = lon.to_numpy(np.float64)
-        latv = lat.to_numpy(np.float64)
-        out = np.zeros(len(poly_id), dtype=bool)
-        for pid in poly_id.unique():
-            m = (poly_id == pid).to_numpy()
-            out[m] = points_in_ring(lonv[m], latv[m], rings[pid])
-        return pd.Series(out)
-
-    return _inside
 
 
 def ray_cast_edge_cols(lon: Column, lat: Column, max_vertices: int) -> Column:
@@ -177,38 +152,25 @@ def pip_join(
     res: int,
     lon: Column | str = "lon",
     lat: Column | str = "lat",
-    method: str = "expr",
 ) -> DataFrame:
     """Point-in-polygon join: docs × polygons → (doc columns, poly_id).
 
     Emits one output row per (document, containing polygon) pair —
     overlapping polygons multiply rows, matching the relational
-    semantics the oracle checks.
-
-    ``method='expr'`` (default) runs the exact ray-cast as Column
-    algebra (JVM, scales linearly with cores); ``method='pandas'``
-    uses the Arrow-vectorized NumPy kernel (kept for parity and for
-    polygon sets too large to ship per-row).
+    semantics the oracle checks. The exact ray-cast runs as Column
+    algebra over the broadcast cover's edge columns (JVM, scales
+    linearly with cores).
     """
     spark = docs.sparkSession
     lon = F.col(lon) if isinstance(lon, str) else lon
     lat = F.col(lat) if isinstance(lat, str) else lat
     docs_c = docs.withColumn("cell", cell_encode_cols(lon, lat, res))
-    if method == "expr":
-        cover, max_v = cover_df(spark, polys, res)
-        cand = docs_c.join(F.broadcast(cover), "cell")
-        edge_cols = [
-            f"{p}_{j}" for j in range(max_v) for p in ("x0", "y0", "x1", "y1")
-        ]
-        return cand.where(
-            F.col("full") | ray_cast_edge_cols(lon, lat, max_v)
-        ).drop("full", *edge_cols)
-    cover = spark.createDataFrame(
-        build_cover(polys, res), "cell long, poly_id string, full boolean"
-    )
+    cover, max_v = cover_df(spark, polys, res)
     cand = docs_c.join(F.broadcast(cover), "cell")
-    inside = ray_cast_udf(spark, polys)
-    return cand.where(F.col("full") | inside(F.col("poly_id"), lon, lat)).drop("full")
+    edge_cols = [f"{p}_{j}" for j in range(max_v) for p in ("x0", "y0", "x1", "y1")]
+    return cand.where(F.col("full") | ray_cast_edge_cols(lon, lat, max_v)).drop(
+        "full", *edge_cols
+    )
 
 
 def _disk1_cells_col(cell: Column, res: int) -> Column:
@@ -351,16 +313,6 @@ def salted_cell_counts(
     return partial.groupBy("cell").agg(F.sum("_partial").cast("long").alias(count_col))
 
 
-def salted_repartition(df: DataFrame, key: str, salt_k: int, n_partitions: int) -> DataFrame:
-    """Explicit salted repartition before a heavy per-key stage —
-    spreads a hot key over ``salt_k`` partitions (north_rule E5)."""
-    return (
-        df.withColumn("_salt", F.pmod(F.xxhash64(*df.columns), F.lit(salt_k)))
-        .repartition(n_partitions, F.col(key), F.col("_salt"))
-        .drop("_salt")
-    )
-
-
 def salted_equi_join(
     left: DataFrame,
     right: DataFrame,
@@ -379,9 +331,9 @@ def salted_equi_join(
     matching right row exactly once, through its own salt replica.
 
     ``hot_keys=None`` salts EVERY key — simple, but it multiplies the
-    whole build side's shuffle volume by ``salt_k``; BENCH/SF1_STRESS.md
-    measures that cost dominating when the build side is large, with
-    AQE's runtime skew-split beating it. Pass ``hot_keys`` (from a
+    whole build side's shuffle volume by ``salt_k``, a cost that
+    dominates when the build side is large (AQE's runtime skew-split
+    then beats it). Pass ``hot_keys`` (from a
     cheap count pre-pass, or known a priori as in pip_join_hot's hot
     cells) to salt ONLY those keys: the cold partition joins plain,
     the hot partition joins salted, and only the hot keys' build rows

@@ -12,14 +12,12 @@ Rules that keep the value-hash comparison honest:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from georaster_spark import cells
 from georaster_spark.datagen import (
     DTM_GEOM,
-    HOT_LAT0,
-    HOT_LON0,
     dtm_pixels_df,
     dtm_pixels_sql,
     geocode_cols,
@@ -28,7 +26,7 @@ from georaster_spark.datagen import (
     polygons,
 )
 from georaster_spark.functions.decode import mapbox_height, terrarium_height
-from georaster_spark.functions.geo import haversine_cols, haversine_sql
+from georaster_spark.functions.geo import haversine_sql
 from georaster_spark.operators import raster as R
 from georaster_spark.operators.knn import knn_join
 from georaster_spark.operators.spatial_join import pip_join, salted_cell_counts
@@ -624,11 +622,10 @@ def sql_flow_direction():
     """
 
 
-# Implemented + scalar-reference-tested in round 4
-# (tests/test_raster.py::test_d8_accumulation_k_matches_scalar_
-# reference), staged while the r4 window was full, REGISTERED in the
-# round-5 head. The iterate-to-fixpoint contributing-area form is
-# flow_accum_fix below (registered under DRIVER_UNCHECKED_NEW).
+# k-step D8 accumulation (scalar reference:
+# tests/test_raster.py::test_d8_accumulation_k_matches_scalar_
+# reference). The iterate-to-fixpoint contributing-area form is
+# flow_accum_fix below.
 FLOW_ACC_K = 4
 
 
@@ -985,835 +982,6 @@ def sql_resample_bilinear():
     """
 
 
-STOPWORDS = ["the", "a", "of", "and", "cell", "doc"]
-
-
-def q_doc_quality(spark, sf_dir):
-    """Webtext quality scoring: punctuation ratio, stopword ratio,
-    length saturation — combined into one deterministic score (the
-    heuristic-filter stage of a training-data pipeline)."""
-    d = _t(spark, sf_dir, "documents")
-    tok = F.split(F.col("text"), " ")
-    n_tok = F.size(tok).cast("double")
-    stop_ratio = F.size(F.filter(tok, lambda t: t.isin(STOPWORDS))).cast("double") / n_tok
-    n_punct = (
-        F.length("text") - F.length(F.regexp_replace(F.col("text"), "[.,;:!?]", ""))
-    ).cast("double")
-    punct_ratio = n_punct / F.greatest(F.length("text"), F.lit(1)).cast("double")
-    len_sat = F.least(n_tok / 100.0, F.lit(1.0))
-    score = stop_ratio * 0.4 + len_sat * 0.4 + punct_ratio * 0.2
-    return d.select(
-        "doc_id",
-        F.round(stop_ratio * 1000000.0, 0).cast("long").alias("stop_ratio_e6"),
-        F.round(punct_ratio * 1000000.0, 0).cast("long").alias("punct_ratio_e6"),
-        F.round(score * 1000000.0, 0).cast("long").alias("quality_e6"),
-    )
-
-
-def q_text_entropy(spark, sf_dir):
-    """Webtext quality signals round 2: character-level Shannon
-    entropy (low-entropy docs are boilerplate/repeated spam) and the
-    word-repetition ratio (1 - distinct/total tokens — the within-doc
-    line/paragraph-dedup proxy). Entropy = two per-doc-keyed
-    aggregations (char histogram, then -sum(p*log2 p)) — both
-    partial-aggregated, shuffle keyed on doc_id, scale-safe."""
-    d = _t(spark, sf_dir, "documents")
-    chars = d.select(
-        "doc_id", F.explode(F.split(F.col("text"), "(?!^)")).alias("c")
-    ).where(F.col("c") != "")  # the lookahead split emits a trailing ""
-    counts = chars.groupBy("doc_id", "c").agg(F.count(F.lit(1)).alias("n"))
-    # column named "n_tot", NOT "N": Spark (and DuckDB) identifiers
-    # are case-insensitive, so "N" would silently REPLACE "n" and
-    # every p becomes 1 (caught by the semantics unit test — the
-    # value-hash oracle alone can't see a bug mirrored on both sides)
-    p = F.col("n").cast("double") / F.col("n_tot").cast("double")
-    ent = (
-        counts.withColumn("n_tot", F.sum("n").over(Window.partitionBy("doc_id")))
-        .groupBy("doc_id")
-        .agg((-F.sum(p * F.log2(p))).alias("H"))
-    )
-    tok = F.split(F.col("text"), " ")
-    rep = (
-        F.lit(1.0)
-        - F.size(F.array_distinct(tok)).cast("double") / F.size(tok).cast("double")
-    )
-    reps = d.select("doc_id", rep.alias("rep"))
-    return (
-        ent.join(reps, "doc_id")
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.round(F.col("H") * 1000000.0, 0).cast("long").alias("entropy_e6"),
-            F.round(F.col("rep") * 1000000.0, 0).cast("long").alias("rep_ratio_e6"),
-        )
-    )
-
-
-def sql_text_entropy():
-    return """
-    WITH ch AS (
-      SELECT doc_id, substr(text, CAST(i AS INT), 1) AS c
-      FROM documents, unnest(generate_series(1, len(text))) AS t(i)
-    ),
-    counts AS (SELECT doc_id, c, count(*) AS n FROM ch GROUP BY 1, 2),
-    ent AS (
-      SELECT doc_id,
-             -sum((CAST(n AS DOUBLE) / CAST(n_tot AS DOUBLE)) * log2(CAST(n AS DOUBLE) / CAST(n_tot AS DOUBLE))) AS H
-      FROM (SELECT doc_id, n, sum(n) OVER (PARTITION BY doc_id) AS n_tot FROM counts)
-      GROUP BY 1
-    ),
-    reps AS (
-      SELECT doc_id,
-             1.0 - CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-                   / CAST(len(string_split(text, ' ')) AS DOUBLE) AS rep
-      FROM documents
-    )
-    SELECT CAST(e.doc_id AS BIGINT) AS doc_id,
-           CAST(round(H * 1000000.0, 0) AS BIGINT) AS entropy_e6,
-           CAST(round(rep * 1000000.0, 0) AS BIGINT) AS rep_ratio_e6
-    FROM ent e JOIN reps r ON e.doc_id = r.doc_id
-    """
-
-
-HLL_P = 12  # 4096 registers — std error 1.04/sqrt(m) ≈ 1.6%
-
-
-def q_hll_registers(spark, sf_dir):
-    """Portable HyperLogLog over document content: per-bucket
-    max-rho registers from an md5-derived 60-bit hash (bucket = low
-    12 bits, rho = leading-zero count of the remaining 48 + 1,
-    computed with an integer smear + bit_count — no float log, so
-    both engines produce IDENTICAL integer registers and the oracle
-    hash-matches exactly, unlike engine-native HLL sketches which
-    never agree across implementations). One partial-aggregated
-    groupBy on 4096 keys — the estimator a 100 TB distinct-count
-    runs with one tiny shuffle. The estimate derivation from these
-    registers (harmonic mean / linear counting) is asserted against
-    the exact distinct count in tests/test_workloads.py."""
-    d = _t(spark, sf_dir, "documents")
-    h = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("long")
-    hb = d.select((h % (1 << HLL_P)).alias("bucket"), F.shiftright(h, HLL_P).alias("h48"))
-    # highest-set-bit via bit smearing (exact integer arithmetic):
-    # y = h48 | h48>>1 | ... | h48>>32; bit_count(y) = bit_length
-    y = F.col("h48")
-    for s in (1, 2, 4, 8, 16, 32):
-        y = y.bitwiseOR(F.shiftright(y, s))
-    rho = (F.lit(49) - F.bit_count(y)).cast("long")
-    return (
-        hb.select("bucket", rho.alias("rho"))
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("rho"))
-        .select(F.col("bucket").cast("long").alias("bucket"), "rho")
-    )
-
-
-def sql_hll_registers():
-    m = 1 << HLL_P
-    smear = "h48"
-    for s in (1, 2, 4, 8, 16, 32):
-        smear = f"({smear} | ({smear} >> {s}))"
-    return f"""
-    WITH hb AS (
-      SELECT CAST('0x' || substr(md5(text), 1, 15) AS BIGINT) % {m} AS bucket,
-             CAST('0x' || substr(md5(text), 1, 15) AS BIGINT) >> {HLL_P} AS h48
-      FROM documents
-    )
-    SELECT CAST(bucket AS BIGINT) AS bucket,
-           CAST(max(49 - bit_count({smear})) AS BIGINT) AS rho
-    FROM hb GROUP BY 1
-    """
-
-
-BM25_TERMS = ["spark", "window", "merge", "hash"]
-BM25_K1, BM25_B = 1.2, 0.75
-
-
-def q_bm25_score(spark, sf_dir):
-    """BM25 relevance scoring of every document against a pinned
-    query-term set — the retrieval / quality-scoring stage of a
-    training-data pipeline. Scale shape: tokens are FILTERED to the
-    query terms before any shuffle (non-matching terms never leave
-    the map side), per-(doc,term) tf is one partial-aggregated
-    groupBy, and the document-frequency + corpus stats sides are
-    broadcast (a handful of rows). All arithmetic JVM-side; doc
-    lengths and counts are integer-exact in both engines, so the only
-    cross-engine noise is the final <=4-term float sum, absorbed by
-    the e6 rounding."""
-    d = _t(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-    dl = d.select(
-        "doc_id", F.size(F.split("text", " ")).cast("double").alias("dl")
-    )
-    stats = d.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg(F.size(F.split("text", " ")).cast("double")).alias("avgdl"),
-    )
-    tf = (
-        tok.where(F.col("term").isin(BM25_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-    )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    k1, b = BM25_K1, BM25_B
-    scored = (
-        tf.join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .join(F.broadcast(dfreq), "term")
-        .withColumn(
-            "contrib",
-            F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-            * (F.col("tf") * (k1 + 1.0))
-            / (
-                F.col("tf")
-                + k1 * ((1.0 - b) + b * F.col("dl") / F.col("avgdl"))
-            ),
-        )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_terms"),
-        F.round(F.sum("contrib") * 1000000.0, 0).cast("long").alias("score_e6"),
-    ).select(F.col("doc_id").cast("long").alias("doc_id"), "n_terms", "score_e6")
-
-
-def sql_bm25_score():
-    terms = ", ".join(f"'{t}'" for t in BM25_TERMS)
-    k1, b = BM25_K1, BM25_B
-    # float literals in e-notation so DuckDB parses them as DOUBLE,
-    # not DECIMAL; (k1 + 1.0) kept as the same runtime addition
-    return f"""
-    WITH dl AS (
-      SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-      FROM documents
-    ),
-    stats AS (
-      SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-             avg(CAST(len(string_split(text, ' ')) AS DOUBLE)) AS avgdl
-      FROM documents
-    ),
-    tf AS (
-      SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
-      WHERE term IN ({terms})
-      GROUP BY 1, 2
-    ),
-    dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY 1)
-    SELECT CAST(t.doc_id AS BIGINT) AS doc_id,
-           CAST(count(*) AS BIGINT) AS n_terms,
-           CAST(round(sum(
-             ln((n_docs - df + 0.5e0) / (df + 0.5e0) + 1.0e0)
-             * (tf * ({k1}e0 + 1.0e0))
-             / (tf + {k1}e0 * ((1.0e0 - {b}e0) + {b}e0 * dl / avgdl))
-           ) * 1000000.0, 0) AS BIGINT) AS score_e6
-    FROM tf t JOIN dl USING (doc_id) CROSS JOIN stats JOIN dfreq USING (term)
-    GROUP BY 1
-    """
-
-
-# Implemented + semantics-tested in round 4, staged while the r4
-# window was full, REGISTERED in the round-5 head.
-TFIDF_TOP_K = 3
-
-
-def q_tfidf_topterms(spark, sf_dir):
-    """Per-document top-3 TF-IDF terms — the keyword-extraction /
-    doc-representation stage of a curation pipeline. Unlike bm25
-    (pinned query terms, broadcast stats) this runs over the FULL
-    vocabulary: df comes from the tf table itself (one extra
-    term-keyed aggregate, vocabulary-sized output) and joins back on
-    term with NO broadcast hint — at web scale the vocabulary can
-    exceed broadcast limits, so AQE picks the strategy from runtime
-    stats. Per-doc top-k is a rank-limited window (WindowGroupLimit
-    pushes the k cut below the sort). Score = tf · ln((N+1)/(df+1)),
-    e6-rounded; ties break on term text so the cut is deterministic
-    cross-engine."""
-    d = _t(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-    tf = (
-        tok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-    )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    stats = d.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-    scored = (
-        tf.join(dfreq, "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "score",
-            F.col("tf") * F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("term"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TFIDF_TOP_K)
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col("rnk").cast("long").alias("rnk"),
-            "term",
-            F.round(F.col("score") * 1000000.0, 0).cast("long").alias("score_e6"),
-        )
-    )
-
-
-def sql_tfidf_topterms():
-    return f"""
-    WITH tf AS (
-      SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
-      GROUP BY 1, 2
-    ),
-    dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY 1),
-    stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
-    scored AS (
-      SELECT doc_id, term,
-             tf * ln((n_docs + 1.0e0) / (df + 1.0e0)) AS score
-      FROM tf JOIN dfreq USING (term) CROSS JOIN stats
-    ),
-    ranked AS (
-      SELECT doc_id, term, score,
-             row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rnk
-      FROM scored
-    )
-    SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(rnk AS BIGINT) AS rnk, term,
-           CAST(round(score * 1000000.0, 0) AS BIGINT) AS score_e6
-    FROM ranked WHERE rnk <= {TFIDF_TOP_K}
-    """
-
-
-def q_embedding_centroids(spark, sf_dir):
-    """Per-label centroid of the embedding corpus (class prototypes /
-    cluster summaries for a training pipeline): posexplode to
-    (label, dim) and ONE partial-aggregated groupBy on label x 64
-    dims — constant-size aggregate state, no vector ever collected.
-    Output long-form (label, pos, n, sum_e6): each dim is quantized
-    to an e6 INTEGER before the sum, so the aggregate is
-    summation-ORDER-INDEPENDENT (Spark's partial/merge tree vs
-    DuckDB's sequential scan give bit-identical results — a float
-    avg() could flip the value hash on a .5 rounding boundary). The
-    centroid mean is sum_e6 / (n * 1e6), derivable by any reader."""
-    e = _t(spark, sf_dir, "embeddings")
-    flat = e.select("label", F.posexplode("embedding").alias("pos", "v"))
-    return (
-        flat.groupBy("label", "pos")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(
-                F.round(F.col("v").cast("double") * 1000000.0, 0).cast("long")
-            ).alias("sum_e6"),
-        )
-        .select(
-            F.col("label").cast("long").alias("label"),
-            F.col("pos").cast("long").alias("pos"),
-            "n",
-            "sum_e6",
-        )
-    )
-
-
-def sql_embedding_centroids():
-    return """
-    WITH flat AS (
-      SELECT label, generate_subscripts(embedding, 1) AS i,
-             CAST(unnest(embedding) AS DOUBLE) AS v
-      FROM embeddings
-    )
-    SELECT CAST(label AS BIGINT) AS label, CAST(i - 1 AS BIGINT) AS pos,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(round(v * 1000000.0, 0) AS BIGINT)) AS BIGINT) AS sum_e6
-    FROM flat GROUP BY 1, 2
-    """
-
-
-PQ_M, PQ_DSUB, PQ_NSEEDS = 8, 8, 16  # 64 dims -> 8 subspaces of 8
-PQ_NPROBE = 4  # IVF cells probed per query (of the 8 pinned cells)
-PQ_Q_LO, PQ_Q_HI = 16, 20  # query vec_ids (disjoint from seeds+corpus)
-
-
-PQ_NCAND = 100  # ADC candidates per query before the exact re-rank
-
-
-def q_ann_pq(spark, sf_dir):
-    """IVF+PQ **residual** ANN (Jégou et al., TPAMI 2011), the full
-    production two-stage shape (operators/ann.py ivfpq_*): each
-    vector is assigned to its nearest of 8 coarse cells and the
-    RESIDUAL v - c(v) is encoded as m=8 one-byte codes — residuals
-    have far smaller spread than raw vectors, so the same code bytes
-    quantize finer (recall@5 0.88 → 1.00 at sf0.01 vs round-3 flat
-    PQ at equal code bytes; BENCH/ANN_RECALL.md). At query time the
-    nprobe=4 nearest cells are probed, a per-(query, cell) LUT of
-    exact integer residual distances scores the codes via one
-    broadcast equi-join on cell (the IVF pruning IS the join —
-    unprobed cells' codes never match), and only the top-100
-    candidates' full vectors are touched for the exact re-rank to
-    top-5. The corpus-sized path is SHUFFLE-FREE and JOIN-FREE up to
-    the ADC probe: the pinned coarse centroids fold into the plan as
-    a literal array (no 1-row crossJoins), the encode is one narrow
-    Arrow argmin kernel (no explode/groupBy shuffle), the LUT
-    broadcasts as a map column, ADC is an in-row F.aggregate, and the
-    candidate set broadcasts onto the corpus for the re-rank — round
-    4's version spent two corpus-scale shuffles and four broadcast
-    build jobs on the same math. All arithmetic EXACT
-    integer on e3-quantized dims; the coarse centroids and residual
-    codebook are Lloyd-trained offline and PINNED as integers
-    (georaster_spark/ivfpq_codebook.py, tools/pin_ivfpq.py); the
-    oracle carries both as long-form VALUES tables."""
-    from georaster_spark.operators.ann import (
-        ivfpq_topk_rerank,
-        quantize_embeddings,
-    )
-    from georaster_spark.ivfpq_codebook import IVFPQ_CODEBOOK, IVFPQ_COARSE
-
-    qe = quantize_embeddings(_t(spark, sf_dir, "embeddings"))
-    corpus = qe.where(F.col("vec_id") > PQ_Q_HI).select("vec_id", "emb_q")
-    queries = qe.where(F.col("vec_id").between(PQ_Q_LO, PQ_Q_HI)).select(
-        "vec_id", "emb_q"
-    )
-    out = ivfpq_topk_rerank(
-        queries,
-        corpus,
-        IVFPQ_COARSE,
-        IVFPQ_CODEBOOK,
-        PQ_M,
-        PQ_DSUB,
-        k=5,
-        nprobe=PQ_NPROBE,
-        n_candidates=PQ_NCAND,
-    )
-    return out.select(
-        F.col("query_id").cast("long").alias("query_id"),
-        F.col("vec_id").cast("long").alias("vec_id"),
-        F.col("rank").cast("long").alias("rank"),
-        F.col("exact_d").cast("long").alias("exact_d"),
-        F.col("adc").cast("long").alias("adc"),
-    )
-
-
-def sql_ann_pq():
-    from georaster_spark.ivfpq_codebook import IVFPQ_CODEBOOK, IVFPQ_COARSE
-
-    # long-form pinned tables: cells (cell, dim, val) and codebook
-    # (sub, code, dim, val) — every distance is a SUM over integer
-    # rows, exact and order-independent
-    cell_vals = ", ".join(
-        f"({c}, {d + 1}, {v})" for c, vec in IVFPQ_COARSE for d, v in enumerate(vec)
-    )
-    cb_vals = ", ".join(
-        f"({s}, {c}, {d + 1}, {v})"
-        for s, c, vec in IVFPQ_CODEBOOK
-        for d, v in enumerate(vec)
-    )
-    return f"""
-    WITH qe AS (
-      SELECT vec_id,
-             list_transform(embedding,
-               v -> CAST(round(CAST(v AS DOUBLE) * 1000.0, 0) AS BIGINT)) AS emb
-      FROM embeddings
-    ),
-    cells(cell, d, val) AS (VALUES {cell_vals}),
-    cbd(sub, code, d, val) AS (VALUES {cb_vals}),
-    cdist AS (
-      SELECT q.vec_id, c.cell,
-             sum((q.emb[c.d] - c.val) * (q.emb[c.d] - c.val)) AS dist
-      FROM qe q, cells c
-      GROUP BY 1, 2
-    ),
-    assign AS (
-      SELECT vec_id, cell FROM (
-        SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) AS rn
-        FROM cdist WHERE vec_id > {PQ_Q_HI}
-      ) WHERE rn = 1
-    ),
-    rq AS (
-      SELECT a.vec_id, c.d, q.emb[c.d] - c.val AS rv
-      FROM assign a JOIN cells c USING (cell) JOIN qe q USING (vec_id)
-    ),
-    enc AS (
-      SELECT r.vec_id, cb.sub, cb.code,
-             sum((r.rv - cb.val) * (r.rv - cb.val)) AS dist
-      FROM rq r JOIN cbd cb
-        ON cb.sub = (r.d - 1) // {PQ_DSUB} AND cb.d = (r.d - 1) % {PQ_DSUB} + 1
-      GROUP BY 1, 2, 3
-    ),
-    codes AS (
-      SELECT e.vec_id, a.cell, e.sub, e.code
-      FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS rn
-        FROM enc
-      ) e JOIN assign a USING (vec_id)
-      WHERE e.rn = 1
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, cell FROM (
-        SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) AS rn
-        FROM cdist WHERE vec_id BETWEEN {PQ_Q_LO} AND {PQ_Q_HI}
-      ) WHERE rn <= {PQ_NPROBE}
-    ),
-    qr AS (
-      SELECT p.query_id, p.cell, c.d, q.emb[c.d] - c.val AS rv
-      FROM probes p JOIN cells c USING (cell) JOIN qe q ON q.vec_id = p.query_id
-    ),
-    lut AS (
-      SELECT r.query_id, r.cell, cb.sub, cb.code,
-             sum((r.rv - cb.val) * (r.rv - cb.val)) AS d
-      FROM qr r JOIN cbd cb
-        ON cb.sub = (r.d - 1) // {PQ_DSUB} AND cb.d = (r.d - 1) % {PQ_DSUB} + 1
-      GROUP BY 1, 2, 3, 4
-    ),
-    adc AS (
-      SELECT l.query_id, k.vec_id, sum(l.d) AS adc
-      FROM codes k JOIN lut l
-        ON l.cell = k.cell AND l.sub = k.sub AND l.code = k.code
-      GROUP BY 1, 2
-    ),
-    cand AS (
-      SELECT query_id, vec_id, adc FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc, vec_id) AS rn
-        FROM adc
-      ) WHERE rn <= {PQ_NCAND}
-    ),
-    rer AS (
-      SELECT c.query_id, c.vec_id, c.adc,
-             sum((q.emb[u.d] - e.emb[u.d]) * (q.emb[u.d] - e.emb[u.d])) AS exact_d
-      FROM cand c,
-           (SELECT unnest(generate_series(1, {PQ_M * PQ_DSUB})) AS d) u
-      JOIN qe q ON q.vec_id = c.query_id
-      JOIN qe e ON e.vec_id = c.vec_id
-      GROUP BY 1, 2, 3
-    )
-    SELECT CAST(query_id AS BIGINT) AS query_id, CAST(vec_id AS BIGINT) AS vec_id,
-           CAST(rank AS BIGINT) AS rank, CAST(exact_d AS BIGINT) AS exact_d,
-           CAST(adc AS BIGINT) AS adc
-    FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY exact_d, vec_id) AS rank
-      FROM rer
-    ) WHERE rank <= 5
-    """
-
-
-DECON_N, DECON_MIN_HITS = 3, 2  # n-gram overlap, flag at >= 2 hits
-DECON_BENCH_DOCS = 5  # doc_id < 5 act as the held-out benchmark set
-
-
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination — the training-data stage that flags
-    documents overlapping a held-out evaluation set (the GPT-3/C4
-    n-gram decontamination recipe): every document sharing >= 2
-    distinct n-gram (word) shingles with the benchmark corpus is
-    reported with its overlap count. n is a parameter — real
-    pipelines use 8-13-gram; the catalog pins n=3 because the
-    synthetic corpus's ~30-word vocabulary makes longer shingles
-    vanishingly rare (0 overlaps at n>=5), and a 0-row query would
-    gate nothing. Scale shape: the benchmark's
-    shingle set is tiny and BROADCAST; each corpus document
-    contributes its distinct n-grams map-side and the only shuffle is
-    the per-doc overlap count — contamination checking at 100 TB is
-    one broadcast semi-join, never a corpus-side blowup. Here the
-    'benchmark' is the first 5 docs (deterministic stand-in for a
-    real eval set); they are excluded from the scan."""
-    from georaster_spark.operators.dedup import _shingle_array
-
-    d = _docs_spread(spark, sf_dir)
-    tok = F.split(F.col("text"), " ")
-    # _shingle_array is the dedup stack's measured-faster zip_with
-    # kernel; it keeps one whole-doc shingle for short docs, so gate
-    # on size >= n to match the oracle's len(t) >= n filter
-    grams = F.when(
-        F.size(tok) >= DECON_N,
-        F.array_distinct(_shingle_array("text", DECON_N)),
-    ).otherwise(F.array().cast("array<string>"))
-    bench = (
-        d.where(F.col("doc_id") < DECON_BENCH_DOCS)
-        .select(F.explode(grams).alias("gram"))
-        .distinct()
-    )
-    corpus = d.where(F.col("doc_id") >= DECON_BENCH_DOCS).select(
-        "doc_id", F.explode(grams).alias("gram")
-    )
-    return (
-        corpus.join(F.broadcast(bench), "gram")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-        .where(F.col("n_hits") >= DECON_MIN_HITS)
-        .select(F.col("doc_id").cast("long").alias("doc_id"), "n_hits")
-    )
-
-
-def sql_decontaminate():
-    n = DECON_N
-    return f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    grams AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               generate_series(1, len(t) - {n} + 1),
-               i -> array_to_string(t[i:i+{n - 1}], ' ')
-             )) AS gs
-      FROM toks WHERE len(t) >= {n}
-    ),
-    bench AS (
-      SELECT DISTINCT unnest(gs) AS gram FROM grams
-      WHERE doc_id < {DECON_BENCH_DOCS}
-    ),
-    corpus AS (
-      SELECT doc_id, unnest(gs) AS gram FROM grams
-      WHERE doc_id >= {DECON_BENCH_DOCS}
-    )
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(count(*) AS BIGINT) AS n_hits
-    FROM corpus JOIN bench USING (gram)
-    GROUP BY 1 HAVING count(*) >= {DECON_MIN_HITS}
-    """
-
-
-CMS_D, CMS_W = 4, 512
-
-
-def _md5_60(col: Column) -> Column:
-    """Portable 60-bit hash: first 15 md5 hex chars as int64 —
-    identical in Spark conv() and DuckDB CAST('0x'||...)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def _cms_bucket(j: Column, key: Column) -> Column:
-    """Portable CMS bucket: md5-derived 60-bit hash of 'cms:j:key',
-    reduced mod CMS_W — identical integer registers in both engines."""
-    return _md5_60(F.concat_ws(":", F.lit("cms"), j, key)) % CMS_W
-
-
-def q_cms_topk(spark, sf_dir):
-    """Count-min-sketch heavy hitters over the events stream: d=4
-    portable hash rows × w=512 buckets. Registers are built with ONE
-    partial-aggregated groupBy on 2048 keys — constant-size state
-    regardless of input rows, the frequency estimator a 100 TB
-    pipeline can afford — then point estimates est(u) = min_j
-    reg[j][h_j(u)] are recovered via a broadcast join of the tiny
-    register table. Output pins the CMS one-sided error (est_n >=
-    exact_n, asserted in tests) alongside the exact counts. The
-    probe set here is the exact top-20 so the DuckDB oracle can
-    replicate end-to-end; at scale candidates come from a
-    per-partition top-k pre-filter instead of a global exact count."""
-    e = _t(spark, sf_dir, "events")
-    rows = spark.range(CMS_D).select(F.col("id").alias("j"))
-    # dictionary trick: hash each DISTINCT user once and weight by its
-    # count instead of hashing every event row — identical registers,
-    # |users| x d hashes instead of |events| x d. (For pure streaming
-    # sketching with unbounded keys, hash the rows directly; the
-    # pre-group wins whenever distinct keys << rows.)
-    ucnt = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
-    regs = (
-        ucnt.crossJoin(F.broadcast(rows))
-        .groupBy("j", _cms_bucket(F.col("j"), F.col("user_id")).alias("bucket"))
-        .agg(F.sum("c").alias("reg"))
-    )
-    top = ucnt.select("user_id", F.col("c").alias("exact_n")).orderBy(
-        F.desc("exact_n"), "user_id"
-    ).limit(20)
-    probes = top.crossJoin(F.broadcast(rows)).withColumn(
-        "bucket", _cms_bucket(F.col("j"), F.col("user_id"))
-    )
-    return (
-        probes.join(F.broadcast(regs), ["j", "bucket"])
-        .groupBy("user_id", "exact_n")
-        .agg(F.min("reg").alias("est_n"))
-        .select(
-            F.col("user_id").cast("long").alias("user_id"),
-            F.col("exact_n").cast("long").alias("exact_n"),
-            F.col("est_n").cast("long").alias("est_n"),
-        )
-    )
-
-
-def sql_cms_topk():
-    bucket = (
-        "CAST('0x' || substr(md5(concat_ws(':', 'cms', j, user_id)), 1, 15) "
-        f"AS BIGINT) % {CMS_W}"
-    )
-    return f"""
-    WITH js AS (SELECT range AS j FROM range({CMS_D})),
-    regs AS (
-      SELECT j, {bucket} AS bucket, count(*) AS reg
-      FROM events, js GROUP BY 1, 2
-    ),
-    top AS (
-      SELECT user_id, count(*) AS exact_n FROM events
-      GROUP BY 1 ORDER BY exact_n DESC, user_id LIMIT 20
-    ),
-    probes AS (
-      SELECT user_id, exact_n, j, {bucket} AS bucket FROM top, js
-    )
-    SELECT CAST(p.user_id AS BIGINT) AS user_id,
-           CAST(exact_n AS BIGINT) AS exact_n,
-           CAST(min(reg) AS BIGINT) AS est_n
-    FROM probes p JOIN regs USING (j, bucket)
-    GROUP BY 1, 2
-    """
-
-
-def q_pii_scrub(spark, sf_dir):
-    """PII redaction pass (webtext curation: strip emails / phones /
-    IPs before training). The synthetic corpus carries no PII, so the
-    query plants deterministic doc_id-derived PII spans first (the
-    fixture half), then the operator under test counts and redacts
-    them with built-in regexp_count / regexp_replace — all JVM-side
-    codegen, one narrow projection, zero shuffles: at 100 TB this is
-    a pure map stage. The md5 of the scrubbed text pins the full
-    replacement output, not just the counts."""
-    d = _t(spark, sf_dir, "documents")
-    aug = F.concat(
-        F.col("text"),
-        F.when(
-            F.col("doc_id") % 2 == 0,
-            F.concat(F.lit(" contact user"), F.col("doc_id").cast("string"),
-                     F.lit("@mail.example.com now")),
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(F.lit(" tel 555-"),
-                     F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0")),
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(F.lit(" from 10.0."), (F.col("doc_id") % 256).cast("string"),
-                     F.lit("."), ((F.col("doc_id") * 7) % 256).cast("string")),
-        ).otherwise(F.lit("")),
-    )
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(aug, PII_EMAIL_RE, "<EMAIL>"),
-            PII_PHONE_RE, "<PHONE>",
-        ),
-        PII_IP_RE, "<IP>",
-    )
-    return d.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.regexp_count(aug, F.lit(PII_EMAIL_RE)).cast("long").alias("n_email"),
-        F.regexp_count(aug, F.lit(PII_PHONE_RE)).cast("long").alias("n_phone"),
-        F.regexp_count(aug, F.lit(PII_IP_RE)).cast("long").alias("n_ip"),
-        F.md5(scrubbed).alias("scrubbed_md5"),
-    )
-
-
-# \d and literal dots parse identically in Java regex and RE2; no
-# lookarounds or word boundaries (RE2 \b exists but Java's differs on
-# unicode word chars — avoided entirely)
-PII_EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-PII_PHONE_RE = "555-[0-9]{4}"
-PII_IP_RE = "10\\.0\\.[0-9]{1,3}\\.[0-9]{1,3}"
-
-
-def sql_pii_scrub():
-    # SQL single-quoted literals don't process backslashes, so the
-    # Python pattern strings embed verbatim
-    email = PII_EMAIL_RE
-    aug = (
-        "text"
-        " || CASE WHEN doc_id % 2 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR)"
-        " || '@mail.example.com now' ELSE '' END"
-        " || CASE WHEN doc_id % 3 = 0 THEN ' tel 555-'"
-        " || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END"
-        " || CASE WHEN doc_id % 5 = 0 THEN ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR)"
-        " || '.' || CAST((doc_id * 7) % 256 AS VARCHAR) ELSE '' END"
-    )
-    return f"""
-    WITH a AS (SELECT doc_id, {aug} AS aug FROM documents)
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(len(regexp_extract_all(aug, '{email}')) AS BIGINT) AS n_email,
-           CAST(len(regexp_extract_all(aug, '{PII_PHONE_RE}')) AS BIGINT) AS n_phone,
-           CAST(len(regexp_extract_all(aug, '{PII_IP_RE}')) AS BIGINT) AS n_ip,
-           md5(regexp_replace(regexp_replace(regexp_replace(aug,
-               '{email}', '<EMAIL>', 'g'),
-               '{PII_PHONE_RE}', '<PHONE>', 'g'),
-               '{PII_IP_RE}', '<IP>', 'g')) AS scrubbed_md5
-    FROM a
-    """
-
-
-def q_repeated_ngrams(spark, sf_dir):
-    """Within-document repeated word-3-gram filter (the Gopher/
-    MassiveText repetition-quality rule: drop docs whose duplicate
-    n-gram fraction is high). Explode 3-grams -> two partial-
-    aggregated groupBys keyed on doc_id — the explode multiplies rows
-    by ~n_tokens but never shuffles raw text, and both aggregations
-    map-side combine, so the shuffle carries (doc_id, gram-hash)
-    pairs only. Docs with fewer than 3 tokens have no 3-grams and
-    drop out (both engines agree)."""
-    d = _t(spark, sf_dir, "documents")
-    w = F.split(F.col("text"), " ")
-    grams = F.when(
-        F.size("w") >= 3,
-        F.expr("transform(sequence(1, size(w) - 2), i -> concat_ws(' ', slice(w, i, 3)))"),
-    ).otherwise(F.expr("array()"))
-    counts = (
-        d.select("doc_id", w.alias("w"))
-        .select("doc_id", F.explode(grams).alias("ng"))
-        .groupBy("doc_id", "ng")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    dup = (F.col("n_grams") - F.col("n_distinct")).cast("double") / F.col(
-        "n_grams"
-    ).cast("double")
-    return (
-        counts.groupBy("doc_id")
-        .agg(
-            F.sum("n").cast("long").alias("n_grams"),
-            F.count(F.lit(1)).cast("long").alias("n_distinct"),
-            F.max("n").cast("long").alias("max_rep"),
-        )
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            "n_grams", "n_distinct", "max_rep",
-            F.round(dup * 1000000.0, 0).cast("long").alias("dup_ratio_e6"),
-            (dup < 0.5).cast("long").alias("keep"),
-        )
-    )
-
-
-def sql_repeated_ngrams():
-    return """
-    WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-    g AS (
-      SELECT doc_id, array_to_string(ws[CAST(i AS INT):CAST(i + 2 AS INT)], ' ') AS ng
-      FROM (SELECT doc_id, ws,
-                   unnest(generate_series(1, len(ws) - 2)) AS i
-            FROM w)
-    ),
-    c AS (SELECT doc_id, ng, count(*) AS n FROM g GROUP BY 1, 2),
-    p AS (
-      SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_grams,
-             CAST(count(*) AS BIGINT) AS n_distinct,
-             CAST(max(n) AS BIGINT) AS max_rep
-      FROM c GROUP BY 1
-    )
-    SELECT CAST(doc_id AS BIGINT) AS doc_id, n_grams, n_distinct, max_rep,
-           CAST(round(CAST(n_grams - n_distinct AS DOUBLE) / CAST(n_grams AS DOUBLE) * 1000000.0, 0) AS BIGINT) AS dup_ratio_e6,
-           CAST(CAST(n_grams - n_distinct AS DOUBLE) / CAST(n_grams AS DOUBLE) < 0.5 AS BIGINT) AS keep
-    FROM p
-    """
-
-
-def sql_doc_quality():
-    stops = ", ".join(f"'{w}'" for w in STOPWORDS)
-    stop_ratio = (
-        f"CAST(len(list_filter(string_split(text, ' '), t -> t IN ({stops}))) AS DOUBLE)"
-        " / CAST(len(string_split(text, ' ')) AS DOUBLE)"
-    )
-    punct_ratio = (
-        "CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS DOUBLE)"
-        " / CAST(greatest(length(text), 1) AS DOUBLE)"
-    )
-    len_sat = "least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0, 1.0)"
-    return f"""
-    SELECT doc_id,
-           CAST(round({stop_ratio} * 1000000.0, 0) AS BIGINT) AS stop_ratio_e6,
-           CAST(round({punct_ratio} * 1000000.0, 0) AS BIGINT) AS punct_ratio_e6,
-           CAST(round(({stop_ratio} * 0.4 + {len_sat} * 0.4 + {punct_ratio} * 0.2) * 1000000.0, 0) AS BIGINT) AS quality_e6
-    FROM documents
-    """
-
-
 def q_terrarium_decode(spark, sf_dir):
     df = spark.range(0, 4096).select(
         F.col("id").alias("i"),
@@ -2030,2081 +1198,6 @@ def sql_value_casts():
                CASE WHEN range = 9 THEN '<NoData>' ELSE CAST({v} AS VARCHAR) END AS disp
         FROM range(10)""")
     return " UNION ALL ".join(parts)
-
-
-# =====================================================================
-# relational coverage (SURVEY.md §2.3)
-# =====================================================================
-
-
-def q_tpch_q1(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    # money/qty scaled per-row to exact BIGINT cents before summing:
-    # float sums in different orders are not bit-identical across
-    # engines, integer sums are.
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.round(F.col("l_quantity") * 100.0, 0).cast("long")).alias("sum_qty_c"),
-            F.sum(F.round(F.col("l_extendedprice") * 100.0, 0).cast("long")).alias(
-                "sum_base_price_c"
-            ),
-            F.sum(
-                F.round(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100.0, 0
-                ).cast("long")
-            ).alias("sum_disc_price_c"),
-            F.count(F.lit(1)).cast("long").alias("count_order"),
-        )
-    )
-
-
-def sql_tpch_q1():
-    return """
-    SELECT l_returnflag, l_linestatus,
-           CAST(sum(CAST(round(l_quantity * 100.0, 0) AS BIGINT)) AS BIGINT) AS sum_qty_c,
-           CAST(sum(CAST(round(l_extendedprice * 100.0, 0) AS BIGINT)) AS BIGINT) AS sum_base_price_c,
-           CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100.0, 0) AS BIGINT)) AS BIGINT) AS sum_disc_price_c,
-           CAST(count(*) AS BIGINT) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """
-
-
-def q_revenue_join(spark, sf_dir):
-    """Broadcast dim join + agg: revenue by nation and market segment."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name", "c_mktsegment")
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100.0, 0).cast("long")).alias(
-                "revenue_c"
-            ),
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-        )
-    )
-
-
-def sql_revenue_join():
-    return """
-    SELECT n_name, c_mktsegment,
-           CAST(sum(CAST(round(o_totalprice * 100.0, 0) AS BIGINT)) AS BIGINT) AS revenue_c,
-           CAST(count(*) AS BIGINT) AS n_orders
-    FROM orders JOIN customer ON o_custkey = c_custkey
-    JOIN nation ON c_nationkey = n_nationkey
-    GROUP BY n_name, c_mktsegment
-    """
-
-
-def q_window_topk(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    return (
-        o.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 3)
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            F.round(F.col("o_totalprice") * 100.0, 0).cast("long").alias("totalprice_c"),
-            F.col("rnk").cast("long").alias("rnk"),
-        )
-    )
-
-
-def sql_window_topk():
-    return """
-    SELECT o_custkey, o_orderkey,
-           CAST(round(o_totalprice * 100.0, 0) AS BIGINT) AS totalprice_c,
-           CAST(rnk AS BIGINT) AS rnk
-    FROM (
-      SELECT o_custkey, o_orderkey, o_totalprice,
-             row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rnk
-      FROM orders
-    ) WHERE rnk <= 3
-    """
-
-
-def q_semi_anti(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    with_orders = c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
-        "c_custkey", F.lit("has_orders").alias("status")
-    )
-    without = c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", F.lit("no_orders").alias("status")
-    )
-    return with_orders.unionByName(without)
-
-
-def sql_semi_anti():
-    return """
-    SELECT c_custkey, 'has_orders' AS status FROM customer
-    WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-    UNION ALL
-    SELECT c_custkey, 'no_orders' AS status FROM customer
-    WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-    """
-
-
-def q_sessionize(spark, sf_dir):
-    """Sessionization: gap > 1800s starts a new session; count per user."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    return (
-        e.withColumn("new_sess", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-        .groupBy("user_id")
-        .agg(
-            F.sum("new_sess").cast("long").alias("n_sessions"),
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-        )
-    )
-
-
-def sql_sessionize():
-    return """
-    SELECT user_id, CAST(sum(new_sess) AS BIGINT) AS n_sessions,
-           CAST(count(*) AS BIGINT) AS n_events
-    FROM (
-      SELECT user_id,
-             CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                       OR epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM events
-    ) GROUP BY user_id
-    """
-
-
-def q_events_json(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return e.groupBy("event_type").agg(
-        F.sum(k).cast("long").alias("sum_k"),
-        F.max(k).alias("max_k"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-
-
-def sql_events_json():
-    return """
-    SELECT event_type,
-           CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-           max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k,
-           CAST(count(*) AS BIGINT) AS n
-    FROM events GROUP BY event_type
-    """
-
-
-IVJ_BASE_EP = 1704067200  # 2024-01-01 00:00:00 UTC — events table epoch
-IVJ_N_WINDOWS = 40
-IVJ_STEP_S = 61200  # 17 h between window starts
-IVJ_OFF_S = 1380  # 23 min un-aligned offset (forces 2-bucket windows)
-IVJ_LEN_S = 7200  # 2 h windows == bucket size
-
-
-def _interval_windows(spark):
-    """The static 40-window maintenance-interval table (deliberately
-    NOT bucket-aligned so every window spans two buckets)."""
-    return spark.range(IVJ_N_WINDOWS).select(
-        F.col("id").alias("win_id"),
-        (F.lit(IVJ_BASE_EP) + F.col("id") * IVJ_STEP_S + IVJ_OFF_S).alias("s_ep"),
-        (F.lit(IVJ_BASE_EP) + F.col("id") * IVJ_STEP_S + IVJ_OFF_S + IVJ_LEN_S).alias(
-            "e_ep"
-        ),
-    )
-
-
-def q_interval_join(spark, sf_dir):
-    """Interval (range) join at scale: events matched to the 2-hour
-    maintenance windows containing them, via the bucketize-explode-
-    equi-join rewrite (operators/asof.py bucketized_interval_join) —
-    a naive ts-BETWEEN theta join plans as a BroadcastNestedLoopJoin
-    and compares the cross product; this plan equi-joins on one
-    integer bucket per event (plan-audited: no nested loop). Window
-    starts are deliberately NOT bucket-aligned so each window spans
-    two buckets and the dedup/exact-filter path is exercised."""
-    from georaster_spark.operators.asof import bucketized_interval_join
-
-    ev = _t(spark, sf_dir, "events")
-    joined = bucketized_interval_join(
-        ev, _interval_windows(spark), bucket_seconds=IVJ_LEN_S,
-        broadcast_intervals=True,
-    )
-    return joined.groupBy("win_id", "s_ep").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.round(F.col("value") * 1000000.0, 0).cast("long")).alias("sum_value_e6"),
-        F.countDistinct("user_id").cast("long").alias("n_users"),
-    ).select(F.col("win_id").cast("long").alias("win_id"), "s_ep", "n", "sum_value_e6", "n_users")
-
-
-def _sql_interval(with_users: bool) -> str:
-    users = (
-        ",\n           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users"
-        if with_users
-        else ""
-    )
-    return f"""
-    WITH w AS (
-      SELECT range AS win_id,
-             {IVJ_BASE_EP} + range * {IVJ_STEP_S} + {IVJ_OFF_S} AS s_ep,
-             {IVJ_BASE_EP} + range * {IVJ_STEP_S} + {IVJ_OFF_S} + {IVJ_LEN_S} AS e_ep
-      FROM range({IVJ_N_WINDOWS})
-    )
-    SELECT CAST(win_id AS BIGINT) AS win_id, CAST(s_ep AS BIGINT) AS s_ep,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(round(value * 1000000.0, 0) AS BIGINT)) AS BIGINT) AS sum_value_e6{users}
-    FROM events, w
-    WHERE CAST(floor(epoch(ts)) AS BIGINT) >= s_ep
-      AND CAST(floor(epoch(ts)) AS BIGINT) < e_ep
-    GROUP BY 1, 2
-    """
-
-
-def sql_interval_join():
-    return _sql_interval(with_users=True)
-
-
-def q_stream_interval(spark, sf_dir):
-    """Stream-static join (streaming/events.py interval_counts_stream):
-    the streaming events feed joins the STATIC interval table via the
-    bucketize-explode rewrite — a stateless broadcast join, the
-    enrichment pattern for decorating an unbounded stream with a
-    dimension — then a complete-mode aggregate. availableNow replay
-    must equal the batch interval_join, which is the shared oracle."""
-    from georaster_spark.streaming.events import interval_counts_stream
-
-    out = interval_counts_stream(
-        spark, sf_dir, _interval_windows(spark), bucket_seconds=IVJ_LEN_S
-    )
-    return out.select(
-        F.col("win_id").cast("long").alias("win_id"),
-        "s_ep",
-        "n",
-        "sum_value_e6",
-    )
-
-
-def sql_stream_interval():
-    # the batch interval join minus the distinct aggregate (distinct
-    # aggregations are unsupported on streaming DataFrames)
-    return _sql_interval(with_users=False)
-
-
-def q_stream_stream_join(spark, sf_dir):
-    """Watermarked STREAM-STREAM inner join (streaming/events.py
-    view_click_join_stream): per-user view→click attribution within a
-    1-hour horizon, both sides unbounded. Watermarks on BOTH streams
-    plus the time-bounded join condition give the state store an
-    eviction rule (state is bounded by the horizon, not the stream
-    length) — the canonical two-unbounded-sides join. availableNow
-    replay equals the batch self-join, which is the oracle."""
-    from georaster_spark.streaming.events import view_click_join_stream
-
-    out = view_click_join_stream(spark, sf_dir, horizon="1 hour")
-    return out.select(
-        F.col("view_id").cast("long").alias("view_id"),
-        F.col("click_id").cast("long").alias("click_id"),
-        F.col("user_id").cast("long").alias("user_id"),
-    )
-
-
-def sql_stream_stream_join():
-    return """
-    SELECT CAST(v.event_id AS BIGINT) AS view_id,
-           CAST(c.event_id AS BIGINT) AS click_id,
-           CAST(v.user_id AS BIGINT) AS user_id
-    FROM events v JOIN events c
-      ON v.user_id = c.user_id
-     AND c.ts >= v.ts AND c.ts < v.ts + INTERVAL 1 HOUR
-    WHERE v.event_type = 'view' AND c.event_type = 'click'
-    """
-
-
-RETENTION_MAX_WEEK = 3
-
-
-def q_cohort_retention(spark, sf_dir):
-    """Cohort retention analysis: users bucketed by the ISO week of
-    their first event (the cohort), then counted as retained in each
-    subsequent week they were active (k = 0..3). Two shuffles, both
-    keyed on user_id — the cohort assignment broadcast back onto the
-    stream — then one partial-aggregated rollup; the standard
-    product-analytics shape at any scale."""
-    e = _t(spark, sf_dir, "events")
-    cohort = e.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
-    )
-    k = (
-        F.datediff(F.date_trunc("week", F.col("ts")).cast("date"), F.col("cohort_week"))
-        / 7
-    ).cast("long")
-    return (
-        e.join(cohort, "user_id")
-        .select("user_id", F.col("cohort_week"), k.alias("k"))
-        .where(F.col("k") <= RETENTION_MAX_WEEK)
-        .groupBy("cohort_week", "k")
-        .agg(F.countDistinct("user_id").cast("long").alias("n_users"))
-        .select(
-            F.date_format("cohort_week", "yyyy-MM-dd").alias("cohort_week"),
-            "k",
-            "n_users",
-        )
-    )
-
-
-def sql_cohort_retention():
-    return f"""
-    WITH cohort AS (
-      SELECT user_id, CAST(date_trunc('week', min(ts)) AS DATE) AS cohort_week
-      FROM events GROUP BY 1
-    ),
-    act AS (
-      SELECT e.user_id, c.cohort_week,
-             date_diff('day', c.cohort_week,
-                       CAST(date_trunc('week', e.ts) AS DATE)) // 7 AS k
-      FROM events e JOIN cohort c USING (user_id)
-    )
-    SELECT strftime(cohort_week, '%Y-%m-%d') AS cohort_week,
-           CAST(k AS BIGINT) AS k,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-    FROM act WHERE k <= {RETENTION_MAX_WEEK}
-    GROUP BY 1, 2
-    """
-
-
-FUNNEL_STEPS = ["view", "click", "purchase"]
-
-
-def q_funnel_steps(spark, sf_dir):
-    """Ordered conversion funnel (view -> click -> purchase): users
-    counted at step k only if their first step-k event strictly
-    follows their first step-(k-1) completion. Each stage is one
-    filter + one groupBy + one equi-join, ALL keyed on user_id — at
-    scale the event stream hash-partitions once on user_id and every
-    stage reuses that partitioning (no re-shuffle), the standard
-    sequence-analytics shape."""
-    e = _t(spark, sf_dir, "events")
-    s1 = (
-        e.where(F.col("event_type") == FUNNEL_STEPS[0])
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_prev"))
-    )
-    stages = [s1]
-    for step in FUNNEL_STEPS[1:]:
-        prev = stages[-1]
-        stages.append(
-            e.where(F.col("event_type") == step)
-            .join(prev, "user_id")
-            .where(F.col("ts") > F.col("t_prev"))
-            .groupBy("user_id")
-            .agg(F.min("ts").alias("t_prev"))
-        )
-    out = None
-    for i, (step, df) in enumerate(zip(FUNNEL_STEPS, stages), start=1):
-        row = df.agg(F.count(F.lit(1)).cast("long").alias("n_users")).select(
-            F.lit(i).cast("long").alias("step"),
-            F.lit(step).alias("event_type"),
-            "n_users",
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
-
-
-def sql_funnel_steps():
-    v, c, p = FUNNEL_STEPS
-    return f"""
-    WITH s1 AS (
-      SELECT user_id, min(ts) AS t1 FROM events
-      WHERE event_type = '{v}' GROUP BY 1
-    ),
-    s2 AS (
-      SELECT e.user_id, min(ts) AS t2 FROM events e JOIN s1 USING (user_id)
-      WHERE event_type = '{c}' AND ts > t1 GROUP BY 1
-    ),
-    s3 AS (
-      SELECT e.user_id, min(ts) AS t3 FROM events e JOIN s2 USING (user_id)
-      WHERE event_type = '{p}' AND ts > t2 GROUP BY 1
-    )
-    SELECT CAST(1 AS BIGINT) AS step, '{v}' AS event_type, CAST(count(*) AS BIGINT) AS n_users FROM s1
-    UNION ALL
-    SELECT CAST(2 AS BIGINT), '{c}', CAST(count(*) AS BIGINT) FROM s2
-    UNION ALL
-    SELECT CAST(3 AS BIGINT), '{p}', CAST(count(*) AS BIGINT) FROM s3
-    """
-
-
-PR_ITERS, PR_DAMPING = 3, 0.85
-
-
-def q_pagerank(spark, sf_dir):
-    """PageRank (3 fixed iterations, d=0.85) over a deterministic
-    synthetic citation graph on the documents table (3 hash-derived
-    out-links per doc, self-loops dropped, duplicate edges deduped) —
-    the iterative-algorithm class done as repeated DataFrame joins
-    (operators/graph.py pagerank): per iteration ONE edge⋈rank
-    equi-join plus ONE partial-aggregated groupBy, both keyed on the
-    node id so the edge list's hash partitioning is reused across
-    iterations. The DuckDB oracle unrolls the same three iterations
-    as chained CTEs."""
-    from georaster_spark.operators.graph import pagerank
-
-    nodes = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("v")
-    )
-    cntl = nodes.agg(F.count(F.lit(1)).alias("nn"))
-    vv = F.col("v")
-    edges = (
-        nodes.crossJoin(F.broadcast(cntl))
-        .select(
-            "v",
-            F.explode(
-                F.array(
-                    (vv * 7 + 1) % F.col("nn"),
-                    (vv * 13 + 3) % F.col("nn"),
-                    (vv * 29 + 11) % F.col("nn"),
-                )
-            ).alias("dst"),
-        )
-        .where(F.col("dst") != vv)
-        .select(F.col("v").alias("src"), "dst")
-        .distinct()
-    )
-    out = pagerank(nodes, edges, iters=PR_ITERS, damping=PR_DAMPING)
-    return out.select(
-        F.col("v").cast("long").alias("doc_id"),
-        F.round(F.col("r") * 1000000000.0, 0).cast("long").alias("rank_e9"),
-    )
-
-
-def sql_pagerank():
-    d = PR_DAMPING
-    parts = [
-        "nodes AS (SELECT CAST(doc_id AS BIGINT) AS v FROM documents)",
-        "cnt AS (SELECT CAST(count(*) AS DOUBLE) AS n, count(*) AS nn FROM nodes)",
-        """edges AS (
-      SELECT DISTINCT src, dst FROM (
-        SELECT v AS src, (v * 7 + 1) % nn AS dst FROM nodes, cnt
-        UNION ALL SELECT v, (v * 13 + 3) % nn FROM nodes, cnt
-        UNION ALL SELECT v, (v * 29 + 11) % nn FROM nodes, cnt
-      ) WHERE dst != src
-    )""",
-        "outdeg AS (SELECT src, CAST(count(*) AS DOUBLE) AS deg FROM edges GROUP BY 1)",
-        "r0 AS (SELECT v, 1.0e0 / n AS r FROM nodes, cnt)",
-    ]
-    for i in range(1, PR_ITERS + 1):
-        parts.append(
-            f"""s{i} AS (
-      SELECT e.dst AS v, sum(r.r / d.deg) AS s
-      FROM edges e JOIN r{i - 1} r ON r.v = e.src JOIN outdeg d ON d.src = e.src
-      GROUP BY 1
-    )"""
-        )
-        parts.append(
-            f"""r{i} AS (
-      SELECT n.v, (1.0e0 - {d}e0) / cnt.n + {d}e0 * coalesce(s.s, 0.0e0) AS r
-      FROM nodes n CROSS JOIN cnt LEFT JOIN s{i} s ON s.v = n.v
-    )"""
-        )
-    return (
-        "WITH "
-        + ",\n    ".join(parts)
-        + f"""
-    SELECT CAST(v AS BIGINT) AS doc_id,
-           CAST(round(r * 1000000000.0, 0) AS BIGINT) AS rank_e9
-    FROM r{PR_ITERS}
-    """
-    )
-
-
-def q_events_window_agg(spark, sf_dir):
-    """Tumbling time-window aggregate (batch form of the streaming op)."""
-    e = _t(spark, sf_dir, "events")
-    return e.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour"), F.col("event_type")
-    ).agg(
-        F.sum(F.round(F.col("value") * 1000000.0, 0).cast("long")).alias("sum_value_e6"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-
-
-def sql_events_window_agg():
-    return """
-    SELECT date_trunc('hour', ts) AS hour, event_type,
-           CAST(sum(CAST(round(value * 1000000.0, 0) AS BIGINT)) AS BIGINT) AS sum_value_e6,
-           CAST(count(*) AS BIGINT) AS n
-    FROM events GROUP BY 1, 2
-    """
-
-
-def q_event_percentiles(spark, sf_dir):
-    """Exact continuous percentiles (median/p90) of value per event
-    type — both engines use the (n-1)*p linear interpolation, so the
-    doubles agree after e6 rounding."""
-    e = _t(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(
-        F.round(F.expr("percentile(value, 0.5)") * 1000000.0, 0)
-        .cast("long")
-        .alias("p50_e6"),
-        F.round(F.expr("percentile(value, 0.9)") * 1000000.0, 0)
-        .cast("long")
-        .alias("p90_e6"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-
-
-def sql_event_percentiles():
-    return """
-    SELECT event_type,
-           CAST(round(quantile_cont(value, 0.5) * 1000000.0, 0) AS BIGINT) AS p50_e6,
-           CAST(round(quantile_cont(value, 0.9) * 1000000.0, 0) AS BIGINT) AS p90_e6,
-           CAST(count(*) AS BIGINT) AS n
-    FROM events GROUP BY event_type
-    """
-
-
-def q_pivot_lang(spark, sf_dir):
-    """Pivot: doc counts per source × language as columns (fixed
-    pivot values — at scale an unbounded pivot would need a distinct
-    pass; pinning the column set keeps it one aggregation)."""
-    d = _t(spark, sf_dir, "documents")
-    langs = ["de", "en", "es", "fr", "it"]
-    out = (
-        d.groupBy("source")
-        .pivot("lang", langs)
-        .agg(F.count(F.lit(1)))
-    )
-    cols = [F.col("source")] + [
-        F.coalesce(F.col(l), F.lit(0)).cast("long").alias(f"n_{l}") for l in langs
-    ]
-    return out.select(*cols)
-
-
-def sql_pivot_lang():
-    cols = ",\n           ".join(
-        f"CAST(sum(CASE WHEN lang = '{l}' THEN 1 ELSE 0 END) AS BIGINT) AS n_{l}"
-        for l in ["de", "en", "es", "fr", "it"]
-    )
-    return f"""
-    SELECT source,
-           {cols}
-    FROM documents GROUP BY source
-    """
-
-
-def q_cube_lang_source(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return d.cube("lang", "source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("sum_chars"),
-    )
-
-
-def sql_cube_lang_source():
-    return """
-    SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS sum_chars
-    FROM documents GROUP BY CUBE (lang, source)
-    """
-
-
-def q_rollup_lang_source(spark, sf_dir):
-    """ROLLUP variant of the cube: hierarchical (lang, source)
-    subtotals + grand total."""
-    d = _t(spark, sf_dir, "documents")
-    return d.rollup("lang", "source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("sum_chars"),
-    )
-
-
-def sql_rollup_lang_source():
-    return """
-    SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS sum_chars
-    FROM documents GROUP BY ROLLUP (lang, source)
-    """
-
-
-def q_set_ops(spark, sf_dir):
-    """exceptAll/intersect coverage: order keys that do/don't appear
-    in lineitem."""
-    o = _t(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("k"))
-    li = _t(spark, sf_dir, "lineitem").select(F.col("l_orderkey").alias("k")).distinct()
-    only_orders = o.exceptAll(li).select("k", F.lit("orders_only").alias("side"))
-    both = o.intersect(li).select("k", F.lit("both").alias("side"))
-    return only_orders.unionByName(both)
-
-
-def sql_set_ops():
-    return """
-    SELECT k, 'orders_only' AS side FROM (
-      SELECT o_orderkey AS k FROM orders
-      EXCEPT ALL SELECT DISTINCT l_orderkey AS k FROM lineitem
-    )
-    UNION ALL
-    SELECT k, 'both' AS side FROM (
-      SELECT o_orderkey AS k FROM orders
-      INTERSECT SELECT l_orderkey AS k FROM lineitem
-    )
-    """
-
-
-def q_sql_api(spark, sf_dir):
-    """ANSI-SQL surface parity: the engine accepts the ORACLE'S OWN
-    SQL text via spark.sql over registered views — same string, two
-    engines, one result."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(sql_sql_api())
-
-
-def sql_sql_api():
-    return """
-    SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(min(n_chars) AS BIGINT) AS min_chars,
-           CAST(max(n_chars) AS BIGINT) AS max_chars
-    FROM documents GROUP BY lang, source
-    """
-
-
-def q_wordcount(spark, sf_dir):
-    """Webtext wordcount via LATERAL VIEW explode (generator/UDTF
-    surface): one shuffle on the word key — the canonical map-side-
-    combined aggregation."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql("""
-        SELECT word, CAST(count(*) AS BIGINT) AS n
-        FROM documents LATERAL VIEW explode(split(text, ' ')) t AS word
-        GROUP BY word
-    """)
-
-
-def sql_wordcount():
-    return """
-    SELECT word, CAST(count(*) AS BIGINT) AS n
-    FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-    GROUP BY word
-    """
-
-
-# =====================================================================
-# training-data pipeline: text / dedup / similarity
-# =====================================================================
-
-
-# BPE-style pretokenizer (GPT-2-family shape, lookahead-free so the
-# Java, RE2/DuckDB, and Python regex engines agree — verified in
-# tests): contractions | space-prefixed letter runs | digit runs |
-# punct runs | whitespace runs. Whitespace is an EXPLICIT class, not
-# \s: Java's \s includes \x0B but RE2's does not, so \s would make
-# n_bpe_tokens diverge between the query and its oracle on
-# vertical-tab input.
-_WS = r" \t\n\x0B\f\r"
-BPE_PRETOKEN_RE = (
-    r"'(?:s|t|re|ve|m|ll|d)| ?[a-zA-Z]+| ?[0-9]+"
-    rf"| ?[^{_WS}a-zA-Z0-9']+|[{_WS}]+"
-)
-
-
-def q_text_stats(spark, sf_dir):
-    """Token counts (whitespace AND the BPE-ish pretokenizer — both
-    counting modes a training pipeline budgets with), punctuation
-    ratio, quality score, fingerprint — all built-in Column algebra
-    (JVM-side)."""
-    d = _t(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.col("text"), " "))
-    alpha = F.length(F.regexp_replace(F.col("text"), "[^a-zA-Z]", ""))
-    ratio_e6 = F.round(
-        alpha.cast("double") / F.greatest(F.length("text"), F.lit(1)).cast("double")
-        * 1000000.0,
-        0,
-    ).cast("long")
-    return d.select(
-        "doc_id",
-        toks.cast("long").alias("n_tokens"),
-        F.regexp_count("text", F.lit(BPE_PRETOKEN_RE)).cast("long").alias("n_bpe_tokens"),
-        F.length("text").cast("long").alias("n_chars_m"),
-        ratio_e6.alias("alpha_ratio_e6"),
-        F.md5(F.lower(F.col("text"))).alias("fingerprint"),
-    )
-
-
-def sql_text_stats():
-    bpe = BPE_PRETOKEN_RE.replace("'", "''")
-    return f"""
-    SELECT doc_id,
-           CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-           CAST(len(regexp_extract_all(text, '{bpe}')) AS BIGINT) AS n_bpe_tokens,
-           CAST(length(text) AS BIGINT) AS n_chars_m,
-           CAST(round(CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) * 1000000.0, 0) AS BIGINT) AS alpha_ratio_e6,
-           md5(lower(text)) AS fingerprint
-    FROM documents
-    """
-
-
-# ------------------------------------------------------------- real BPE
-# Pinned merge table (rank order matters — applied first to last).
-# A production tokenizer ships its merges file exactly like this.
-BPE_MERGES = [
-    ("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"), ("an", "d"),
-    ("e", "r"), ("o", "n"), ("r", "e"), ("in", "g"), ("o", "u"),
-    ("s", "t"), ("a", "t"), ("e", "n"), ("o", "r"), ("t", "o"),
-    ("i", "t"), ("o", "f"), ("e", "d"), ("i", "s"), ("a", "l"),
-    ("a", "r"), ("l", "l"), ("er", "s"), ("ing", "s"),
-]
-BPE_SEP = "\x1f"  # never occurs in [a-z]+ words
-
-
-def bpe_tokenize_col(word):
-    """Merge-loop BPE token count as PURE Column algebra (zero
-    Python): the word becomes a fully \\x1f-delimited char sequence
-    (<sep>c<sep>c...<sep>), then each pinned merge applies as a
-    literal `replace(<sep>a<sep>b<sep> -> <sep>ab<sep>)` — delimiters
-    on BOTH sides so a merge can never capture the tail of one token
-    and the head of the next. Each merge runs TWO left-to-right
-    passes (the second catches the pair a non-overlapping first pass
-    skips in token runs like a·a·a·a; runs ≥ 5 of one mergeable pair
-    are the documented divergence from rescanning BPE). Token count =
-    (#separators - 1). The identical replace chain runs in DuckDB, so
-    the oracle replicates the merge loop itself, not a pinned output."""
-    seq = F.concat(
-        F.lit(BPE_SEP), F.regexp_replace(word, "(.)", "$1" + BPE_SEP)
-    )
-    for a, b in BPE_MERGES:
-        pat = F.lit(BPE_SEP + a + BPE_SEP + b + BPE_SEP)
-        rep = F.lit(BPE_SEP + a + b + BPE_SEP)
-        seq = F.replace(F.replace(seq, pat, rep), pat, rep)
-    return (
-        F.length(seq) - F.length(F.replace(seq, F.lit(BPE_SEP), F.lit(""))) - 1
-    ).cast("long")
-
-
-def bpe_tokenize_sql(word_expr: str) -> str:
-    """The same delimited double-pass merge chain as DuckDB SQL."""
-    seq = f"(chr(31) || regexp_replace({word_expr}, '(.)', '\\1' || chr(31), 'g'))"
-    for a, b in BPE_MERGES:
-        pat = f"(chr(31) || '{a}' || chr(31) || '{b}' || chr(31))"
-        rep = f"(chr(31) || '{a}{b}' || chr(31))"
-        seq = f"replace(replace({seq}, {pat}, {rep}), {pat}, {rep})"
-    return f"(length({seq}) - length(replace({seq}, chr(31), '')) - 1)"
-
-
-def q_bpe_token_count(spark, sf_dir):
-    """Real BPE token counting at scale — the dictionary trick: the
-    merge loop runs once per DISTINCT word (the vocabulary, heavy-
-    tailed and tiny next to the corpus), then per-word token counts
-    broadcast-join back onto the (doc, word) occurrence counts. At
-    100 TB the vocabulary side stays a groupBy(word) aggregate and
-    the join-back becomes a shuffle equi-join on word; the merge
-    chain itself is whole-stage-codegen'd Column algebra — no Python
-    anywhere (input_hint's no-per-row-Python rule)."""
-    d = _t(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("word"),
-    ).where(F.col("word") != "")
-    wc = words.groupBy("doc_id", "word").agg(
-        F.count(F.lit(1)).alias("n_occ")
-    )
-    vocab = wc.select("word").distinct().withColumn(
-        "n_tok", bpe_tokenize_col(F.col("word"))
-    )
-    return (
-        wc.join(F.broadcast(vocab), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_occ").cast("long").alias("n_words"),
-            F.sum(F.col("n_occ") * F.col("n_tok")).cast("long").alias("n_bpe"),
-        )
-    )
-
-
-def sql_bpe_token_count():
-    tok = bpe_tokenize_sql("word")
-    return f"""
-    WITH words AS (
-      SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
-      FROM documents
-    ),
-    wc AS (
-      SELECT doc_id, word, count(*) AS n_occ
-      FROM words WHERE word != '' GROUP BY 1, 2
-    ),
-    vocab AS (
-      SELECT word, {tok} AS n_tok FROM (SELECT DISTINCT word FROM wc)
-    )
-    SELECT doc_id, CAST(sum(n_occ) AS BIGINT) AS n_words,
-           CAST(sum(n_occ * n_tok) AS BIGINT) AS n_bpe
-    FROM wc JOIN vocab USING (word) GROUP BY doc_id
-    """
-
-
-def q_lang_id(spark, sf_dir):
-    """Stopword-vote language ID: score = hits of per-language marker
-    words; argmax with deterministic tie-break on language code."""
-    d = _t(spark, sf_dir, "documents")
-    markers = {
-        "en": ["the", "a", "value", "row"],
-        "de": ["der", "die", "das", "und"],
-        "fr": ["le", "la", "et", "les"],
-    }
-    tok = F.split(F.col("text"), " ")
-    scores = [
-        F.struct(
-            F.size(F.filter(tok, lambda t: t.isin(ws))).alias("score"),
-            F.lit(lang).alias("lang"),
-        )
-        for lang, ws in sorted(markers.items())
-    ]
-    best = F.array_max(F.array(*scores))
-    return d.select(
-        "doc_id",
-        best["lang"].alias("pred_lang"),
-        best["score"].cast("long").alias("score"),
-    )
-
-
-def sql_lang_id():
-    # array_max on struct(score, lang) picks highest score, then
-    # lexicographically LAST lang on ties — mirror with max_by over
-    # (score, lang) ordering
-    markers = {
-        "en": ["the", "a", "value", "row"],
-        "de": ["der", "die", "das", "und"],
-        "fr": ["le", "la", "et", "les"],
-    }
-    selects = []
-    for lang, ws in sorted(markers.items()):
-        lst = ", ".join(f"'{w}'" for w in ws)
-        selects.append(
-            f"SELECT doc_id, CAST(len(list_filter(string_split(text, ' '), t -> t IN ({lst}))) AS BIGINT) AS score, '{lang}' AS lang FROM documents"
-        )
-    union = " UNION ALL ".join(selects)
-    # max over a zero-padded "score|lang" key == Spark's array_max
-    # over struct(score, lang) (numeric then lexicographic)
-    return f"""
-    WITH scores AS ({union})
-    SELECT doc_id,
-           string_split(max(lpad(CAST(score AS VARCHAR), 6, '0') || '|' || lang), '|')[2] AS pred_lang,
-           max(score) AS score
-    FROM scores GROUP BY doc_id
-    """
-
-
-def q_html_tags(spark, sf_dir):
-    """Python UDTF surface (functions/text.py HtmlTags): lateral
-    row-expanding parse of the BINARY html column into its tag
-    sequence — registration, lateral join, binary input, exact
-    oracle. html is reconstructed from text exactly as the datagen
-    builds it (testdata ships the text projection only)."""
-    from georaster_spark.functions.text import register
-
-    register(spark)
-    d = _t(spark, sf_dir, "documents").withColumn(
-        "html",
-        F.concat(F.lit("<html><body>"), F.col("text"), F.lit("</body></html>")).cast(
-            "binary"
-        ),
-    )
-    d.createOrReplaceTempView("docs_html")
-    return spark.sql(
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id, t.tag_idx, t.tag "
-        "FROM docs_html, LATERAL html_tags(html) t"
-    )
-
-
-def sql_html_tags():
-    return r"""
-    WITH h AS (SELECT doc_id, '<html><body>' || text || '</body></html>' AS s FROM documents),
-    t AS (SELECT doc_id, regexp_extract_all(s, '</?([a-z]+)>', 1) AS tags FROM h)
-    SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(i - 1 AS INT) AS tag_idx, tags[i] AS tag
-    FROM (SELECT doc_id, tags, unnest(generate_series(1, len(tags))) AS i FROM t)
-    """
-
-
-SAMPLE_RATES_E6 = {"en": 750000, "de": 500000, "fr": 250000, "es": 100000, "it": 50000}
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Deterministic stratified sampling: per-language keep rates via
-    a portable md5-derived hash of the doc key — the quota-
-    downsampling stage of a training-data pipeline, reproducible
-    across engines and runs (unlike rand()-based sampleBy).
-
-    Catalog history: driver-green in r01/r02 (216 rows at sf0.01),
-    then silently shadowed by the exact-n staged pair in round 4
-    (VERDICT r4 "What's wrong" #1). Round 5 restores this pair to
-    the "stratified_sample" key (head slot — semantics changed back
-    vs the r04 row) and registers the exact-n pair under its own key
-    stratified_exact_n."""
-    d = _t(spark, sf_dir, "documents")
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10).cast(
-        "long"
-    ) % 1000000
-    rate = F.element_at(
-        F.create_map(
-            *[x for k, v in sorted(SAMPLE_RATES_E6.items()) for x in (F.lit(k), F.lit(v))]
-        ),
-        F.col("lang"),
-    )
-    return d.where(h < rate).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "lang"
-    )
-
-
-def sql_stratified_sample():
-    cases = " ".join(
-        f"WHEN '{k}' THEN {v}" for k, v in sorted(SAMPLE_RATES_E6.items())
-    )
-    return f"""
-    SELECT CAST(doc_id AS BIGINT) AS doc_id, lang
-    FROM documents
-    WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 1000000
-          < CASE lang {cases} END
-    """
-
-
-def q_dedup_exact(spark, sf_dir):
-    """Exact dedup: group by content hash, keep lowest doc_id."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.groupBy(F.md5("text").alias("fp"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_dups"),
-            F.min("doc_id").cast("long").alias("keep_doc"),
-        )
-    )
-
-
-def sql_dedup_exact():
-    return """
-    SELECT md5(text) AS fp, CAST(count(*) AS BIGINT) AS n_dups,
-           CAST(min(doc_id) AS BIGINT) AS keep_doc
-    FROM documents GROUP BY 1
-    """
-
-
-def _messy_url_col() -> Column:
-    """Deterministic messy-URL synthesis from (doc_id, source): the
-    corpus carries no URL column, so the crawl-dedup input is derived
-    in-query with every canonicalization hazard wired in by doc_id
-    residue — scheme http/https, www. prefix, host case-mangling,
-    explicit :443 port, trailing slash, two utm tracking-param
-    shapes, and a fragment. Docs sharing (source, doc_id % 40)
-    canonicalize to the same key. The DuckDB oracle builds the SAME
-    string with identical CASE arms (strings are exact, so only
-    semantic — not textual — parity is needed)."""
-    d = F.col("doc_id")
-    scheme = F.when(d % 3 == 1, "http://").otherwise("https://")
-    hostc = F.concat(
-        F.when(d % 2 == 0, "www.").otherwise(""),
-        F.col("source"),
-        F.lit(".example.com"),
-    )
-    return F.concat(
-        scheme,
-        F.when(d % 5 == 0, F.upper(hostc)).otherwise(hostc),
-        F.when(d % 7 == 0, ":443").otherwise(""),
-        F.lit("/a/"),
-        (d % 40).cast("string"),
-        F.when(d % 4 == 0, "/").otherwise(""),
-        F.when(d % 6 == 0, "?utm_source=feed")
-        .when(d % 6 == 3, "?utm_campaign=x&utm_medium=y")
-        .otherwise(""),
-        F.when(d % 8 == 0, "#sec2").otherwise(""),
-    )
-
-
-def q_url_dedup(spark, sf_dir):
-    """URL-level crawl dedup: canonicalize every document URL
-    (functions/web.py canonical_url — scheme/port/www/fragment/
-    tracking-param stripping and host lowercasing as ONE codegen
-    projection, RE2-safe regexes so the oracle applies identical
-    patterns) and keep the first doc per canonical key. The whole
-    query is one projection plus one groupBy shuffle on the
-    canonical key — the URL-dedup pass of a crawl pipeline at its
-    minimal shuffle count. At 100 TB the groupBy partially
-    aggregates map-side; no driver state, nothing broadcast."""
-    from georaster_spark.functions.web import canonical_url
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", _messy_url_col().alias("url")
-    )
-    return (
-        d.select("doc_id", "url", canonical_url(F.col("url")).alias("canonical_url"))
-        .groupBy("canonical_url")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_dups"),
-            F.min("doc_id").cast("long").alias("keep_doc"),
-            F.countDistinct("url").cast("long").alias("n_variants"),
-        )
-    )
-
-
-def sql_url_dedup():
-    return r"""
-    WITH raw AS (
-      SELECT doc_id,
-        (CASE WHEN doc_id % 3 = 1 THEN 'http://' ELSE 'https://' END)
-        || (CASE WHEN doc_id % 5 = 0
-                 THEN upper((CASE WHEN doc_id % 2 = 0 THEN 'www.' ELSE '' END) || source || '.example.com')
-                 ELSE (CASE WHEN doc_id % 2 = 0 THEN 'www.' ELSE '' END) || source || '.example.com' END)
-        || (CASE WHEN doc_id % 7 = 0 THEN ':443' ELSE '' END)
-        || '/a/' || CAST(doc_id % 40 AS VARCHAR)
-        || (CASE WHEN doc_id % 4 = 0 THEN '/' ELSE '' END)
-        || (CASE WHEN doc_id % 6 = 0 THEN '?utm_source=feed'
-                 WHEN doc_id % 6 = 3 THEN '?utm_campaign=x&utm_medium=y'
-                 ELSE '' END)
-        || (CASE WHEN doc_id % 8 = 0 THEN '#sec2' ELSE '' END) AS url
-      FROM documents
-    ),
-    s1 AS (SELECT doc_id, url, regexp_replace(url, '^https?://', '') AS u FROM raw),
-    s2 AS (SELECT doc_id, url, regexp_extract(u, '^[^/?#]*', 0) AS host,
-                  substr(u, len(regexp_extract(u, '^[^/?#]*', 0)) + 1) AS rest
-           FROM s1),
-    s3 AS (SELECT doc_id, url,
-                  regexp_replace(regexp_replace(lower(host), '^www\.', ''), ':(80|443)$', '') || rest AS u
-           FROM s2),
-    s4 AS (SELECT doc_id, url,
-                  regexp_replace(regexp_replace(u, '#.*', ''),
-                                 '[?&](utm_[a-z]+|fbclid|gclid)=[^&#]*', '', 'g') AS u
-           FROM s3),
-    s5 AS (SELECT doc_id, url, regexp_replace(u, '/$', '') AS canonical_url FROM s4)
-    SELECT canonical_url, CAST(count(*) AS BIGINT) AS n_dups,
-           CAST(min(doc_id) AS BIGINT) AS keep_doc,
-           CAST(count(DISTINCT url) AS BIGINT) AS n_variants
-    FROM s5 GROUP BY canonical_url
-    """
-
-
-# ---------------------------------------------------------------
-# crawl-side controls: robots verdicts, politeness frontier,
-# anchor-text aggregation, boilerplate removal (operators/crawl.py)
-# ---------------------------------------------------------------
-
-_ROBOTS_DIRS = ["a", "b", "c", "d"]
-_ROBOTS_N_RULES = 8  # per host: 4 broad ('/a'..'/d') + 4 deep
-FRONTIER_BUDGET = 4
-FRONTIER_EPOCH0 = 1700000000
-
-
-def q_robots_filter(spark, sf_dir):
-    """RFC 9309 robots.txt verdicts over the crawl URL list
-    (operators/crawl.py robots_verdicts): per-host rules tables are
-    byte-prefix matched against each URL path; the LONGEST matching
-    rule wins, Allow beats Disallow on a length tie, no match means
-    allowed. Rules are closed-form (20 hosts x 8 rules — 4 broad
-    directory rules + 4 deep prefixes) so the oracle regenerates
-    them without sharing code. Scale shape: the rules side of the
-    join is tiny relative to the URL list (real robots files are
-    ~KB/host) → broadcast equi-join on host; the winner pick is a
-    max(struct) AGGREGATE with map-side partial combine, not a
-    window — no per-host serialization on the URL side."""
-    from georaster_spark.operators.crawl import robots_verdicts
-
-    dirs = F.array(*[F.lit(x) for x in _ROBOTS_DIRS])
-    d = _t(spark, sf_dir, "documents")
-    urls = d.select(
-        "doc_id",
-        F.concat(F.col("source"), F.lit(".example.com")).alias("host"),
-        F.concat(
-            F.lit("/"),
-            F.element_at(dirs, (F.col("doc_id") % 4).cast("int") + 1),
-            F.lit("/"),
-            (F.col("doc_id") % 40).cast("string"),
-        ).alias("path"),
-    )
-    r = spark.range(20 * _ROBOTS_N_RULES).select(
-        F.floor(F.col("id") / _ROBOTS_N_RULES).alias("s"),
-        (F.col("id") % _ROBOTS_N_RULES).alias("i"),
-    )
-    rdir = F.element_at(dirs, (F.col("i") % 4).cast("int") + 1)
-    rules = r.select(
-        F.concat(F.lit("src"), F.col("s").cast("string"), F.lit(".example.com")).alias(
-            "host"
-        ),
-        F.when(F.col("i") < 4, F.concat(F.lit("/"), rdir))
-        .otherwise(
-            F.concat(
-                F.lit("/"),
-                rdir,
-                F.lit("/"),
-                ((F.col("s") * 7 + F.col("i") * 13) % 40).cast("string"),
-            )
-        )
-        .alias("prefix"),
-        ((F.col("s") + F.col("i")) % 3 == 0).alias("allow"),
-    )
-    return robots_verdicts(urls, F.broadcast(rules))
-
-
-def sql_robots_filter():
-    return """
-    WITH urls AS (
-      SELECT doc_id, source || '.example.com' AS host,
-             '/' || list_extract(['a','b','c','d'], CAST(doc_id % 4 AS INT) + 1)
-             || '/' || CAST(doc_id % 40 AS VARCHAR) AS path
-      FROM documents
-    ),
-    rules AS (
-      SELECT 'src' || CAST(range // 8 AS VARCHAR) || '.example.com' AS host,
-             CASE WHEN range % 8 < 4
-                  THEN '/' || list_extract(['a','b','c','d'], CAST(range % 8 % 4 AS INT) + 1)
-                  ELSE '/' || list_extract(['a','b','c','d'], CAST(range % 8 % 4 AS INT) + 1)
-                       || '/' || CAST(((range // 8) * 7 + (range % 8) * 13) % 40 AS VARCHAR)
-             END AS prefix,
-             ((range // 8) + (range % 8)) % 3 = 0 AS allow
-      FROM range(160)
-    ),
-    m AS (
-      SELECT u.doc_id, r.allow, r.prefix,
-             row_number() OVER (PARTITION BY u.doc_id
-                                ORDER BY len(r.prefix) DESC, r.allow DESC,
-                                         r.prefix DESC) AS rn
-      FROM urls u JOIN rules r
-        ON r.host = u.host AND starts_with(u.path, r.prefix)
-    )
-    SELECT u.doc_id, u.host, u.path,
-           coalesce(m.allow, TRUE) AS allowed,
-           coalesce(m.prefix, '') AS rule
-    FROM urls u LEFT JOIN (SELECT * FROM m WHERE rn = 1) m USING (doc_id)
-    """
-
-
-def q_crawl_frontier(spark, sf_dir):
-    """Politeness frontier scheduling (operators/crawl.py
-    crawl_frontier): URLs rank by priority within their host, the
-    top FRONTIER_BUDGET per host get fetch slots spaced the host's
-    crawl-delay apart. ONE hash shuffle on host; the rank filter
-    plans as WindowGroupLimit so per-task state is budget-bounded
-    (plan-audited). A hot host serializes into one task by DESIGN —
-    politeness means one fetch queue per host — and the budget cap
-    bounds that task's output."""
-    from georaster_spark.operators.crawl import crawl_frontier
-
-    d = _t(spark, sf_dir, "documents")
-    urls = d.select(
-        "doc_id",
-        F.concat(
-            F.lit("h"),
-            (F.col("doc_id") % 7).cast("string"),
-            F.lit("."),
-            F.col("source"),
-            F.lit(".example.com"),
-        ).alias("host"),
-        ((F.col("doc_id") * 37) % 1000).alias("priority"),
-        (F.lit(1) + (F.col("doc_id") % 7) % 5).alias("delay_s"),
-    )
-    return crawl_frontier(urls, budget=FRONTIER_BUDGET, epoch0=FRONTIER_EPOCH0)
-
-
-def sql_crawl_frontier():
-    return f"""
-    WITH urls AS (
-      SELECT doc_id,
-             'h' || CAST(doc_id % 7 AS VARCHAR) || '.' || source
-                 || '.example.com' AS host,
-             (doc_id * 37) % 1000 AS priority,
-             1 + (doc_id % 7) % 5 AS delay_s
-      FROM documents
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY host
-                                   ORDER BY priority DESC, doc_id) - 1 AS slot
-      FROM urls
-    )
-    SELECT doc_id, host, CAST(priority AS BIGINT) AS priority,
-           CAST(slot AS BIGINT) AS slot,
-           CAST({FRONTIER_EPOCH0} + slot * delay_s AS BIGINT) AS fetch_ts_s
-    FROM ranked WHERE slot < {FRONTIER_BUDGET}
-    """
-
-
-def q_anchor_topk(spark, sf_dir):
-    """Anchor-text aggregation over the synthetic citation graph
-    (the link-graph twin of ``pagerank`` — same closed-form 3-edge
-    scheme): count each anchor term per TARGET page, keep the top 3
-    anchors per target. The anchor corpus of a page is the classic
-    web-search ranking signal (title-quality text written by OTHER
-    pages). Two shuffles: groupBy(dst, anchor) with map-side partial
-    combine, then the per-dst top-k as a rank-limited window
-    (WindowGroupLimit — per-task state is k, not the anchor
-    cardinality)."""
-    d = _t(spark, sf_dir, "documents").select(F.col("doc_id").alias("v"))
-    cntl = d.agg(F.count(F.lit(1)).alias("nn"))
-    vv = F.col("v")
-    edges = (
-        d.crossJoin(F.broadcast(cntl))
-        .select(
-            "v",
-            F.explode(
-                F.array(
-                    (vv * 7 + 1) % F.col("nn"),
-                    (vv * 13 + 3) % F.col("nn"),
-                    (vv * 29 + 11) % F.col("nn"),
-                )
-            ).alias("dst"),
-        )
-        .where(F.col("dst") != vv)
-        .select(F.col("v").alias("src"), "dst")
-        .distinct()
-    )
-    anchors = edges.select(
-        "dst",
-        F.concat(
-            F.lit("w"), ((F.col("src") + 2 * F.col("dst")) % 23).cast("string")
-        ).alias("anchor"),
-    )
-    counts = anchors.groupBy("dst", "anchor").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    w = Window.partitionBy("dst").orderBy(F.col("cnt").desc(), F.col("anchor").asc())
-    return (
-        counts.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 3)
-        .select(
-            F.col("dst").cast("long").alias("doc_id"),
-            "anchor",
-            "cnt",
-            F.col("rnk").cast("long").alias("rnk"),
-        )
-    )
-
-
-def sql_anchor_topk():
-    return """
-    WITH nodes AS (SELECT CAST(doc_id AS BIGINT) AS v FROM documents),
-    cnt AS (SELECT count(*) AS nn FROM nodes),
-    edges AS (
-      SELECT DISTINCT src, dst FROM (
-        SELECT v AS src, (v * 7 + 1) % nn AS dst FROM nodes, cnt
-        UNION ALL SELECT v, (v * 13 + 3) % nn FROM nodes, cnt
-        UNION ALL SELECT v, (v * 29 + 11) % nn FROM nodes, cnt
-      ) WHERE dst != src
-    ),
-    counts AS (
-      SELECT dst, 'w' || CAST((src + 2 * dst) % 23 AS VARCHAR) AS anchor,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM edges GROUP BY 1, 2
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY dst
-                                   ORDER BY cnt DESC, anchor ASC) AS rnk
-      FROM counts
-    )
-    SELECT CAST(dst AS BIGINT) AS doc_id, anchor, cnt,
-           CAST(rnk AS BIGINT) AS rnk
-    FROM ranked WHERE rnk <= 3
-    """
-
-
-_LINK_SPAN_RE = "<a[^>]*>[^<]*</a>"  # RE2-safe: no lazy quantifier needed
-_TAG_RE = "<[^>]*>"
-
-
-def q_main_content(spark, sf_dir):
-    """Boilerplate removal by line link-density (the Kohlschuetter
-    boilerpipe signal reduced to its core feature): each document is
-    rendered to HTML-ish lines — every 3rd line a nav bar whose text
-    sits inside <a> tags, every 5th content line carrying one inline
-    link — then lines whose link-character density >= 0.5 are
-    dropped and the surviving lines are tag-stripped and rejoined as
-    the main text. The WHOLE operator is higher-order array algebra
-    (transform/filter/aggregate) inside one projection: ZERO
-    shuffles, no explode, no Python — at 100 TB this runs at scan
-    speed with full whole-stage codegen (plan-audited)."""
-    d = _t(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
-    nch = F.ceil(F.size(words) / F.lit(5)).cast("int")
-
-    def render(i):
-        chunk = F.array_join(F.slice(words, i * 5 + 1, 5), " ")
-        nav = F.concat(F.lit('<a href="/nav">'), chunk, F.lit("</a> | menu"))
-        inline = F.concat(chunk, F.lit(' <a href="#r">ref</a>'))
-        return (
-            F.when((F.col("doc_id") + i) % 3 == 0, nav)
-            .when(i % 5 == 2, inline)
-            .otherwise(chunk)
-        )
-
-    def density(line):
-        link_chars = F.aggregate(
-            F.regexp_extract_all(line, F.lit(_LINK_SPAN_RE), F.lit(0)),
-            F.lit(0),
-            lambda acc, m: acc + F.length(m),
-        )
-        return link_chars / F.length(line)
-
-    lines = F.transform(F.sequence(F.lit(0), nch - 1), render)
-    kept = F.filter(lines, lambda ln: density(ln) < 0.5)
-    main_text = F.array_join(
-        F.transform(kept, lambda ln: F.regexp_replace(ln, _TAG_RE, "")), " "
-    )
-    return d.select(
-        "doc_id",
-        F.size(lines).cast("long").alias("n_lines"),
-        F.size(kept).cast("long").alias("n_kept"),
-        main_text.alias("main_text"),
-        F.length(main_text).cast("long").alias("main_len"),
-    )
-
-
-def sql_main_content():
-    return f"""
-    WITH base AS (
-      SELECT doc_id, string_split(text, ' ') AS words FROM documents
-    ),
-    lined AS (
-      SELECT doc_id, list_transform(
-        generate_series(0, CAST(ceil(len(words) / 5.0) AS INT) - 1),
-        i -> CASE
-          WHEN (doc_id + i) % 3 = 0 THEN
-            '<a href="/nav">' || array_to_string(words[i*5+1:i*5+5], ' ')
-            || '</a> | menu'
-          WHEN i % 5 = 2 THEN
-            array_to_string(words[i*5+1:i*5+5], ' ') || ' <a href="#r">ref</a>'
-          ELSE array_to_string(words[i*5+1:i*5+5], ' ')
-        END) AS lines
-      FROM base
-    ),
-    kept AS (
-      SELECT doc_id, lines,
-             list_filter(lines, ln ->
-               CAST(coalesce(list_aggregate(list_transform(
-                 regexp_extract_all(ln, '{_LINK_SPAN_RE}'), m -> len(m)),
-                 'sum'), 0) AS DOUBLE) / len(ln) < 0.5) AS keep
-      FROM lined
-    ),
-    joined AS (
-      SELECT doc_id, len(lines) AS n_lines, len(keep) AS n_kept,
-             array_to_string(list_transform(keep,
-               ln -> regexp_replace(ln, '{_TAG_RE}', '', 'g')), ' ') AS main_text
-      FROM kept
-    )
-    SELECT doc_id, CAST(n_lines AS BIGINT) AS n_lines,
-           CAST(n_kept AS BIGINT) AS n_kept, main_text,
-           CAST(len(main_text) AS BIGINT) AS main_len
-    FROM joined
-    """
-
-
-SHINGLE_N = 3
-JACCARD_T = 0.5
-
-
-def _docs_spread(spark, sf_dir) -> DataFrame:
-    """documents with rows spread across cores: the dedup operators
-    amplify work ~50x per row and a tiny input file arrives as ONE
-    split (at real scale the source is already many splits)."""
-    d = _t(spark, sf_dir, "documents")
-    return d.repartition(spark.sparkContext.defaultParallelism)
-
-
-_SHINGLES_SQL = f"""
-    SELECT doc_id, unnest(list_distinct(list_transform(
-             generate_series(1, greatest(len(string_split(text, ' ')) - {SHINGLE_N - 1}, 1)),
-             i -> array_to_string(string_split(text, ' ')[i:i+{SHINGLE_N - 1}], ' ')))) AS sh
-    FROM documents
-"""
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    """N-gram Jaccard near-dup pairs, scale-safe form: exact Jaccard
-    computed only on MinHash-LSH candidate pairs (operators/dedup.py
-    ngram_jaccard_pairs_lsh) — no raw-shingle self-join, so one
-    boilerplate shingle shared by M docs can't create M² join rows.
-    The oracle keeps the all-pairs formulation; equality holds at the
-    configured banding (tests assert it). rows_per_band=2 (8 bands)
-    because the threshold is low: banding recall at s=τ=0.5 is 0.90
-    with r=2 vs ~0.23 with the minhash_lsh default r=4."""
-    from georaster_spark.operators.dedup import ngram_jaccard_pairs_lsh
-
-    return ngram_jaccard_pairs_lsh(
-        _docs_spread(spark, sf_dir),
-        threshold_e6=int(JACCARD_T * 1000000),
-        shingle_n=SHINGLE_N,
-        n_seeds=MINHASH_SEEDS,
-        rows_per_band=2,
-    )
-
-
-def sql_ngram_jaccard():
-    return f"""
-    WITH sh AS ({_SHINGLES_SQL}),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b, jaccard_e6 FROM (
-      SELECT CAST(doc_a AS BIGINT) AS doc_a, CAST(doc_b AS BIGINT) AS doc_b,
-             CAST(round(CAST(n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) * 1000000.0, 0) AS BIGINT) AS jaccard_e6
-      FROM common
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-    ) WHERE jaccard_e6 >= {int(JACCARD_T * 1000000)}
-    """
-
-
-WINNOW_W = 4
-
-
-def q_winnow_fps(spark, sf_dir):
-    """Winnowing rolling-hash fingerprints (operators/dedup.py):
-    per-doc window-minimum selection over positioned k-gram hashes —
-    any shared ≥(w+k-1)-word substring shares a fingerprint."""
-    from georaster_spark.operators.dedup import winnow_fingerprints
-
-    out = winnow_fingerprints(_docs_spread(spark, sf_dir), shingle_n=SHINGLE_N, window=WINNOW_W)
-    return out.select(F.col("doc_id").cast("long").alias("doc_id"), "fp")
-
-
-def sql_winnow_fps():
-    return f"""
-    WITH pos AS (
-      SELECT doc_id, text,
-             unnest(generate_series(1, greatest(len(string_split(text, ' ')) - {SHINGLE_N - 1}, 1))) AS i
-      FROM documents
-    ),
-    hashed AS (
-      SELECT doc_id, i - 1 AS pos,
-             CAST('0x' || substr(md5(array_to_string(string_split(text, ' ')[i:i+{SHINGLE_N - 1}], ' ')), 1, 15) AS BIGINT) % {_MH_P} AS h
-      FROM pos
-    ),
-    win AS (
-      SELECT doc_id, pos, max(pos) OVER (PARTITION BY doc_id) AS _n,
-             min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                          ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING) AS fp
-      FROM hashed
-    )
-    SELECT DISTINCT CAST(doc_id AS BIGINT) AS doc_id, fp FROM win
-    WHERE pos + {WINNOW_W - 1} <= _n OR (_n < {WINNOW_W - 1} AND pos = 0)
-    """
-
-
-ES_GRAM = 5  # exact-substring window, words
-
-
-def q_exact_substr(spark, sf_dir):
-    """Cross-document exact-substring duplication spans
-    (operators/dedup.py exact_substring_spans): the distributed
-    rewrite of the suffix-array ExactSubstr dedup of Lee et al. 2022
-    — hash every word 5-gram once, flag hashes held by ≥2 distinct
-    docs via min≠max partial aggregates (no countDistinct state),
-    equi-join the flags back (each position row meets ONE flag row,
-    so a boilerplate gram shared by M docs costs M rows, never M²),
-    then merge overlapping windows per doc with a single lag()
-    window into maximal spans. Three shuffles, each linear in corpus
-    tokens; nothing on the driver. Complements winnow_fps (which
-    FINGERPRINTS docs for comparison) by reporting exactly WHICH
-    fraction of each doc is duplicated text."""
-    from georaster_spark.operators.dedup import exact_substring_spans
-
-    out = exact_substring_spans(_docs_spread(spark, sf_dir), gram_len=ES_GRAM)
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("n_words").cast("long").alias("n_words"),
-        "n_spans",
-        "dup_words",
-        F.round(F.col("dup_words") / F.col("n_words") * 1000000.0, 0)
-        .cast("long")
-        .alias("dup_ratio_e6"),
-    )
-
-
-def sql_exact_substr():
-    L = ES_GRAM
-    return f"""
-    WITH pos AS (
-      SELECT doc_id, text,
-             unnest(generate_series(1, len(string_split(text, ' ')) - {L - 1})) AS i
-      FROM documents WHERE len(string_split(text, ' ')) >= {L}
-    ),
-    g AS (
-      SELECT doc_id, len(string_split(text, ' ')) AS n_words, i - 1 AS pos,
-             CAST('0x' || substr(md5(array_to_string(string_split(text, ' ')[i:i+{L - 1}], ' ')), 1, 15) AS BIGINT) % {_MH_P} AS h
-      FROM pos
-    ),
-    dup AS (SELECT h FROM g GROUP BY h HAVING min(doc_id) <> max(doc_id)),
-    m AS (SELECT g.doc_id, g.n_words, g.pos FROM g JOIN dup ON g.h = dup.h),
-    b AS (
-      SELECT doc_id, n_words, pos,
-             CASE WHEN pos - lag(pos, 1, {-L}) OVER (PARTITION BY doc_id ORDER BY pos) >= {L}
-                  THEN 1 ELSE 0 END AS brk
-      FROM m
-    ),
-    isl AS (
-      SELECT doc_id, n_words, pos,
-             sum(brk) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS island
-      FROM b
-    ),
-    sp AS (
-      SELECT doc_id, n_words, island, min(pos) AS s, max(pos) + {L - 1} AS e
-      FROM isl GROUP BY 1, 2, 3
-    )
-    SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(n_words AS BIGINT) AS n_words,
-           CAST(count(*) AS BIGINT) AS n_spans,
-           CAST(sum(e - s + 1) AS BIGINT) AS dup_words,
-           CAST(round(sum(e - s + 1) / CAST(n_words AS DOUBLE) * 1000000.0, 0) AS BIGINT) AS dup_ratio_e6
-    FROM sp GROUP BY doc_id, n_words
-    """
-
-
-PD_CHUNK = 8  # paragraph-dedup unit, words
-
-
-def q_paragraph_dedup(spark, sf_dir):
-    """Corpus-level paragraph/line dedup with document reassembly
-    (operators/dedup.py paragraph_dedup) — the RefinedWeb exact-line
-    recipe: explode docs into positioned 8-word chunks, keep each
-    chunk only at its FIRST corpus occurrence (min(struct) aggregate,
-    so a 10^9-copy hot chunk map-side combines instead of sorting on
-    one window task; the winner join is AQE-skew-splittable), rebuild
-    every doc from its survivors. Output: per-doc chunk counts + md5
-    of the reassembled text. Complements exact_substr (substring
-    spans WITHIN overlap regions) with the line-granularity REMOVAL
-    op a curation pipeline actually applies."""
-    from georaster_spark.operators.dedup import paragraph_dedup
-
-    out = paragraph_dedup(_docs_spread(spark, sf_dir), chunk_words=PD_CHUNK)
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "n_chunks",
-        "n_kept",
-        "kept_md5",
-    )
-
-
-def sql_paragraph_dedup():
-    W = PD_CHUNK
-    return f"""
-    WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-    n AS (
-      SELECT doc_id, ws,
-             unnest(generate_series(0, CAST(ceil(len(ws) / {W}.0) AS INT) - 1)) AS chunk_idx
-      FROM w
-    ),
-    ch AS (
-      SELECT doc_id, chunk_idx,
-             array_to_string(ws[chunk_idx * {W} + 1 : chunk_idx * {W} + {W}], ' ') AS chunk
-      FROM n
-    ),
-    r AS (
-      SELECT doc_id, chunk_idx, chunk,
-             row_number() OVER (PARTITION BY chunk ORDER BY doc_id, chunk_idx) AS rn
-      FROM ch
-    )
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(count(*) AS BIGINT) AS n_chunks,
-           CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           md5(coalesce(string_agg(chunk, ' ' ORDER BY chunk_idx) FILTER (WHERE rn = 1), '')) AS kept_md5
-    FROM r GROUP BY doc_id
-    """
-
-
-MINHASH_SEEDS = 16
-LSH_BANDS = 4  # 4 rows per band
-
-
-from georaster_spark.operators.dedup import (  # noqa: E402
-    MH_P as _MH_P,
-    mh_perm_params as _mh_perm_params,
-)
-
-
-def q_minhash_lsh(spark, sf_dir):
-    """MinHash + LSH banding candidate pairs (operators/dedup.py).
-
-    Portable base hash: first 15 hex chars of md5(shingle) as int64
-    (identical in Spark ``conv`` and DuckDB ``CAST('0x…')``), reduced
-    mod P; permutations as MIN aggregates in ONE groupBy.
-    """
-    from georaster_spark.operators.dedup import lsh_candidate_pairs
-
-    return lsh_candidate_pairs(
-        _docs_spread(spark, sf_dir),
-        n_seeds=MINHASH_SEEDS,
-        rows_per_band=LSH_BANDS,
-        shingle_n=SHINGLE_N,
-    )
-
-
-def sql_minhash_lsh():
-    mins = []
-    for s in range(MINHASH_SEEDS):
-        a, b = _mh_perm_params(s)
-        mins.append(f"min((h * {a} + {b}) % {_MH_P}) AS s{s}")
-    band_selects = []
-    for band in range(MINHASH_SEEDS // LSH_BANDS):
-        cols = " || ',' || ".join(
-            f"CAST(s{band * LSH_BANDS + j} AS VARCHAR)" for j in range(LSH_BANDS)
-        )
-        band_selects.append(
-            f"SELECT doc_id, {band} AS band, md5({cols}) AS bucket FROM sig"
-        )
-    bands_union = " UNION ALL ".join(band_selects)
-    return f"""
-    WITH sh AS ({_SHINGLES_SQL}),
-    hashed AS (
-      SELECT doc_id, CAST('0x' || substr(md5(sh), 1, 15) AS BIGINT) % {_MH_P} AS h FROM sh
-    ),
-    sig AS (SELECT doc_id, {', '.join(mins)} FROM hashed GROUP BY doc_id),
-    bands AS ({bands_union})
-    SELECT DISTINCT CAST(a.doc_id AS BIGINT) AS doc_a, CAST(b.doc_id AS BIGINT) AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    """
-
-
-def q_embedding_topk(spark, sf_dir):
-    """Brute-force cosine top-k ANN baseline: queries broadcast, dot
-    products via zip_with/aggregate (JVM-side), rank via window."""
-    e = _t(spark, sf_dir, "embeddings").withColumn(
-        "emb", F.transform(F.col("embedding"), lambda v: v.cast("double"))
-    )
-    q = e.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("emb"), F.col("q_emb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda c: F.sqrt(F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda a, v: a + v))  # noqa: E731
-    cos = dot / (norm(F.col("emb")) * norm(F.col("q_emb")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        e.crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select(
-            F.col("query_id").cast("long"),
-            F.col("vec_id").cast("long"),
-            F.col("rank").cast("long"),
-            F.round(F.col("cos") * 1000000.0, 0).cast("long").alias("cos_e6"),
-        )
-    )
-
-
-def sql_embedding_topk():
-    return """
-    WITH flat AS (
-      SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-             CAST(unnest(embedding) AS DOUBLE) AS v
-      FROM embeddings
-    ),
-    dots AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS vec_id,
-             sum(e.v * q.v) AS dot,
-             sqrt(sum(e.v * e.v)) AS ne, sqrt(sum(q.v * q.v)) AS nq
-      FROM flat e JOIN flat q ON e.i = q.i AND q.vec_id < 5 AND e.vec_id != q.vec_id
-      GROUP BY 1, 2
-    )
-    SELECT CAST(query_id AS BIGINT) AS query_id, CAST(vec_id AS BIGINT) AS vec_id,
-           CAST(rank AS BIGINT) AS rank,
-           CAST(round(cos * 1000000.0, 0) AS BIGINT) AS cos_e6
-    FROM (
-      SELECT query_id, vec_id, dot / (ne * nq) AS cos,
-             row_number() OVER (PARTITION BY query_id ORDER BY dot / (ne * nq) DESC, vec_id ASC) AS rank
-      FROM dots
-    ) WHERE rank <= 5
-    """
-
-
-SIMHASH_MAX_HAMMING = 8
-
-
-def q_simhash_pairs(spark, sf_dir):
-    """SimHash near-dup pairs (operators/dedup.py): pigeonhole block
-    LSH gives 100% recall at the Hamming threshold, so the result
-    equals the brute-force oracle exactly."""
-    from georaster_spark.operators.dedup import simhash_near_pairs
-
-    return simhash_near_pairs(_docs_spread(spark, sf_dir), max_hamming=SIMHASH_MAX_HAMMING)
-
-
-def sql_simhash_pairs():
-    return f"""
-    WITH sh AS ({_SHINGLES_SQL}),
-    bits AS (
-      SELECT doc_id, j,
-             CASE WHEN j < 32
-                  THEN (CAST('0x' || substr(md5(sh), 1, 15) AS BIGINT) >> j) & 1
-                  ELSE (CAST('0x' || substr(md5(sh), 16, 15) AS BIGINT) >> (j - 32)) & 1
-             END AS bit
-      FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 62)) AS j)
-    ),
-    votes AS (SELECT doc_id, j, sum(bit * 2 - 1) AS v FROM bits GROUP BY 1, 2),
-    sig AS (
-      SELECT doc_id,
-             sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS simhash
-      FROM votes GROUP BY 1
-    )
-    SELECT CAST(a.doc_id AS BIGINT) AS doc_a, CAST(b.doc_id AS BIGINT) AS doc_b,
-           CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_MAX_HAMMING}
-    """
-
-
-def q_dedup_components(spark, sf_dir):
-    """Dedup clustering: connected components over the SimHash
-    near-dup pairs (operators/dedup.py connected_components) —
-    component id = min doc id, the canonical keeper."""
-    from georaster_spark.operators.dedup import (
-        connected_components,
-        simhash_near_pairs,
-    )
-
-    pairs = simhash_near_pairs(_docs_spread(spark, sf_dir), max_hamming=SIMHASH_MAX_HAMMING)
-    cc = connected_components(pairs)
-    return cc.select(
-        F.col("node").cast("long").alias("node"),
-        F.col("component").cast("long").alias("component"),
-    )
-
-
-def sql_dedup_components():
-    return f"""
-    WITH RECURSIVE pairs AS ({sql_simhash_pairs()}),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    )
-    SELECT CAST(u AS BIGINT) AS node,
-           CAST(least(u, min(v)) AS BIGINT) AS component
-    FROM reach GROUP BY u
-    """
-
-
-NEARDUP_COS_E6 = 420000  # synthetic embeddings are near-orthogonal
-NEARDUP_ASSIGN = 3  # IVF multi-assignment width for near-dup blocking
-# (max pairwise cosine ≈ 0.51); a real near-dup pass would use ≥ 0.95
-
-
-def q_embedding_neardup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs, scale-safe form: the IVF
-    bucket blocks the self-join (operators/ann.py
-    cosine_near_dup_pairs with n_centroids) — the corpus pairs only
-    within buckets, never all-pairs. The oracle replicates the SAME
-    deterministic quantizer in SQL, so the comparison is exact; the
-    recall-vs-exact tradeoff is asserted separately in
-    tests/test_ann_asof.py."""
-    from georaster_spark.operators.ann import cosine_near_dup_pairs
-
-    e = _t(spark, sf_dir, "embeddings")
-    return cosine_near_dup_pairs(
-        e,
-        threshold_e6=NEARDUP_COS_E6,
-        n_centroids=IVF_CENTROIDS,
-        n_assign=NEARDUP_ASSIGN,
-    )
-
-
-def sql_embedding_neardup():
-    # same CTE chain as sql_ann_ivf: deterministic first-k quantizer,
-    # argmax bucket (ties -> highest cid), then pairs WITHIN buckets
-    return f"""
-    WITH flat AS (
-      SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-             CAST(unnest(embedding) AS DOUBLE) AS v
-      FROM embeddings
-    ),
-    norms AS (SELECT vec_id, sqrt(sum(v * v)) AS nrm FROM flat GROUP BY 1),
-    nflat AS (SELECT f.vec_id, i, v / nrm AS v FROM flat f JOIN norms USING (vec_id)),
-    cents AS (SELECT vec_id AS cid, i, v FROM nflat WHERE vec_id < {IVF_CENTROIDS}),
-    scores AS (
-      SELECT n.vec_id, c.cid, sum(n.v * c.v) AS score
-      FROM nflat n JOIN cents c ON n.i = c.i
-      GROUP BY 1, 2
-    ),
-    assign AS (
-      SELECT vec_id, cid AS bucket FROM (
-        SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, cid DESC) AS rn
-        FROM scores
-      ) WHERE rn <= {NEARDUP_ASSIGN}
-    ),
-    cand AS (
-      SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-      FROM assign a JOIN assign b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-    ),
-    pairs AS (
-      SELECT c.vec_a, c.vec_b, sum(x.v * y.v) AS cos
-      FROM cand c
-      JOIN nflat x ON x.vec_id = c.vec_a
-      JOIN nflat y ON y.vec_id = c.vec_b AND y.i = x.i
-      GROUP BY 1, 2
-    )
-    SELECT CAST(vec_a AS BIGINT) AS vec_a, CAST(vec_b AS BIGINT) AS vec_b,
-           CAST(round(cos * 1000000.0, 0) AS BIGINT) AS cos_e6
-    FROM pairs WHERE CAST(round(cos * 1000000.0, 0) AS BIGINT) >= {NEARDUP_COS_E6}
-    """
-
-
-IVF_CENTROIDS = 8
-IVF_NPROBE = 2
-
-
-def q_ann_ivf(spark, sf_dir):
-    """IVF approximate top-k (operators/ann.py) with the PINNED
-    k-means|| quantizer (georaster_spark/ann_centroids.py — trained
-    offline by tools/pin_centroids.py, recall@5 0.54 vs 0.39 for the
-    naive first-k quantizer, BENCH/ANN_RECALL.md): bucket the corpus,
-    probe nprobe buckets — the 100 TB ANN plan (bucket is a partition
-    column at scale). The oracle consumes the same pinned centroid
-    table as a VALUES CTE, so the comparison stays exact."""
-    from georaster_spark.ann_centroids import ANN_IVF_CENTROIDS
-    from georaster_spark.operators.ann import _cents_df, ivf_topk
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    cents = _cents_df(spark, ANN_IVF_CENTROIDS)
-    return ivf_topk(e, q, k=5, nprobe=IVF_NPROBE, cents=cents)
-
-
-def _pinned_cents_values() -> str:
-    """The pinned quantizer as (cid, i, v) VALUES rows — i is 1-based
-    to match generate_subscripts; v in e-notation so DuckDB parses a
-    DOUBLE (not DECIMAL), round-tripping the exact IEEE bits."""
-    from georaster_spark.ann_centroids import ANN_IVF_CENTROIDS
-
-    return ", ".join(
-        f"({cid}, {i + 1}, {v:.17e})"
-        for cid, vec in ANN_IVF_CENTROIDS
-        for i, v in enumerate(vec)
-    )
-
-
-def sql_ann_ivf():
-    return f"""
-    WITH flat AS (
-      SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-             CAST(unnest(embedding) AS DOUBLE) AS v
-      FROM embeddings
-    ),
-    norms AS (SELECT vec_id, sqrt(sum(v * v)) AS nrm FROM flat GROUP BY 1),
-    nflat AS (SELECT f.vec_id, i, v / nrm AS v FROM flat f JOIN norms USING (vec_id)),
-    cents AS (SELECT * FROM (VALUES {_pinned_cents_values()}) AS c(cid, i, v)),
-    scores AS (
-      SELECT n.vec_id, c.cid, sum(n.v * c.v) AS score
-      FROM nflat n JOIN cents c ON n.i = c.i
-      GROUP BY 1, 2
-    ),
-    assign AS (
-      SELECT vec_id, cid AS bucket FROM (
-        SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, cid DESC) AS rn
-        FROM scores
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, cid AS bucket FROM (
-        SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, cid DESC) AS rn
-        FROM scores WHERE vec_id < 5
-      ) WHERE rn <= {IVF_NPROBE}
-    ),
-    cand AS (
-      SELECT p.query_id, a.vec_id
-      FROM probes p JOIN assign a ON a.bucket = p.bucket
-      WHERE a.vec_id != p.query_id
-    ),
-    cos AS (
-      SELECT c.query_id, c.vec_id, sum(e.v * q.v) AS cos
-      FROM cand c
-      JOIN nflat e ON e.vec_id = c.vec_id
-      JOIN nflat q ON q.vec_id = c.query_id AND q.i = e.i
-      GROUP BY 1, 2
-    )
-    SELECT CAST(query_id AS BIGINT) AS query_id, CAST(vec_id AS BIGINT) AS vec_id,
-           CAST(rank AS BIGINT) AS rank,
-           CAST(round(cos * 1000000.0, 0) AS BIGINT) AS cos_e6
-    FROM (
-      SELECT query_id, vec_id, cos,
-             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rank
-      FROM cos
-    ) WHERE rank <= 5
-    """
-
-
-SEMDEDUP_TAU_E6 = 400000  # near-orthogonal fixture; real corpora ~0.95
-
-
-def q_semdedup(spark, sf_dir):
-    """SemDeDup semantic dedup (operators/ann.py semdedup; Abbas et
-    al. 2023): cluster on the PINNED k-means|| quantizer (broadcast
-    1-row centroid array — assignment is shuffle-free), then within
-    each cluster drop any vector ≥ τ cosine-similar to a
-    higher-keep-priority peer (paper policy: farthest-from-centroid
-    survives; ties → smaller id). Candidate pairs come from an
-    equi-join on the bucket, never all-pairs, and round 5 caps hot
-    buckets with the census-routed chunked triangle join (simhash's
-    r4 fix — VERDICT r4 task 3): a degenerate cluster's n² pair work
-    now spreads over m·(m+1)/2 bounded tasks instead of one reducer.
-    Pair similarity is an e6-integer dot (order-independent — immune
-    to DuckDB-vs-Spark summation-order .5e-6 boundary flips). τ is
-    calibrated to the near-orthogonal synthetic embeddings (0.40,
-    like embedding_neardup's 0.42); real text embeddings use ~0.95.
-    The oracle replays clustering, priority and the upper-triangle
-    max in SQL from the same pinned VALUES centroids."""
-    from georaster_spark.ann_centroids import ANN_IVF_CENTROIDS
-    from georaster_spark.operators.ann import _cents_df, semdedup
-
-    e = _t(spark, sf_dir, "embeddings")
-    cents = _cents_df(spark, ANN_IVF_CENTROIDS)
-    return semdedup(e, cents, tau_e6=SEMDEDUP_TAU_E6)
-
-
-def sql_semdedup():
-    return f"""
-    WITH flat AS (
-      SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-             CAST(unnest(embedding) AS DOUBLE) AS v
-      FROM embeddings
-    ),
-    norms AS (SELECT vec_id, sqrt(sum(v * v)) AS nrm FROM flat GROUP BY 1),
-    nflat AS (SELECT f.vec_id, i, v / nrm AS v FROM flat f JOIN norms USING (vec_id)),
-    cents AS (SELECT * FROM (VALUES {_pinned_cents_values()}) AS c(cid, i, v)),
-    scores AS (
-      SELECT n.vec_id, c.cid, sum(n.v * c.v) AS score
-      FROM nflat n JOIN cents c ON n.i = c.i
-      GROUP BY 1, 2
-    ),
-    assign AS (
-      SELECT vec_id, cid AS bucket,
-             CAST(round(score * 1000000.0, 0) AS BIGINT) AS self_e6
-      FROM (
-        SELECT vec_id, cid, score,
-               row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, cid DESC) AS rn
-        FROM scores
-      ) WHERE rn = 1
-    ),
-    pairs AS (
-      SELECT a.vec_id AS ia, b.vec_id AS ib
-      FROM assign a JOIN assign b
-        ON a.bucket = b.bucket
-       AND (a.self_e6 < b.self_e6 OR (a.self_e6 = b.self_e6 AND a.vec_id < b.vec_id))
-    ),
-    qflat AS (
-      SELECT vec_id, i, CAST(round(v * 1000000.0, 0) AS BIGINT) AS q FROM nflat
-    ),
-    cos AS (
-      SELECT p.ia, p.ib, sum(x.q * y.q) AS cos_e12
-      FROM pairs p
-      JOIN qflat x ON x.vec_id = p.ia
-      JOIN qflat y ON y.vec_id = p.ib AND y.i = x.i
-      GROUP BY 1, 2
-    ),
-    dropped AS (SELECT DISTINCT ib FROM cos WHERE cos_e12 >= {SEMDEDUP_TAU_E6 * 1000000})
-    SELECT CAST(a.vec_id AS BIGINT) AS vec_id, CAST(a.bucket AS BIGINT) AS bucket,
-           a.self_e6,
-           CAST(CASE WHEN d.ib IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
-    FROM assign a LEFT JOIN dropped d ON a.vec_id = d.ib
-    """
-
-
-def q_asof_join(spark, sf_dir):
-    """As-of join (operators/asof.py): each purchase event + the
-    user's most recent at-or-before view event — union trick, one
-    shuffle, no range-join blowup."""
-    from georaster_spark.operators.asof import asof_join
-
-    e = _t(spark, sf_dir, "events")
-    views = (
-        e.where(F.col("event_type") == "view")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("view_event"))
-        .withColumn("view_ts", F.col("ts"))
-    )
-    purchases = e.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    out = asof_join(purchases, views, on="user_id", ts="ts", right_cols=["view_event", "view_ts"])
-    return out.select("event_id", "user_id", "ts", "view_event", "view_ts")
-
-
-def sql_asof_join():
-    return """
-    WITH v AS (
-      SELECT user_id, ts AS view_ts, max(event_id) AS view_event
-      FROM events WHERE event_type = 'view' GROUP BY 1, 2
-    ),
-    p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
-    SELECT p.event_id, p.user_id, p.ts, v.view_event, v.view_ts
-    FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.view_ts
-    """
-
-
-def q_distinct_exact(spark, sf_dir):
-    """Exact + approximate distinct users per event type. The approx
-    column is asserted within relative error bounds in tests; the
-    oracle gates the exact column (approx sketches are
-    engine-specific, so the HLL estimate is checked as |err| bound
-    re-expressed as a boolean both engines agree on)."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy("event_type")
-        .agg(
-            F.countDistinct("user_id").cast("long").alias("n_users"),
-            F.approx_count_distinct("user_id", 0.01).alias("n_users_approx"),
-        )
-        .select(
-            "event_type",
-            "n_users",
-            (
-                F.abs(F.col("n_users_approx") - F.col("n_users"))
-                <= F.col("n_users") * 0.05
-            ).alias("approx_within_5pct"),
-        )
-    )
-
-
-def sql_distinct_exact():
-    return """
-    SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-           TRUE AS approx_within_5pct
-    FROM events GROUP BY 1
-    """
-
-
-def q_approx_percentile(spark, sf_dir):
-    """Approximate percentile vs exact, gated by an error bound both
-    engines agree on (sketches are engine-specific; the bound is the
-    contract — same pattern as the HLL check in distinct_exact)."""
-    e = _t(spark, sf_dir, "events")
-    exact = F.expr("percentile(value, 0.5)")
-    approx = F.expr("percentile_approx(value, 0.5, 1000)")
-    return e.groupBy("event_type").agg(
-        F.round(exact * 1000000.0, 0).cast("long").alias("p50_exact_e6"),
-        (F.abs(approx - exact) <= F.lit(0.01) * F.greatest(F.abs(exact), F.lit(1.0)))
-        .alias("approx_within_1pct"),
-    )
-
-
-def sql_approx_percentile():
-    return """
-    SELECT event_type,
-           CAST(round(quantile_cont(value, 0.5) * 1000000.0, 0) AS BIGINT) AS p50_exact_e6,
-           TRUE AS approx_within_1pct
-    FROM events GROUP BY event_type
-    """
 
 
 def q_raster_info(spark, sf_dir):
@@ -4487,610 +1580,6 @@ def sql_pmtiles_webp_ingest():
     """
 
 
-def q_moving_avg(spark, sf_dir):
-    """Window-frame coverage: 5-event trailing moving average of value
-    per user (rowsBetween frame, SURVEY §2.3 'frames for moving
-    aggs')."""
-    e = _t(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-4, Window.currentRow)
-    )
-    return e.select(
-        "event_id",
-        "user_id",
-        F.round(F.avg(F.round(F.col("value") * 1000000.0, 0)).over(w), 0)
-        .cast("long")
-        .alias("moving_avg_e6"),
-    )
-
-
-def sql_moving_avg():
-    return """
-    SELECT event_id, user_id,
-           CAST(round(avg(round(value * 1000000.0, 0)) OVER (
-             PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 0) AS BIGINT) AS moving_avg_e6
-    FROM events
-    """
-
-
-# =====================================================================
-# multimodal (operators/multimodal.py — decode stubbed, plumbing real)
-# =====================================================================
-
-
-def _docs_media(spark, sf_dir):
-    from georaster_spark.operators.multimodal import with_media
-
-    return with_media(_docs_spread(spark, sf_dir))
-
-
-def _media_dims_sql() -> str:
-    """Shared oracle CTE: per-doc media kind + generated image dims
-    (ids cycle PNG / JPEG / WebP by id % 3 — mirrors
-    with_mixed_media, whose kernels dispatch on magic bytes, not on
-    the id)."""
-    from georaster_spark.operators.multimodal import (
-        JPEG_H_MOD,
-        JPEG_H_OFF,
-        JPEG_W_MOD,
-        JPEG_W_OFF,
-        PNG_H_MOD,
-        PNG_H_OFF,
-        PNG_W_MOD,
-        PNG_W_OFF,
-        WEBP_H_MOD,
-        WEBP_H_OFF,
-        WEBP_W_MOD,
-        WEBP_W_OFF,
-    )
-
-    return f"""
-    dims AS (
-      SELECT doc_id,
-             CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-                  ELSE 'webp' END AS kind,
-             CASE doc_id % 3
-                  WHEN 0 THEN doc_id % {PNG_W_MOD} + {PNG_W_OFF}
-                  WHEN 1 THEN doc_id % {JPEG_W_MOD} + {JPEG_W_OFF}
-                  ELSE doc_id % {WEBP_W_MOD} + {WEBP_W_OFF} END AS w,
-             CASE doc_id % 3
-                  WHEN 0 THEN (doc_id * 7) % {PNG_H_MOD} + {PNG_H_OFF}
-                  WHEN 1 THEN (doc_id * 7) % {JPEG_H_MOD} + {JPEG_H_OFF}
-                  ELSE (doc_id * 7) % {WEBP_H_MOD} + {WEBP_H_OFF} END AS h
-      FROM documents
-    )"""
-
-
-def q_media_features(spark, sf_dir):
-    """Image decode / feature extraction over a format-heterogeneous
-    BINARY media column (PNG, JPEG, and WebP blobs mixed in one
-    column, the way a real lake carries them): the Arrow kernel
-    dispatches on magic bytes and decodes ALL THREE formats for real
-    (stdlib codecs, sources/png.py + sources/jpeg.py +
-    sources/webp.py). Output columns are all decode-derived, so the
-    oracle re-derives them in closed form from the generation
-    formulas — never from the engine's own decode."""
-    from georaster_spark.operators.multimodal import (
-        decode_image_features,
-        with_mixed_media,
-    )
-
-    d = with_mixed_media(_docs_spread(spark, sf_dir).select("doc_id"))
-    return decode_image_features(d).select(
-        "doc_id", "kind", "width", "height", "mean_luma"
-    )
-
-
-def sql_media_features():
-    # largest generated image: JPEG 32x30 = 960 px
-    return f"""
-    WITH {_media_dims_sql()},
-    px AS (
-      SELECT d.doc_id, d.kind, d.w, d.h,
-             CASE d.kind
-               WHEN 'png'
-                 THEN ((r.range % d.w) * 5 + (r.range // d.w) * 11 + d.doc_id) % 256
-               WHEN 'webp'
-                 THEN ((r.range % d.w) * 3 + (r.range // d.w) * 7 + d.doc_id) % 256
-               ELSE (((r.range % d.w) // 8) * 5 + ((r.range // d.w) // 8) * 11 + d.doc_id) % 256
-             END AS v
-      FROM dims d CROSS JOIN range(960) r
-      WHERE r.range < d.w * d.h
-    )
-    SELECT doc_id, kind, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-           CAST(sum(v) // (w * h) AS BIGINT) AS mean_luma
-    FROM px GROUP BY doc_id, kind, w, h
-    """
-
-
-def q_media_png_decode(spark, sf_dir):
-    """Real image-codec path for the multimodal suite: REAL greyscale
-    PNG blobs (stdlib encoder) attached per doc, then decoded back
-    inside the Arrow kernel by the stdlib PNG decoder — width/height/
-    mean_luma come from the actual bytes, and the oracle re-derives
-    them in closed form from the generation formula (never from the
-    engine's own decode)."""
-    from georaster_spark.operators.multimodal import (
-        decode_image_features,
-        with_png_media,
-    )
-
-    d = with_png_media(_docs_spread(spark, sf_dir).select("doc_id"))
-    return decode_image_features(d).select(
-        "doc_id", "width", "height", "mean_luma"
-    )
-
-
-def sql_media_png_decode():
-    from georaster_spark.operators.multimodal import (
-        PNG_H_MOD,
-        PNG_H_OFF,
-        PNG_W_MOD,
-        PNG_W_OFF,
-    )
-
-    max_px = (PNG_W_MOD + PNG_W_OFF - 1) * (PNG_H_MOD + PNG_H_OFF - 1)
-    return f"""
-    WITH dims AS (
-      SELECT doc_id,
-             doc_id % {PNG_W_MOD} + {PNG_W_OFF} AS w,
-             (doc_id * 7) % {PNG_H_MOD} + {PNG_H_OFF} AS h
-      FROM documents
-    ),
-    px AS (
-      SELECT d.doc_id, d.w, d.h,
-             ((r.range % d.w) * 5 + (r.range // d.w) * 11 + d.doc_id) % 256 AS v
-      FROM dims d CROSS JOIN range({max_px}) r
-      WHERE r.range < d.w * d.h
-    )
-    SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-           CAST(sum(v) // (w * h) AS BIGINT) AS mean_luma
-    FROM px GROUP BY doc_id, w, h
-    """
-
-
-FRAME_BYTES = 16
-FRAME_STRIDE = 4
-
-
-def q_media_frames(spark, sf_dir):
-    """Video-style frame sampling: slice blobs into fixed frames, keep
-    every stride-th — row-amplifying narrow mapInPandas stage."""
-    from georaster_spark.operators.multimodal import frame_sample
-
-    return frame_sample(
-        _docs_media(spark, sf_dir), frame_bytes=FRAME_BYTES, stride=FRAME_STRIDE
-    )
-
-
-def sql_media_frames():
-    fb, st = FRAME_BYTES, FRAME_STRIDE
-    return f"""
-    WITH m AS (SELECT doc_id, 'IMG0' || text AS s FROM documents),
-    f AS (
-      SELECT doc_id, s,
-             unnest(generate_series(0, CAST(ceil(length(s) / {fb}.0) AS INT) - 1)) AS fi
-      FROM m
-    )
-    SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(fi AS BIGINT) AS frame_idx,
-           md5(substring(s, fi * {fb} + 1, {fb})) AS frame_digest,
-           CAST(length(substring(s, fi * {fb} + 1, {fb})) AS BIGINT) AS frame_len
-    FROM f WHERE fi % {st} = 0
-    """
-
-
-def q_media_resize(spark, sf_dir):
-    """REAL image resize over the mixed PNG/JPEG/WebP media column:
-    decode in the Arrow kernel, 2x2 integer box-average downsample,
-    emit the resized geometry + mean. Closed-form oracle: a PNG or
-    WebP output pixel is the exact 4-term mean; a JPEG 2x2 box never
-    straddles an 8x8 tile (boundaries are even, the second sample is
-    odd), so the output pixel equals the tile constant."""
-    from georaster_spark.operators.multimodal import (
-        downsample_image,
-        with_mixed_media,
-    )
-
-    d = with_mixed_media(_docs_spread(spark, sf_dir).select("doc_id"))
-    return downsample_image(d, factor=2)
-
-
-def sql_media_resize():
-    # largest downsampled image: JPEG 16x15 = 240 px
-    return f"""
-    WITH {_media_dims_sql()},
-    od AS (
-      SELECT doc_id, kind, w // 2 AS w2, h // 2 AS h2 FROM dims
-    ),
-    px AS (
-      SELECT o.doc_id, o.w2, o.h2,
-             CASE o.kind
-             WHEN 'png' THEN
-               ( ((r.range % o.w2) * 10      + (r.range // o.w2) * 22      + o.doc_id) % 256
-               + ((r.range % o.w2) * 10 + 5  + (r.range // o.w2) * 22      + o.doc_id) % 256
-               + ((r.range % o.w2) * 10      + (r.range // o.w2) * 22 + 11 + o.doc_id) % 256
-               + ((r.range % o.w2) * 10 + 5  + (r.range // o.w2) * 22 + 11 + o.doc_id) % 256
-               ) // 4
-             WHEN 'webp' THEN
-               ( ((r.range % o.w2) * 6      + (r.range // o.w2) * 14     + o.doc_id) % 256
-               + ((r.range % o.w2) * 6 + 3  + (r.range // o.w2) * 14     + o.doc_id) % 256
-               + ((r.range % o.w2) * 6      + (r.range // o.w2) * 14 + 7 + o.doc_id) % 256
-               + ((r.range % o.w2) * 6 + 3  + (r.range // o.w2) * 14 + 7 + o.doc_id) % 256
-               ) // 4
-             ELSE ((r.range % o.w2) // 4 * 5 + (r.range // o.w2) // 4 * 11 + o.doc_id) % 256
-             END AS v
-      FROM od o CROSS JOIN range(240) r
-      WHERE r.range < o.w2 * o.h2
-    )
-    SELECT doc_id, CAST(w2 AS BIGINT) AS width, CAST(h2 AS BIGINT) AS height,
-           CAST(sum(v) // (w2 * h2) AS BIGINT) AS mean_luma
-    FROM px GROUP BY doc_id, w2, h2
-    """
-
-
-def q_media_vp8_decode(spark, sf_dir):
-    """Real LOSSY-WebP path in isolation (round 5, closes the last
-    media parity gap — the reference decodes lossy VP8 tiles via the
-    image crate, src/pmtiles.rs:30-32): per doc a VP8X container with
-    a raw ALPH plane and a 1-2 x 1-2 macroblock DC16 key frame is
-    WRITTEN (sources/vp8_enc.py) then DECODED back through the full
-    RFC 6386 intra path (sources/vp8.py: bool decoder, token decode,
-    iWHT + iDCT, DC16 prediction chained across macroblocks) inside
-    one Arrow kernel. Outputs are integer plane sums, and the oracle
-    replays the spec's exact integer math in closed form — the
-    cross-MB DC-prediction chain (left / above / rounded-mean) is the
-    part a wrong decoder cannot fake. The decoder itself is verified
-    bit-exact against libwebp in tests/test_vp8.py."""
-    from georaster_spark.operators.multimodal import (
-        decode_vp8_planes,
-        with_vp8_media,
-    )
-
-    d = with_vp8_media(_docs_spread(spark, sf_dir).select("doc_id"))
-    return decode_vp8_planes(d)
-
-
-def sql_media_vp8_decode():
-    from georaster_spark.operators.multimodal import VP8_QI
-    from georaster_spark.sources.vp8_tables import DC_QLOOKUP
-
-    y2q = 2 * DC_QLOOKUP[VP8_QI]
-
-    def res(g):
-        return (
-            f"((((doc_id * 5 + {13 * g}) % 7) * {y2q} + 3) // 8 + 4) // 8"
-        )
-
-    return f"""
-    WITH r AS (
-      SELECT doc_id,
-             doc_id % 2 + 1 AS mbw,
-             (doc_id // 2) % 2 + 1 AS mbh,
-             (doc_id * 37 + 11) % 256 AS alpha,
-             {res(0)} AS r0,
-             {res(1)} AS r1,
-             {res(2)} AS r2,
-             {res(3)} AS r3
-      FROM documents
-    ),
-    v AS (
-      SELECT doc_id, mbw, mbh, alpha,
-             128 + r0 AS v00,
-             128 + r0 + r1 AS v01,
-             128 + r0 + r2 AS v10,
-             ((128 + r0 + r1) + (128 + r0 + r2) + 1) // 2 + r3 AS v11
-      FROM r
-    )
-    SELECT doc_id,
-           CAST(16 * mbw AS BIGINT) AS width,
-           CAST(16 * mbh AS BIGINT) AS height,
-           CAST(256 * (v00
-                 + CASE WHEN mbw = 2 THEN v01 ELSE 0 END
-                 + CASE WHEN mbh = 2 THEN v10 ELSE 0 END
-                 + CASE WHEN mbw = 2 AND mbh = 2 THEN v11 ELSE 0 END)
-                AS BIGINT) AS y_sum,
-           CAST(8192 * mbw * mbh AS BIGINT) AS u_sum,
-           CAST(8192 * mbw * mbh AS BIGINT) AS v_sum,
-           CAST(256 * mbw * mbh * alpha AS BIGINT) AS alpha_sum
-    FROM v
-    """
-
-
-def q_media_mp3_meta(spark, sf_dir):
-    """REAL MPEG-audio frame parsing (round 5): per doc a valid
-    MPEG1-Layer-III frame chain with an ID3v2 tag is written
-    (sources/mp3.py build_mp3) and parsed back frame-by-frame inside
-    the Arrow audio kernel — sample count, rate, and duration come
-    from walking the actual headers (one wrong table entry or length
-    formula breaks the chain loudly). PCM synthesis stays the
-    disclosed stub, so this pair projects only the real-parse
-    columns; the parser is additionally validated against a
-    real-world CBR golden in tests/test_mp3.py."""
-    from georaster_spark.operators.multimodal import (
-        decode_audio_features,
-        with_mp3_media,
-    )
-
-    d = with_mp3_media(_docs_spread(spark, sf_dir).select("doc_id"))
-    return decode_audio_features(d).select(
-        "doc_id", "kind", "n_samples", "sample_rate", "duration_ms"
-    )
-
-
-def sql_media_mp3_meta():
-    from georaster_spark.operators.multimodal import MP3_KBPS, MP3_RATES
-
-    assert len(MP3_KBPS) == 14  # table pinned; bitrate not projected
-    rates = ", ".join(str(r) for r in MP3_RATES)
-    return f"""
-    WITH p AS (
-      SELECT doc_id,
-             doc_id % 9 + 2 AS n_frames,
-             [{rates}][CAST((doc_id * 7) % 3 AS INT) + 1] AS rate
-      FROM documents
-    )
-    SELECT doc_id, 'mp3' AS kind,
-           CAST(n_frames * 1152 AS BIGINT) AS n_samples,
-           CAST(rate AS BIGINT) AS sample_rate,
-           CAST(n_frames * 1152 * 1000 // rate AS BIGINT) AS duration_ms
-    FROM p
-    """
-
-
-def q_media_jpeg_decode(spark, sf_dir):
-    """Real JPEG-codec path in isolation: engine-written baseline
-    JFIF blobs (huffman + DCT, sources/jpeg.py) attached per doc,
-    decoded back inside the Arrow kernel. Block-constant content at
-    quality=100 makes the decode bit-exact (all-ones quant, integral
-    DC, zero AC), so the oracle re-derives width/height/mean in
-    closed form from the generation formula."""
-    from georaster_spark.operators.multimodal import (
-        decode_image_features,
-        with_jpeg_media,
-    )
-
-    d = with_jpeg_media(_docs_spread(spark, sf_dir).select("doc_id"))
-    return decode_image_features(d).select(
-        "doc_id", "width", "height", "mean_luma"
-    )
-
-
-def sql_media_jpeg_decode():
-    from georaster_spark.operators.multimodal import (
-        JPEG_H_MOD,
-        JPEG_H_OFF,
-        JPEG_W_MOD,
-        JPEG_W_OFF,
-    )
-
-    max_px = (JPEG_W_MOD + JPEG_W_OFF - 1) * (JPEG_H_MOD + JPEG_H_OFF - 1)
-    return f"""
-    WITH dims AS (
-      SELECT doc_id,
-             doc_id % {JPEG_W_MOD} + {JPEG_W_OFF} AS w,
-             (doc_id * 7) % {JPEG_H_MOD} + {JPEG_H_OFF} AS h
-      FROM documents
-    ),
-    px AS (
-      SELECT d.doc_id, d.w, d.h,
-             (((r.range % d.w) // 8) * 5 + ((r.range // d.w) // 8) * 11 + d.doc_id) % 256 AS v
-      FROM dims d CROSS JOIN range({max_px}) r
-      WHERE r.range < d.w * d.h
-    )
-    SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-           CAST(sum(v) // (w * h) AS BIGINT) AS mean_luma
-    FROM px GROUP BY doc_id, w, h
-    """
-
-
-def q_media_audio(spark, sf_dir):
-    """Audio metadata from blob length — JVM-side Column algebra, no
-    decode round-trip for metadata-only queries."""
-    from georaster_spark.operators.multimodal import audio_meta
-
-    return audio_meta(_docs_media(spark, sf_dir))
-
-
-def sql_media_audio():
-    return """
-    SELECT doc_id,
-           CAST(length('IMG0' || text) AS BIGINT) AS n_bytes,
-           CAST(length('IMG0' || text) // 2 AS BIGINT) AS n_samples,
-           CAST((length('IMG0' || text) // 2) * 1000 // 16000 AS BIGINT) AS duration_ms
-    FROM documents
-    """
-
-
-def q_media_wav_decode(spark, sf_dir):
-    """REAL audio decode (new in round 4): engine-written RIFF/WAVE
-    PCM16 blobs attached per doc, parsed back inside the Arrow kernel
-    by the stdlib WAV codec (sources/wav.py) — sample count, rate,
-    duration, and mean |amplitude| all come from the actual bytes;
-    the oracle re-derives them in closed form from the generation
-    formula. Compressed audio keeps the disclosed digest stub."""
-    from georaster_spark.operators.multimodal import (
-        decode_audio_features,
-        with_wav_media,
-    )
-
-    d = with_wav_media(_docs_spread(spark, sf_dir).select("doc_id"))
-    return decode_audio_features(d)
-
-
-def sql_media_wav_decode():
-    from georaster_spark.operators.multimodal import WAV_N_MOD, WAV_N_OFF
-
-    return f"""
-    WITH dims AS (
-      SELECT doc_id, doc_id % {WAV_N_MOD} + {WAV_N_OFF} AS n,
-             CASE WHEN doc_id % 2 = 0 THEN 8000 ELSE 16000 END AS rate
-      FROM documents
-    ),
-    s AS (
-      SELECT d.doc_id, d.n, d.rate,
-             abs((r.range * 37 + d.doc_id * 11) % 65536 - 32768) AS a
-      FROM dims d CROSS JOIN range({WAV_N_MOD + WAV_N_OFF - 1}) r
-      WHERE r.range < d.n
-    )
-    SELECT doc_id, 'wav' AS kind, CAST(n AS BIGINT) AS n_samples,
-           CAST(rate AS BIGINT) AS sample_rate,
-           CAST(n * 1000 // rate AS BIGINT) AS duration_ms,
-           CAST(sum(a) // n AS BIGINT) AS mean_abs
-    FROM s GROUP BY doc_id, n, rate
-    """
-
-
-# =====================================================================
-# streaming (georaster_spark/streaming — availableNow == batch gate)
-# =====================================================================
-
-
-def q_media_video_decode(spark, sf_dir):
-    """REAL video decode (new in round 4): engine-written MJPEG AVI
-    blobs (RIFF container + per-frame q100 baseline JPEG,
-    sources/avi.py) attached per doc; the Arrow kernel walks the
-    container, samples every 2nd frame, and decodes each sampled
-    frame through the stdlib JPEG codec. All outputs come from the
-    actual bytes; the oracle re-derives them in closed form from the
-    generation formulas. Inter-frame codecs keep the disclosed
-    digest stub."""
-    from georaster_spark.operators.multimodal import (
-        decode_video_features,
-        with_avi_media,
-    )
-
-    d = with_avi_media(_docs_spread(spark, sf_dir).select("doc_id"))
-    return decode_video_features(d, stride=2)
-
-
-def sql_media_video_decode():
-    from georaster_spark.operators.multimodal import AVI_F_MOD, AVI_F_OFF
-
-    return f"""
-    WITH dims AS (
-      SELECT doc_id, doc_id % {AVI_F_MOD} + {AVI_F_OFF} AS n,
-             (doc_id % 3 + 2) * 8 AS w, ((doc_id * 7) % 3 + 2) * 8 AS h,
-             (doc_id % 10 + 5) * 1000 AS usec
-      FROM documents
-    ),
-    tiles AS (
-      SELECT d.doc_id, d.n, d.w, d.h, d.usec,
-             (bx.range * 5 + by.range * 11 + d.doc_id + f.range * 17) % 256 AS v
-      FROM dims d
-      CROSS JOIN range({AVI_F_MOD + AVI_F_OFF - 1}) f
-      CROSS JOIN range(4) bx CROSS JOIN range(4) by
-      WHERE f.range < d.n AND f.range % 2 = 0
-        AND bx.range < d.w // 8 AND by.range < d.h // 8
-    )
-    SELECT doc_id, 'mjpeg' AS kind, CAST(n AS BIGINT) AS n_frames,
-           CAST((n + 1) // 2 AS BIGINT) AS n_sampled,
-           CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-           CAST(usec AS BIGINT) AS usec_per_frame,
-           CAST(sum(v * 64) // ((n + 1) // 2 * w * h) AS BIGINT) AS mean_luma
-    FROM tiles GROUP BY doc_id, n, w, h, usec
-    """
-
-
-def q_stream_window_agg(spark, sf_dir):
-    """Watermarked tumbling-window streaming aggregate; on a static
-    input the availableNow replay must equal the batch group-by."""
-    from georaster_spark.streaming.events import windowed_counts
-
-    return windowed_counts(spark, sf_dir)
-
-
-def sql_stream_window_agg():
-    return """
-    SELECT date_trunc('hour', ts) AS hour, event_type,
-           CAST(sum(CAST(round(value * 1000000.0, 0) AS BIGINT)) AS BIGINT) AS sum_value_e6,
-           CAST(count(*) AS BIGINT) AS n
-    FROM events GROUP BY 1, 2
-    """
-
-
-def q_stream_to_table(spark, sf_dir):
-    """Exactly-once streaming sink: watermarked window agg streamed
-    via foreachBatch into the snapshot table layer (idempotent
-    batch-tagged commits); the committed table must equal the batch
-    aggregate."""
-    import tempfile
-
-    from georaster_spark.streaming.events import stream_to_table
-
-    base = tempfile.mkdtemp(prefix="stream_sink_")
-    return stream_to_table(spark, sf_dir, f"{base}/table", f"{base}/ckpt")
-
-
-def sql_stream_to_table():
-    return sql_stream_window_agg()
-
-
-def q_stream_dedup(spark, sf_dir):
-    """Streaming exact dedup (the training-pipeline dedup primitive
-    in its streaming form): first-seen content fingerprints via
-    stateful ``dropDuplicates``; availableNow replay of the static
-    corpus equals batch DISTINCT — the oracle's assertion."""
-    from georaster_spark.streaming.events import dedup_stream
-
-    return dedup_stream(spark, sf_dir)
-
-
-def sql_stream_dedup():
-    return "SELECT DISTINCT md5(text) AS fp FROM documents"
-
-
-def q_stream_warc(spark, sf_dir):
-    """Streaming crawl ingest: .warc.gz shards landing in a watched
-    directory parse incrementally through the SAME member-walk/parse
-    kernels as the batch WARC reader (sources/warc.py), so batch and
-    streaming ingest cannot drift. One availableNow replay of the
-    static fixture shards must equal the batch read — the oracle is
-    the same closed-form re-derivation as ``warc_ingest``, proving
-    byte-identical extracted text per url through the streaming
-    path too."""
-    from georaster_spark.datagen import fixture_warc_paths
-    from georaster_spark.streaming.events import warc_pages_stream
-
-    return warc_pages_stream(spark, fixture_warc_paths())
-
-
-def sql_stream_warc():
-    return sql_warc_ingest()
-
-
-def q_stream_sessionize(spark, sf_dir):
-    """Stateful streaming sessionization (applyInPandasWithState);
-    equals the batch window-function sessionizer on static input."""
-    from georaster_spark.streaming.events import sessionize_stream
-
-    return sessionize_stream(spark, sf_dir)
-
-
-def sql_stream_sessionize():
-    return """
-    WITH flags AS (
-      SELECT user_id, ts, event_id, event_type,
-             CASE WHEN lag(ts) OVER w IS NULL
-                       OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sess AS (
-      SELECT user_id, ts, event_type,
-             sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                 ROWS UNBOUNDED PRECEDING) AS session_id
-      FROM flags
-    )
-    SELECT CAST(user_id AS BIGINT) AS user_id, CAST(session_id AS BIGINT) AS session_id,
-           min(ts) AS session_start, CAST(count(*) AS BIGINT) AS n_events,
-           array_to_string(list_sort(list_distinct(list(event_type))), ',') AS event_types
-    FROM sess GROUP BY 1, 2
-    """
-
-
 def pip_join_hot_counts(spark, sf_dir, salted: bool = True):
     """Point-in-polygon join under DEGENERATE key skew, then per-
     polygon counts (E5 measured, not just tested): half of all
@@ -5320,572 +1809,84 @@ def sql_ice_merge():
     """
 
 
-def q_crawl_delta(spark, sf_dir):
-    """Incremental-crawl snapshot diff through the snapshot table
-    layer (E10 + the webtext lane): a crawl table (url, lang,
-    text_h) gets a deterministic RECRAWL applied as two atomic
-    commits — changed pages (doc_id%5: text gains ' v2', so the
-    content hash moves), discovered pages (doc_id%17: new urls), then
-    vanished pages (doc_id%11==3: deleted) — and the query TIME
-    TRAVELS to the pre-recrawl snapshot, full-outer-joins it against
-    the live one on url, and classifies every page added / removed /
-    changed / same. This is the change-detection pass of every
-    incremental crawl pipeline, and a green hash is ALSO evidence the
-    snapshot chain + time travel work (the query raises unless the
-    chain is base→upsert→delete). Scale shape: ONE sort-merge full
-    outer join on url — both sides are manifest-planned parquet
-    scans, each pruned to its snapshot's files; no driver state
-    beyond the manifests."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from georaster_spark.sources import icetable
-
-    recipe = "crawlv1:c%5+v2:a%17+new:d%11=3"
-    tbl = os.path.join(
-        tempfile.gettempdir(),
-        "georaster_crawl_delta_"
-        + hashlib.md5(f"{sf_dir}|{recipe}".encode()).hexdigest()[:10],
-    )
-    if not os.path.exists(tbl):
-        d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-        def h(col):
-            return (
-                F.conv(F.substring(F.md5(col), 1, 15), 16, 10)
-                .cast("long")
-                .alias("text_h")
-            )
-
-        url = F.concat(
-            F.lit("https://"),
-            F.col("source"),
-            F.lit(".example.com/p/"),
-            F.col("doc_id").cast("string"),
-        )
-        base = d.select(url.alias("url"), "lang", h(F.col("text")), "doc_id")
-        tmp = f"{tbl}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        icetable.write_table(base.drop("doc_id"), tmp, n_files=8)
-        changed = d.where(F.col("doc_id") % 5 == 0).select(
-            url.alias("url"), "lang", h(F.concat(F.col("text"), F.lit(" v2")))
-        )
-        added = d.where(F.col("doc_id") % 17 == 0).select(
-            F.concat(
-                F.lit("https://"),
-                F.col("source"),
-                F.lit(".example.com/p/"),
-                (F.col("doc_id") + 10000).cast("string"),
-            ).alias("url"),
-            "lang",
-            h(F.concat(F.col("text"), F.lit(" new"))),
-        )
-        icetable.merge_table(spark, tmp, changed.unionByName(added), ["url"])
-        removed = base.where(F.col("doc_id") % 11 == 3).select("url")
-        icetable.merge_table(spark, tmp, removed, ["url"], delete=True)
-        try:
-            os.replace(tmp, tbl)
-        except OSError:  # another process won the rename
-            shutil.rmtree(tmp, ignore_errors=True)
-    chain = icetable.committed_chain(tbl)
-    if len(chain) != 3:
-        raise RuntimeError(
-            f"expected 3 snapshots (crawl, recrawl, vanish), got {len(chain)}"
-        )
-    old = icetable.read_table(spark, tbl, chain[0]["snapshot_id"]).select(
-        F.col("url").alias("o_url"), F.col("lang").alias("o_lang"),
-        F.col("text_h").alias("o_h"),
-    )
-    new = icetable.read_table(spark, tbl).select(
-        F.col("url").alias("n_url"), F.col("lang").alias("n_lang"),
-        F.col("text_h").alias("n_h"),
-    )
-    j = old.join(new, old["o_url"] == new["n_url"], "full_outer")
-    status = (
-        F.when(F.col("o_url").isNull(), F.lit("added"))
-        .when(F.col("n_url").isNull(), F.lit("removed"))
-        .when(F.col("o_h") != F.col("n_h"), F.lit("changed"))
-        .otherwise(F.lit("same"))
-    )
-    return j.select(
-        status.alias("status"),
-        F.coalesce(F.col("n_lang"), F.col("o_lang")).alias("lang"),
-    ).groupBy("status", "lang").agg(F.count(F.lit(1)).cast("long").alias("n_urls"))
-
-
-def sql_crawl_delta():
-    return """
-    WITH base AS (
-      SELECT 'https://' || source || '.example.com/p/'
-               || CAST(doc_id AS VARCHAR) AS url,
-             lang,
-             CAST('0x' || substr(md5(text), 1, 15) AS BIGINT) AS text_h,
-             doc_id, text, source
-      FROM documents
-    ),
-    old AS (SELECT url, lang, text_h FROM base),
-    changed AS (
-      SELECT url, lang,
-             CAST('0x' || substr(md5(text || ' v2'), 1, 15) AS BIGINT) AS text_h
-      FROM base WHERE doc_id % 5 = 0
-    ),
-    added AS (
-      SELECT 'https://' || source || '.example.com/p/'
-               || CAST(doc_id + 10000 AS VARCHAR) AS url,
-             lang,
-             CAST('0x' || substr(md5(text || ' new'), 1, 15) AS BIGINT) AS text_h
-      FROM base WHERE doc_id % 17 = 0
-    ),
-    removed AS (SELECT url FROM base WHERE doc_id % 11 = 3),
-    new_t AS (
-      SELECT * FROM (
-        SELECT url, lang, text_h FROM old
-        WHERE url NOT IN (SELECT url FROM changed)
-        UNION ALL SELECT * FROM changed
-        UNION ALL SELECT * FROM added
-      ) WHERE url NOT IN (SELECT url FROM removed)
-    ),
-    j AS (
-      SELECT CASE WHEN o.url IS NULL THEN 'added'
-                  WHEN n.url IS NULL THEN 'removed'
-                  WHEN o.text_h != n.text_h THEN 'changed'
-                  ELSE 'same' END AS status,
-             coalesce(n.lang, o.lang) AS lang
-      FROM old o FULL OUTER JOIN new_t n ON o.url = n.url
-    )
-    SELECT status, lang, CAST(count(*) AS BIGINT) AS n_urls
-    FROM j GROUP BY 1, 2
-    """
-
-
-def q_weighted_sample(spark, sf_dir):
-    """Weighted (importance) Bernoulli sampling: per-doc keep
-    probability proportional to a length-derived quality weight,
-    decided by a portable md5 hash — the curation stage that
-    downsamples low-value documents while staying reproducible across
-    engines, runs, and retries (unlike rand()). Pure filter
-    projection: zero shuffles, trivially scalable."""
-    d = _t(spark, sf_dir, "documents")
-    h = _md5_60(F.col("doc_id").cast("string")) % 1000000
-    thr = F.round(
-        F.least(F.lit(1.0), F.col("n_chars") / 400.0) * 300000.0, 0
-    ).cast("long")
-    return d.where(h < thr).select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "lang",
-        thr.alias("keep_e6"),
-    )
-
-
-def sql_weighted_sample():
-    return """
-    SELECT CAST(doc_id AS BIGINT) AS doc_id, lang,
-           CAST(round(least(1.0e0, n_chars / 400.0e0) * 300000.0, 0) AS BIGINT) AS keep_e6
-    FROM documents
-    WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 1000000
-          < CAST(round(least(1.0e0, n_chars / 400.0e0) * 300000.0, 0) AS BIGINT)
-    """
-
-
-# Round-4 postmortem (VERDICT r4 "What's wrong" #1): this pair was
-# originally ALSO named q_stratified_sample/sql_stratified_sample,
-# silently shadowing the rate-based sampler above (queries.py
-# q_stratified_sample) via Python name reuse — the catalog dict,
-# built after both defs, picked up exact-n semantics without a
-# deliberate decision. Round 5 renames it stratified_exact_n (its
-# own catalog key), restores the rate-based pair under
-# "stratified_sample", and adds an AST no-duplicate-definition guard
-# (tests/test_entry.py::test_no_shadowed_definitions) so a staged
-# pair can never shadow a live one again. The r04 driver row for
-# "stratified_sample" verified THIS pair's byte-identical query +
-# oracle text (468 rows at sf0.01) — RENAMED_KEYS carries that row
-# to the new key for the rotation guard.
-STRAT_N = 10
-
-
-def q_stratified_exact_n(spark, sf_dir):
-    """Exact-n-per-stratum deterministic sampling: keep the STRAT_N
-    lowest portable-hash documents in every (lang, source) stratum —
-    the balanced-evaluation-set / per-domain-cap stage of a curation
-    pipeline. Complements weighted_sample (Bernoulli, zero-shuffle,
-    proportional): an EXACT per-stratum count requires ordering
-    within the stratum, i.e. exactly one Exchange on the stratum key
-    into a rank-limited window — WindowGroupLimit caps per-task state
-    at n per stratum before the merge, so a billion-row stratum costs
-    its scan plus n survivors per map task, never a full sort. The
-    md5-derived key makes the sample reproducible across engines,
-    runs, and retries (unlike rand())."""
-    d = _t(spark, sf_dir, "documents")
-    h = _md5_60(F.col("doc_id").cast("string"))
-    w = Window.partitionBy("lang", "source").orderBy(
-        h.asc(), F.col("doc_id").asc()
-    )
-    return (
-        d.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= STRAT_N)
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            "lang",
-            "source",
-            F.col("rk").cast("long").alias("rk"),
-        )
-    )
-
-
-def sql_stratified_exact_n():
-    return f"""
-    SELECT CAST(doc_id AS BIGINT) AS doc_id, lang, source, CAST(rk AS BIGINT) AS rk
-    FROM (
-      SELECT doc_id, lang, source,
-             row_number() OVER (
-               PARTITION BY lang, source
-               ORDER BY CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) ASC,
-                        doc_id ASC
-             ) AS rk
-      FROM documents
-    )
-    WHERE rk <= {STRAT_N}
-    """
-
-
 # =====================================================================
 # catalog
 # =====================================================================
 
-# Catalog order is deliberate: the external driver verifies the FIRST
-# 50 entries in dict order, so each round the window rotates to keep
-# every entry at most one round driver-stale. ROUND-5 (final) window:
-# the 47 entries that sat in round 4's tail (media_features … ann_ivf
-# — they carry r03 rows only and would otherwise go two rounds
-# driver-stale; VERDICT r4 task 1) plus the three pairs the window
-# crunch forced round 4 to stage: flow_accum (k-step D8
-# accumulation), tfidf_topterms, and stratified_sample — the
-# rate-based sampler RESTORED to its original key after round 4's
-# silent exact-n shadowing (VERDICT r4 "What's wrong" #1; the
-# exact-n pair now lives under its own key, stratified_exact_n,
-# in the tail — see RENAMED_KEYS below). The FINAL rotation then
-# swaps three slots: the three pairs added mid-round-5 with no
-# driver row in ANY round (flow_accum_fix, media_vp8_decode,
-# media_mp3_meta) enter the head for their only-ever driver rows,
-# and three triple-green entries (pip_join, value_casts,
-# minhash_lsh, dedup_components, embedding_neardup — r01+r02+r03
-# rows, judge-verified r4, re-verified at the demotion commit) move
-# to the tail, and the final session's new pairs (warc_ingest,
-# stream_warc) take the freed slots: 42 + 3 + 3 + 2 = exactly 50.
-# Tail (positions 51+): the 49 remaining r4-head entries, all
-# r04-driver-green, plus stratified_exact_n whose r04 row (under the
-# old colliding key) verified byte-identical query + oracle text.
-# Round-5 code changes to tail entries are output-identical by
-# construction and verified by hash-compare at sf0.01 + sf0.001
-# (BENCH/ROTATION.md): semdedup gains the adaptive hot-bucket cap
-# (census probe → identical plain plan on healthy corpora, chunked
-# triangle join only past the cap — same routing simhash_pairs
-# shipped in r4) and the e6-integer pair similarity; ann_pq pins the
-# corpus coarse-assign/residual stage; ice_* swap the commit-lock
-# release to an atomic rename; media_audio/media_frames degrade
-# malformed RIFF blobs to the disclosed digest row instead of
-# failing the job (well-formed outputs untouched).
-# Every entry keeps its oracle; tools/check_oracle.py verifies all
-# entries regardless of order.
-#
-# DRIVER_UNCHECKED_NEW: entries added AFTER the current round's
-# 50-slot window was already full of stale/changed entries, with no
-# driver row in ANY round yet — the next rotation MUST promote them
-# into the window (tests/test_entry.py enforces both sides).
-# Final-round rotation: the three r5-new pairs (flow_accum_fix,
-# media_vp8_decode, media_mp3_meta) are PROMOTED into the head so
-# they get their only-ever driver rows — the set is now empty.
-DRIVER_UNCHECKED_NEW: set[str] = set()
-
-# FINAL_ROUND_DEMOTED: head entries demoted to the tail in the final
-# rotation to free slots for the never-driver-checked r5 pairs.
-# Eligibility is strict — each must carry green driver rows in at
-# least TWO prior rounds (these three are green in r01+r02+r03) and
-# was re-verified by tools/check_oracle.py at sf0.01 at the demotion
-# commit. tests/test_entry.py enforces the two-prior-rows condition
-# against the full CORRECTNESS history.
-FINAL_ROUND_DEMOTED = {
-    "pip_join",
-    "value_casts",
-    "minhash_lsh",
-    "dedup_components",
-    "embedding_neardup",
-    # second trade (final session): four r01+r03-green relational
-    # entries cede head slots to the new crawl-side pairs
-    # (robots_filter, crawl_frontier, anchor_topk, main_content);
-    # each was re-verified by tools/check_oracle.py at sf0.01 at the
-    # demotion commit.
-    "wordcount",
-    "set_ops",
-    "sql_api",
-    "distinct_exact",
-    "approx_percentile",
-}
-
-# Rename ledger for the rotation guard: new catalog key → the old key
-# whose driver row verified the SAME query + oracle text. Only valid
-# for pure renames (text byte-identical at the rename commit); the
-# guard test resolves tail entries through this map.
-RENAMED_KEYS = {"stratified_exact_n": "stratified_sample"}
-
 QUERIES = {
-    # --- r5 head (driver window, positions 1-50): the 47 r4-tail
-    # entries (r03 rows only — the rotation that keeps every entry at
-    # most one round driver-stale) in their r4 relative order ---
-    "media_features": q_media_features,
-    "media_resize": q_media_resize,
-    "stream_stream_join": q_stream_stream_join,
-    "ice_merge": q_ice_merge,
-    "stream_window_agg": q_stream_window_agg,
-    "stream_sessionize": q_stream_sessionize,
-    "media_png_decode": q_media_png_decode,
-    "media_frames": q_media_frames,
-    "media_audio": q_media_audio,
-    "stream_dedup": q_stream_dedup,
-    "interval_join": q_interval_join,
-    "stream_interval": q_stream_interval,
-    "pmtiles_ingest": q_pmtiles_ingest,
-    "stream_to_table": q_stream_to_table,
-    "raster_ingest": q_raster_ingest,
-    "raster_info": q_raster_info,
-    "asof_join": q_asof_join,
-    "funnel_steps": q_funnel_steps,
-    "cohort_retention": q_cohort_retention,
-    "pagerank": q_pagerank,
-    "pip_join_hot": q_pip_join_hot,
-    "focal_stats": q_focal_stats,
-    "hillshade": q_hillshade,
-    "resample_bilinear": q_resample_bilinear,
-    "idw_grid": q_idw_grid,
-    "pivot_lang": q_pivot_lang,
-    "cube_lang_source": q_cube_lang_source,
-    "rollup_lang_source": q_rollup_lang_source,
-    # crawl-side controls, new in the final session: head slots so
-    # their only driver window records rows (wordcount, set_ops,
-    # sql_api, distinct_exact demoted in trade — FINAL_ROUND_DEMOTED)
-    "robots_filter": q_robots_filter,
-    "crawl_frontier": q_crawl_frontier,
-    "anchor_topk": q_anchor_topk,
-    "main_content": q_main_content,
-    "crawl_delta": q_crawl_delta,
-    "pii_scrub": q_pii_scrub,
-    "repeated_ngrams": q_repeated_ngrams,
-    "hll_registers": q_hll_registers,
-    "cms_topk": q_cms_topk,
-    "bm25_score": q_bm25_score,
-    "bpe_token_count": q_bpe_token_count,
-    "decontaminate": q_decontaminate,
-    "weighted_sample": q_weighted_sample,
-    "ann_ivf": q_ann_ivf,
-    # the three pairs round 4 staged (window was full): first driver
-    # rows land this round. stratified_sample is the RESTORED
-    # rate-based sampler — its r04 row verified the shadowing exact-n
-    # text (now stratified_exact_n, tail), so the restored semantics
-    # need a fresh driver row → head slot.
-    "flow_accum": q_flow_accum,
-    "tfidf_topterms": q_tfidf_topterms,
-    "stratified_sample": q_stratified_sample,
-    # the three pairs added mid-round-5 after the window above was
-    # already full (formerly DRIVER_UNCHECKED_NEW): promoted here in
-    # the FINAL rotation so each gets its only-ever driver row, at
-    # the cost of demoting three triple-green entries (see
-    # FINAL_ROUND_DEMOTED above) to the tail.
-    "flow_accum_fix": q_flow_accum_fix,
-    "media_vp8_decode": q_media_vp8_decode,
-    "media_mp3_meta": q_media_mp3_meta,
-    # new in the final session — WARC crawl-shard ingestion (the
-    # north-star's missing upstream source) in batch and streaming
-    # form; head slots so their only driver window records rows
-    # (dedup_components, embedding_neardup demoted in trade)
-    "warc_ingest": q_warc_ingest,
-    "stream_warc": q_stream_warc,
-    # --- tail (positions 51+, NOT driver-checked this round): the 49
-    # remaining r4-head entries, every one r04-driver-green, plus
-    # stratified_exact_n whose r04 row (under the old colliding key —
-    # see RENAMED_KEYS) verified byte-identical query + oracle text.
-    # Round-5 changes to tail entries are output-identical and
-    # hash-verified at sf0.01 + sf0.001 (BENCH/ROTATION.md). ---
-    # demoted in the final-session trade (see FINAL_ROUND_DEMOTED)
-    "approx_percentile": q_approx_percentile,
-    "wordcount": q_wordcount,
-    "set_ops": q_set_ops,
-    "sql_api": q_sql_api,
-    "distinct_exact": q_distinct_exact,
-    "text_entropy": q_text_entropy,
-    "moving_avg": q_moving_avg,
-    "winnow_fps": q_winnow_fps,
-    "ngram_jaccard": q_ngram_jaccard,
-    "dedup_exact": q_dedup_exact,
-    "xyz_lookup": q_xyz_lookup,
-    "text_stats": q_text_stats,
-    "html_tags": q_html_tags,
-    "lang_id": q_lang_id,
     "geocode_cells": q_geocode_cells,
-    "knn_table": q_knn_table,
-    "stratified_exact_n": q_stratified_exact_n,
+    "coord_interop": q_coord_interop,
     "cell_hist": q_cell_hist,
     "cell_parent_rollup": q_cell_parent_rollup,
-    "rasterize_grid": q_rasterize_grid,
-    "dwithin_pairs": q_dwithin_pairs,
-    "embedding_topk": q_embedding_topk,
+    "pip_join": q_pip_join,
+    "pip_join_hot": q_pip_join_hot,
     "knn": q_knn,
-    "simhash_pairs": q_simhash_pairs,
-    "window_topk": q_window_topk,
-    "sessionize": q_sessionize,
+    "knn_table": q_knn_table,
+    "dwithin_pairs": q_dwithin_pairs,
     "dtm_window_max": q_dtm_window_max,
     "dtm_overview_max": q_dtm_overview_max,
     "tile_assignment": q_tile_assignment,
     "zonal_stats": q_zonal_stats,
+    "rasterize_grid": q_rasterize_grid,
+    "idw_grid": q_idw_grid,
     "band_math": q_band_math,
-    "terrarium_decode": q_terrarium_decode,
+    "flow_direction": q_flow_direction,
+    "flow_accum": q_flow_accum,
+    "flow_accum_fix": q_flow_accum_fix,
+    "focal_stats": q_focal_stats,
+    "hillshade": q_hillshade,
+    "slope_aspect": q_slope_aspect,
+    "resample_bilinear": q_resample_bilinear,
     "crop": q_crop,
     "img2ascii": q_img2ascii,
-    "doc_quality": q_doc_quality,
-    "tpch_q1": q_tpch_q1,
-    "revenue_join": q_revenue_join,
-    "semi_anti": q_semi_anti,
-    "events_json": q_events_json,
-    "events_window_agg": q_events_window_agg,
-    "event_percentiles": q_event_percentiles,
-    "media_jpeg_decode": q_media_jpeg_decode,
-    "embedding_centroids": q_embedding_centroids,
-    "ice_prune": q_ice_prune,
-    "ann_pq": q_ann_pq,
-    "pmtiles_webp_ingest": q_pmtiles_webp_ingest,
-    "media_wav_decode": q_media_wav_decode,
-    "media_video_decode": q_media_video_decode,
-    "exact_substr": q_exact_substr,
-    "url_dedup": q_url_dedup,
-    "slope_aspect": q_slope_aspect,
-    "coord_interop": q_coord_interop,
-    "paragraph_dedup": q_paragraph_dedup,
-    "semdedup": q_semdedup,
-    "flow_direction": q_flow_direction,
-    # --- demoted from the head in the FINAL rotation to make room
-    # for the three r5-new pairs above (FINAL_ROUND_DEMOTED): each is
-    # driver-green in r01+r02+r03, was judge-verified in r4, and was
-    # re-verified by tools/check_oracle.py at sf0.01 at the demotion
-    # commit ---
-    "pip_join": q_pip_join,
+    "xyz_lookup": q_xyz_lookup,
+    "terrarium_decode": q_terrarium_decode,
     "value_casts": q_value_casts,
-    "minhash_lsh": q_minhash_lsh,
-    "dedup_components": q_dedup_components,
-    "embedding_neardup": q_embedding_neardup,
+    "raster_info": q_raster_info,
+    "raster_ingest": q_raster_ingest,
+    "pmtiles_ingest": q_pmtiles_ingest,
+    "pmtiles_webp_ingest": q_pmtiles_webp_ingest,
+    "warc_ingest": q_warc_ingest,
+    "ice_prune": q_ice_prune,
+    "ice_merge": q_ice_merge,
 }
 
 ORACLES = {
-    "flow_accum": sql_flow_accum(),
-    "media_vp8_decode": sql_media_vp8_decode(),
-    "media_mp3_meta": sql_media_mp3_meta(),
-    "tfidf_topterms": sql_tfidf_topterms(),
-    "stratified_exact_n": sql_stratified_exact_n(),
-    "media_features": sql_media_features(),
-    "media_png_decode": sql_media_png_decode(),
-    "media_frames": sql_media_frames(),
-    "media_resize": sql_media_resize(),
-    "media_audio": sql_media_audio(),
-    "media_wav_decode": sql_media_wav_decode(),
-    "media_video_decode": sql_media_video_decode(),
-    "stream_window_agg": sql_stream_window_agg(),
-    "stream_sessionize": sql_stream_sessionize(),
-    "stream_to_table": sql_stream_to_table(),
-    "stream_dedup": sql_stream_dedup(),
-    "stream_interval": sql_stream_interval(),
-    "stream_stream_join": sql_stream_stream_join(),
-    "raster_ingest": sql_raster_ingest(),
-    "pmtiles_ingest": sql_pmtiles_ingest(),
-    "pmtiles_webp_ingest": sql_pmtiles_webp_ingest(),
-    "warc_ingest": sql_warc_ingest(),
-    "stream_warc": sql_stream_warc(),
-    "exact_substr": sql_exact_substr(),
-    "url_dedup": sql_url_dedup(),
-    "slope_aspect": sql_slope_aspect(),
-    "coord_interop": sql_coord_interop(),
-    "paragraph_dedup": sql_paragraph_dedup(),
-    "semdedup": sql_semdedup(),
-    "flow_direction": sql_flow_direction(),
-    "ice_prune": sql_ice_prune(),
-    "ice_merge": sql_ice_merge(),
-    "raster_info": sql_raster_info(),
-    "asof_join": sql_asof_join(),
-    "interval_join": sql_interval_join(),
-    "funnel_steps": sql_funnel_steps(),
-    "cohort_retention": sql_cohort_retention(),
-    "pagerank": sql_pagerank(),
-    "pip_join": sql_pip_join(),
-    "pip_join_hot": sql_pip_join_hot(),
-    "focal_stats": sql_focal_stats(),
-    "hillshade": sql_hillshade(),
-    "resample_bilinear": sql_resample_bilinear(),
-    "idw_grid": sql_idw_grid(),
-    "value_casts": sql_value_casts(),
-    "pivot_lang": sql_pivot_lang(),
-    "cube_lang_source": sql_cube_lang_source(),
-    "rollup_lang_source": sql_rollup_lang_source(),
-    "set_ops": sql_set_ops(),
-    "sql_api": sql_sql_api(),
-    "wordcount": sql_wordcount(),
-    "distinct_exact": sql_distinct_exact(),
-    "approx_percentile": sql_approx_percentile(),
-    "robots_filter": sql_robots_filter(),
-    "crawl_frontier": sql_crawl_frontier(),
-    "anchor_topk": sql_anchor_topk(),
-    "main_content": sql_main_content(),
-    "crawl_delta": sql_crawl_delta(),
-    "pii_scrub": sql_pii_scrub(),
-    "repeated_ngrams": sql_repeated_ngrams(),
-    "hll_registers": sql_hll_registers(),
-    "cms_topk": sql_cms_topk(),
-    "bm25_score": sql_bm25_score(),
-    "embedding_centroids": sql_embedding_centroids(),
-    "bpe_token_count": sql_bpe_token_count(),
-    "decontaminate": sql_decontaminate(),
-    "weighted_sample": sql_weighted_sample(),
-    "minhash_lsh": sql_minhash_lsh(),
-    "dedup_components": sql_dedup_components(),
-    "embedding_neardup": sql_embedding_neardup(),
-    "ann_ivf": sql_ann_ivf(),
-    "ann_pq": sql_ann_pq(),
-    "media_jpeg_decode": sql_media_jpeg_decode(),
-    "text_entropy": sql_text_entropy(),
-    "moving_avg": sql_moving_avg(),
-    "winnow_fps": sql_winnow_fps(),
-    "ngram_jaccard": sql_ngram_jaccard(),
-    "dedup_exact": sql_dedup_exact(),
-    "xyz_lookup": sql_xyz_lookup(),
-    "text_stats": sql_text_stats(),
-    "html_tags": sql_html_tags(),
-    "lang_id": sql_lang_id(),
     "geocode_cells": sql_geocode_cells(),
-    "knn_table": sql_knn_table(),
-    "stratified_sample": sql_stratified_sample(),
+    "coord_interop": sql_coord_interop(),
     "cell_hist": sql_cell_hist(),
     "cell_parent_rollup": sql_cell_parent_rollup(),
-    "rasterize_grid": sql_rasterize_grid(),
-    "dwithin_pairs": sql_dwithin_pairs(),
-    "embedding_topk": sql_embedding_topk(),
+    "pip_join": sql_pip_join(),
+    "pip_join_hot": sql_pip_join_hot(),
     "knn": sql_knn(),
-    "simhash_pairs": sql_simhash_pairs(),
-    "window_topk": sql_window_topk(),
-    "sessionize": sql_sessionize(),
+    "knn_table": sql_knn_table(),
+    "dwithin_pairs": sql_dwithin_pairs(),
     "dtm_window_max": sql_dtm_window_max(),
     "dtm_overview_max": sql_dtm_overview_max(),
     "tile_assignment": sql_tile_assignment(),
     "zonal_stats": sql_zonal_stats(),
+    "rasterize_grid": sql_rasterize_grid(),
+    "idw_grid": sql_idw_grid(),
     "band_math": sql_band_math(),
-    "terrarium_decode": sql_terrarium_decode(),
+    "flow_direction": sql_flow_direction(),
+    "flow_accum": sql_flow_accum(),
+    "flow_accum_fix": sql_flow_accum_fix(),
+    "focal_stats": sql_focal_stats(),
+    "hillshade": sql_hillshade(),
+    "slope_aspect": sql_slope_aspect(),
+    "resample_bilinear": sql_resample_bilinear(),
     "crop": sql_crop(),
     "img2ascii": sql_img2ascii(),
-    "doc_quality": sql_doc_quality(),
-    "tpch_q1": sql_tpch_q1(),
-    "revenue_join": sql_revenue_join(),
-    "semi_anti": sql_semi_anti(),
-    "events_json": sql_events_json(),
-    "events_window_agg": sql_events_window_agg(),
-    "event_percentiles": sql_event_percentiles(),
-    "flow_accum_fix": sql_flow_accum_fix(),
+    "xyz_lookup": sql_xyz_lookup(),
+    "terrarium_decode": sql_terrarium_decode(),
+    "value_casts": sql_value_casts(),
+    "raster_info": sql_raster_info(),
+    "raster_ingest": sql_raster_ingest(),
+    "pmtiles_ingest": sql_pmtiles_ingest(),
+    "pmtiles_webp_ingest": sql_pmtiles_webp_ingest(),
+    "warc_ingest": sql_warc_ingest(),
+    "ice_prune": sql_ice_prune(),
+    "ice_merge": sql_ice_merge(),
 }
 
 

@@ -15,6 +15,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(host_bytes: int) -> str:
+    """Half of host RAM in MiB (at least 1 GiB, at most the 48g a
+    large shared box was tuned for): the local-mode driver JVM is the
+    whole engine, and the rest is left to its Python workers."""
+    return f"{min(48 * 1024, max(1024, host_bytes // 2 // 2**20))}m"
+
+
 def get_spark(
     app_name: str = "georaster_spark",
     cores: int | None = None,
@@ -24,7 +31,10 @@ def get_spark(
     """Build (or fetch) a SparkSession tuned for this engine.
 
     ``cores=None`` → ``local[*]``. ``shuffle_partitions`` defaults to
-    the core count (never the 200 default: wrong at both ends).
+    the core count (never the 200 default: wrong at both ends). The
+    driver heap is ``$SPARK_DRIVER_MEM`` if set, else
+    ``default_driver_memory`` of the host's RAM; ``extra_conf``
+    overrides both.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -40,7 +50,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM")
+            or default_driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # whole-table MIN/MAX/COUNT answered from parquet footers —

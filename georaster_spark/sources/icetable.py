@@ -588,7 +588,17 @@ def merge_table(
     Catalyst broadcasts the key set when it fits. Row-level deltas
     (merge-on-read) are the scale upgrade when update rate is high;
     the commit contract here is unchanged by that swap.
+
+    An upsert whose ``updates`` repeat a key raises ``ValueError``
+    before anything is written: the union would otherwise insert every
+    copy and leave the key duplicated in the live table.
     """
+    from pyspark.sql import functions as F
+
+    if not delete:
+        dup = updates.groupBy(*key_cols).count().where(F.col("count") > 1).limit(1).collect()
+        if dup:
+            raise ValueError(f"merge_table: duplicate update key {dup[0][:len(key_cols)]}")
     m = read_manifest(path)
     current = read_table(spark, path)
     keys = updates.select(*key_cols).distinct()

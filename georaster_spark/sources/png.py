@@ -6,8 +6,7 @@ pixels). This container has no image library, so — exactly like the
 round-2 TIFF reader — the codec is built from the public PNG spec
 (RFC 2083 / W3C PNG) on ``zlib``/``struct``/``numpy`` only.
 
-Scope (everything PMTiles raster tiles and the multimodal suite
-need):
+Scope (everything PMTiles raster tiles need):
 
 - decode: 8-bit greyscale (color type 0), RGB (2), greyscale+alpha
   (4), RGBA (6); all five scanline filters (None/Sub/Up/Average/

@@ -420,6 +420,16 @@ class TestMerge:
             F.col("ver") == "v2"
         ).count() == 0
 
+    def test_upsert_rejects_duplicate_update_keys(self, spark, docs, tmp_path):
+        path = str(tmp_path / "t_dup")
+        pre = icetable.write_table(docs.select("url", "part"), path)
+        row = docs.select("url", "part").limit(1)
+        with pytest.raises(ValueError, match="duplicate update key"):
+            icetable.merge_table(spark, path, row.unionByName(row), key_cols=["url"])
+        # nothing committed: the live snapshot and its rows are unchanged
+        assert icetable.read_manifest(path)["snapshot_id"] == pre
+        assert icetable.read_table(spark, path).count() == 400
+
     def test_delete_removes_keys(self, spark, docs, tmp_path):
         path = str(tmp_path / "t_del")
         icetable.write_table(docs.select("url", "part"), path)

@@ -156,513 +156,6 @@ class TestZonalStats:
         assert got["b"]["sum_v"] == sum(y * 8 + x for y in range(2, 6) for x in range(2, 6))
 
 
-def test_text_entropy_semantics(spark, tmp_path):
-    """Character entropy and repetition ratio behave as quality
-    signals: repeated-token spam scores lower entropy and higher
-    repetition than varied text."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from georaster_spark.queries import q_text_entropy
-
-    d = str(tmp_path)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([1, 2], type=pa.int64()),
-                "text": pa.array(["spam spam spam spam", "the quick brown fox jumps"]),
-                "lang": pa.array(["en", "en"]),
-                "source": pa.array(["s", "s"]),
-                "n_chars": pa.array([19, 25], type=pa.int64()),
-            }
-        ),
-        f"{d}/documents.parquet",
-    )
-    rows = {r.doc_id: r for r in q_text_entropy(spark, d).collect()}
-    assert rows[1].entropy_e6 < rows[2].entropy_e6
-    assert rows[1].rep_ratio_e6 == 750000  # 1 distinct of 4 tokens
-    assert rows[2].rep_ratio_e6 == 0
-
-
-def test_hll_estimate_tracks_exact_distinct(spark):
-    """The portable HLL registers yield an estimate within the
-    sketch's error bound of the exact distinct count (standard
-    Flajolet HLL: harmonic mean + linear-counting small-range
-    correction; p=12 -> ~1.6% std error, assert 5%)."""
-    import math
-
-    from georaster_spark.queries import HLL_P, q_hll_registers
-
-    sf = "/root/testdata/sf0.001"
-    m = 1 << HLL_P
-    regs = {r.bucket: r.rho for r in q_hll_registers(spark, sf).collect()}
-    alpha = 0.7213 / (1 + 1.079 / m)
-    s = sum(2.0 ** -regs.get(b, 0) for b in range(m))
-    raw = alpha * m * m / s
-    zeros = m - len(regs)
-    est = m * math.log(m / zeros) if (raw <= 2.5 * m and zeros) else raw
-    exact = (
-        spark.read.parquet(f"{sf}/documents.parquet")
-        .selectExpr("count(distinct md5(text)) AS n")
-        .collect()[0]["n"]
-    )
-    assert abs(est - exact) / exact < 0.05, (est, exact)
-
-
-def test_pii_scrub_semantics(spark, tmp_path):
-    """Hand-computed redaction for a doc carrying all three planted
-    PII kinds (doc_id 30: divisible by 2, 3, 5) and one carrying none
-    (doc_id 7) — the expected scrubbed text is assembled in Python
-    and md5'd independently."""
-    import hashlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from georaster_spark.queries import q_pii_scrub
-
-    d = str(tmp_path)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([30, 7], type=pa.int64()),
-                "text": pa.array(["hello world", "plain text"]),
-                "lang": pa.array(["en", "en"]),
-                "source": pa.array(["s", "s"]),
-                "n_chars": pa.array([11, 10], type=pa.int64()),
-            }
-        ),
-        f"{d}/documents.parquet",
-    )
-    rows = {r.doc_id: r for r in q_pii_scrub(spark, d).collect()}
-    assert (rows[30].n_email, rows[30].n_phone, rows[30].n_ip) == (1, 1, 1)
-    assert (rows[7].n_email, rows[7].n_phone, rows[7].n_ip) == (0, 0, 0)
-    expect30 = "hello world contact <EMAIL> now tel <PHONE> from <IP>"
-    assert rows[30].scrubbed_md5 == hashlib.md5(expect30.encode()).hexdigest()
-    assert rows[7].scrubbed_md5 == hashlib.md5(b"plain text").hexdigest()
-
-
-def test_repeated_ngrams_semantics(spark, tmp_path):
-    """Hand-counted word-3-grams: 'a b a b a b a' has 5 grams, 2
-    distinct ('a b a' x3, 'b a b' x2) -> dup ratio 0.6, filtered;
-    a varied doc keeps; a 2-token doc emits no grams and drops."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from georaster_spark.queries import q_repeated_ngrams
-
-    d = str(tmp_path)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([1, 2, 3], type=pa.int64()),
-                "text": pa.array(["a b a b a b a", "x y z w", "p q"]),
-                "lang": pa.array(["en", "en", "en"]),
-                "source": pa.array(["s", "s", "s"]),
-                "n_chars": pa.array([13, 7, 3], type=pa.int64()),
-            }
-        ),
-        f"{d}/documents.parquet",
-    )
-    rows = {r.doc_id: r for r in q_repeated_ngrams(spark, d).collect()}
-    assert set(rows) == {1, 2}  # doc 3 has < 3 tokens
-    assert (rows[1].n_grams, rows[1].n_distinct, rows[1].max_rep) == (5, 2, 3)
-    assert rows[1].dup_ratio_e6 == 600000 and rows[1].keep == 0
-    assert (rows[2].n_grams, rows[2].n_distinct, rows[2].max_rep) == (2, 2, 1)
-    assert rows[2].dup_ratio_e6 == 0 and rows[2].keep == 1
-
-
-def test_stratified_sample_semantics(spark):
-    """Hand-check the deterministic keep rule against an independent
-    Python computation (guards against a formula bug mirrored into
-    the SQL oracle): doc kept iff md5-derived hash(doc_id) % 1e6 <
-    rate[lang], and realized rates track the configured quotas."""
-    import hashlib
-
-    from georaster_spark.queries import SAMPLE_RATES_E6, q_stratified_sample
-
-    sf = "/root/testdata/sf0.001"
-    kept = {r.doc_id for r in q_stratified_sample(spark, sf).collect()}
-    docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "lang").collect()
-    expect = set()
-    for r in docs:
-        h = int(hashlib.md5(str(r.doc_id).encode()).hexdigest()[:15], 16) % 1000000
-        # languages without a quota are dropped (NULL rate both sides)
-        if h < SAMPLE_RATES_E6.get(r.lang, 0):
-            expect.add(r.doc_id)
-    assert kept == expect and len(kept) > 0
-
-
-def test_doc_quality_semantics(spark, tmp_path):
-    """Hand-computed quality components for a crafted doc (mirrored-
-    formula guard for the doc_quality pair)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from georaster_spark.queries import STOPWORDS, q_doc_quality
-
-    text = "the cat sat, the dog ran!"  # 6 tokens; punct , and !
-    n_stop = sum(1 for t in text.split(" ") if t in STOPWORDS)
-    d = str(tmp_path)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([1], type=pa.int64()),
-                "text": pa.array([text]),
-                "lang": pa.array(["en"]),
-                "source": pa.array(["s"]),
-                "n_chars": pa.array([len(text)], type=pa.int64()),
-            }
-        ),
-        f"{d}/documents.parquet",
-    )
-    row = q_doc_quality(spark, d).collect()[0]
-    assert row.stop_ratio_e6 == round(n_stop / 6 * 1e6)
-    assert row.punct_ratio_e6 == round(2 / len(text) * 1e6)
-    expect_score = (n_stop / 6) * 0.4 + min(6 / 100, 1.0) * 0.4 + (2 / len(text)) * 0.2
-    assert row.quality_e6 == round(expect_score * 1e6)
-
-
-def test_bpe_pretokenizer_cross_engine(spark):
-    """BPE-ish pretokenizer counts agree across Java regex (Spark),
-    RE2 (DuckDB), and Python re on crafted inputs — the portability
-    contract the text_stats oracle pair relies on."""
-    import re
-
-    import duckdb
-    from pyspark.sql import functions as F
-
-    from georaster_spark.queries import BPE_PRETOKEN_RE
-
-    tests = [
-        "the cat's 2 hats, obviously!",
-        "  spaces   and\ttabs",
-        "it'll re've 'd x9y",
-        "no-punct words here",
-        "unicode stays ascii-safe: cafe",
-        "a \x0b \x0b b\x0c\r\nc",  # \x0B: Java \s has it, RE2 \s doesn't
-    ]
-    df = spark.createDataFrame([(t,) for t in tests], "text string")
-    sp = [r[0] for r in df.select(F.regexp_count("text", F.lit(BPE_PRETOKEN_RE))).collect()]
-    con = duckdb.connect()
-    pat = BPE_PRETOKEN_RE.replace("'", "''")
-    dk = [
-        con.execute(f"SELECT len(regexp_extract_all(?, '{pat}'))", [t]).fetchone()[0]
-        for t in tests
-    ]
-    py = [len(re.findall(BPE_PRETOKEN_RE, t)) for t in tests]
-    assert sp == dk == py
-
-
-class TestBpeTokenize:
-    """Hand-derived merge-loop goldens — an oracle match alone can't
-    catch identically-wrong twins (round-2 lesson)."""
-
-    # there: t·h·e·r·e -> th -> the -> (r,e)->re  => [the, re]
-    # standing: (i,n)->in, (a,n)->an, (an,d)->and, (in,g)->ing,
-    #           (s,t)->st => [st, and, ing]
-    # cross-boundary guard: "there" must NOT merge the 'e' of "the"
-    #   with the following 'r' via the (e,r) rule — delimiters block it
-    HAND = {
-        "there": 2,
-        "standing": 3,
-        "a": 1,
-        "qqq": 3,          # no merge applies
-        "thethe": 2,       # th+e twice
-        "is": 1,
-        "xz": 2,
-    }
-
-    def test_hand_goldens_spark(self, spark):
-        from georaster_spark.queries import bpe_tokenize_col
-
-        df = spark.createDataFrame([(w,) for w in self.HAND], "word string")
-        got = {
-            r["word"]: r["n"]
-            for r in df.select("word", bpe_tokenize_col(F.col("word")).alias("n")).collect()
-        }
-        assert got == self.HAND
-
-    def test_cross_engine_identical_on_vocab(self, spark):
-        """Spark chain == DuckDB chain on every distinct corpus word."""
-        import duckdb
-
-        from georaster_spark.queries import bpe_tokenize_col, bpe_tokenize_sql
-
-        d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-        vocab = (
-            d.select(F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("word"))
-            .where(F.col("word") != "")
-            .distinct()
-        )
-        got = {
-            r["word"]: r["n"]
-            for r in vocab.select("word", bpe_tokenize_col(F.col("word")).alias("n")).collect()
-        }
-        con = duckdb.connect()
-        con.execute("CREATE TABLE v(word VARCHAR)")
-        con.executemany("INSERT INTO v VALUES (?)", [(w,) for w in got])
-        want = dict(
-            con.execute(f"SELECT word, {bpe_tokenize_sql('word')} FROM v").fetchall()
-        )
-        # the synthetic corpus has a deliberately small vocabulary
-        assert got == want and len(got) > 20
-
-    def test_run_semantics_documented(self, spark):
-        """Token runs: 4 mergeable pairs fully merge (double pass);
-        this pins the engine's defined two-pass semantics."""
-        from georaster_spark.queries import bpe_tokenize_col
-
-        # "tttt" with (t,h)? no merge; use 'a'+'n' alternation instead:
-        # "anananan": (a,n) x4 -> an,an,an,an (4); then no (an,an) rule
-        df = spark.createDataFrame([("anananan",), ("ananan",)], "word string")
-        got = {
-            r["word"]: r["n"]
-            for r in df.select("word", bpe_tokenize_col(F.col("word")).alias("n")).collect()
-        }
-        assert got == {"anananan": 4, "ananan": 3}
-
-
-def test_cms_estimate_one_sided_and_matches_independent_python(spark):
-    """Count-min-sketch invariants: est_n >= exact_n for every probe
-    (one-sided error), and every estimate equals an independently
-    written per-row Python CMS over the same events parquet — so the
-    portable md5 bucket path is validated against something other
-    than its own SQL mirror."""
-    import collections
-    import hashlib
-
-    import pandas as pd
-
-    from georaster_spark.queries import CMS_D, CMS_W, q_cms_topk
-
-    sf = "/root/testdata/sf0.001"
-    rows = q_cms_topk(spark, sf).collect()
-    users = pd.read_parquet(f"{sf}/events.parquet")["user_id"]
-    assert len(rows) == min(20, users.nunique())
-    assert all(r.est_n >= r.exact_n for r in rows)
-
-    def bucket(j, u):
-        return int(hashlib.md5(f"cms:{j}:{u}".encode()).hexdigest()[:15], 16) % CMS_W
-    regs = collections.Counter()
-    for u in users:
-        for j in range(CMS_D):
-            regs[(j, bucket(j, u))] += 1
-    for r in rows:
-        est = min(regs[(j, bucket(j, r.user_id))] for j in range(CMS_D))
-        assert est == r.est_n, (r.user_id, est, r.est_n)
-
-
-def test_bm25_matches_independent_python(spark):
-    """Every BM25 score equals an independently written plain-Python
-    BM25 over the same parquet (own tokenizer, own df/idf/avgdl) —
-    validates the formula end-to-end, not just the SQL mirror."""
-    import collections
-    import math
-
-    import pandas as pd
-
-    from georaster_spark.queries import BM25_B, BM25_K1, BM25_TERMS, q_bm25_score
-
-    sf = "/root/testdata/sf0.001"
-    docs = pd.read_parquet(f"{sf}/documents.parquet")[["doc_id", "text"]]
-    toks = {r.doc_id: r.text.split(" ") for r in docs.itertuples()}
-    n_docs = len(toks)
-    avgdl = sum(len(t) for t in toks.values()) / n_docs
-    tf = {
-        d: collections.Counter(w for w in t if w in BM25_TERMS)
-        for d, t in toks.items()
-    }
-    df = collections.Counter(term for c in tf.values() for term in c)
-    expect = {}
-    for d, c in tf.items():
-        if not c:
-            continue
-        s = 0.0
-        for term, f in c.items():
-            idf = math.log((n_docs - df[term] + 0.5) / (df[term] + 0.5) + 1.0)
-            s += idf * (f * (BM25_K1 + 1.0)) / (
-                f + BM25_K1 * ((1.0 - BM25_B) + BM25_B * len(toks[d]) / avgdl)
-            )
-        expect[d] = (len(c), round(s * 1000000.0))
-    got = {r.doc_id: (r.n_terms, r.score_e6) for r in q_bm25_score(spark, sf).collect()}
-    assert got == expect
-
-
-def test_embedding_centroids_match_numpy(spark):
-    """Per-label centroid rows equal a NumPy groupby-mean over the
-    same parquet, for every (label, dim)."""
-    import numpy as np
-    import pandas as pd
-
-    from georaster_spark.queries import q_embedding_centroids
-
-    sf = "/root/testdata/sf0.001"
-    emb = pd.read_parquet(f"{sf}/embeddings.parquet")
-    got = {(r.label, r.pos): (r.n, r.sum_e6) for r in q_embedding_centroids(spark, sf).collect()}
-    for label, grp in emb.groupby("label"):
-        mat = np.stack(grp["embedding"].to_numpy()).astype(np.float64)
-        for pos in range(mat.shape[1]):
-            n, sum_e6 = got[(label, pos)]
-            assert n == len(grp)
-            # sum of per-value e6 quantizations; the implied mean must
-            # still sit within quantization error of the NumPy mean
-            assert sum_e6 == np.round(mat[:, pos] * 1e6).astype(np.int64).sum()
-            assert abs(sum_e6 / n - mat[:, pos].mean() * 1e6) < 1.0, (label, pos)
-    assert len(got) == emb["label"].nunique() * 64
-
-
-def test_funnel_matches_independent_python(spark):
-    """Funnel counts equal a hand-rolled pandas sequence walk
-    (first view, first click strictly after it, first purchase
-    strictly after that)."""
-    import pandas as pd
-
-    from georaster_spark.queries import FUNNEL_STEPS, q_funnel_steps
-
-    sf = "/root/testdata/sf0.001"
-    ev = pd.read_parquet(f"{sf}/events.parquet")
-    expect = {}
-    reached = {}
-    for u, grp in ev.groupby("user_id"):
-        t_prev = None
-        for i, step in enumerate(FUNNEL_STEPS, start=1):
-            sel = grp[grp["event_type"] == step]
-            if t_prev is not None:
-                sel = sel[sel["ts"] > t_prev]
-            if sel.empty:
-                break
-            t_prev = sel["ts"].min()
-            reached.setdefault(i, set()).add(u)
-    for i, step in enumerate(FUNNEL_STEPS, start=1):
-        expect[(i, step)] = len(reached.get(i, ()))
-    got = {(r.step, r.event_type): r.n_users for r in q_funnel_steps(spark, sf).collect()}
-    assert got == expect
-    # funnel is monotone non-increasing
-    ns = [got[(i, s)] for i, s in enumerate(FUNNEL_STEPS, start=1)]
-    assert ns == sorted(ns, reverse=True) and ns[0] > 0
-
-
-def test_pagerank_matches_numpy_power_iteration(spark):
-    """Catalog PageRank equals an independent dense NumPy power
-    iteration on the same synthetic graph; ranks of a
-    no-dangling-node graph sum to 1."""
-    import numpy as np
-    import pandas as pd
-
-    from georaster_spark.queries import PR_DAMPING, PR_ITERS, q_pagerank
-
-    sf = "/root/testdata/sf0.001"
-    n = len(pd.read_parquet(f"{sf}/documents.parquet"))
-    edges = set()
-    for v in range(n):
-        for dst in ((v * 7 + 1) % n, (v * 13 + 3) % n, (v * 29 + 11) % n):
-            if dst != v:
-                edges.add((v, dst))
-    outdeg = np.zeros(n)
-    for s, _ in edges:
-        outdeg[s] += 1
-    r = np.full(n, 1.0 / n)
-    for _ in range(PR_ITERS):
-        nxt = np.full(n, (1.0 - PR_DAMPING) / n)
-        for s, d in edges:
-            nxt[d] += PR_DAMPING * r[s] / outdeg[s]
-        r = nxt
-    got = {row.doc_id: row.rank_e9 for row in q_pagerank(spark, sf).collect()}
-    assert len(got) == n
-    assert abs(sum(got.values()) / 1e9 - 1.0) < 1e-6
-    for v in range(n):
-        assert abs(got[v] - round(r[v] * 1e9)) <= 1, (v, got[v], r[v])
-
-
-def test_weighted_sample_matches_independent_python(spark):
-    """Sample membership and thresholds equal an independent hashlib
-    walk over the same parquet: keep doc iff
-    md5_60bit(doc_id) % 1e6 < round(min(1, n_chars/400) * 3e5)."""
-    import hashlib
-
-    import pandas as pd
-
-    from georaster_spark.queries import q_weighted_sample
-
-    sf = "/root/testdata/sf0.001"
-    docs = pd.read_parquet(f"{sf}/documents.parquet")[["doc_id", "lang", "n_chars"]]
-    expect = {}
-    for r in docs.itertuples():
-        h = int(hashlib.md5(str(r.doc_id).encode()).hexdigest()[:15], 16) % 1000000
-        thr = round(min(1.0, r.n_chars / 400.0) * 300000.0)
-        if h < thr:
-            expect[r.doc_id] = (r.lang, thr)
-    got = {r.doc_id: (r.lang, r.keep_e6) for r in q_weighted_sample(spark, sf).collect()}
-    assert got == expect and 0 < len(got) < len(docs)
-
-
-def test_cohort_retention_matches_independent_pandas(spark):
-    """Retention cells equal a hand-rolled pandas cohort walk (ISO
-    Monday week truncation, week-diff buckets, distinct users)."""
-    import pandas as pd
-
-    from georaster_spark.queries import RETENTION_MAX_WEEK, q_cohort_retention
-
-    sf = "/root/testdata/sf0.001"
-    ev = pd.read_parquet(f"{sf}/events.parquet")[["user_id", "ts"]]
-    wk = ev["ts"].dt.to_period("W-SUN").dt.start_time.dt.date  # Monday start
-    ev = ev.assign(week=wk)
-    cohort = ev.groupby("user_id")["week"].min().rename("cohort_week")
-    j = ev.join(cohort, on="user_id")
-    j["k"] = ((pd.to_datetime(j["week"]) - pd.to_datetime(j["cohort_week"])).dt.days // 7)
-    j = j[j["k"] <= RETENTION_MAX_WEEK]
-    expect = {
-        (str(cw), int(k)): int(g["user_id"].nunique())
-        for (cw, k), g in j.groupby(["cohort_week", "k"])
-    }
-    got = {
-        (r.cohort_week, r.k): r.n_users for r in q_cohort_retention(spark, sf).collect()
-    }
-    assert got == expect
-    # week-0 of a cohort counts every cohort member, so it bounds
-    # every later week (unlike k-1 vs k, which is NOT an invariant:
-    # a user can skip week 1 and return in week 2)
-    for cw in {c for c, _ in got}:
-        later = [got[(c, k)] for c, k in got if c == cw and k > 0]
-        assert all(v <= got[(cw, 0)] for v in later)
-
-
-def test_decontaminate_matches_independent_python(spark):
-    """Flagged docs and hit counts equal a plain-Python n-gram
-    overlap walk over the same parquet."""
-    import pandas as pd
-
-    from georaster_spark.queries import (
-        DECON_BENCH_DOCS,
-        DECON_MIN_HITS,
-        DECON_N,
-        q_decontaminate,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    docs = pd.read_parquet(f"{sf}/documents.parquet")[["doc_id", "text"]]
-
-    def grams(t):
-        w = t.split(" ")
-        return {
-            " ".join(w[i : i + DECON_N]) for i in range(len(w) - DECON_N + 1)
-        }
-
-    bench = set()
-    for r in docs.itertuples():
-        if r.doc_id < DECON_BENCH_DOCS:
-            bench |= grams(r.text)
-    expect = {}
-    for r in docs.itertuples():
-        if r.doc_id >= DECON_BENCH_DOCS:
-            hits = len(grams(r.text) & bench)
-            if hits >= DECON_MIN_HITS:
-                expect[r.doc_id] = hits
-    got = {r.doc_id: r.n_hits for r in q_decontaminate(spark, sf).collect()}
-    assert got == expect and len(got) > 0
-
-
 def test_idw_grid_matches_independent_numpy(spark):
     """Every interpolated cell equals an independent NumPy IDW with
     the same e9-quantized inverse-square weights; cells nearest a
@@ -700,88 +193,3 @@ def test_idw_grid_matches_independent_numpy(spark):
     i0 = int(round((plon - ox) / px - 0.5))
     j0 = int(round((oy - plat) / px - 0.5))
     assert abs(got[(i0, j0)][1] / 1e6 - pv) < 5.0
-
-
-def test_tfidf_topterms_semantics(spark, tmp_path):
-    """Hand-checked TF-IDF top-k (staged r5 pair): N=3 docs, idf =
-    ln((N+1)/(df+1)). doc 1: apple tf=2 df=1 beats banana; doc 2:
-    banana/cherry tie on score (tf=1, df=2 each) -> term text breaks
-    the tie; doc 3: cherry tf=3 low-idf still beats dog tf=1
-    high-idf (0.863 > 0.693)."""
-    import math
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from georaster_spark.queries import q_tfidf_topterms
-
-    d = str(tmp_path)
-    texts = ["apple apple banana", "banana cherry", "cherry cherry cherry dog"]
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([1, 2, 3], type=pa.int64()),
-                "text": pa.array(texts),
-                "lang": pa.array(["en"] * 3),
-                "source": pa.array(["s"] * 3),
-                "n_chars": pa.array([len(t) for t in texts], type=pa.int64()),
-            }
-        ),
-        f"{d}/documents.parquet",
-    )
-    got = {
-        (r.doc_id, r.rnk): (r.term, r.score_e6)
-        for r in q_tfidf_topterms(spark, d).collect()
-    }
-    e6 = lambda tf, df: round(tf * math.log(4.0 / (df + 1.0)) * 1e6)
-    assert got == {
-        (1, 1): ("apple", e6(2, 1)),
-        (1, 2): ("banana", e6(1, 2)),
-        (2, 1): ("banana", e6(1, 2)),
-        (2, 2): ("cherry", e6(1, 2)),
-        (3, 1): ("cherry", e6(3, 2)),
-        (3, 2): ("dog", e6(1, 1)),
-    }
-
-
-def test_stratified_exact_n_semantics(spark, tmp_path):
-    """Hand-checked exact-n stratified sampling (registered as
-    stratified_exact_n after the r4 name-collision fix): per
-    (lang, source) stratum exactly min(n, STRAT_N) docs survive,
-    ranked by the portable 60-bit md5 key — verified against a
-    Python md5 reference — and the plan carries WindowGroupLimit so
-    per-task window state is bounded at n per stratum."""
-    import hashlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from georaster_spark.queries import STRAT_N, q_stratified_exact_n
-
-    d = str(tmp_path)
-    n = 60
-    ids = list(range(n))
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array(ids, type=pa.int64()),
-                "text": pa.array(["w"] * n),
-                "lang": pa.array(["en" if i % 2 else "de" for i in ids]),
-                "source": pa.array([f"s{i % 2}" for i in ids]),
-                "n_chars": pa.array([1] * n, type=pa.int64()),
-            }
-        ),
-        f"{d}/documents.parquet",
-    )
-    # 2 strata here (lang and source are aligned mod 2), 30 docs each
-    key = lambda i: (int(hashlib.md5(str(i).encode()).hexdigest()[:15], 16), i)
-    want = {}
-    for stratum in (0, 1):
-        members = sorted((i for i in ids if i % 2 == stratum), key=key)
-        for rk, i in enumerate(members[:STRAT_N], start=1):
-            want[i] = rk
-    out = q_stratified_exact_n(spark, d)
-    got = {r.doc_id: r.rk for r in out.collect()}
-    assert got == want
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in plan

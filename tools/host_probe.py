@@ -13,8 +13,8 @@ is a hardware ceiling (frequency scaling, shared cache / memory
 bandwidth, hypervisor scheduling) that bounds ANY 16-thread job's
 scaling efficiency on this box — including a perfectly parallel one.
 Report: efficiency ceiling = throughput@16 / throughput@4 (per
-process). Compare BENCH/scaling.json's observed pipeline efficiency
-against this ceiling to see how much is code vs host.
+process). Compare a pipeline's observed N-to-4N efficiency against
+this ceiling to see how much is code vs host.
 
 Two kernels bracket the pipeline's profile:
 - "alu": integer/float arithmetic on a small in-cache array

@@ -1,18 +1,20 @@
 """Physical-plan audit: capture ``explain('formatted')`` for the
 scale-critical queries and check the properties that decide whether
-the plan survives a 100x scale-up. Writes BENCH/PLANS.md and exits
-non-zero on violations.
+the plan survives a 100x scale-up. Writes the plans and the verdicts
+to ``.plan_audit/PLANS.md`` (git-ignored: plan node ids change on
+every run) and exits non-zero on violations.
 
 Checked invariants:
 - flagship pip_join: polygon cover index is BROADCAST (the big doc
-  side never shuffles before the ray-cast);
-- flagship + text queries: column pruning reaches the parquet scan
-  (the BINARY ``html`` column is never read unless asked);
-- tpch_q1: the shipdate filter is PUSHED to the parquet scan;
-- revenue_join: both dimension joins are broadcast (no shuffle of
-  orders);
-- asof_join: ZERO join operators (union + window trick: one shuffle);
-- media decode: no Exchange touches the blob column (narrow kernel).
+  side never shuffles before the ray-cast), and column pruning keeps
+  the BINARY ``html`` column out of the parquet scan;
+- ingestion (raster, PMTiles, WARC): decode kernels sit next to the
+  kernels that plan them, so payload bytes never cross an Exchange;
+- vector joins (dwithin, kNN table, zonal stats): broadcast or cell
+  equi-joins, never a nested loop;
+- raster stencils and resampling: one block Exchange into the kernel,
+  no Python evaluator after it;
+- ice_prune: manifest stats prune files before Spark lists them.
 
     python tools/plan_audit.py
 """
@@ -25,7 +27,8 @@ import sys
 import re
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF = "/root/testdata/sf0.001"
 
@@ -45,7 +48,6 @@ def explain_str(df) -> str:
 
 def main() -> int:
     from georaster_spark import queries as Q
-    from georaster_spark.operators.multimodal import decode_image_features, with_media
     from georaster_spark.session import get_spark
 
     spark = get_spark("plan_audit", cores=4, shuffle_partitions=4)
@@ -61,66 +63,6 @@ def main() -> int:
     p = plans["flagship"] = explain_str(flagship)
     check("flagship", "cover index joined via BroadcastHashJoin", "BroadcastHashJoin" in p)
     check("flagship", "documents scan prunes the BINARY html column", "html" not in p)
-
-    # tpch_q1: predicate pushdown to the parquet scan
-    p = plans["tpch_q1"] = explain_str(Q.q_tpch_q1(spark, SF))
-    pushed = [l for l in p.splitlines() if "PushedFilters" in l]
-    check(
-        "tpch_q1",
-        "l_shipdate filter pushed to parquet scan",
-        any("l_shipdate" in l and "[]" not in l for l in pushed),
-    )
-
-    # revenue_join: both dims broadcast — the orders fact never
-    # shuffles for the join
-    p = plans["revenue_join"] = explain_str(Q.q_revenue_join(spark, SF))
-    check(
-        "revenue_join",
-        "2 broadcast joins (customer, nation), no sort-merge join",
-        n_nodes(p, "BroadcastHashJoin") == 2 and "SortMergeJoin" not in p,
-    )
-
-    # asof: union+window trick means no join operator at all
-    p = plans["asof_join"] = explain_str(Q.q_asof_join(spark, SF))
-    check("asof_join", "zero join nodes (union + last-ignorenulls window)", "Join" not in p)
-
-    # media decode over the raw table: blobs flow scan->kernel with no
-    # Exchange in between (narrow stage)
-    d = with_media(spark.read.parquet(f"{SF}/documents.parquet"))
-    p = plans["media_decode"] = explain_str(decode_image_features(d))
-    check("media_decode", "no Exchange before the Arrow kernel (blobs never shuffle)", "Exchange" not in p)
-
-    # lossy-VP8 media pair: same zero-shuffle contract end-to-end
-    from georaster_spark.operators.multimodal import (
-        decode_vp8_planes,
-        with_vp8_media,
-    )
-
-    dv = with_vp8_media(
-        spark.read.parquet(f"{SF}/documents.parquet").select("doc_id")
-    )
-    p = plans["media_vp8_decode"] = explain_str(decode_vp8_planes(dv))
-    check(
-        "media_vp8_decode",
-        "no Exchange around the VP8 encode/decode kernels (blobs never shuffle)",
-        "Exchange" not in p,
-    )
-
-    # MP3 frame-parse pair: same contract
-    from georaster_spark.operators.multimodal import (
-        decode_audio_features,
-        with_mp3_media,
-    )
-
-    dm = with_mp3_media(
-        spark.read.parquet(f"{SF}/documents.parquet").select("doc_id")
-    )
-    p = plans["media_mp3_meta"] = explain_str(decode_audio_features(dm))
-    check(
-        "media_mp3_meta",
-        "no Exchange around the MP3 build/parse kernels (blobs never shuffle)",
-        "Exchange" not in p,
-    )
 
     # raster_ingest: the two-stage ingestion plan — no Exchange
     # between the header kernel and the decode kernel (chunk rows
@@ -217,11 +159,6 @@ def main() -> int:
         and all("payload" not in para for para in warc_exchanges),
     )
 
-    # window_topk: exactly one shuffle (hash by o_custkey)
-    p = plans["window_topk"] = explain_str(Q.q_window_topk(spark, SF))
-    check("window_topk", "single Exchange for the window partition key", n_nodes(p, "Exchange") == 1)
-    check("window_topk", "rank predicate pushed into WindowGroupLimit", n_nodes(p, "WindowGroupLimit") >= 1)
-
     # xyz_lookup: the generated tile side has no parquet scan of docs
     # columns beyond doc_id (pruning through the probe side)
     p = plans["xyz_lookup"] = explain_str(Q.q_xyz_lookup(spark, SF))
@@ -231,16 +168,6 @@ def main() -> int:
     # equi-join only, never a nested-loop
     p = plans["dwithin_pairs"] = explain_str(Q.q_dwithin_pairs(spark, SF))
     check("dwithin_pairs", "no BroadcastNestedLoopJoin (cell equi-join rewrite)", "NestedLoop" not in p)
-
-    # interval_join: the ts-BETWEEN theta join must have been rewritten
-    # into a bucket equi-join — a hash join on the bucket key, never a
-    # nested-loop over the cross product
-    p = plans["interval_join"] = explain_str(Q.q_interval_join(spark, SF))
-    check(
-        "interval_join",
-        "no BroadcastNestedLoopJoin (bucketize-explode equi-join rewrite)",
-        "NestedLoop" not in p and n_nodes(p, "BroadcastHashJoin") >= 1,
-    )
 
     # focal_stats: the tile-halo stencil — exactly ONE Exchange (the
     # block-key groupBy feeding the Arrow kernel); the naive forms
@@ -252,38 +179,6 @@ def main() -> int:
         n_nodes(p, "Exchange") == 1
         and n_nodes(p, "FlatMapGroupsInPandas") == 1
         and "Join" not in p,
-    )
-
-    # cms_topk: register build is partial-aggregated (map-side combine
-    # to 2048 keys before the shuffle) and every join is broadcast —
-    # the register table and probe set are tiny by construction
-    p = plans["cms_topk"] = explain_str(Q.q_cms_topk(spark, SF))
-    check(
-        "cms_topk",
-        "map-side partial_count register build; all joins broadcast "
-        "(no sort-merge join of the big side)",
-        "partial_count" in p and "SortMergeJoin" not in p
-        and n_nodes(p, "BroadcastHashJoin") >= 1,
-    )
-
-    # bm25_score: tf build is the only big shuffle (term filter BEFORE
-    # the exchange, map-side partial_count); stats/df sides broadcast
-    p = plans["bm25_score"] = explain_str(Q.q_bm25_score(spark, SF))
-    check(
-        "bm25_score",
-        "query-term filter precedes the tf shuffle (partial_count) and "
-        "stats/df joins are all broadcast (no sort-merge join)",
-        "partial_count" in p and "SortMergeJoin" not in p
-        and n_nodes(p, "BroadcastHashJoin") >= 1,
-    )
-
-    # embedding_centroids: posexplode then ONE partial-aggregated
-    # groupBy on (label, pos) — constant-size aggregate state
-    p = plans["embedding_centroids"] = explain_str(Q.q_embedding_centroids(spark, SF))
-    check(
-        "embedding_centroids",
-        "single Exchange with map-side partial aggregation, no joins",
-        n_nodes(p, "Exchange") == 1 and "partial_" in p and "Join" not in p,
     )
 
     # hillshade: same halo-stencil shape as focal_stats — one block
@@ -310,53 +205,6 @@ def main() -> int:
         and "BatchEvalPython" not in p,
     )
 
-    # exact_substr: the ExactSubstr rewrite — gram-flag side is
-    # partial-aggregated then equi-joined (never a nested loop), and
-    # the span merge + per-doc rollup REUSE the window's doc_id
-    # Exchange: 4 HashAggregates with no Exchange between them
-    p = plans["exact_substr"] = explain_str(Q.q_exact_substr(spark, SF))
-    # tree block prints top-down: everything above the first Window
-    # line is downstream of the window
-    tree = p.split("\n\n")[0].splitlines()
-    w_at = next(i for i, l in enumerate(tree) if "Window" in l)
-    above = "\n".join(tree[:w_at])
-    check(
-        "exact_substr",
-        "gram flags equi-joined (no NestedLoop); span merge and "
-        "per-doc rollup reuse the window's doc_id partitioning "
-        "(4 HashAggregates and no Exchange above the Window nodes); "
-        "no Python",
-        "NestedLoop" not in p
-        and "BatchEvalPython" not in p
-        and n_nodes(p, "Window") == 2
-        and "Exchange" not in above
-        and above.count("HashAggregate") == 4,
-    )
-
-    # url_dedup: regex canonicalization is ONE codegen projection;
-    # the only shuffles are the two-phase distinct aggregate
-    p = plans["url_dedup"] = explain_str(Q.q_url_dedup(spark, SF))
-    check(
-        "url_dedup",
-        "canonicalization regexes evaluate in a JVM Project (no "
-        "Python, no joins); exactly the 2 Exchanges of the two-phase "
-        "count-distinct aggregate",
-        "BatchEvalPython" not in p
-        and "Join" not in p
-        and n_nodes(p, "Exchange") == 2
-        and "[?&](utm_" in p,
-    )
-
-    # weighted_sample: importance sampling is a pure filter projection
-    # — zero shuffles, all hashing inside codegen
-    p = plans["weighted_sample"] = explain_str(Q.q_weighted_sample(spark, SF))
-    check(
-        "weighted_sample",
-        "zero Exchanges and no Python (codegen filter projection)",
-        n_nodes(p, "Exchange") == 0 and "codegen id" in p
-        and "BatchEvalPython" not in p,
-    )
-
     # resample_bilinear: corner gather is a HASH equi-join (never a
     # nested loop) and the target grid generates executor-side (Range)
     p = plans["resample_bilinear"] = explain_str(Q.q_resample_bilinear(spark, SF))
@@ -369,27 +217,6 @@ def main() -> int:
         and n_nodes(p, "Range") >= 2,
     )
 
-    # cohort_retention: both shuffles keyed on user_id, partial agg
-    # before each; no sort-merge blowup on the cohort re-join
-    p = plans["cohort_retention"] = explain_str(Q.q_cohort_retention(spark, SF))
-    check(
-        "cohort_retention",
-        "map-side partial aggregation present and the cohort re-join "
-        "is a hash join (no nested loop)",
-        "partial_" in p and "NestedLoop" not in p,
-    )
-
-    # decontaminate: the benchmark gram set broadcasts; the corpus
-    # side's only shuffle is the per-doc overlap count
-    p = plans["decontaminate"] = explain_str(Q.q_decontaminate(spark, SF))
-    check(
-        "decontaminate",
-        "benchmark grams joined via BroadcastHashJoin with map-side "
-        "partial_count on the overlap aggregate",
-        n_nodes(p, "BroadcastHashJoin") >= 1 and "partial_count" in p
-        and "SortMergeJoin" not in p,
-    )
-
     # idw_grid: pure codegen map stage — zero Exchanges, zero joins,
     # no Python (the sample points are a literal broadcast array)
     p = plans["idw_grid"] = explain_str(Q.q_idw_grid(spark, SF))
@@ -399,56 +226,6 @@ def main() -> int:
         "a codegen map stage)",
         n_nodes(p, "Exchange") == 0 and "Join" not in p
         and "BatchEvalPython" not in p,
-    )
-
-    # funnel_steps: the event_type filters reach the parquet scan and
-    # every per-stage min is partially aggregated map-side
-    p = plans["funnel_steps"] = explain_str(Q.q_funnel_steps(spark, SF))
-    check(
-        "funnel_steps",
-        "event_type filter pushed to the parquet scan; map-side "
-        "partial_min before each user_id shuffle",
-        any(
-            "event_type" in l and "[]" not in l
-            for l in p.splitlines()
-            if "PushedFilters" in l
-        )
-        and "partial_min" in p,
-    )
-
-    # pagerank: every iteration's contribution aggregate has a
-    # map-side partial_sum (combine before the dst shuffle)
-    p = plans["pagerank"] = explain_str(Q.q_pagerank(spark, SF))
-    check(
-        "pagerank",
-        "map-side partial_sum on every iteration's contribution "
-        "aggregate (3 iterations -> 3 partial_sum aggregates)",
-        len(re.findall(r"partial_sum", p)) >= 3,
-    )
-
-    # ann_pq (IVF+PQ residual, r5 shape): the corpus-sized path is
-    # shuffle-free AND join-free up to the ADC probe — pinned coarse
-    # centroids are a folded literal (no 1-row crossJoins at all),
-    # the encode is one Arrow kernel, ADC is an in-row aggregate
-    # after the broadcast LUT-map join, and the candidate set
-    # broadcasts ONTO the corpus for the re-rank. The only shuffles
-    # left are the tiny per-query LUT groupBy and the two top-N
-    # windows.
-    p = plans["ann_pq"] = explain_str(Q.q_ann_pq(spark, SF))
-    check(
-        "ann_pq",
-        "LUT build/probe/candidate/query joins are hash joins; zero "
-        "nested-loop joins (pinned centroids folded as literals)",
-        n_nodes(p, "BroadcastHashJoin") == 4
-        and n_nodes(p, "SortMergeJoin") == 0
-        and n_nodes(p, "BroadcastNestedLoopJoin") == 0,
-    )
-    check(
-        "ann_pq",
-        "corpus path shuffle-free: one Arrow encode, no corpus-scale "
-        "Exchange — the only Exchanges are the per-query LUT groupBy "
-        "and the two top-N windows",
-        n_nodes(p, "Exchange") == 3 and n_nodes(p, "ArrowEvalPython") == 1,
     )
 
     # zonal stats: zone index broadcast; exactly one aggregate shuffle
@@ -499,163 +276,11 @@ def main() -> int:
         any("o_date" in l and "[]" not in l for l in p.splitlines() if "PushedFilters" in l),
     )
 
-    # pii_scrub: a pure projection — regex count/redact runs inside
-    # whole-stage codegen with no shuffle at all
-    p = plans["pii_scrub"] = explain_str(Q.q_pii_scrub(spark, SF))
-    check("pii_scrub", "zero Exchanges (pure map stage)", n_nodes(p, "Exchange") == 0)
-    check(
-        "pii_scrub",
-        "regexps evaluate inside WholeStageCodegen (no Python in the hot path)",
-        "codegen id" in p and "MapInPandas" not in p and "BatchEvalPython" not in p,
-    )
-
-    # repeated_ngrams: explode + two partial-aggregated groupBys —
-    # exactly two Exchanges, both keyed on doc_id(+gram), and the
-    # unused html blob never scanned
-    p = plans["repeated_ngrams"] = explain_str(Q.q_repeated_ngrams(spark, SF))
-    check(
-        "repeated_ngrams",
-        "exactly two Exchanges (gram count, per-doc rollup) with "
-        "map-side partial_count before each",
-        n_nodes(p, "Exchange") == 2 and "partial_count" in p,
-    )
-    check("repeated_ngrams", "documents scan prunes the html column", "html" not in p)
-
-    # hll_registers: the approximate-distinct estimator must be ONE
-    # tiny shuffle (4096 keys) with map-side partial max — the whole
-    # point of sketching at 100 TB
-    p = plans["hll_registers"] = explain_str(Q.q_hll_registers(spark, SF))
-    check(
-        "hll_registers",
-        "single Exchange with map-side partial_max (register merge)",
-        n_nodes(p, "Exchange") == 1 and "partial_max" in p,
-    )
-
-    # simhash_pairs adaptive routing: on a healthy corpus (the real
-    # sf0.001 documents — census finds no over-cap bucket) the plan
-    # must be the PLAIN (bi, bv) self-join with none of the chunk
-    # machinery; on a degenerate corpus that trips the cap, the
-    # self-join key must carry the chunk columns so no task reads
-    # more than ~2*cap bucket rows
-    from georaster_spark.operators.dedup import simhash_near_pairs
-
-    def has_col(plan: str, col: str) -> bool:
-        return re.search(rf"\b{col}#\d", plan) is not None
-
-    p = plans["simhash_cold"] = explain_str(Q.q_simhash_pairs(spark, SF))
-    check(
-        "simhash_cold",
-        "no over-cap bucket -> plain (bi, bv) self-join (no chunk "
-        "columns in the plan)",
-        not has_col(p, "ca") and not has_col(p, "ct") and not has_col(p, "cs"),
-    )
-    hot_docs = spark.createDataFrame(
-        [(i, " ".join(f"w{k % 31}" for k in range(40))) for i in range(300)]
-        + [(1000 + i, f"x{i} " * 40) for i in range(20)],
-        "doc_id long, text string",
-    )
-    p = plans["simhash_hot"] = explain_str(
-        simhash_near_pairs(hot_docs, max_hamming=4, bucket_cap=64)
-    )
-    check(
-        "simhash_hot",
-        "over-cap bucket -> chunked triangle join (chunk columns in "
-        "the equi-key bound per-task input at ~2*cap rows)",
-        has_col(p, "ca")
-        and has_col(p, "ct")
-        and has_col(p, "cs")
-        and has_col(p, "cb"),
-    )
-
-    # semdedup adaptive routing (round 5, VERDICT r4 task 3): same
-    # census-routed pair of plans as simhash — healthy corpus keeps
-    # the plain bucket self-join, a degenerate cluster trips the cap
-    # into the chunked triangle join
-    from georaster_spark.operators.ann import _cents_df, semdedup
-
-    p = plans["semdedup_cold"] = explain_str(Q.q_semdedup(spark, SF))
-    check(
-        "semdedup_cold",
-        "no over-cap cluster -> plain bucket self-join (no chunk "
-        "columns in the plan)",
-        not has_col(p, "ca") and not has_col(p, "ct") and not has_col(p, "cs"),
-    )
-    hot_vecs = spark.createDataFrame(
-        [(i, [1.0, i * 1e-4, 0.0, 0.0]) for i in range(300)],
-        "vec_id long, embedding array<double>",
-    )
-    p = plans["semdedup_hot"] = explain_str(
-        semdedup(
-            hot_vecs,
-            _cents_df(spark, [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]),
-            tau_e6=990000,
-            bucket_cap=64,
-        )
-    )
-    check(
-        "semdedup_hot",
-        "over-cap cluster -> chunked triangle join (chunk columns in "
-        "the equi-key bound per-task input at ~2*cap rows)",
-        has_col(p, "ca")
-        and has_col(p, "ct")
-        and has_col(p, "cs")
-        and has_col(p, "cb"),
-    )
-
-    # crawl-side controls (final session): robots = broadcast rules
-    # join + ONE aggregate shuffle; frontier = WindowGroupLimit rank
-    # cap; main_content = zero-shuffle array algebra
-    p = plans["robots_filter"] = explain_str(Q.q_robots_filter(spark, SF))
-    check(
-        "robots_filter",
-        "rules joined via BroadcastHashJoin (URL side never shuffles "
-        "for the join)",
-        n_nodes(p, "BroadcastHashJoin") >= 1 and "SortMergeJoin" not in p,
-    )
-    check(
-        "robots_filter",
-        "ONE Exchange (the winner-pick aggregate) with partial "
-        "map-side combine",
-        n_nodes(p, "Exchange") == 1 and "partial_max" in p,
-    )
-    p = plans["crawl_frontier"] = explain_str(Q.q_crawl_frontier(spark, SF))
-    check(
-        "crawl_frontier",
-        "per-host rank cap plans as WindowGroupLimit (per-task state "
-        "= budget, not host URL count)",
-        n_nodes(p, "WindowGroupLimit") >= 1,
-    )
-    check(
-        "crawl_frontier",
-        "single Exchange (the politeness hash shuffle on host)",
-        n_nodes(p, "Exchange") == 1,
-    )
-    p = plans["main_content"] = explain_str(Q.q_main_content(spark, SF))
-    check(
-        "main_content",
-        "zero Exchanges — boilerplate removal runs at scan speed "
-        "(higher-order array algebra, no explode)",
-        n_nodes(p, "Exchange") == 0,
-    )
-    p = plans["anchor_topk"] = explain_str(Q.q_anchor_topk(spark, SF))
-    check(
-        "anchor_topk",
-        "per-target top-k is a WindowGroupLimit rank cap",
-        n_nodes(p, "WindowGroupLimit") >= 1,
-    )
-    p = plans["crawl_delta"] = explain_str(Q.q_crawl_delta(spark, SF))
-    check(
-        "crawl_delta",
-        "snapshot diff is ONE equi full-outer join on url (SMJ), "
-        "no nested-loop join",
-        n_nodes(p, "SortMergeJoin") == 1
-        and "BroadcastNestedLoopJoin" not in p,
-    )
-
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/PLANS.md", "w") as f:
+    out_dir = os.path.join(REPO, ".plan_audit")
+    os.makedirs(out_dir, exist_ok=True)
+    with open(os.path.join(out_dir, "PLANS.md"), "w") as f:
         f.write("# Physical-plan audit (explain('formatted') invariants)\n\n")
-        f.write("Run: `python tools/plan_audit.py` — regenerated per round.\n\n")
+        f.write("Run: `python tools/plan_audit.py` — regenerated on every run.\n\n")
         f.write("| query | invariant | status |\n|---|---|---|\n")
         for name, inv, ok in checks:
             f.write(f"| {name} | {inv} | {'PASS' if ok else 'FAIL'} |\n")
