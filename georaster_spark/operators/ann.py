@@ -27,8 +27,6 @@ the self-join never goes quadratic.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -497,429 +495,4 @@ def semdedup(
             "self_e6",
             F.col("_d").isNull().cast("long").alias("kept"),
         )
-    )
-
-
-# ----------------------------------------------------------- PQ (ADC)
-
-def quantize_embeddings(
-    df: DataFrame, scale: float = 1000.0, vec_col: str = "embedding"
-) -> DataFrame:
-    """Integer-quantize every dimension (round(v * scale) as BIGINT):
-    all downstream PQ distance arithmetic becomes EXACT integer math —
-    order-independent, bit-identical across engines — which is what
-    lets code assignments (discrete argmins) survive a cross-engine
-    oracle. e3 on unit-scale floats keeps ~0.1% quantization error,
-    far below the PQ approximation itself."""
-    q = F.transform(
-        F.col(vec_col), lambda v: F.round(v.cast("double") * scale, 0).cast("long")
-    )
-    return df.withColumn("emb_q", q)
-
-
-def _pq_slices(
-    df: DataFrame,
-    id_col: str,
-    id_alias: str,
-    m: int,
-    dsub: int,
-    vec_col: str = "emb_q",
-    extra: tuple[str, ...] = (),
-) -> DataFrame:
-    """Explode a quantized-vector frame into per-subspace rows
-    (id_alias, *extra, sub, svec) — shared stage of encoding and LUT
-    build."""
-    return df.select(
-        F.col(id_col).alias(id_alias),
-        *extra,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("sub"),
-                        F.slice(vec_col, s * dsub + 1, dsub).alias("svec"),
-                    )
-                    for s in range(m)
-                ]
-            )
-        ).alias("sl"),
-    ).select(
-        id_alias, *extra, F.col("sl.sub").alias("sub"), F.col("sl.svec").alias("svec")
-    )
-
-
-def pq_codes(
-    corpus: DataFrame, codebook: DataFrame, m: int, dsub: int
-) -> DataFrame:
-    """Product-quantization encoding: split each vector into ``m``
-    subspaces of ``dsub`` dims; per subspace assign the nearest of
-    the codebook's centroids by exact integer L2. One broadcast of
-    the tiny codebook, one narrow map per corpus row — at scale the
-    codes (m bytes/vector) REPLACE the stored vectors, an 8-byte
-    representation of a 256-byte embedding.
-
-    ``corpus``: (vec_id, emb_q); ``codebook``: (sub, code, cvec) with
-    cvec the centroid's dsub-dim integer subvector. Returns
-    (vec_id, sub, code). Argmin ties break to the smallest code
-    (struct-min ordering), matching ORDER BY dist, code LIMIT 1.
-    """
-    sliced = _pq_slices(corpus, "vec_id", "vec_id", m, dsub)
-    d = _l2sq_int(F.col("svec"), F.col("cvec"))
-    return (
-        sliced.join(F.broadcast(codebook), "sub")
-        .groupBy("vec_id", "sub")
-        .agg(F.min(F.struct(d.alias("dist"), F.col("code").alias("code"))).alias("m"))
-        .select("vec_id", "sub", F.col("m.code").alias("code"))
-    )
-
-
-def _l2sq_int(a: Column, b: Column) -> Column:
-    """Exact integer squared L2 between two BIGINT array columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
-def pq_topk(
-    queries: DataFrame,
-    codes: DataFrame,
-    codebook: DataFrame,
-    m: int,
-    dsub: int,
-    k: int = 5,
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k: per query build the m×K
-    lookup table of exact integer subspace distances query↔centroid
-    (tiny — broadcast), then every corpus vector's approximate
-    distance is the SUM of m table lookups joined through its codes.
-    The corpus vectors themselves are never touched at query time —
-    the scan reads m small integers per row. Deterministic ties:
-    (adc, vec_id) ordering."""
-    qsliced = _pq_slices(queries, "vec_id", "query_id", m, dsub)
-    lut = qsliced.join(F.broadcast(codebook), "sub").select(
-        "query_id", "sub", "code", _l2sq_int(F.col("svec"), F.col("cvec")).alias("d")
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["sub", "code"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy("adc", "vec_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "adc")
-    )
-
-
-# ------------------------------------------------- IVF+PQ (residual)
-
-def ivfpq_cells_lit(coarse: list[tuple[int, list[int]]]) -> Column:
-    """The pinned integer coarse centroids as ONE literal
-    ``ARRAY<STRUCT<cell,cvec>>`` column, cells ascending. A pinned
-    artifact is a plan-time constant: folding it in as a literal
-    (vs round 4's 1-row collect_list DataFrame crossJoined onto
-    corpus and queries) deletes two 1-row aggregates, two broadcast
-    builds, and both BroadcastNestedLoopJoins from the plan — the
-    centroid table rides in the task binary exactly like the PQ
-    codebook cube, and assignment/probing stays a narrow per-row
-    array scan. Built as ONE ``F.expr`` of SQL literals (Catalyst
-    constant-folds it to a single Literal): composing it from ~500
-    ``F.lit``/``F.struct`` calls costs that many py4j round trips —
-    ~1 s of DRIVER wall per reference, measured this round."""
-    structs = ", ".join(
-        "named_struct('cell', {c}, 'cvec', array({vs}))".format(
-            c=int(c), vs=", ".join(f"{int(x)}L" for x in v)
-        )
-        for c, v in sorted(coarse)
-    )
-    return F.expr(f"array({structs})")
-
-
-def _cell_dists(vec_col: str) -> Column:
-    """ARRAY<STRUCT<dist,cell>> of exact integer L2 against every
-    coarse centroid in the broadcast ``cells`` column — array_min
-    gives the argmin with ties to the smallest cell id."""
-    return F.transform(
-        F.col("cells"),
-        lambda c: F.struct(
-            _l2sq_int(F.col(vec_col), c["cvec"]).alias("dist"),
-            c["cell"].alias("cell"),
-        ),
-    )
-
-
-def ivfpq_assign_residual(
-    df: DataFrame, coarse: list[tuple[int, list[int]]], vec_col: str = "emb_q"
-) -> DataFrame:
-    """Assign each integer vector to its nearest coarse cell and
-    attach the integer residual v - c(v) (Jégou et al. 2011, §IV:
-    residuals have far smaller spread than raw vectors, so the same
-    PQ code bytes quantize them more finely). Narrow: literal pinned
-    centroid array, per-row argmin, zip_with subtraction — no join,
-    shuffle-free; at ingest ``cell`` becomes a partition column."""
-    assigned = df.withColumn("cells", ivfpq_cells_lit(coarse)).withColumn(
-        "cell", F.array_min(_cell_dists(vec_col))["cell"]
-    )
-    # cells are pinned as exactly 0..n-1, so element_at(cell+1) is the
-    # assigned centroid
-    cvec = F.element_at(F.col("cells"), F.col("cell") + 1)["cvec"]
-    return assigned.withColumn(
-        "resid", F.zip_with(F.col(vec_col), cvec, lambda x, y: x - y)
-    ).drop("cells")
-
-
-def _codebook_cube(
-    codebook: list[tuple[int, int, list[int]]], m: int, dsub: int
-):
-    """Pinned (sub, code, cvec) triples as an (m, K, dsub) int64 NumPy
-    cube — codes are dense 0..K-1 per subspace (pin_ivfpq.py output),
-    so ``argmin`` over axis=code breaks ties to the smallest code,
-    the same ordering as min(struct(dist, code))."""
-    n_codes = max(int(c) for _, c, _ in codebook) + 1
-    cube = np.zeros((m, n_codes, dsub), dtype=np.int64)
-    for s, c, vec in codebook:
-        cube[int(s), int(c)] = [int(x) for x in vec]
-    return cube
-
-
-def ivfpq_codes(
-    corpus: DataFrame,
-    coarse: list[tuple[int, list[int]]],
-    codebook: list[tuple[int, int, list[int]]],
-    m: int,
-    dsub: int,
-) -> DataFrame:
-    """(vec_id, cell, codes: ARRAY<BIGINT> length m): residual-PQ
-    encoding as a NARROW Arrow-vectorized projection — ZERO shuffle
-    and ZERO join over the corpus. The codebook is a pinned offline
-    artifact (ivfpq_codebook.py), shipped as an (m, K, dsub) int64
-    closure into one pandas UDF whose batch body is a single NumPy
-    broadcast: dists (n, m, K) = Σ(resid − code)², argmin per
-    subspace (first-min = smallest code, the min(struct) tie-break).
-    All-integer math, so the discrete codes are engine-exact.
-
-    Why a pandas UDF and not Column algebra: round 4 encoded via
-    explode + broadcast-join + groupBy — one m-rows-per-vector
-    shuffle, which at 10^12 vectors is the whole job; folding the
-    codebook into literal ``array_min`` expressions instead drowns
-    the DRIVER (a ~10⁴-node HOF tree costs seconds per query in
-    analysis alone, measured this round). The Arrow kernel keeps the
-    plan narrow AND the expression tree tiny. At scale this
-    (1 + m)-byte row set REPLACES the stored vectors."""
-    cube = _codebook_cube(codebook, m, dsub)
-
-    @F.pandas_udf("array<long>")
-    def _encode(resid: pd.Series) -> pd.Series:
-        if len(resid) == 0:
-            return pd.Series([], dtype=object)
-        r = np.stack(resid.to_numpy()).astype(np.int64).reshape(len(resid), m, dsub)
-        d = ((r[:, :, None, :] - cube[None, :, :, :]) ** 2).sum(axis=3)
-        return pd.Series(list(d.argmin(axis=2)))
-
-    corp = ivfpq_assign_residual(corpus, coarse)
-    return corp.select("vec_id", "cell", _encode("resid").alias("codes"))
-
-
-# One-entry cache of the MATERIALIZED PQ code index, keyed by the
-# corpus source files + codebook shape. IVF+PQ is an index-build /
-# query split in every production system (the 10^12-vector plan
-# writes codes as a partitioned table once and queries forever);
-# recomputing the Arrow encode inside every query's DAG — where
-# Spark re-evaluates the subtree per use — charged the BUILD to every
-# query. Bounded: inserting a new index unpersists the old, so at
-# most one corpus' codes (cell + m bytes per vector) stay pinned.
-_CODES_CACHE: dict = {}
-
-
-def _built_codes(corpus: DataFrame, coarse, codebook, m: int,
-                 dsub: int) -> DataFrame:
-    cb_sig = (len(coarse), len(codebook), m, dsub,
-              tuple(coarse[0][1][:4]) if coarse else ())
-    try:
-        files = tuple(sorted(corpus.inputFiles()))
-    except Exception:
-        files = ()
-    # the session is part of the identity: a cached DataFrame from a
-    # stopped SparkSession must never be returned to a new one
-    key = (id(corpus.sparkSession), files, cb_sig)
-    if not files:
-        # non-file-backed corpus (tests build from literals): no safe
-        # identity to cache under — build inline
-        return ivfpq_codes(corpus, coarse, codebook, m, dsub)
-    hit = _CODES_CACHE.get(key)
-    if hit is not None:
-        return hit
-    codes = ivfpq_codes(corpus, coarse, codebook, m, dsub).persist()
-    codes.count()  # the index build, paid once per corpus
-    for old_key in list(_CODES_CACHE):
-        _CODES_CACHE.pop(old_key).unpersist()
-    _CODES_CACHE[key] = codes
-    return codes
-
-
-def ivfpq_topk_rerank(
-    queries: DataFrame,
-    corpus: DataFrame,
-    coarse: list[tuple[int, list[int]]],
-    codebook: list[tuple[int, int, list[int]]],
-    m: int,
-    dsub: int,
-    k: int = 5,
-    nprobe: int = 4,
-    n_candidates: int = 100,
-) -> DataFrame:
-    """IVF+PQ-residual two-stage retrieval with a SHUFFLE-FREE corpus
-    path: per query probe the ``nprobe`` nearest coarse cells; per
-    probed cell the m×K LUT of exact integer distances between the
-    QUERY RESIDUAL (wrt that cell's centroid) and the pinned residual
-    codebook is built as ONE map column (key sub*K+code) on the tiny
-    per-query probes frame and broadcast; ADC = an in-row
-    ``F.aggregate`` over each corpus row's m codes after a single
-    BroadcastHashJoin on cell — the IVF pruning IS that equi-join
-    (unprobed cells' codes never match), and the encode feeding it is
-    the narrow Arrow projection of ``ivfpq_codes``, so from parquet
-    scan to ADC the corpus-sized path has zero
-    Exchanges. ADC values are comparable ACROSS cells because each
-    approximates the same ||q - v||². Exact integer-L2 re-rank of the
-    top ``n_candidates``: the Q×n_candidates candidate set broadcasts
-    ONTO the corpus (never the reverse), so stage 2 is one more
-    narrow corpus pass; only per-query top-N windows ever shuffle,
-    and those carry O(|Q| · corpus/n_cells · nprobe) and
-    O(|Q| · n_candidates) rows respectively.
-
-    Round 5: the code INDEX is built once per corpus and kept
-    materialized (``_built_codes``) — the build/query split every
-    production IVF+PQ system has. Before, Spark re-evaluated the
-    encode subtree inside each query's DAG, charging the index build
-    to every query (~1.8 s of ann_pq's 3.3 s at sf0.1). The cache
-    holds at most ONE corpus' codes (cell + m bytes per vector) and
-    unpersists the old entry on replacement — the bounded-retention
-    rule from ADVICE r4's d8_accumulation persist-leak finding."""
-    n_codes = max(int(c) for _, c, _ in codebook) + 1
-    codes = _built_codes(corpus, coarse, codebook, m, dsub)
-    codebook_df = corpus.sparkSession.createDataFrame(
-        [(int(s), int(c), [int(x) for x in vec]) for s, c, vec in codebook],
-        "sub int, code long, cvec array<bigint>",
-    )
-    qf = queries.select(F.col("vec_id").alias("query_id"), "emb_q")
-    probes = (
-        qf.withColumn("cells", ivfpq_cells_lit(coarse))
-        .select(
-            "query_id",
-            "emb_q",
-            "cells",
-            F.explode(F.slice(F.array_sort(_cell_dists("emb_q")), 1, nprobe)).alias(
-                "p"
-            ),
-        )
-        .withColumn("cell", F.col("p.cell"))
-        .withColumn(
-            "q_resid",
-            F.zip_with(
-                F.col("emb_q"),
-                F.element_at(F.col("cells"), F.col("cell") + 1)["cvec"],
-                lambda x, y: x - y,
-            ),
-        )
-        .select("query_id", "cell", "q_resid")
-    )
-    qsliced = _pq_slices(
-        probes, "query_id", "query_id", m, dsub, vec_col="q_resid", extra=("cell",)
-    )
-    lut = (
-        qsliced.join(F.broadcast(codebook_df), "sub")
-        .groupBy("query_id", "cell")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.struct(
-                        (F.col("sub") * n_codes + F.col("code"))
-                        .cast("int")
-                        .alias("k"),
-                        _l2sq_int(F.col("svec"), F.col("cvec")).alias("v"),
-                    )
-                )
-            ).alias("lutm")
-        )
-    )
-    adc = codes.join(F.broadcast(lut), "cell").select(
-        "query_id",
-        "vec_id",
-        F.aggregate(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            F.lit(0).cast("long"),
-            lambda acc, s: acc
-            + F.element_at(
-                F.col("lutm"),
-                (s * n_codes + F.element_at(F.col("codes"), s + 1)).cast("int"),
-            ),
-        ).alias("adc"),
-    )
-    wc = Window.partitionBy("query_id").orderBy("adc", "vec_id")
-    cand = (
-        adc.withColumn("rn", F.row_number().over(wc))
-        .where(F.col("rn") <= n_candidates)
-        .select("query_id", "vec_id", "adc")
-    )
-    qv = qf.select("query_id", F.col("emb_q").alias("q_emb"))
-    cv = corpus.select("vec_id", F.col("emb_q").alias("c_emb"))
-    rer = (
-        cv.join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "adc",
-            _l2sq_int(F.col("q_emb"), F.col("c_emb")).alias("exact_d"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("exact_d", "vec_id")
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "exact_d", "adc")
-    )
-
-
-def pq_topk_rerank(
-    queries: DataFrame,
-    corpus: DataFrame,
-    codes: DataFrame,
-    codebook: DataFrame,
-    m: int,
-    dsub: int,
-    k: int = 5,
-    n_candidates: int = 100,
-) -> DataFrame:
-    """The production two-stage PQ pipeline: ADC over the compressed
-    codes retrieves ``n_candidates`` per query (the cheap scan — m
-    integer lookups per corpus row, vectors untouched), then ONLY the
-    candidates' full vectors are fetched for an exact integer-L2
-    re-rank to top-k. At 100 TB stage 1 reads the m-byte codes table
-    and stage 2 touches Q x n_candidates vectors — the full embedding
-    column is never scanned at query time. All arithmetic exact
-    integer (quantize_embeddings), so ranks are engine-independent."""
-    cand = pq_topk(queries, codes, codebook, m, dsub, k=n_candidates).select(
-        "query_id", "vec_id", "adc"
-    )
-    qv = queries.select(F.col("vec_id").alias("query_id"), F.col("emb_q").alias("q_emb"))
-    cv = corpus.select("vec_id", F.col("emb_q").alias("c_emb"))
-    rer = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "vec_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "adc",
-            _l2sq_int(F.col("q_emb"), F.col("c_emb")).alias("exact_d"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("exact_d", "vec_id")
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "exact_d", "adc")
     )

@@ -323,3 +323,21 @@ def wrap_webp(vp8_payload: bytes) -> bytes:
     if len(vp8_payload) & 1:
         chunk += b"\x00"
     return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
+
+
+def wrap_webp_alpha(vp8_payload: bytes, alpha: bytes, w: int, h: int) -> bytes:
+    """Extended (VP8X) container with a RAW (uncompressed, unfiltered)
+    ``ALPH`` chunk followed by the lossy frame."""
+    assert len(alpha) == w * h
+    vp8x = bytes([0x10, 0, 0, 0]) + (w - 1).to_bytes(3, "little") + (
+        h - 1
+    ).to_bytes(3, "little")
+    out = b"VP8X" + struct.pack("<I", len(vp8x)) + vp8x
+    alph = b"\x00" + alpha
+    out += b"ALPH" + struct.pack("<I", len(alph)) + alph
+    if len(alph) & 1:
+        out += b"\x00"
+    out += b"VP8 " + struct.pack("<I", len(vp8_payload)) + vp8_payload
+    if len(vp8_payload) & 1:
+        out += b"\x00"
+    return b"RIFF" + struct.pack("<I", 4 + len(out)) + b"WEBP" + out

@@ -1,6 +1,5 @@
-"""Crawl-side controls: robots verdicts, politeness frontier,
-anchor-text top-k, boilerplate removal (operators/crawl.py and the
-queries.py pairs)."""
+"""Crawl-side controls: robots verdicts and the politeness frontier
+(operators/crawl.py)."""
 
 from __future__ import annotations
 
@@ -83,49 +82,6 @@ def test_frontier_hosts_independent(spark):
     assert out["a"].slot == 0 and out["b"].slot == 0
 
 
-def test_main_content_drops_nav_lines(spark):
-    import georaster_spark.queries as Q
-
-    import math
-    import re
-
-    def scalar(doc_id: int, text: str):
-        """Scalar mirror of the operator's rendering + density rule."""
-        words = text.split(" ")
-        lines = []
-        for i in range(math.ceil(len(words) / 5)):
-            chunk = " ".join(words[i * 5 : i * 5 + 5])
-            if (doc_id + i) % 3 == 0:
-                lines.append(f'<a href="/nav">{chunk}</a> | menu')
-            elif i % 5 == 2:
-                lines.append(f'{chunk} <a href="#r">ref</a>')
-            else:
-                lines.append(chunk)
-        kept = [
-            ln
-            for ln in lines
-            if sum(len(m) for m in re.findall(r"<a[^>]*>[^<]*</a>", ln))
-            / len(ln)
-            < 0.5
-        ]
-        main = " ".join(re.sub(r"<[^>]*>", "", ln) for ln in kept)
-        return len(lines), len(kept), main
-
-    docs = {
-        r.doc_id: r.text
-        for r in spark.read.parquet(f"{SF}/documents.parquet").collect()
-    }
-    rows = {r.doc_id: r for r in Q.q_main_content(spark, SF).collect()}
-    assert set(rows) == set(docs)
-    for doc_id, r in rows.items():
-        n_lines, n_kept, main = scalar(doc_id, docs[doc_id])
-        assert (r.n_lines, r.n_kept, r.main_text) == (n_lines, n_kept, main)
-        assert "<a" not in r.main_text and r.main_len == len(r.main_text)
-    # nav lines genuinely drop somewhere (and short link-dominated
-    # trailing chunks may drop too — density, not position, decides)
-    assert any(r.n_kept < r.n_lines for r in rows.values())
-
-
 def test_robots_random_rulesets_match_scalar_reference(spark):
     """Property: on seeded random rule tables and URL lists, the
     distributed verdicts equal a scalar RFC 9309 reference (longest
@@ -171,41 +127,3 @@ def test_robots_random_rulesets_match_scalar_reference(spark):
             r.host,
             r.path,
         )
-
-
-def test_crawl_delta_statuses(spark):
-    """Snapshot-diff classification: every status class occurs, the
-    counts reconcile with the closed-form recipe (changed %5, added
-    %17, removed %11==3 — removal wins over change), and the result
-    comes from genuine TIME TRAVEL over a 3-commit chain (the query
-    raises otherwise)."""
-    import georaster_spark.queries as Q
-
-    rows = Q.q_crawl_delta(spark, SF).collect()
-    by_status: dict[str, int] = {}
-    for r in rows:
-        by_status[r.status] = by_status.get(r.status, 0) + r.n_urls
-    n = 500  # documents rows at this sf
-    removed = {i for i in range(n) if i % 11 == 3}
-    changed = {i for i in range(n) if i % 5 == 0} - removed
-    added = {i for i in range(n) if i % 17 == 0}
-    assert by_status["removed"] == len(removed)
-    assert by_status["changed"] == len(changed)
-    assert by_status["added"] == len(added)
-    assert by_status["same"] == n - len(removed) - len(changed)
-
-
-def test_anchor_topk_rank_bounds(spark):
-    import georaster_spark.queries as Q
-
-    rows = Q.q_anchor_topk(spark, SF).collect()
-    assert rows
-    per_doc: dict[int, list] = {}
-    for r in rows:
-        per_doc.setdefault(r.doc_id, []).append(r)
-    for doc, rs in per_doc.items():
-        rs = sorted(rs, key=lambda r: r.rnk)
-        assert [r.rnk for r in rs] == list(range(1, len(rs) + 1))
-        assert len(rs) <= 3
-        cnts = [r.cnt for r in rs]
-        assert cnts == sorted(cnts, reverse=True)

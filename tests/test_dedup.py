@@ -130,25 +130,19 @@ def test_connected_components_self_pair_node_survives(spark):
 
 def test_lsh_prefiltered_jaccard_equals_all_pairs(spark):
     """The scale-safe LSH-prefiltered exact Jaccard must equal the
-    all-pairs form at the configured banding on the testdata (the
-    VERDICT-mandated gate for swapping the catalog entry)."""
-    from georaster_spark.queries import (
-        JACCARD_T,
-        LSH_BANDS,
-        MINHASH_SEEDS,
-        SHINGLE_N,
-        _docs_spread,
-    )
+    all-pairs form on the testdata."""
     from georaster_spark.operators.dedup import (
         ngram_jaccard_pairs,
         ngram_jaccard_pairs_lsh,
     )
 
-    docs = _docs_spread(spark, "/root/testdata/sf0.001")
+    SHINGLE_N, JACCARD_T, MINHASH_SEEDS, LSH_BANDS = 3, 0.5, 16, 4
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = docs.repartition(spark.sparkContext.defaultParallelism)
     t = int(JACCARD_T * 1000000)
     exact = {tuple(r) for r in ngram_jaccard_pairs(docs, t, SHINGLE_N).collect()}
-    # r=2 is the cataloged banding (right for the low tau=0.5); also
-    # assert the default r=4 banding still matches on this data
+    # r=2 is the right banding for the low tau=0.5; also assert the
+    # default r=4 banding still matches on this data
     for rpb in (2, LSH_BANDS):
         lsh = {
             tuple(r)

@@ -26,21 +26,3 @@ def test_canonical_url_hand_checked(spark):
     out = df.select("expected", canonical_url(F.col("url")).alias("got")).collect()
     for r in out:
         assert r.got == r.expected, (r.expected, r.got)
-
-
-def test_messy_url_synthesis_groups_by_source_and_mod40(spark):
-    """The synthetic messy URLs must canonicalize to exactly
-    source + '.example.com/a/' + doc_id % 40 — i.e. the group key is
-    (source, doc_id % 40) no matter which hazard combination the
-    residues picked."""
-    from georaster_spark.queries import _messy_url_col
-
-    rows = [(i, f"src{i % 20}") for i in range(120)]
-    docs = spark.createDataFrame(rows, "doc_id long, source string")
-    out = docs.select(
-        "doc_id",
-        "source",
-        canonical_url(_messy_url_col()).alias("curl"),
-    ).collect()
-    for r in out:
-        assert r.curl == f"{r.source}.example.com/a/{r.doc_id % 40}", r
