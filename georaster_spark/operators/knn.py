@@ -1,14 +1,17 @@
 """kNN via cell-ring expansion (engine op E6).
 
-For each query point: start at its cell, expand Chebyshev rings
-k=0,1,2,… until every query has ≥ k candidates AND the kth candidate
-distance is provably inside the searched disk (ring-boundary distance
-guarantee) — then an exact haversine top-k over candidates only.
+``knn_join`` (per query point): start at the query's cell, expand
+Chebyshev rings until every query has ≥ k candidates AND the kth
+candidate distance is provably inside the searched disk (ring-boundary
+distance guarantee) — then an exact haversine top-k over candidates
+only. The (query, cell) candidate index is tiny and broadcast;
+documents are probed with an equi-join on ``cell`` and the top-k
+window shuffles only the candidates, partitioned by query id.
 
-Plan shape: the (query, cell) candidate index is tiny and broadcast;
-documents are probed with an equi-join on ``cell`` (no shuffle of the
-big side), and only the final top-k does a shuffle, partitioned by
-query id — bounded by n_queries × candidates, not by table size.
+``knn_table_join`` (every document): the same index and guarantee
+keyed by cell, broadcast once; top-k, proof and exact fallback are one
+projection per document, so the call shuffles nothing.
+
 Generalizes the reference's world→tile→local-sample lookup
 (``src/pmtiles.rs:37-51``) from one tile to an expanding disk.
 """
@@ -17,10 +20,16 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from georaster_spark.cells import cell_bounds, cell_disk_py, cell_encode_py
+from georaster_spark.cells import (
+    cell_bounds,
+    cell_bounds_cols,
+    cell_disk_py,
+    cell_encode_cols,
+    cell_encode_py,
+)
 from georaster_spark.functions.geo import EARTH_RADIUS_M, haversine_cols
 
 
@@ -46,57 +55,53 @@ def knn_table_join(
     k: int,
     res: int,
     ring: int = 1,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    doc_key: str = "doc_id",
 ) -> DataFrame:
-    """k nearest POIs for EVERY document — the table-scale kNN (E6
-    generalized from per-query to per-row, the shape a 100 TB
-    enrichment actually runs).
+    """k nearest POIs for EVERY document of ``docs`` (``doc_id``,
+    ``lon``, ``lat``) — the table-scale kNN (E6 generalized from
+    per-query to per-row, the shape a 100 TB enrichment actually runs).
 
     Plan: each POI's cell-disk at resolution ``res`` is expanded
-    driver-side and broadcast; docs equi-join on their own cell (one
-    narrow probe — the big side never shuffles for candidate
-    generation), then a per-doc window takes the top-k. Chebyshev
-    symmetry makes the poi→disk index equivalent to probing the doc's
-    own disk. Docs whose kth candidate is NOT provably inside the
+    driver-side and grouped into one index row per cell carrying that
+    cell's candidate POIs as an array; the index is broadcast and
+    left-joined to the docs on their own cell (Chebyshev symmetry makes
+    the poi→disk index equivalent to probing the doc's own disk). One
+    projection per doc then sorts its candidates by (dist, poi_id) and
+    keeps k. A doc whose kth candidate is NOT provably inside the
     searched disk (ring-boundary bound, cf. ``_disk_boundary_dist_m``)
-    — or with < k candidates — fall back to an exact broadcast
-    cross-join against the full POI list; the union is exactly the
-    brute-force result for every doc.
+    — or with < k candidates, or no index row at all — takes the same
+    top-k over the literal array of all POIs instead, so every doc gets
+    exactly the brute-force result.
 
-    Returns (<doc_key>, poi_id, dist_m, rank); ties break on
-    (dist, poi_id). One shuffle total (the top-k window on doc key).
+    Returns (doc_id, poi_id, dist_m, rank); ties break on
+    (dist, poi_id). No shuffle, no window: one broadcast join, one
+    projection, one explode.
     """
-    from georaster_spark.cells import cell_encode_cols
-
     spark: SparkSession = docs.sparkSession
-    docs_c = docs.where(F.col(lon_col).isNotNull()).withColumn(
-        "cell", cell_encode_cols(F.col(lon_col), F.col(lat_col), res)
+    cand_t = "array<struct<poi_id: string, p_lon: double, p_lat: double>>"
+    by_cell: dict[int, list[tuple[str, float, float]]] = {}
+    for pid, plon, plat in pois:
+        for c in cell_disk_py(cell_encode_py(plon, plat, res), ring):
+            by_cell.setdefault(c, []).append((pid, plon, plat))
+    idx = spark.createDataFrame(sorted(by_cell.items()), f"cell long, cands {cand_t}")
+    all_pois = F.array(
+        *(
+            F.struct(F.lit(pid).alias("poi_id"), F.lit(plon).alias("p_lon"), F.lit(plat).alias("p_lat"))
+            for pid, plon, plat in pois
+        )
     )
 
-    idx_rows = [
-        (c, pid, plon, plat)
-        for pid, plon, plat in pois
-        for c in cell_disk_py(cell_encode_py(plon, plat, res), ring)
-    ]
-    idx = spark.createDataFrame(
-        idx_rows, "cell long, poi_id string, p_lon double, p_lat double"
-    )
-
-    dist = haversine_cols(F.col(lon_col), F.col(lat_col), F.col("p_lon"), F.col("p_lat"))
-    w = Window.partitionBy(doc_key).orderBy(F.col("dist_m").asc(), F.col("poi_id").asc())
-    cand = (
-        docs_c.join(F.broadcast(idx), "cell")
-        .withColumn("dist_m", dist)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    def top_k(cands: Column) -> Column:
+        by_dist = F.transform(
+            cands,
+            lambda p: F.struct(
+                haversine_cols(F.col("lon"), F.col("lat"), p["p_lon"], p["p_lat"]).alias("dist_m"),
+                p["poi_id"].alias("poi_id"),
+            ),
+        )
+        return F.slice(F.sort_array(by_dist), 1, k)
 
     # per-doc disk-boundary bound from the doc's OWN cell geometry —
     # Column form of _disk_boundary_dist_m
-    from georaster_spark.cells import cell_bounds_cols
-
     lon0, lat0, lon1, lat1 = cell_bounds_cols(F.col("cell"), res)
     m_per_deg_lat = math.pi * EARTH_RADIUS_M / 180.0
     lat_mid = (lat0 + lat1) / 2
@@ -107,33 +112,21 @@ def knn_table_join(
         F.lit(float(ring)) * F.least(cell_w, cell_h) - half_diag, F.lit(0.0)
     )
 
-    # stats carry `cell` (functionally dependent on the doc) so the
-    # boundary derives inside the aggregate — no re-join with docs.
-    # The proven set is doc-keyed and potentially huge: it flows
-    # through semi/anti joins on doc_key (the window already
-    # partitioned cand that way), NEVER through a broadcast.
-    stats = (
-        cand.groupBy(doc_key, "cell")
-        .agg(F.count(F.lit(1)).alias("_cnt"), F.max("dist_m").alias("_kth"))
-        .withColumn("_proven", (F.col("_cnt") >= k) & (F.col("_kth") <= boundary))
+    # a doc with no index row has null cands: empty, hence unproven
+    near = top_k(F.coalesce("cands", F.array().cast(cand_t))).alias("near")
+    # `when` reads the kth entry only where it exists
+    kth_ok = F.col("near")[k - 1]["dist_m"] <= boundary
+    proven = F.when(F.size("near") >= k, kth_ok).otherwise(False)
+    return (
+        docs.where(F.col("lon").isNotNull())
+        .select("doc_id", "lon", "lat", cell_encode_cols(F.col("lon"), F.col("lat"), res).alias("cell"))
+        .join(F.broadcast(idx), "cell", "left")
+        # `near` gets its own projection so the candidate sort runs once
+        # per doc, not once per use below
+        .select("doc_id", "lon", "lat", "cell", near)
+        .select("doc_id", F.posexplode(F.when(proven, F.col("near")).otherwise(top_k(all_pois))))
+        .select("doc_id", "col.poi_id", "col.dist_m", (F.col("pos") + 1).alias("rank"))
     )
-    proven_keys = stats.where(F.col("_proven")).select(doc_key)
-
-    fast = cand.join(proven_keys, doc_key, "left_semi")
-    # anti join keeps docs with too-few candidates AND docs with zero
-    # candidates (absent from stats entirely)
-    exact_docs = docs_c.join(proven_keys, doc_key, "left_anti").select(
-        doc_key, lon_col, lat_col
-    )
-    pois_df = spark.createDataFrame(pois, "poi_id string, p_lon double, p_lat double")
-    exact = (
-        exact_docs.crossJoin(F.broadcast(pois_df))
-        .withColumn("dist_m", dist)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
-    out_cols = [doc_key, "poi_id", "dist_m", "rank"]
-    return fast.select(*out_cols).unionByName(exact.select(*out_cols))
 
 
 def knn_join(

@@ -260,12 +260,13 @@ def sql_dwithin_pairs():
 
 def q_knn_table(spark, sf_dir):
     """Table-scale kNN (operators/knn.py knn_table_join): every doc's
-    3 nearest POIs via broadcast cell-disk index + per-doc window,
-    exact-fallback for boundary cases — equals brute force."""
+    3 nearest POIs via broadcast per-cell candidate index + per-doc
+    top-k projection, exact fallback for boundary cases — equals brute
+    force."""
     from georaster_spark.operators.knn import knn_table_join
 
     d = docs_geocoded(spark, sf_dir)
-    out = knn_table_join(d, POIS, k=3, res=9, ring=1, doc_key="doc_id")
+    out = knn_table_join(d, POIS, k=3, res=9, ring=1)
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "poi_id",

@@ -59,29 +59,31 @@ def test_knn_k_larger_than_ring(spark, docs):
 
 
 POIS = [(f"poi{i}", 7.1 + (i % 8) * 0.25, 45.1 + (i // 8) * 0.45) for i in range(40)]
+# far from every doc: no doc has an index row, so every doc falls back
+FAR_POIS = [(f"far{i}", 20.0 + i, 60.0) for i in range(5)]
 
 
-def test_knn_table_join_matches_brute_force(spark, docs):
-    """Every doc's top-3 POIs must equal the exact cross-join result —
-    covering both the cell-index fast path and the boundary/too-few
-    fallback path."""
+@pytest.mark.parametrize("pois", [POIS, FAR_POIS], ids=["grid", "far"])
+def test_knn_table_join_matches_brute_force(spark, docs, pois):
+    """Every doc's top-3 POIs must equal the exact brute-force result —
+    covering the cell-index fast path, the boundary/too-few fallback
+    and (far POIs) docs with no candidate cell at all."""
     from georaster_spark.operators.knn import knn_table_join
 
     docs_k = docs.withColumn("doc_id", F.col("doc_seq"))
     got = {
         (r["doc_id"], r["rank"]): r["poi_id"]
-        for r in knn_table_join(docs_k, POIS, k=3, res=9, ring=1, doc_key="doc_id").collect()
+        for r in knn_table_join(docs_k, pois, k=3, res=9, ring=1).collect()
     }
     # brute force in NumPy
     i = np.arange(N_DOCS)
     lon, lat = geocode_np(i)
-    import itertools
     want = {}
     for j in i:
         dists = sorted(
             (haversine_np(np.array([lon[j]]), np.array([lat[j]]),
                           np.array([plon]), np.array([plat]))[0], pid)
-            for pid, plon, plat in POIS
+            for pid, plon, plat in pois
         )
         for rank, (_, pid) in enumerate(dists[:3], 1):
             want[(j, rank)] = pid
@@ -90,8 +92,13 @@ def test_knn_table_join_matches_brute_force(spark, docs):
 
 
 def test_knn_table_join_candidate_path_is_broadcast(spark, docs):
+    """One broadcast probe and no shuffle: no hash exchange, no
+    sort-merge join, no window anywhere in the executed plan."""
     from georaster_spark.operators.knn import knn_table_join
 
     docs_k = docs.withColumn("doc_id", F.col("doc_seq"))
-    plan = knn_table_join(docs_k, POIS, k=3, res=9, doc_key="doc_id")._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    plan = knn_table_join(docs_k, POIS, k=3, res=9)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastHashJoin") == 1
+    assert "hashpartitioning" not in plan
+    assert "SortMergeJoin" not in plan
+    assert "Window" not in plan
