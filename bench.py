@@ -47,17 +47,16 @@ HEADLINE = [
 
 
 def _write_micro(sf_dir, sf, cpus, per_query, rows_out, total, loads=None) -> None:
-    """BENCH/MICRO.md — per-operator microbench so round-over-round
-    regressions are attributable per operator, not just as suite
+    """.perfbench_out/MICRO.md (git-ignored) — per-operator microbench
+    so regressions are attributable per operator, not just as suite
     wall-clock. Regenerated on every bench run."""
-    bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
-    if not os.path.isdir(bench_dir):
-        return
+    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".perfbench_out")
+    os.makedirs(out_dir, exist_ok=True)
     lines = [
         "# Per-operator microbench",
         "",
         f"Input: `{sf_dir}` (sf={sf}) on local[{cpus}]. Regenerated by",
-        "`bench.py` each run; compare against the previous round's copy",
+        "`bench.py` each run; compare against an earlier run's copy",
         "to attribute suite-level regressions to an operator.",
         f"Host 1-min loadavg at start/end: {loads} (multi-tenant host —",
         "suite wall swings ~2x under neighbor load; compare like-for-like).",
@@ -73,7 +72,7 @@ def _write_micro(sf_dir, sf, cpus, per_query, rows_out, total, loads=None) -> No
         f"| **total** | | **{total:.3f}** | |",
         "",
     ]
-    with open(os.path.join(bench_dir, "MICRO.md"), "w") as f:
+    with open(os.path.join(out_dir, "MICRO.md"), "w") as f:
         f.write("\n".join(lines))
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from georaster_spark.grid import RasterGeometry
+from georaster_spark.session import local_df
 
 # ------------------------------------------------------------------ docs
 
@@ -193,7 +194,7 @@ def polygons_df(spark: SparkSession, polys: list[Polygon] | None = None) -> Data
         )
         for p in polys
     ]
-    return spark.createDataFrame(rows, POLYGON_SCHEMA)
+    return local_df(spark, rows, POLYGON_SCHEMA)
 
 
 def polygon_rects_sql() -> str:
@@ -260,7 +261,7 @@ def array_to_tiles_df(
                     block = arr[y0:y1, x0:x1, :]
                     data = block.astype(np.float64).ravel().tolist()
                 rows.append((raster_id, image_idx, run, tc, tr, pr, pd, data))
-    return spark.createDataFrame(rows, TILES_SCHEMA)
+    return local_df(spark, rows, TILES_SCHEMA)
 
 
 # ---- fixture fills (FIXTURES.md §2) ----

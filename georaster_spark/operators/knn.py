@@ -31,6 +31,7 @@ from georaster_spark.cells import (
     cell_encode_py,
 )
 from georaster_spark.functions.geo import EARTH_RADIUS_M, haversine_cols
+from georaster_spark.session import local_df
 
 
 def _disk_boundary_dist_m(cell: int, rings: int) -> float:
@@ -62,9 +63,10 @@ def knn_table_join(
 
     Plan: each POI's cell-disk at resolution ``res`` is expanded
     driver-side and grouped into one index row per cell carrying that
-    cell's candidate POIs as an array; the index is broadcast and
-    left-joined to the docs on their own cell (Chebyshev symmetry makes
-    the poi→disk index equivalent to probing the doc's own disk). One
+    cell's candidate POIs as an array; the index is a ``LocalTableScan``
+    (``local_df``), broadcast and left-joined to the docs on their own
+    cell (Chebyshev symmetry makes the poi→disk index equivalent to
+    probing the doc's own disk). One
     projection per doc then sorts its candidates by (dist, poi_id) and
     keeps k. A doc whose kth candidate is NOT provably inside the
     searched disk (ring-boundary bound, cf. ``_disk_boundary_dist_m``)
@@ -82,7 +84,7 @@ def knn_table_join(
     for pid, plon, plat in pois:
         for c in cell_disk_py(cell_encode_py(plon, plat, res), ring):
             by_cell.setdefault(c, []).append((pid, plon, plat))
-    idx = spark.createDataFrame(sorted(by_cell.items()), f"cell long, cands {cand_t}")
+    idx = local_df(spark, sorted(by_cell.items()), f"cell long, cands {cand_t}")
     all_pois = F.array(
         *(
             F.struct(F.lit(pid).alias("poi_id"), F.lit(plon).alias("p_lon"), F.lit(plat).alias("p_lat"))
@@ -146,7 +148,7 @@ def knn_join(
     tie-breaking on (dist, doc_key).
 
     SCALE BOUNDARY: the ring-candidate list is built driver-side per
-    query point (|Q| x disk(rings) rows through createDataFrame +
+    query point (|Q| x disk(rings) rows through ``local_df`` +
     broadcast), which is right for interactive / few-hundred-query
     workloads only. For large query SETS use ``knn_table_join`` —
     the table-scale path where candidates come from a broadcast disk
@@ -169,8 +171,8 @@ def knn_join(
                 for qid in pending
                 for c in cell_disk_py(qcells[qid], rings)
             ]
-            cand_idx = spark.createDataFrame(
-                cand_rows, "query_id string, cell long, q_lon double, q_lat double"
+            cand_idx = local_df(
+                spark, cand_rows, "query_id string, cell long, q_lon double, q_lat double"
             )
             cand = docs_c.join(F.broadcast(cand_idx), "cell")
             w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(), F.col(doc_key).asc())
@@ -202,7 +204,7 @@ def knn_join(
                 for qid in pending
             )
             if done or rings >= max_rings:
-                return spark.createDataFrame(rows, topk.schema)
+                return local_df(spark, rows, topk.schema)
             rings *= 2
     finally:
         docs_c.unpersist()

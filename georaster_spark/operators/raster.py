@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from georaster_spark.grid import RasterGeometry
+from georaster_spark.session import local_df
 
 PIXELS_SCHEMA = (
     "raster_id string, image_idx int, band int, x int, y int, value double"
@@ -147,7 +148,7 @@ def read_pixel(tiles: DataFrame, geom: RasterGeometry, x: int, y: int, band: int
     ``src/geotiff.rs:164-167``).
     """
     if not (0 <= x < geom.width and 0 <= y < geom.height):
-        return tiles.sparkSession.createDataFrame([], PIXELS_SCHEMA)
+        return local_df(tiles.sparkSession, [], PIXELS_SCHEMA)
     tc, tr = x // geom.tile_w, y // geom.tile_h
     chunk_band = band if geom.planar else 0
     one = tiles.where(
@@ -165,7 +166,7 @@ def window_from_tiles(
     x1 = min(x0 + w, geom.width)
     y1 = min(y0 + h, geom.height)
     if x1 <= x0 or y1 <= y0:
-        return tiles.sparkSession.createDataFrame([], PIXELS_SCHEMA)
+        return local_df(tiles.sparkSession, [], PIXELS_SCHEMA)
     pruned = tiles.where(
         F.col("tile_col").between(x0 // geom.tile_w, (x1 - 1) // geom.tile_w)
         & F.col("tile_row").between(y0 // geom.tile_h, (y1 - 1) // geom.tile_h)
@@ -351,7 +352,8 @@ def zonal_stats(
             for bx in range(x0 // block, (x0 + w - 1) // block + 1):
                 idx_rows.append((bx, by, zid, x0, y0, x0 + w - 1, y0 + h - 1))
     spark = pixels.sparkSession
-    idx = spark.createDataFrame(
+    idx = local_df(
+        spark,
         idx_rows,
         "bx int, by int, zone_id string, zx0 int, zy0 int, zx1 int, zy1 int",
     )

@@ -5,9 +5,11 @@ cell-encode→tile-fetch→local-sample lifecycle, ``src/pmtiles.rs:37-51``):
 
 1. **Cover join** (coarse): each polygon is covered by a set of
    WebMercatorQuad cells at resolution ``res``, built driver-side in
-   NumPy and **broadcast** (the polygon side is always the small
-   side; no shuffle). Cells fully inside a polygon are marked
-   ``full`` — documents landing there skip the exact test entirely.
+   NumPy as an Arrow ``LocalTableScan`` (``session.local_df``: the
+   rows ride in the plan, no pickled RDD is rescanned per action) and
+   **broadcast** (the polygon side is always the small side; no
+   shuffle). Cells fully inside a polygon are marked ``full`` —
+   documents landing there skip the exact test entirely.
 2. **Exact ray-cast** (fine): candidates from partial cells run an
    even-odd test as flat Column arithmetic over the polygon edges
    that ride along in the cover (no Python).
@@ -32,6 +34,7 @@ from pyspark.sql import functions as F
 from georaster_spark.cells import cell_bounds, cell_encode_cols, zxy_to_cell, tile_xy
 from georaster_spark.datagen import Polygon
 from georaster_spark.functions.geo import points_in_ring
+from georaster_spark.session import local_df
 
 
 def _segment_intersects_box(
@@ -121,7 +124,9 @@ def cover_df(spark, polys: list[Polygon], res: int) -> tuple[DataFrame, int]:
     """Broadcastable cover index with FLAT edge columns:
     (cell, poly_id, full, x0_0, y0_0, x1_0, y1_0, …) — the polygon
     edges ride along (NULL for full cells / padding) so the exact
-    test is pure flat-double arithmetic after the join. Returns
+    test is pure flat-double arithmetic after the join. The cover is
+    a ``LocalTableScan`` (``local_df``), so shipping it to the
+    broadcast costs no Spark job over a Python RDD. Returns
     (cover, max_vertices)."""
     mv = max(len(p.ring) for p in polys)
     rings = {p.poly_id: p.ring for p in polys}
@@ -141,7 +146,7 @@ def cover_df(spark, polys: list[Polygon], res: int) -> tuple[DataFrame, int]:
         f"x0_{j} double, y0_{j} double, x1_{j} double, y1_{j} double" for j in range(mv)
     )
     return (
-        spark.createDataFrame(rows, f"cell long, poly_id string, full boolean, {edge_schema}"),
+        local_df(spark, rows, f"cell long, poly_id string, full boolean, {edge_schema}"),
         mv,
     )
 

@@ -31,6 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from georaster_spark.session import local_df
 from georaster_spark.sources import icetable
 
 LINEAGE_COLS = ["stage", "part", "input_rows", "output_rows", "checksum", "committed_at"]
@@ -87,7 +88,7 @@ def run_stage(
     Returns {"pending": n, "done_before": m}.
     """
     done = sorted(done_partitions(output_path, stage))
-    done_df = spark.createDataFrame([(p,) for p in done] or [], f"{part_col} long")
+    done_df = local_df(spark, [(p,) for p in done], f"{part_col} long")
     pending = source.join(F.broadcast(done_df), part_col, "left_anti")
 
     ck_cols = checksum_cols or [part_col]
@@ -135,9 +136,7 @@ def metrics_df(spark: SparkSession, output_path: str) -> DataFrame:
         "stage string, part long, input_rows long, output_rows long, "
         "checksum long, committed_at double"
     )
-    return spark.createDataFrame(
-        [[r[c] for c in LINEAGE_COLS] for r in rows] or [], schema
-    )
+    return local_df(spark, [[r[c] for c in LINEAGE_COLS] for r in rows], schema)
 
 
 def verify_text_identity(

@@ -6,13 +6,19 @@ Local-mode settings mirror what we would set cluster-side:
   salting),
 - Arrow on (every custom kernel is a vectorized pandas UDF),
 - UTC session timezone (DuckDB-oracle comparisons are UTC-naive).
+
+``local_df`` is the one way the engine turns driver-built rows (cover
+and kNN indexes, path lists, fixtures) into a DataFrame.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 
 def default_driver_memory(host_bytes: int) -> str:
@@ -66,3 +72,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def local_df(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """Driver-built rows (tuples in ``schema`` order; a DDL string or a
+    ``StructType``) as an Arrow table, which Spark plans as a
+    ``LocalTableScan``: the rows sit in the plan, split into
+    min(rows, default parallelism) slices, with exact size statistics.
+    ``createDataFrame`` over Python rows would plan a pickled-RDD
+    ``Scan ExistingRDD`` that is read again on every action."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

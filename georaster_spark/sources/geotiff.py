@@ -10,7 +10,8 @@ decode step is a NumPy kernel driven from a Spark chunk table.
 
 Spark-first architecture (scales to a 100 TB COG lake):
 
-1. ``chunk_plan_df``: a *paths* DataFrame goes through an Arrow
+1. ``chunk_plan_df``: a *paths* table (a driver list as a
+   ``LocalTableScan``, or a file-catalog DataFrame) goes through an Arrow
    ``mapInPandas`` kernel that reads ONLY header/IFD bytes (seek-based
    ranged reads — never the payload) and emits one row per
    strip/tile chunk: ``(path, raster_id, image_idx, chunk, band,
@@ -700,8 +701,10 @@ def chunk_plan_df(spark, paths, image_idx: int = 0):
     kernel (executor-side ranged reads); the driver only ships path
     strings, so a million-file catalog stays distributed.
 
-    ``paths``: a list of path strings, OR an existing DataFrame with
-    a ``path`` string column (the scale form — a file-catalog table
+    ``paths``: a list of path strings — a ``LocalTableScan`` already
+    split into min(paths, default parallelism) slices, so nothing
+    shuffles before the kernel — OR an existing DataFrame with a
+    ``path`` string column (the scale form — a file-catalog table
     never materializes on the driver)."""
     pdf_schema = CHUNK_SCHEMA
 
@@ -718,11 +721,11 @@ def chunk_plan_df(spark, paths, image_idx: int = 0):
                 columns=[c.split()[0] for c in pdf_schema.split(", ")],
             )
 
+    from georaster_spark.session import local_df
+
     if isinstance(paths, (list, tuple)):
         _assert_unique_basenames(paths)
-        paths_df = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-            max(1, min(len(paths), 32))
-        )
+        paths_df = local_df(spark, [(p,) for p in paths], "path string")
     else:
         paths_df = paths.select("path")
     return paths_df.mapInPandas(kernel, schema=pdf_schema)
@@ -776,7 +779,8 @@ def file_meta_df(spark, paths):
     header walks run in an Arrow kernel on executors — the driver
     ships only path strings, so a million-file catalog registers
     without a single driver-side file open (the r2 VERDICT's scale
-    defect). Same paths-DataFrame contract as ``chunk_plan_df``."""
+    defect). Same paths contract (list as a ``LocalTableScan``, or a
+    DataFrame) as ``chunk_plan_df``."""
 
     def kernel(batches):
         import pandas as pd
@@ -789,11 +793,11 @@ def file_meta_df(spark, paths):
                 rows, columns=[c.split()[0] for c in FILE_META_SCHEMA.split(", ")]
             )
 
+    from georaster_spark.session import local_df
+
     if isinstance(paths, (list, tuple)):
         _assert_unique_basenames(paths)
-        paths_df = spark.createDataFrame(
-            [(p,) for p in paths], "path string"
-        ).repartition(max(1, min(len(paths), 32)))
+        paths_df = local_df(spark, [(p,) for p in paths], "path string")
     else:
         paths_df = paths.select("path")
     return paths_df.mapInPandas(kernel, schema=FILE_META_SCHEMA)

@@ -40,6 +40,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from georaster_spark.session import local_df
+
 
 class CommitConflict(RuntimeError):
     """Optimistic-concurrency failure: the table advanced past the
@@ -238,10 +240,11 @@ def collect_file_stats(spark, table_path: str, files: list[dict]) -> dict[str, d
                     )
             yield pd.DataFrame(rows, columns=["rel", "col", "stat_json"])
 
-    paths_df = spark.createDataFrame(
+    paths_df = local_df(
+        spark,
         [(f["path"], os.path.join(table_path, f["path"])) for f in files],
         "rel string, full string",
-    ).repartition(max(1, min(len(files), 32)))
+    )
     out: dict[str, dict] = {}
     for r in paths_df.mapInPandas(kernel, schema="rel string, col string, stat_json string").collect():
         out.setdefault(r["rel"], {})[r["col"]] = json.loads(r["stat_json"])
@@ -514,7 +517,7 @@ def read_table(
     if not use_files:
         from pyspark.sql.types import StructType
 
-        empty = spark.createDataFrame([], StructType.fromJson(m["schema"]))
+        empty = local_df(spark, [], StructType.fromJson(m["schema"]))
         return _apply_residual(empty, filters)
     # group files by their snapshot dir: basePath must sit directly
     # above the hive-style partition dirs for column recovery

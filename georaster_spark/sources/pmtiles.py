@@ -592,10 +592,10 @@ def pmtiles_entries_df(spark, paths):
                 columns=[c.split()[0] for c in _ENTRY_SCHEMA.split(", ")],
             )
 
+    from georaster_spark.session import local_df
+
     if isinstance(paths, (list, tuple)):
-        paths_df = spark.createDataFrame(
-            [(p,) for p in paths], "path string"
-        ).repartition(max(1, min(len(paths), 32)))
+        paths_df = local_df(spark, [(p,) for p in paths], "path string")
     else:
         paths_df = paths.select("path")
     return paths_df.mapInPandas(kernel, schema=_ENTRY_SCHEMA)

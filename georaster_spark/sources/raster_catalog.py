@@ -20,6 +20,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from georaster_spark.grid import RasterGeometry
+from georaster_spark.session import local_df
 
 META_SCHEMA = (
     "raster_id string, image_idx int, width int, height int, "
@@ -57,7 +58,7 @@ def meta_row(e: RasterEntry) -> tuple:
 
 def raster_meta_df(spark: SparkSession, entries: list[RasterEntry]) -> DataFrame:
     """The ``raster_meta`` catalog table (R2 inspect surface)."""
-    return spark.createDataFrame([meta_row(e) for e in entries], META_SCHEMA)
+    return local_df(spark, [meta_row(e) for e in entries], META_SCHEMA)
 
 
 def _entry_from_meta_row(row: tuple) -> RasterEntry:

@@ -277,10 +277,10 @@ def warc_splits_df(spark, paths, split_bytes: int = DEFAULT_SPLIT_BYTES):
                 rows, columns=["path", "offset", "length", "n_records"]
             )
 
+    from georaster_spark.session import local_df
+
     if isinstance(paths, (list, tuple)):
-        paths_df = spark.createDataFrame(
-            [(p,) for p in paths], "path string"
-        ).repartition(max(1, min(len(paths), 32)))
+        paths_df = local_df(spark, [(p,) for p in paths], "path string")
     else:
         paths_df = paths.select("path")
     return paths_df.mapInPandas(kernel, schema=_SPLIT_SCHEMA)

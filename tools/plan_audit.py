@@ -9,7 +9,10 @@ Checked invariants:
   side never shuffles before the ray-cast), and column pruning keeps
   the BINARY ``html`` column out of the parquet scan;
 - ingestion (raster, PMTiles, WARC): decode kernels sit next to the
-  kernels that plan them, so payload bytes never cross an Exchange;
+  kernels that plan them, so payload bytes never cross an Exchange,
+  and path lists are not spread by a shuffle;
+- driver-built tables (cover, kNN and zone indexes, path lists) are
+  ``LocalTableScan``s, never a pickled-RDD ``Scan ExistingRDD``;
 - vector joins (dwithin, kNN table, zonal stats): broadcast or cell
   equi-joins, never a nested loop; the kNN table call is one
   broadcast join and no shuffle, sort-merge join or window;
@@ -90,7 +93,7 @@ def main() -> int:
         "three Arrow kernels and NO driver-side file opens: chunk "
         "header walk, chunk decode, and metadata registration all run "
         "as executor-side MapInPandas (the only LocalTableScans are "
-        "the tiny path-string lists)",
+        "the driver-built path-string lists)",
         len(kernels) == 3,
     )
     check(
@@ -102,14 +105,14 @@ def main() -> int:
     check("raster_ingest", "metadata side joined via BroadcastHashJoin", "BroadcastHashJoin" in p)
     check(
         "raster_ingest",
-        "exactly three shuffle Exchanges: two tiny path-string spreads "
-        "and the per-raster groupBy (blobs shuffle in none)",
-        n_nodes(p, "Exchange") == 3,
+        "exactly one shuffle Exchange: the per-raster groupBy (path "
+        "lists are split by their LocalTableScan; blobs shuffle in none)",
+        n_nodes(p, "Exchange") == 1,
     )
 
     # pmtiles_ingest: directory walk and tile decode are adjacent
-    # Arrow kernels — tile blobs stay inside their partition, the only
-    # Exchange is the tiny path-string spread
+    # Arrow kernels over the path list's LocalTableScan — nothing
+    # shuffles
     p = plans["pmtiles_ingest"] = explain_str(Q.q_pmtiles_ingest(spark, SF))
     pmt_kernels = sorted(
         int(m.group(1)) for m in re.finditer(r"^\((\d+)\) MapInPandas", p, re.M)
@@ -119,11 +122,7 @@ def main() -> int:
         "entry and decode kernels ADJACENT (tile bytes never shuffle)",
         len(pmt_kernels) == 2 and pmt_kernels[1] - pmt_kernels[0] == 1,
     )
-    check(
-        "pmtiles_ingest",
-        "single Exchange (the tiny path-string spread)",
-        n_nodes(p, "Exchange") == 1,
-    )
+    check("pmtiles_ingest", "zero Exchanges", n_nodes(p, "Exchange") == 0)
 
     # pmtiles_webp_ingest: identical shape over the mixed PNG/WebP
     # archive — format sniffing happens inside the decode kernel, so
@@ -140,11 +139,7 @@ def main() -> int:
         "per-tile PNG/WebP dispatch is inside the kernel)",
         len(webp_kernels) == 2 and webp_kernels[1] - webp_kernels[0] == 1,
     )
-    check(
-        "pmtiles_webp_ingest",
-        "single Exchange (the tiny path-string spread)",
-        n_nodes(p, "Exchange") == 1,
-    )
+    check("pmtiles_webp_ingest", "zero Exchanges", n_nodes(p, "Exchange") == 0)
 
     # warc_ingest: two-stage crawl-shard read — split planning and
     # member parsing are both Arrow kernels; the ONLY shuffles carry
@@ -261,6 +256,15 @@ def main() -> int:
         "no hashpartitioning Exchange, SortMergeJoin or Window",
         "hashpartitioning" not in p and "SortMergeJoin" not in p and n_nodes(p, "Window") == 0,
     )
+
+    # driver-built tables (polygon cover, kNN and zone indexes, path
+    # lists) ship inside the plan, never as a pickled Python RDD
+    for name in ("flagship", "knn_table", "zonal_stats", "raster_ingest", "pmtiles_ingest"):
+        check(
+            name,
+            "driver-built tables are LocalTableScans (no Scan ExistingRDD)",
+            "ExistingRDD" not in plans[name],
+        )
 
     # ice_prune: manifest-stat file skipping — the scan must list
     # STRICTLY FEWER files than the snapshot holds, and the residual
