@@ -158,19 +158,17 @@ def cell_encode_cols(lon: Column, lat: Column, z: int) -> Column:
 
     This is the default hot path: faster than any UDF because it
     stays inside WholeStageCodegen and never crosses into Python.
+    Python scalars go straight to the Column operators (the same
+    literals as ``F.lit``, built without a JVM round trip each).
     """
     n = 1 << z
     lat_c = F.least(F.greatest(lat, F.lit(-MAX_LAT)), F.lit(MAX_LAT))
-    xt = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
+    xt = F.floor((lon + 180.0) / 360.0 * float(n))
     lat_r = F.radians(lat_c)
-    yt = F.floor(
-        (F.lit(1.0) - F.log(F.tan(lat_r) + F.lit(1.0) / F.cos(lat_r)) / F.lit(math.pi))
-        / F.lit(2.0)
-        * F.lit(float(n))
-    )
+    yt = F.floor((1.0 - F.log(F.tan(lat_r) + 1.0 / F.cos(lat_r)) / math.pi) / 2.0 * float(n))
     xt = F.least(F.greatest(xt, F.lit(0)), F.lit(n - 1)).cast("long")
     yt = F.least(F.greatest(yt, F.lit(0)), F.lit(n - 1)).cast("long")
-    return F.lit(z).cast("long") * F.lit(_ZSHIFT) + xt * F.lit(_XSHIFT) + yt
+    return F.lit(z).cast("long") * _ZSHIFT + xt * _XSHIFT + yt
 
 
 def cell_parent_cols(cell: Column) -> Column:

@@ -64,10 +64,10 @@ HOT_LAT0, HOT_LON0, HOT_SZ = 46.0, 7.5, 0.01
 def geocode_cols(i: Column) -> tuple[Column, Column]:
     """(lon, lat) Column exprs from a document's generation index."""
     hot = (i % 5) == 0
-    lat_cold = F.lit(45.0) + ((i * _LAT_MUL) % _MOD).cast("double") / _MOD * 2.0
-    lon_cold = F.lit(7.0) + ((i * _LON_MUL) % _MOD).cast("double") / _MOD * 2.0
-    lat_hot = F.lit(HOT_LAT0) + ((i * 13) % 997).cast("double") / 997.0 * HOT_SZ
-    lon_hot = F.lit(HOT_LON0) + ((i * 7919) % 997).cast("double") / 997.0 * HOT_SZ
+    lat_cold = 45.0 + ((i * _LAT_MUL) % _MOD).cast("double") / _MOD * 2.0
+    lon_cold = 7.0 + ((i * _LON_MUL) % _MOD).cast("double") / _MOD * 2.0
+    lat_hot = HOT_LAT0 + ((i * 13) % 997).cast("double") / 997.0 * HOT_SZ
+    lon_hot = HOT_LON0 + ((i * 7919) % 997).cast("double") / 997.0 * HOT_SZ
     lon = F.when(hot, lon_hot).otherwise(lon_cold)
     lat = F.when(hot, lat_hot).otherwise(lat_cold)
     return lon, lat

@@ -12,7 +12,14 @@ cell-encode→tile-fetch→local-sample lifecycle, ``src/pmtiles.rs:37-51``):
    documents landing there skip the exact test entirely.
 2. **Exact ray-cast** (fine): candidates from partial cells run an
    even-odd test as flat Column arithmetic over the polygon edges
-   that ride along in the cover (no Python).
+   that ride along in the cover (no Python), parsed from one SQL
+   text (``ray_cast_edge_cols``).
+
+Building the plan is itself kept cheap for the driver: the cover's
+corner test is one NumPy call per polygon, and the whole join is
+built in a few hundred py4j commands (with ``get_spark``'s call-site
+capture off), so a warm call's fixed cost stays small next to the
+scan it plans.
 
 Skew: hot cells concentrate candidates. The join itself is broadcast
 (no shuffle to skew), but downstream per-cell aggregations shuffle on
@@ -65,7 +72,9 @@ def build_cover(polys: list[Polygon], res: int) -> list[tuple[int, str, bool]]:
     polygon (bbox cells), so stage 2 can only *remove* candidates —
     no false negatives by construction. ``full=True`` cells are
     entirely inside the polygon (all four corners inside and no
-    polygon edge crossing the cell) and skip the exact test.
+    polygon edge crossing the cell) and skip the exact test. The
+    corner test is one ``points_in_ring`` call per polygon over the
+    corners of all its bbox cells.
     """
     out: list[tuple[int, str, bool]] = []
     for p in polys:
@@ -73,26 +82,30 @@ def build_cover(polys: list[Polygon], res: int) -> list[tuple[int, str, bool]]:
         tx0, ty1 = tile_xy(xmin, ymin, res)  # y grows southward
         tx1, ty0 = tile_xy(xmax, ymax, res)
         ring = p.ring
-        for ty in range(ty0, ty1 + 1):
-            for tx in range(tx0, tx1 + 1):
-                cell = zxy_to_cell(res, tx, ty)
-                lon0, lat0, lon1, lat1 = cell_bounds(cell)
-                corners_x = np.array([lon0, lon1, lon1, lon0])
-                corners_y = np.array([lat0, lat0, lat1, lat1])
-                inside = points_in_ring(corners_x, corners_y, ring)
-                full = bool(inside.all()) and not any(
-                    _segment_intersects_box(
-                        ring[i - 1][0], ring[i - 1][1], ring[i][0], ring[i][1],
-                        lon0, lat0, lon1, lat1,
-                    )
-                    for i in range(len(ring))
+        cells = [
+            zxy_to_cell(res, tx, ty)
+            for ty in range(ty0, ty1 + 1)
+            for tx in range(tx0, tx1 + 1)
+        ]
+        bounds = np.array([cell_bounds(c) for c in cells])  # lon0, lat0, lon1, lat1
+        corners_in = points_in_ring(
+            bounds[:, [0, 2, 2, 0]].ravel(), bounds[:, [1, 1, 3, 3]].ravel(), ring
+        ).reshape(-1, 4).all(axis=1)
+        for cell, (lon0, lat0, lon1, lat1), all_in in zip(cells, bounds.tolist(), corners_in):
+            full = bool(all_in) and not any(
+                _segment_intersects_box(
+                    ring[i - 1][0], ring[i - 1][1], ring[i][0], ring[i][1],
+                    lon0, lat0, lon1, lat1,
                 )
-                out.append((cell, p.poly_id, full))
+                for i in range(len(ring))
+            )
+            out.append((cell, p.poly_id, full))
     return out
 
 
-def ray_cast_edge_cols(lon: Column, lat: Column, max_vertices: int) -> Column:
-    """Even-odd point-in-polygon over FLAT edge columns.
+def ray_cast_edge_cols(max_vertices: int) -> Column:
+    """Even-odd point-in-polygon of the ``lon``/``lat`` columns over
+    FLAT edge columns.
 
     Expects the joined row to carry ``x0_j, y0_j, x1_j, y1_j`` double
     columns (one quad per polygon edge, NULL-padded to
@@ -105,19 +118,23 @@ def ray_cast_edge_cols(lon: Column, lat: Column, max_vertices: int) -> Column:
     workers compete with executor threads). Flat-column unroll is the
     one that scales.
 
-    NULL padding: the edge test is NULL → ``coalesce(…, False)``.
+    The fold is written as one SQL text and parsed by a single
+    ``F.expr``: the same expression as chaining Column operators, in
+    one JVM round trip instead of ~100.
+
+    NULL padding: the edge test is NULL → ``coalesce(…, false)``.
     Horizontal edges: division yields ±Inf/NaN but the crossing guard
-    is False (double division never throws, even under ANSI).
+    is false (double division never throws, even under ANSI).
     """
-    inside = F.lit(False)
+    inside = "false"
     for j in range(max_vertices):
-        x0, y0 = F.col(f"x0_{j}"), F.col(f"y0_{j}")
-        x1, y1 = F.col(f"x1_{j}"), F.col(f"y1_{j}")
-        test = ((y0 > lat) != (y1 > lat)) & (
-            lon < (x1 - x0) * (lat - y0) / (y1 - y0) + x0
+        x0, y0, x1, y1 = (f"{p}_{j}" for p in ("x0", "y0", "x1", "y1"))
+        test = (
+            f"((({y0} > lat) != ({y1} > lat))"
+            f" AND (lon < ((({x1} - {x0}) * (lat - {y0})) / ({y1} - {y0})) + {x0}))"
         )
-        inside = inside != F.coalesce(test, F.lit(False))
-    return inside
+        inside = f"({inside} != coalesce({test}, false))"
+    return F.expr(inside)
 
 
 def cover_df(spark, polys: list[Polygon], res: int) -> tuple[DataFrame, int]:
@@ -151,14 +168,9 @@ def cover_df(spark, polys: list[Polygon], res: int) -> tuple[DataFrame, int]:
     )
 
 
-def pip_join(
-    docs: DataFrame,
-    polys: list[Polygon],
-    res: int,
-    lon: Column | str = "lon",
-    lat: Column | str = "lat",
-) -> DataFrame:
+def pip_join(docs: DataFrame, polys: list[Polygon], res: int) -> DataFrame:
     """Point-in-polygon join: docs × polygons → (doc columns, poly_id).
+    ``docs`` carries its point as the ``lon``/``lat`` double columns.
 
     Emits one output row per (document, containing polygon) pair —
     overlapping polygons multiply rows, matching the relational
@@ -167,13 +179,11 @@ def pip_join(
     linearly with cores).
     """
     spark = docs.sparkSession
-    lon = F.col(lon) if isinstance(lon, str) else lon
-    lat = F.col(lat) if isinstance(lat, str) else lat
-    docs_c = docs.withColumn("cell", cell_encode_cols(lon, lat, res))
+    docs_c = docs.withColumn("cell", cell_encode_cols(F.col("lon"), F.col("lat"), res))
     cover, max_v = cover_df(spark, polys, res)
     cand = docs_c.join(F.broadcast(cover), "cell")
     edge_cols = [f"{p}_{j}" for j in range(max_v) for p in ("x0", "y0", "x1", "y1")]
-    return cand.where(F.col("full") | ray_cast_edge_cols(lon, lat, max_v)).drop(
+    return cand.where(F.col("full") | ray_cast_edge_cols(max_v)).drop(
         "full", *edge_cols
     )
 

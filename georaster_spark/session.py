@@ -5,7 +5,13 @@ Local-mode settings mirror what we would set cluster-side:
 - AQE on (runtime re-plan, skew-join backstop behind our explicit
   salting),
 - Arrow on (every custom kernel is a vectorized pandas UDF),
-- UTC session timezone (DuckDB-oracle comparisons are UTC-naive).
+- UTC session timezone (DuckDB-oracle comparisons are UTC-naive),
+- no Python call-site capture (``dataFrameDebugging`` off): PySpark
+  otherwise wraps every ``F.*``/``Column`` call in ~5 extra JVM round
+  trips to record where in Python it was made, which was most of the
+  driver's fixed cost per vector-path call. What it gives up: the
+  Python call site in DataFrame error context; the JVM query context
+  (the failing expression and its SQL fragment) stays.
 
 ``local_df`` is the one way the engine turns driver-built rows (cover
 and kNN indexes, path lists, fixtures) into a DataFrame.
@@ -56,6 +62,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEM")

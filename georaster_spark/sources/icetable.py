@@ -511,14 +511,14 @@ def read_table(
     via the manifest stats BEFORE Spark lists them, then is ALSO
     applied as a normal residual predicate (so results are exact
     whatever the stats say; the stats only shrink the scan)."""
+    from pyspark.sql.types import StructType
+
     m = read_manifest(path, snapshot_id)
+    schema = StructType.fromJson(m["schema"])
     cand = manifest_files(path, m, filters)[0]
     use_files = [f for f in cand if not filters or file_matches(f, filters)]
     if not use_files:
-        from pyspark.sql.types import StructType
-
-        empty = local_df(spark, [], StructType.fromJson(m["schema"]))
-        return _apply_residual(empty, filters)
+        return _apply_residual(local_df(spark, [], schema), filters)
     # group files by their snapshot dir: basePath must sit directly
     # above the hive-style partition dirs for column recovery
     by_snap: dict[str, list[str]] = {}
@@ -527,26 +527,18 @@ def read_table(
         parts = rel.split(os.sep)
         base = os.path.join(path, *parts[:2])
         by_snap.setdefault(base, []).append(os.path.join(path, rel))
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(m["schema"])
 
     def _align(d: DataFrame) -> DataFrame:
-        # schema evolution: pre-evolution files lack added columns
-        # (NULL of the declared type); post-drop reads ignore columns
-        # the live schema no longer carries
-        have = set(d.columns)
-        return d.select(
-            *[
-                F.col(f.name) if f.name in have
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
+        # hive partition columns come out after the data columns:
+        # restore the manifest's column order
+        return d.select(*schema.fieldNames())
 
+    # the manifest schema is the reader schema: no parquet footer is
+    # opened to infer it, pre-evolution files read added columns as
+    # NULL of the declared type, and columns the live schema no
+    # longer carries are not read
     dfs = [
-        _align(spark.read.option("basePath", base).parquet(*files))
+        _align(spark.read.schema(schema).option("basePath", base).parquet(*files))
         for base, files in sorted(by_snap.items())
     ]
     out = dfs[0]

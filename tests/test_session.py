@@ -26,6 +26,10 @@ def test_driver_memory_is_clamped():
     assert default_driver_memory(512 * GiB) == "49152m"
 
 
+def test_get_spark_turns_off_call_site_capture(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
 # the engine's awkward driver-built shapes: the kNN candidate index,
 # a NULL-padded cover edge row, and an empty table with a schema
 LOCAL_SHAPES = {

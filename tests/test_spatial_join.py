@@ -7,10 +7,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from georaster_spark.cells import cell_encode_cols
+from georaster_spark.cells import cell_bounds, cell_encode_cols, tile_xy, zxy_to_cell
 from georaster_spark.datagen import documents_df, geocode_cols, geocode_np, polygons
 from georaster_spark.functions.geo import points_in_ring
 from georaster_spark.operators.spatial_join import (
+    _segment_intersects_box,
     build_cover,
     pip_join,
     salted_cell_counts,
@@ -43,6 +44,66 @@ def test_cover_is_superset_and_has_full_cells():
     assert len(cover) > len(polys)  # multiple cells per polygon
     full = [c for c in cover if c[2]]
     assert full, "expected some fully-contained cells"
+
+
+def scalar_cover(polys, res):
+    """The cover one bbox cell at a time: one ``points_in_ring`` call
+    on each cell's four corners, then the edge-crossing test."""
+    out = []
+    for p in polys:
+        xmin, ymin, xmax, ymax = p.bbox
+        tx0, ty1 = tile_xy(xmin, ymin, res)
+        tx1, ty0 = tile_xy(xmax, ymax, res)
+        ring = p.ring
+        for ty in range(ty0, ty1 + 1):
+            for tx in range(tx0, tx1 + 1):
+                cell = zxy_to_cell(res, tx, ty)
+                lon0, lat0, lon1, lat1 = cell_bounds(cell)
+                corners_x = np.array([lon0, lon1, lon1, lon0])
+                corners_y = np.array([lat0, lat0, lat1, lat1])
+                inside = points_in_ring(corners_x, corners_y, ring)
+                full = bool(inside.all()) and not any(
+                    _segment_intersects_box(
+                        ring[i - 1][0], ring[i - 1][1], ring[i][0], ring[i][1],
+                        lon0, lat0, lon1, lat1,
+                    )
+                    for i in range(len(ring))
+                )
+                out.append((cell, p.poly_id, full))
+    return out
+
+
+@pytest.mark.parametrize("res", [9, 11, 13])
+def test_build_cover_matches_scalar_reference(res):
+    polys = polygons()
+    got = build_cover(polys, res)
+    assert got == scalar_cover(polys, res)
+    if res >= RES:  # res 9 cells are too coarse to fit inside a polygon
+        assert any(full for *_, full in got)
+    if res == RES:
+        assert len(got) == 325
+
+
+def test_pip_join_builds_in_few_jvm_round_trips(spark, docs, monkeypatch):
+    """Building the join (no action) stays in a few hundred py4j
+    commands: no per-call call-site capture, a one-``F.expr`` ray-cast
+    and scalar literals. Memory commands (``m``: JVM object release)
+    are not counted."""
+    import py4j.clientserver
+
+    send = py4j.clientserver.ClientServerConnection.send_command
+    sent = []
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m"):
+            sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    polys = polygons()
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    pip_join(docs, polys, RES)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 300
 
 
 def test_pip_join_matches_brute_force(spark, docs):

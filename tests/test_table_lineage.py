@@ -561,6 +561,30 @@ class TestSchemaEvolution:
         old = icetable.read_table(spark, path, snapshot_id=snap1)
         assert set(old.columns) == {"doc_id", "lang_id"} and old.count() == 10
 
+    def test_read_uses_manifest_schema_and_column_order(self, spark, tmp_path):
+        """A partition column that is not last reads back in place and
+        with its declared type: a zero-padded string and a long, not
+        the int that partition-value inference would guess."""
+        from pyspark.sql import functions as F
+
+        from georaster_spark.sources import icetable
+
+        path = str(tmp_path / "tbl")
+        df = spark.range(12).select(
+            F.col("id").alias("doc_id"),
+            F.format_string("%02d", F.col("id") % 3).alias("zone"),
+            (F.col("id") % 2).alias("part"),
+            (F.col("id") / 4.0).alias("score"),
+        )
+        icetable.write_table(df, path, partition_by=["zone", "part"])
+        manifest = [(f["name"], f["type"]) for f in icetable.read_manifest(path)["schema"]["fields"]]
+        back = icetable.read_table(spark, path)
+        assert [(f.name, f.dataType.typeName()) for f in back.schema] == manifest
+        assert manifest == [
+            ("doc_id", "long"), ("zone", "string"), ("part", "long"), ("score", "double")
+        ]
+        assert sorted(back.collect()) == sorted(df.collect())
+
     def test_drop_column_and_time_travel(self, spark, tmp_path):
         from pyspark.sql import functions as F
 
