@@ -1246,7 +1246,7 @@ def sql_raster_info():
 
 # real-file ingestion (R1's actual semantics): parse the reference's
 # own TIFF fixture bytes — header/IFD walk, GeoTIFF tags, Deflate
-# chunks — through the two-stage Spark plan in sources/geotiff.py.
+# chunks — through the one-stage Spark decode in sources/geotiff.py.
 # small_world_pct excluded: palette rasters are unsupported in the
 # reference too (tests/geotiff.rs:307-308).
 TIFF_DIR = "/root/reference/data/tiff"

@@ -12,6 +12,15 @@ Local-mode settings mirror what we would set cluster-side:
   driver's fixed cost per vector-path call. What it gives up: the
   Python call site in DataFrame error context; the JVM query context
   (the failing expression and its SQL fragment) stays.
+- Python workers forked from ``georaster_spark.pyworker``
+  (``spark.python.daemon.module``): before every task PySpark calls
+  ``importlib.invalidate_caches()``, and on CPython 3.11 that makes
+  each zip importer re-parse its archive's central directory
+  (``pyspark.zip``, py4j and the spark-core jar: ~27k entries,
+  0.1-0.4 s per task, most of a small Python stage). The daemon keeps
+  a directory until its archive's mtime or size changes, so a
+  rewritten archive is still re-read. Workers import this package to
+  run the engine's kernels anyway, so this adds no deployment need.
 
 ``local_df`` is the one way the engine turns driver-built rows (cover
 and kNN indexes, path lists, fixtures) into a DataFrame.
@@ -63,6 +72,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module", "georaster_spark.pyworker")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEM")

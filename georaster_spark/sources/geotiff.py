@@ -6,7 +6,7 @@ walk, GeoTIFF tag extraction and strip/tile chunk decode, mirroring
 the reference reader's semantics (``src/geotiff.rs:44-81`` open/IFD
 walk, ``:103-117`` origin/pixel_size rules, ``:255-289`` chunk
 decode routing) without translating its implementation: here the
-decode step is a NumPy kernel driven from a Spark chunk table.
+decode step is a NumPy kernel inside one Spark Arrow stage.
 
 Spark-first architecture (scales to a 100 TB COG lake):
 
@@ -17,12 +17,13 @@ Spark-first architecture (scales to a 100 TB COG lake):
    strip/tile chunk: ``(path, raster_id, image_idx, chunk, band,
    x0, y0, w, h, offset, nbytes, ...)``. Millions of files ⇒ still
    one small row per chunk, fully distributed.
-2. ``pixels_df``: the chunk table is (optionally) repartitioned —
-   chunk rows are the unit of parallelism, so one giant COG spreads
-   over the cluster — and a second kernel does a ranged read of each
-   chunk's payload, inflates (zlib for Deflate/OldDeflate), wraps it
-   in NumPy, clips grid padding, and emits pixel rows. Blobs never
-   shuffle; only decoded values leave the kernel.
+2. ``pixels_df``: one ``mapInArrow`` stage over ``(path, k, n)`` rows.
+   Each task walks the file's header as ``chunk_plan_df`` does, then
+   does a ranged read of every n-th chunk's payload from the k-th,
+   inflates it (zlib for Deflate/OldDeflate, LZW), wraps it in NumPy,
+   clips grid padding, and emits Arrow pixel batches. ``n`` tasks per
+   file is how one giant COG spreads over the cluster; neither blobs
+   nor chunk rows shuffle, only decoded values leave the kernel.
 
 Supported (⊇ the reference fixture matrix, ``tests/geotiff.rs``):
 classic TIFF and BigTIFF (II/MM, magic 42/43), strips + tiles,
@@ -693,11 +694,8 @@ CHUNK_SCHEMA = (
     "spp int, byte_order string, nodata string"
 )
 
-PIXELS_SCHEMA = "raster_id string, image_idx int, band int, x int, y int, value double"
-
-
 def chunk_plan_df(spark, paths, image_idx: int = 0):
-    """Stage 1: paths -> chunk table. Header parse happens in an Arrow
+    """Paths -> chunk table. Header parse happens in an Arrow
     kernel (executor-side ranged reads); the driver only ships path
     strings, so a million-file catalog stays distributed.
 
@@ -820,54 +818,83 @@ def _assert_unique_basenames(paths) -> None:
 
 def pixels_df(
     spark,
-    paths: list[str],
+    paths,
     image_idx: int = 0,
     chunk_partitions: int | None = None,
     apply_nodata: bool = False,
 ):
-    """Stage 2: chunk table -> pixel rows. Each chunk decodes
-    independently (ranged payload read + zlib + NumPy); repartitioning
-    the CHUNK rows — tiny descriptors, not blobs — is how one big COG
-    spreads over the cluster.
+    """Paths -> pixel rows in ONE Arrow stage: a ``(path, k, n)`` table
+    (``n = chunk_partitions or 1``, one row per path and k < n) goes
+    through a ``mapInArrow`` kernel that walks the file's header and
+    decodes its chunks ``k::n`` (ranged payload read + inflate +
+    NumPy). Splitting the chunk list this way is how one big COG
+    spreads over ``n`` tasks without shuffling chunk rows; the header
+    walk is the one ``chunk_plan_df`` runs, repeated for every
+    ``(path, k)`` row, so each file's header is walked ``n`` times.
 
-    ``apply_nodata=True`` maps a file's GDAL_NODATA sentinel to NULL
-    at decode (engine-added: the reference reads the tag but does not
-    apply it, src/geotiff.rs:55; off by default for parity)."""
-    chunks = chunk_plan_df(spark, paths, image_idx)
-    if chunk_partitions:
-        chunks = chunks.repartition(chunk_partitions)
+    ``paths`` takes ``chunk_plan_df``'s two forms: a list of path
+    strings (a ``LocalTableScan`` of the ``(path, k, n)`` rows, so
+    nothing shuffles before the kernel) or a DataFrame with a ``path``
+    string column (the scale form; a file catalog never reaches the
+    driver). In the DataFrame form the ``k`` rows are made next to
+    their path row, so with ``n > 1`` they are spread round-robin over
+    ``n`` partitions (an Exchange of those small rows, not of chunks).
+
+    Columns are built from NumPy: NaN lands as NULL, the engine's
+    NoData spelling. ``apply_nodata=True`` maps a file's GDAL_NODATA
+    sentinel to NULL at decode (engine-added: the reference reads the
+    tag but does not apply it, src/geotiff.rs:55; off by default for
+    parity)."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    from georaster_spark.operators.raster import PIXELS_SCHEMA
+    from georaster_spark.session import local_df
+
+    n = chunk_partitions or 1
+    if isinstance(paths, (list, tuple)):
+        _assert_unique_basenames(paths)
+        work = local_df(spark, [(p, k, n) for p in paths for k in range(n)], "path string, k int, n int")
+    else:
+        ks = F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
+        work = paths.select("path", ks.alias("k"), F.lit(n).alias("n"))
+        if n > 1:
+            work = work.repartition(n)
+    schema = to_arrow_schema(DataType.fromDDL(PIXELS_SCHEMA))
+
+    def chunk_batch(d: dict) -> pa.RecordBatch:
+        arr = read_chunk(d)
+        if apply_nodata and d["nodata"] is not None:
+            try:
+                arr = np.where(arr == float(d["nodata"]), np.nan, arr)
+            except ValueError:
+                pass  # non-numeric GDAL_NODATA string: ignore
+        h, w, spp = arr.shape
+        npx = h * w
+        # chunky samples are bands 0..spp-1; a planar chunk is its run's band
+        first = 0 if d["spp"] > 1 else d["band_run"]
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.repeat(d["raster_id"], npx * spp),
+                np.full(npx * spp, d["image_idx"], np.int32),
+                np.repeat(np.arange(first, first + spp, dtype=np.int32), npx),
+                np.tile(np.arange(d["x0"], d["x0"] + w, dtype=np.int32), h * spp),
+                np.tile(np.repeat(np.arange(d["y0"], d["y0"] + h, dtype=np.int32), w), spp),
+                pa.array(arr.transpose(2, 0, 1).ravel(), from_pandas=True),
+            ],
+            schema=schema,
+        )
 
     def kernel(batches):
-        import pandas as pd
+        for batch in batches:
+            for r in batch.to_pylist():
+                descs = chunk_descriptors(open_tiff(r["path"]), image_idx)
+                for d in descs[r["k"] :: r["n"]]:
+                    yield chunk_batch(d)
 
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                d = r._asdict()
-                arr = read_chunk(d)
-                if apply_nodata and d.get("nodata") is not None:
-                    try:
-                        arr = np.where(arr == float(d["nodata"]), np.nan, arr)
-                    except ValueError:
-                        pass  # non-numeric GDAL_NODATA string: ignore
-                h, w, spp = arr.shape
-                yy, xx = np.mgrid[0:h, 0:w]
-                for s in range(spp):
-                    band = d["band_run"] if d["spp"] == 1 else s
-                    vals = arr[:, :, s].ravel()
-                    yield pd.DataFrame(
-                        {
-                            "raster_id": d["raster_id"],
-                            "image_idx": d["image_idx"],
-                            "band": band,
-                            "x": (xx.ravel() + d["x0"]).astype("int32"),
-                            "y": (yy.ravel() + d["y0"]).astype("int32"),
-                            # Float64 (masked) so NaN lands as NULL —
-                            # the engine's NoData spelling
-                            "value": pd.Series(vals).astype("Float64"),
-                        }
-                    )
-
-    return chunks.mapInPandas(kernel, schema=PIXELS_SCHEMA)
+    return work.mapInArrow(kernel, schema=PIXELS_SCHEMA)
 
 
 def decimal_pixels_df(spark, paths: list[str], image_idx: int = 0):

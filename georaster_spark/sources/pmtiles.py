@@ -566,8 +566,8 @@ _STATS_SCHEMA = (
 def pmtiles_entries_df(spark, paths):
     """Stage 1: archive paths → tile-entry table. Directory walks run
     in an Arrow kernel (executor-side ranged reads) so a catalog of
-    many archives never opens a file on the driver — same two-stage
-    shape as the TIFF ``chunk_plan_df``/``pixels_df`` pair.
+    many archives never opens a file on the driver — the same
+    executor-side header walk as the TIFF ``chunk_plan_df``.
 
     ``paths``: list of path strings, or a DataFrame with a ``path``
     column (the scale form)."""

@@ -1,0 +1,115 @@
+"""In-repo TIFF decode matrix: files written by ``write_tiff`` over every
+sample type, compression, predictor and samples-per-pixel it supports,
+plus a sparse strip and a GDAL_NODATA file, decoded by ONE
+``pixels_df`` call and compared pixel by pixel with the arrays written.
+
+``write_tiff`` writes chunky strips only, so tiled and planar layouts
+are covered by the reference fixtures, not here."""
+
+from __future__ import annotations
+
+import itertools
+
+import numpy as np
+import pytest
+
+from georaster_spark.session import local_df
+from georaster_spark.sources.geotiff import (
+    COMPRESSION_DEFLATE,
+    COMPRESSION_LZW,
+    COMPRESSION_NONE,
+    pixels_df,
+    write_tiff,
+)
+
+DTYPES = ["u8", "u16", "u32", "u64", "i8", "i16", "i32", "i64", "f32", "f64"]
+COMPRESSIONS = {"none": COMPRESSION_NONE, "deflate": COMPRESSION_DEFLATE, "lzw": COMPRESSION_LZW}
+H, W, RPS = 7, 9, 3  # three strips, the last one short
+
+
+def _sample(rng, dtype: str, spp: int) -> np.ndarray:
+    np_dt = np.dtype({"u": "u", "i": "i", "f": "f"}[dtype[0]] + str(int(dtype[1:]) // 8))
+    shape = (H, W, spp)
+    if dtype[0] == "f":
+        arr = rng.normal(0, 1e3, shape).astype(np_dt)
+        arr[1, 2, :] = np.nan
+        return arr
+    # integers stay inside 2^53, where DOUBLE values are exact
+    info = np.iinfo(np_dt)
+    lo, hi = max(int(info.min), -(2**52)), min(int(info.max), 2**52)
+    return rng.integers(lo, hi, shape, endpoint=True).astype(np_dt)
+
+
+@pytest.fixture(scope="module")
+def matrix(tmp_path_factory):
+    """{raster_id: (path, expected (H, W, spp) float array, NaN = NULL)}"""
+    d = tmp_path_factory.mktemp("tiff_matrix")
+    rng = np.random.default_rng(7)
+    files = {}
+    for dtype, (cname, comp), spp in itertools.product(DTYPES, COMPRESSIONS.items(), (1, 3)):
+        for pred in (1, 3) if dtype[0] == "f" else (1, 2):
+            rid = f"{dtype}_{cname}_p{pred}_s{spp}"
+            arr = _sample(rng, dtype, spp)
+            path = str(d / f"{rid}.tif")
+            write_tiff(path, arr, dtype, rows_per_strip=RPS, compression=comp, predictor=pred)
+            files[rid] = (path, arr.astype(np.float64))
+
+    # GDAL sparse layout: the all-zero middle strip stores no payload
+    arr = np.arange(1, H * W + 1, dtype=np.uint16).reshape(H, W, 1)
+    arr[RPS : 2 * RPS] = 0
+    path = str(d / "sparse.tif")
+    write_tiff(path, arr, "u16", rows_per_strip=RPS, compression=COMPRESSION_DEFLATE, sparse_value=0)
+    want = arr.astype(np.float64)
+    want[RPS : 2 * RPS] = np.nan
+    files["sparse"] = (path, want)
+
+    # GDAL_NODATA sentinel, applied at decode
+    arr = np.arange(H * W, dtype=np.int16).reshape(H, W, 1) % 11 - 5
+    path = str(d / "nodata.tif")
+    write_tiff(path, arr, "i16", rows_per_strip=RPS, nodata=-5)
+    want = arr.astype(np.float64)
+    want[arr == -5] = np.nan
+    files["nodata"] = (path, want)
+    return files
+
+
+def _rows(spark, files, chunk_partitions):
+    paths = [p for p, _ in files.values()]
+    df = pixels_df(spark, paths, chunk_partitions=chunk_partitions, apply_nodata=True)
+    return df, sorted(df.collect(), key=lambda r: (r.raster_id, r.band, r.y, r.x))
+
+
+def test_decode_matrix_matches_written_arrays(spark, matrix):
+    df, rows = _rows(spark, matrix, None)
+    assert df.schema.simpleString() == (
+        "struct<raster_id:string,image_idx:int,band:int,x:int,y:int,value:double>"
+    )
+    got: dict[str, np.ndarray] = {rid: np.full(a.shape, -1.0) for rid, (_, a) in matrix.items()}
+    for r in rows:
+        assert r.image_idx == 0
+        got[r.raster_id][r.y, r.x, r.band] = np.nan if r.value is None else r.value
+    assert len(rows) == sum(a.size for _, a in matrix.values())
+    for rid, (_, want) in matrix.items():
+        np.testing.assert_array_equal(got[rid], want, err_msg=rid)
+    # NaN and sparse pixels come back as NULL, not as a NaN double
+    assert not any(r.value is not None and np.isnan(r.value) for r in rows)
+    assert sum(r.value is None for r in rows if r.raster_id == "sparse") == RPS * W
+
+
+def test_chunk_partitions_split_gives_identical_rows(spark, matrix):
+    _, one = _rows(spark, matrix, None)
+    df, split = _rows(spark, matrix, 3)
+    assert split == one
+    # one Python stage over the (path, k, n) table: no shuffle
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Exchange" not in plan
+
+
+def test_paths_dataframe_gives_identical_rows(spark, matrix):
+    """The scale form: a catalog DataFrame with a ``path`` column."""
+    _, want = _rows(spark, matrix, None)
+    catalog = local_df(spark, [(rid, p) for rid, (p, _) in matrix.items()], "rid string, path string")
+    for n in (None, 3):
+        df = pixels_df(spark, catalog, chunk_partitions=n, apply_nodata=True)
+        got = sorted(df.collect(), key=lambda r: (r.raster_id, r.band, r.y, r.x))
+        assert got == want, n

@@ -3,12 +3,17 @@ one constructor of driver-built tables."""
 
 from __future__ import annotations
 
+import importlib
 import inspect
+import sys
+import zipfile
+import zipimport
 from pathlib import Path
 
 import pytest
 
 import georaster_spark
+from georaster_spark import pyworker
 from georaster_spark.session import default_driver_memory, local_df
 
 PKG = Path(georaster_spark.__file__).parent
@@ -78,3 +83,57 @@ def test_create_dataframe_only_inside_local_df():
         ("session.py", start + i) for i, line in enumerate(src) if "createDataFrame(" in line
     ]
     assert sites == inside and len(inside) == 1
+
+
+def test_get_spark_forks_workers_from_the_zip_cache_daemon(spark):
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == "georaster_spark.pyworker"
+
+
+@pytest.mark.skipif(not pyworker.SUPPORTED, reason="zipimport has no pure-Python directory cache")
+def test_workers_run_the_swapped_invalidate_caches(spark):
+    def probe(batches):
+        import zipimport
+
+        import pyarrow as pa
+
+        swapped = hasattr(zipimport.zipimporter.invalidate_caches, "stock")
+        for _ in batches:
+            yield pa.RecordBatch.from_pydict({"swapped": [swapped]})
+
+    rows = spark.range(4).mapInArrow(probe, "swapped boolean").collect()
+    assert rows and all(r.swapped for r in rows)
+
+
+@pytest.mark.skipif(not pyworker.SUPPORTED, reason="zipimport has no pure-Python directory cache")
+def test_zip_directory_is_reread_only_when_the_archive_changes(tmp_path, monkeypatch):
+    zi = zipimport.zipimporter
+    monkeypatch.setattr(zi, "invalidate_caches", zi.invalidate_caches)  # restored after
+    monkeypatch.setattr(pyworker, "_stamps", {})
+    assert pyworker.install()
+
+    arc = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(arc, "w") as z:
+        z.writestr("gr_zipcache_a.py", "X = 1\n")
+    monkeypatch.syspath_prepend(arc)
+    for name in ("gr_zipcache_a", "gr_zipcache_b"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    assert importlib.import_module("gr_zipcache_a").X == 1
+
+    reads: list[str] = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory", lambda p: reads.append(p) or real(p))
+    importlib.invalidate_caches()  # first call stamps the archive
+    reads.clear()
+    importlib.invalidate_caches()
+    importlib.invalidate_caches()
+    assert arc not in reads
+
+    # rewritten in place, with an extra module: re-read once, and the
+    # new module imports
+    with zipfile.ZipFile(arc, "w") as z:
+        z.writestr("gr_zipcache_a.py", "X = 1\n")
+        z.writestr("gr_zipcache_b.py", "Y = 2\n")
+    importlib.invalidate_caches()
+    assert reads.count(arc) == 1
+    assert importlib.import_module("gr_zipcache_b").Y == 2

@@ -8,9 +8,10 @@ Checked invariants:
 - flagship pip_join: polygon cover index is BROADCAST (the big doc
   side never shuffles before the ray-cast), and column pruning keeps
   the BINARY ``html`` column out of the parquet scan;
-- ingestion (raster, PMTiles, WARC): decode kernels sit next to the
-  kernels that plan them, so payload bytes never cross an Exchange,
-  and path lists are not spread by a shuffle;
+- ingestion: raster decode is one Arrow kernel reading its path
+  table directly; PMTiles and WARC decode kernels sit next to the
+  kernels that plan them. Payload bytes never cross an Exchange, and
+  path lists are not spread by a shuffle;
 - driver-built tables (cover, kNN and zone indexes, path lists) are
   ``LocalTableScan``s, never a pickled-RDD ``Scan ExistingRDD``;
 - vector joins (dwithin, kNN table, zonal stats): broadcast or cell
@@ -80,27 +81,31 @@ def main() -> int:
     check("flagship", "cover index joined via BroadcastHashJoin", "BroadcastHashJoin" in p)
     check("flagship", "documents scan prunes the BINARY html column", "html" not in p)
 
-    # raster_ingest: the two-stage ingestion plan — no Exchange
-    # between the header kernel and the decode kernel (chunk rows
-    # flow narrow), the small metadata side broadcast, and exactly
-    # one aggregation shuffle (the per-raster groupBy)
+    # raster_ingest: decode is ONE Arrow kernel reading its (path, k,
+    # n) LocalTableScan directly (no chunk-row stage or Exchange before
+    # it), the small metadata side is broadcast, and exactly one
+    # aggregation shuffle (the per-raster groupBy)
     p = plans["raster_ingest"] = explain_str(Q.q_raster_ingest(spark, SF))
-    kernels = sorted(
-        int(m.group(1)) for m in re.finditer(r"^\((\d+)\) MapInPandas", p, re.M)
+    check(
+        "raster_ingest",
+        "two executor kernels and NO driver-side file opens: the "
+        "decode MapInArrow and the metadata MapInPandas (the only "
+        "LocalTableScans are the driver-built path tables)",
+        n_nodes(p, "MapInArrow") == 1
+        and n_nodes(p, "MapInPandas") == 1
+        and len(re.findall(r"^\(\d+\) \w*(?:InPandas|InArrow|EvalPython)\b", p, re.M)) == 2,
+    )
+    decode = re.search(r"^\((\d+)\) MapInArrow\nInput \[\d+\]: (\[.*\])$", p, re.M)
+    scan = decode and re.search(
+        rf"^\({int(decode.group(1)) - 1}\) LocalTableScan\nOutput \[\d+\]: (\[.*\])$", p, re.M
     )
     check(
         "raster_ingest",
-        "three Arrow kernels and NO driver-side file opens: chunk "
-        "header walk, chunk decode, and metadata registration all run "
-        "as executor-side MapInPandas (the only LocalTableScans are "
-        "the driver-built path-string lists)",
-        len(kernels) == 3,
-    )
-    check(
-        "raster_ingest",
-        "header and decode kernels are ADJACENT (no Exchange between: "
-        "chunk rows flow narrow from parse to decode)",
-        any(b - a == 1 for a, b in zip(kernels, kernels[1:])),
+        "decode kernel reads its LocalTableScan DIRECTLY (its child, "
+        "same columns: nothing between the path table and the decode)",
+        bool(scan)
+        and scan.group(1) == decode.group(2)
+        and re.search(r"MapInArrow \(\d+\)\n[ :|]*\+- LocalTableScan \(\d+\)", p) is not None,
     )
     check("raster_ingest", "metadata side joined via BroadcastHashJoin", "BroadcastHashJoin" in p)
     check(
