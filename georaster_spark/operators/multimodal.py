@@ -1,27 +1,21 @@
-"""Multimodal (image/audio/video) column operators.
+"""Multimodal (image) column operators.
 
 Media is carried as an opaque ``BINARY`` column plus typed metadata —
 the model the reference applies to raster tile bytes
 (``/root/reference/src/pmtiles.rs:21-34``: an XYZ tile is compressed
 bytes until a decoder turns it into pixels). Here the same pattern
-serves a webtext training pipeline: decode / feature-extract /
-resize / frame-sample implemented as Arrow-batched ``mapInPandas``
-kernels so the Spark-side plumbing (schema, partitioning, batch
-shape) is real and tested at scale.
+serves a webtext training pipeline: decode / feature-extract / resize
+implemented as Arrow-batched ``mapInPandas`` kernels so the
+Spark-side plumbing (schema, partitioning, batch shape) is real and
+tested at scale.
 
-The codec step is REAL for every format a stdlib implementation can
-honestly cover: images via ``sources/png.py`` (the codec that also
-decodes PMTiles tiles), ``sources/jpeg.py`` (baseline JFIF, huffman
-+ DCT) and ``sources/webp.py`` + ``sources/vp8.py`` (lossless VP8L
-AND lossy VP8 intra, RFC 6386); audio via
-``sources/wav.py`` (RIFF/WAVE PCM); video via ``sources/avi.py``
-(MJPEG AVI — per-frame JPEG decode). MPEG audio gets a REAL
-frame-level parse (``sources/mp3.py``: header tables, length
-chaining, ID3 — count/rate/duration from actual bytes) while its
-PCM synthesis, AAC, and inter-frame video codecs (H.264/VP9) fall
-back to the deterministic digest-derived fake — disclosed, one
-branch, same plan shape — since no codec library exists in this
-container to validate sample output against.
+The codec step is REAL for every image format a stdlib
+implementation can honestly cover: ``sources/png.py`` (the codec
+that also decodes PMTiles tiles), ``sources/jpeg.py`` (baseline JFIF,
+huffman + DCT) and ``sources/webp.py`` + ``sources/vp8.py`` (lossless
+VP8L AND lossy VP8 intra, RFC 6386). Any other blob falls back to the
+deterministic digest-derived fake — disclosed, one branch, same plan
+shape.
 
 Scale notes:
 - media bytes never pass through a shuffle — all kernels are narrow
@@ -102,8 +96,7 @@ def _is_webp(media: bytes) -> bool:
 
 def _decode_image(media: bytes):
     """Decode PNG, JPEG, or WebP bytes → uint8 ndarray, or None if
-    the blob is not an image this engine decodes (audio/video
-    containers)."""
+    the blob is not an image this engine decodes."""
     if media[:8] == _PNG_SIG:
         from georaster_spark.sources.png import decode_png
 
@@ -126,8 +119,7 @@ def _decode_bytes(media: bytes) -> tuple[int, int, int]:
     real (stdlib codecs,
     ``sources/png.py`` / ``sources/jpeg.py`` / ``sources/webp.py``):
     mean_luma is the integer mean of all samples. Any other format
-    falls back to the deterministic digest fake (disclosed stub —
-    this container ships no audio/video codec).
+    falls back to the deterministic digest fake (disclosed stub).
     """
     arr = _decode_image(bytes(media))
     if arr is not None:
@@ -321,433 +313,3 @@ def downsample_image(df: DataFrame, factor: int = 2, id_col: str = "doc_id") -> 
 
     return df.select(id_col, "media").mapInPandas(kernel, schema=schema)
 
-
-def frame_sample(
-    df: DataFrame,
-    frame_bytes: int = 16,
-    stride: int = 4,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """"Video" frame sampling: slice the blob into fixed-size frames,
-    keep every ``stride``-th, emit (id, frame_idx, frame_digest,
-    frame_len). One row-amplifying narrow stage — the blowup happens
-    AFTER column pruning, and only digests leave the kernel."""
-    schema = f"{id_col} long, frame_idx long, frame_digest string, frame_len long"
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, media in zip(pdf[id_col], pdf["media"]):
-                b = bytes(media)
-                n_frames = (len(b) + frame_bytes - 1) // frame_bytes
-                for fi in range(0, n_frames, stride):
-                    chunk = b[fi * frame_bytes : (fi + 1) * frame_bytes]
-                    rows.append((i, fi, hashlib.md5(chunk).hexdigest(), len(chunk)))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "frame_idx", "frame_digest", "frame_len"]
-            )
-
-    return df.select(id_col, "media").mapInPandas(kernel, schema=schema)
-
-
-# deterministic WAV-media formulas (shared with the DuckDB oracle):
-# mono int16 PCM, n = doc_id % 400 + 100 samples,
-# rate = 8000 (even ids) | 16000 (odd),
-# s(i) = ((i * 37 + doc_id * 11) % 65536) - 32768
-WAV_N_MOD, WAV_N_OFF = 400, 100
-
-
-def wav_media_col(id_col: str = "doc_id"):
-    """Arrow-batched generator of REAL RIFF/WAVE PCM16 blobs from the
-    deterministic formula above."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    from georaster_spark.sources.wav import encode_wav
-
-    @F.pandas_udf(T.BinaryType())
-    def _gen(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            n = i % WAV_N_MOD + WAV_N_OFF
-            rate = 8000 if i % 2 == 0 else 16000
-            s = ((np.arange(n, dtype=np.int64) * 37 + i * 11) % 65536) - 32768
-            out.append(encode_wav(s.astype(np.int16), rate))
-        return pd.Series(out)
-
-    return _gen(F.col(id_col))
-
-
-def with_wav_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach a real WAV ``media BINARY`` column."""
-    return docs.withColumn("media", wav_media_col(id_col))
-
-
-def decode_audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, kind, n_samples, sample_rate, duration_ms, mean_abs) via
-    an Arrow-batched kernel. RIFF/WAVE PCM blobs decode for REAL
-    (``sources/wav.py``); anything else — compressed audio (no
-    MP3/AAC codec exists in this container) AND RIFF/WAVE blobs the
-    codec rejects (non-PCM fmt, truncated container) — degrades to
-    the disclosed digest fake with kind='other' rather than failing
-    the whole job on one bad blob (ADVICE r4)."""
-    schema = (
-        f"{id_col} long, kind string, n_samples long, sample_rate long, "
-        "duration_ms long, mean_abs long"
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from georaster_spark.sources.wav import WavError, decode_wav
-
-        for pdf in batches:
-            rows = []
-            for i, media in zip(pdf[id_col], pdf["media"]):
-                b = bytes(media)
-                row = None
-                if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                    try:
-                        samples, rate = decode_wav(b)
-                        n = samples.shape[0]
-                        mean_abs = int(
-                            np.abs(samples.astype(np.int64)).sum()
-                            // max(samples.size, 1)
-                        )
-                        row = (int(i), "wav", n, rate, n * 1000 // rate, mean_abs)
-                    except WavError:
-                        row = None  # malformed RIFF → digest fallback
-                elif b[:3] == b"ID3" or (
-                    len(b) > 1 and b[0] == 0xFF and (b[1] & 0xE0) == 0xE0
-                ):
-                    # MPEG audio: REAL frame-level parse (sources/mp3.py)
-                    # for count/rate/duration; PCM synthesis is the
-                    # disclosed stub, so mean_abs comes from the digest
-                    # like every undecodable payload
-                    from georaster_spark.sources.mp3 import (
-                        Mp3Error,
-                        parse_mp3_meta,
-                    )
-
-                    try:
-                        m = parse_mp3_meta(b)
-                        h = hashlib.md5(b).hexdigest()
-                        f = _digest_features(pd.Series([h]))
-                        row = (
-                            int(i), "mp3",
-                            m["n_frames"] * m["samples_per_frame"],
-                            m["sample_rate"], m["duration_ms"],
-                            int(f["mean_luma"][0]),
-                        )
-                    except Mp3Error:
-                        row = None  # not a real chain → digest fallback
-                if row is None:
-                    h = hashlib.md5(b).hexdigest()
-                    f = _digest_features(pd.Series([h]))
-                    n = len(b) // 2
-                    row = (
-                        int(i), "other", n, 16000, n * 1000 // 16000,
-                        int(f["mean_luma"][0]),
-                    )
-                rows.append(row)
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "kind", "n_samples", "sample_rate",
-                         "duration_ms", "mean_abs"],
-            )
-
-    return df.select(id_col, "media").mapInPandas(kernel, schema=schema)
-
-
-# deterministic MJPEG-AVI media formulas (shared with the oracle):
-# n_frames = id % 6 + 3, w = (id % 3 + 2)*8, h = ((id*7) % 3 + 2)*8,
-# usec/frame = (id % 10 + 5) * 1000; frame f is 8x8-block-constant
-# with tile value (bx*5 + by*11 + id + f*17) % 256 — q100 JPEG frames
-# decode bit-exactly (same argument as the JPEG media pairs)
-AVI_F_MOD, AVI_F_OFF = 6, 3
-
-
-def avi_media_col(id_col: str = "doc_id"):
-    """Arrow-batched generator of REAL MJPEG AVI blobs from the
-    deterministic formula above."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    from georaster_spark.sources.avi import encode_avi_mjpeg
-
-    @F.pandas_udf(T.BinaryType())
-    def _gen(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            n = i % AVI_F_MOD + AVI_F_OFF
-            w = (i % 3 + 2) * 8
-            h = ((i * 7) % 3 + 2) * 8
-            py, px = np.mgrid[0:h, 0:w]
-            frames = [
-                (((px // 8) * 5 + (py // 8) * 11 + i + f * 17) % 256).astype(
-                    np.uint8
-                )
-                for f in range(n)
-            ]
-            out.append(encode_avi_mjpeg(frames, usec_per_frame=(i % 10 + 5) * 1000))
-        return pd.Series(out)
-
-    return _gen(F.col(id_col))
-
-
-def with_avi_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach a real MJPEG-AVI ``media BINARY`` column."""
-    return docs.withColumn("media", avi_media_col(id_col))
-
-
-def decode_video_features(
-    df: DataFrame, stride: int = 2, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, kind, n_frames, n_sampled, width, height, usec_per_frame,
-    mean_luma) via an Arrow-batched kernel: MJPEG AVIs decode for
-    REAL (container walk + per-frame stdlib JPEG decode, sampling
-    every ``stride``-th frame); anything else — non-AVI blobs (no
-    inter-frame codec in this container) AND RIFF/AVI blobs the
-    codec rejects (non-MJPEG streams, truncated container, a bad
-    embedded frame) — degrades to the disclosed digest fake with
-    kind='other' rather than failing the whole job (ADVICE r4)."""
-    schema = (
-        f"{id_col} long, kind string, n_frames long, n_sampled long, "
-        "width long, height long, usec_per_frame long, mean_luma long"
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from georaster_spark.sources.avi import AviError, decode_avi_mjpeg
-        from georaster_spark.sources.jpeg import JpegError
-
-        for pdf in batches:
-            rows = []
-            for i, media in zip(pdf[id_col], pdf["media"]):
-                b = bytes(media)
-                row = None
-                if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                    try:
-                        frames, usec = decode_avi_mjpeg(b)
-                        sampled = frames[::stride]
-                        tot = sum(int(f.astype(np.int64).sum()) for f in sampled)
-                        npx = sum(f.size for f in sampled)
-                        row = (
-                            int(i), "mjpeg", len(frames), len(sampled),
-                            int(frames[0].shape[1]), int(frames[0].shape[0]),
-                            usec, tot // max(npx, 1),
-                        )
-                    except (AviError, JpegError):
-                        row = None  # malformed RIFF/frame → digest fallback
-                if row is None:
-                    h = hashlib.md5(b).hexdigest()
-                    f = _digest_features(pd.Series([h]))
-                    row = (
-                        int(i), "other", 0, 0, int(f["width"][0]),
-                        int(f["height"][0]), 0, int(f["mean_luma"][0]),
-                    )
-                rows.append(row)
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "kind", "n_frames", "n_sampled", "width",
-                         "height", "usec_per_frame", "mean_luma"],
-            )
-
-    return df.select(id_col, "media").mapInPandas(kernel, schema=schema)
-
-
-def audio_meta(
-    df: DataFrame,
-    sample_rate: int = 16000,
-    bytes_per_sample: int = 2,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """"Audio" metadata from blob length: sample count + duration.
-    Pure Column algebra (JVM-side) — no kernel needed for metadata
-    that doesn't require decoding."""
-    n_bytes = F.length("media").cast("long")
-    samples = F.floor(n_bytes / bytes_per_sample).cast("long")
-    return df.select(
-        id_col,
-        n_bytes.alias("n_bytes"),
-        samples.alias("n_samples"),
-        F.floor(samples * 1000 / sample_rate).cast("long").alias("duration_ms"),
-    )
-
-
-# ----------------------------------------------------- lossy VP8 media
-# Deterministic lossy-WebP formulas (media_vp8_decode pair): each doc
-# is a 1-2 x 1-2 macroblock DC16 key frame at qi=VP8_QI, loop filter
-# off, whose per-MB Y2 dc level is (doc*5 + grid*13) % 7 —
-# so the reconstruction is the spec's exact integer math and the
-# DuckDB oracle can replay it in closed form:
-#   y2 coeff   = level * 2 * dc_q[VP8_QI]
-#   block dc   = (coeff + 3) >> 3          (inverse WHT, dc-only)
-#   residual   = (block dc + 4) >> 3       (inverse DCT, dc-only)
-#   MB luma    = DC16 prediction + residual, where the prediction is
-#                128 (no neighbours), the left/above MB's value, or
-#                their rounded mean (both neighbours).
-# Chroma carries no coefficients (flat 128); a RAW unfiltered ALPH
-# plane holds (doc*37 + 11) % 256. Levels stay in 0..6 so no clip
-# ever triggers.
-VP8_QI = 127  # dc_q[127] = 157 -> y2 quant 314: wide, distinct levels
-
-
-def _vp8_level(doc_id: int, grid: int) -> int:
-    return (doc_id * 5 + grid * 13) % 7
-
-
-def vp8_media_col(id_col: str = "doc_id"):
-    """Arrow-batched generator of REAL lossy-WebP blobs (VP8X + raw
-    ALPH + VP8 key frame) from the deterministic formula above."""
-    from pyspark.sql import types as T
-
-    from georaster_spark.sources.vp8_enc import (
-        build_keyframe,
-        wrap_webp_alpha,
-    )
-
-    @F.pandas_udf(T.BinaryType())
-    def _gen(ids: pd.Series) -> pd.Series:
-        z = [0] * 16
-        out = []
-        for i in ids:
-            i = int(i)
-            mbw = i % 2 + 1
-            mbh = (i // 2) % 2 + 1
-            mbs = []
-            for r in range(mbh):
-                for c in range(mbw):
-                    mbs.append(
-                        {
-                            "ymode": 0,
-                            "uvmode": 0,
-                            "y2": [_vp8_level(i, r * 2 + c)] + [0] * 15,
-                            "y": [list(z) for _ in range(16)],
-                            "u": [list(z) for _ in range(4)],
-                            "v": [list(z) for _ in range(4)],
-                        }
-                    )
-            w, h = 16 * mbw, 16 * mbh
-            payload = build_keyframe(w, h, mbs, qi=VP8_QI)
-            alpha = bytes([(i * 37 + 11) % 256]) * (w * h)
-            out.append(wrap_webp_alpha(payload, alpha, w, h))
-        return pd.Series(out)
-
-    return _gen(F.col(id_col))
-
-
-def with_vp8_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach a real lossy-WebP ``media BINARY`` column."""
-    return docs.withColumn("media", vp8_media_col(id_col))
-
-
-def decode_vp8_planes(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, width, height, y_sum, u_sum, v_sum, alpha_sum) by REAL
-    container + VP8 + ALPH decode inside one Arrow kernel — integer
-    plane sums, so the comparison with the closed-form oracle is
-    exact (no float rounding surface). Blobs never shuffle: the
-    kernel runs in the scan's partitioning like every media kernel."""
-    import struct as _struct
-
-    import numpy as np
-    from pyspark.sql import types as T
-
-    from georaster_spark.sources.vp8 import decode_vp8
-    from georaster_spark.sources.webp import decode_alph
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.LongType()),
-            T.StructField("height", T.LongType()),
-            T.StructField("y_sum", T.LongType()),
-            T.StructField("u_sum", T.LongType()),
-            T.StructField("v_sum", T.LongType()),
-            T.StructField("alpha_sum", T.LongType()),
-        ]
-    )
-
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf["media"]):
-                data = bytes(blob)
-                pos, vp8, alph = 12, None, None
-                while pos + 8 <= len(data):
-                    tag = data[pos : pos + 4]
-                    (size,) = _struct.unpack("<I", data[pos + 4 : pos + 8])
-                    body = data[pos + 8 : pos + 8 + size]
-                    if tag == b"VP8 ":
-                        vp8 = body
-                    elif tag == b"ALPH":
-                        alph = body
-                    pos += 8 + size + (size & 1)
-                y, u, v = decode_vp8(vp8)
-                h, w = y.shape
-                a_sum = 0
-                if alph is not None:
-                    a_sum = int(
-                        decode_alph(alph, w, h).astype(np.int64).sum()
-                    )
-                rows.append(
-                    (
-                        int(i), int(w), int(h),
-                        int(y.astype(np.int64).sum()),
-                        int(u.astype(np.int64).sum()),
-                        int(v.astype(np.int64).sum()),
-                        a_sum,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "width", "height", "y_sum", "u_sum", "v_sum",
-                    "alpha_sum",
-                ],
-            )
-
-    return df.mapInPandas(_kernel, schema)
-
-
-# ------------------------------------------------------- MP3 media
-# Deterministic MPEG1-Layer-III container formulas (media_mp3_meta
-# pair): n_frames = doc % 9 + 2, bitrate index cycles the L3 table,
-# rate cycles {44100, 48000, 32000}, mono = doc % 2, and an ID3v2 tag
-# of doc % 50 payload bytes leads the stream. Frame payloads are
-# zeros: the pair exercises the REAL frame-chain parser (header
-# tables + length chaining + ID3 skip); PCM stays the disclosed stub.
-MP3_KBPS = (32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-MP3_RATES = (44100, 48000, 32000)
-
-
-def mp3_media_col(id_col: str = "doc_id"):
-    from pyspark.sql import types as T
-
-    from georaster_spark.sources.mp3 import build_mp3
-
-    @F.pandas_udf(T.BinaryType())
-    def _gen(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            out.append(
-                build_mp3(
-                    n_frames=i % 9 + 2,
-                    bitrate_kbps=MP3_KBPS[i % len(MP3_KBPS)],
-                    sample_rate=MP3_RATES[(i * 7) % len(MP3_RATES)],
-                    mono=bool(i % 2),
-                    id3_payload=i % 50,
-                )
-            )
-        return pd.Series(out)
-
-    return _gen(F.col(id_col))
-
-
-def with_mp3_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach a real MPEG-audio ``media BINARY`` column."""
-    return docs.withColumn("media", mp3_media_col(id_col))

@@ -4,9 +4,12 @@ overview pyramid.
 Re-expresses the reference's access paths over DataFrames:
 
 - ``tiles_to_pixels`` ↔ chunk decode + ``Pixels`` iteration
-  (``src/geotiff.rs:293-363``) — Arrow-batched ``mapInPandas``; no
-  iterator state machine survives, ordering is not part of the value
-  contract (tests sort by (y, x); FIXTURES.md §4.3).
+  (``src/geotiff.rs:293-363``) — a ``mapInArrow`` that hands each
+  chunk row's ``data`` slice, as NumPy, to ``geotiff._pixel_batch``,
+  the one chunk→pixel explode (GeoTIFF ``pixels_df`` and
+  ``decimal_pixels_df`` call it too); no iterator state machine
+  survives, ordering is not part of the value contract (tests sort
+  by (y, x); FIXTURES.md §4.3).
 - ``read_pixel`` ↔ ``read_pixel(x, y)`` (``src/geotiff.rs:163-176``):
   out-of-bounds yields NULL/no row, never an error.
 - ``window_from_tiles`` ↔ ``pixels(x0, y0, w, h)`` with chunk pruning:
@@ -17,6 +20,9 @@ Re-expresses the reference's access paths over DataFrames:
 - ``rasterize`` / ``pixels_to_tiles`` ↔ the inverse path (engine op
   E7): bin world points onto a grid, assemble per-tile arrays with
   the reference's padded-stride layout (``src/geotiff.rs:506-516``).
+  A chunk row has the one layout of ``TileAttributes``
+  (``src/geotiff.rs:433-517``): planar chunks hold one band, chunky
+  multi-band chunks hold all samples interleaved, with ``band`` 0.
 - ``build_overview`` ↔ COG overview pyramid (``data/Makefile:39``,
   used in ``examples/http_dtm.rs:55-60``): 2×2 aggregate cascade;
   ``pick_overview`` is the query router (SURVEY.md O5).
@@ -24,8 +30,9 @@ Re-expresses the reference's access paths over DataFrames:
 Scale notes: decode/assemble are narrow per-tile operations — they
 parallelize per chunk and never shuffle; rasterize shuffles once on
 the (tile, pixel) key, which is the minimum possible (it's the
-aggregation key). All group keys include raster_id/image_idx/band so
-plans hold for multi-raster catalogs.
+aggregation key). All group keys include raster_id/image_idx (and
+band, where a band is its own chunk) so plans hold for multi-raster
+catalogs.
 """
 
 from __future__ import annotations
@@ -34,15 +41,15 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 from georaster_spark.grid import RasterGeometry
 from georaster_spark.session import local_df
-
-PIXELS_SCHEMA = (
-    "raster_id string, image_idx int, band int, x int, y int, value double"
-)
+from georaster_spark.sources.geotiff import PIXELS_SCHEMA, _pixel_batch
 
 TILES_SCHEMA = (
     "raster_id string, image_idx int, band int, tile_col int, tile_row int, "
@@ -51,53 +58,39 @@ TILES_SCHEMA = (
 
 
 def tiles_to_pixels(tiles: DataFrame, geom: RasterGeometry) -> DataFrame:
-    """Decode chunk rows into (x, y, band, value) pixel rows.
+    """Decode chunk rows into (x, y, band, value) pixel rows, one Arrow
+    batch per chunk.
 
     Chunky multi-sample chunks (spp>1) emit one row per sample with
     ``band`` = sample index; planar chunks carry their band already.
     NaN values become NULL (NoData ↔ NULL, FIXTURES.md §4.2).
     """
     spp = geom.spp()
-    tile_w, tile_h, planar = geom.tile_w, geom.tile_h, geom.planar
+    tile_w, tile_h = geom.tile_w, geom.tile_h
+    schema = to_arrow_schema(DataType.fromDDL(PIXELS_SCHEMA))
+    keys = ["raster_id", "image_idx", "band", "tile_col", "tile_row", "pad_right", "pad_down"]
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                th_eff = tile_h - r.pad_down
-                tw_eff = tile_w - r.pad_right
-                data = np.asarray(r.data, dtype=np.float64)
-                if data.size != th_eff * tw_eff * spp:
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            data = batch.column("data")
+            # offsets index the unsliced child, so they hold for a slice too
+            flat = data.values.to_numpy(zero_copy_only=False)
+            offsets = data.offsets.to_numpy()
+            for i, r in enumerate(batch.select(keys).to_pylist()):
+                th, tw = tile_h - r["pad_down"], tile_w - r["pad_right"]
+                vals = flat[offsets[i] : offsets[i + 1]]
+                if vals.size != th * tw * spp:
                     raise ValueError(
-                        f"chunk ({r.tile_col},{r.tile_row}) has {data.size} values,"
-                        f" expected {th_eff * tw_eff * spp}"
+                        f"chunk ({r['tile_col']},{r['tile_row']}) has {vals.size} values,"
+                        f" expected {th * tw * spp}"
                     )
-                arr = data.reshape(th_eff, tw_eff, spp)
-                ys, xs = np.mgrid[0:th_eff, 0:tw_eff]
-                xs = (xs + r.tile_col * tile_w).ravel()
-                ys = (ys + r.tile_row * tile_h).ravel()
-                npx = xs.size
-                for s in range(spp):
-                    band = int(r.band) if (planar or spp == 1) else s
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "raster_id": r.raster_id,
-                                "image_idx": np.int32(r.image_idx),
-                                "band": np.full(npx, band, np.int32),
-                                "x": xs.astype(np.int32),
-                                "y": ys.astype(np.int32),
-                                "value": arr[:, :, s].ravel(),
-                            }
-                        )
-                    )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+                yield _pixel_batch(
+                    vals.reshape(th, tw, spp), r["raster_id"], r["image_idx"],
+                    r["band"] if spp == 1 else 0,
+                    r["tile_col"] * tile_w, r["tile_row"] * tile_h, schema,
+                )
 
-    out = tiles.mapInPandas(decode, schema=PIXELS_SCHEMA)
-    return out.withColumn(
-        "value", F.when(F.isnan("value"), F.lit(None)).otherwise(F.col("value"))
-    )
+    return tiles.mapInArrow(decode, schema=PIXELS_SCHEMA)
 
 
 def pixels_to_tiles(
@@ -105,29 +98,34 @@ def pixels_to_tiles(
 ) -> DataFrame:
     """Assemble pixel rows into padded-stride chunk rows (inverse of
     ``tiles_to_pixels``; engine op E7 sink side). Missing pixels take
-    ``fill``. One shuffle, on the natural chunk key."""
+    ``fill``. One shuffle, on the natural chunk key. A planar or
+    single-band chunk holds one band; a chunky multi-band chunk holds
+    its samples interleaved, ``(h, w, spp)``, in one row with ``band``
+    0 — the layout ``tiles_to_pixels`` reads."""
     tile_w, tile_h = geom.tile_w, geom.tile_h
     ta, td = geom.tiles_across, geom.tiles_down
     pr_last, pd_last = geom.padding_right, geom.padding_down
+    spp = geom.spp()
 
     keyed = pixels.withColumn("tile_col", (F.col("x") / tile_w).cast("int")).withColumn(
         "tile_row", (F.col("y") / tile_h).cast("int")
     )
 
     def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        raster_id, image_idx, band, tc, tr = key
+        raster_id, image_idx, tc, tr = key[0], key[1], key[-2], key[-1]
         pr = pr_last if tc == ta - 1 else 0
         pdn = pd_last if tr == td - 1 else 0
         th_eff, tw_eff = tile_h - pdn, tile_w - pr
-        arr = np.full((th_eff, tw_eff), fill, np.float64)
+        arr = np.full((th_eff, tw_eff, spp), fill, np.float64)
         xs = pdf["x"].to_numpy(np.int64) - tc * tile_w
         ys = pdf["y"].to_numpy(np.int64) - tr * tile_h
-        arr[ys, xs] = pdf["value"].to_numpy(np.float64)
+        samples = 0 if spp == 1 else pdf["band"].to_numpy(np.int64)
+        arr[ys, xs, samples] = pdf["value"].to_numpy(np.float64)
         return pd.DataFrame(
             {
                 "raster_id": [raster_id],
                 "image_idx": [image_idx],
-                "band": [band],
+                "band": [key[2] if spp == 1 else 0],
                 "tile_col": [tc],
                 "tile_row": [tr],
                 "pad_right": [pr],
@@ -136,7 +134,8 @@ def pixels_to_tiles(
             }
         )
 
-    return keyed.groupBy("raster_id", "image_idx", "band", "tile_col", "tile_row").applyInPandas(
+    band = ["band"] if spp == 1 else []
+    return keyed.groupBy("raster_id", "image_idx", *band, "tile_col", "tile_row").applyInPandas(
         assemble, schema=TILES_SCHEMA
     )
 
@@ -542,41 +541,6 @@ def focal_stats_halo(
     return exploded.groupBy("_tx", "_ty").applyInPandas(
         kernel, schema="x long, y long, n_nb long, sum_v double, min_v double, max_v double"
     )
-
-
-def focal_stats_explode(pixels: DataFrame, x_col: str = "x", y_col: str = "y", v_col: str = "value") -> DataFrame:
-    """Reference formulation of ``focal_stats_halo``: every pixel
-    contributes itself to all 9 neighbor positions (9× shuffle), one
-    groupBy on the position, then an inner join back onto the pixel
-    set to keep only positions that actually exist. 100% JVM/codegen
-    — used as the equality oracle in tests and viable when the 9×
-    shuffle is cheaper than a Python kernel (small rasters)."""
-    x, y = F.col(x_col), F.col(y_col)
-    contrib = pixels.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        (x + dx).cast("long").alias("cx"),
-                        (y + dy).cast("long").alias("cy"),
-                    )
-                    for dx in (-1, 0, 1)
-                    for dy in (-1, 0, 1)
-                ]
-            )
-        ).alias("_t"),
-        F.col(v_col).cast("double").alias("_v"),
-    )
-    agg = contrib.groupBy(
-        F.col("_t.cx").alias("x"), F.col("_t.cy").alias("y")
-    ).agg(
-        F.count("_v").alias("n_nb"),
-        F.sum("_v").alias("sum_v"),
-        F.min("_v").alias("min_v"),
-        F.max("_v").alias("max_v"),
-    )
-    present = pixels.select(x.cast("long").alias("x"), y.cast("long").alias("y"))
-    return agg.join(present, ["x", "y"])
 
 
 def horn_gradients_halo(

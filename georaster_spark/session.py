@@ -21,9 +21,15 @@ Local-mode settings mirror what we would set cluster-side:
   a directory until its archive's mtime or size changes, so a
   rewritten archive is still re-read. Workers import this package to
   run the engine's kernels anyway, so this adds no deployment need.
+- the package's parent directory on the workers' ``PYTHONPATH``
+  (``spark.executorEnv.PYTHONPATH``): a worker starts as ``python -m
+  georaster_spark.pyworker``, which finds the package through that
+  path, whatever directory the driver runs in.
 
 ``local_df`` is the one way the engine turns driver-built rows (cover
-and kNN indexes, path lists, fixtures) into a DataFrame.
+and kNN indexes, path lists, fixtures) into a DataFrame; ``paths_df``
+is the one reading of a source's ``paths`` argument, and
+``map_paths`` the one per-path header stage.
 """
 
 from __future__ import annotations
@@ -32,8 +38,12 @@ import os
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType, StructType
+
+# the directory that holds the georaster_spark package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_driver_memory(host_bytes: int) -> str:
@@ -73,6 +83,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.python.daemon.module", "georaster_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEM")
@@ -106,3 +117,46 @@ def local_df(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
     return spark.createDataFrame(table, schema)
+
+
+def paths_df(spark: SparkSession, paths, n: int | None = None) -> DataFrame:
+    """A source's ``paths`` argument as a table with a ``path`` column.
+
+    ``paths`` is a list of path strings (a ``LocalTableScan``, so
+    nothing shuffles before the kernel that reads it) or a DataFrame
+    with a ``path`` string column (the scale form: a file catalog
+    never reaches the driver). With ``n``, each path becomes the rows
+    ``(path, k, n)`` for k < n, the k-th of ``n`` tasks that share
+    the path's work; in the DataFrame form those rows are made next
+    to their path row and, for n > 1, spread round-robin over ``n``
+    partitions (an Exchange of those small rows)."""
+    listed = isinstance(paths, (list, tuple))
+    if n is None:
+        if listed:
+            return local_df(spark, [(p,) for p in paths], "path string")
+        return paths.select("path")
+    if listed:
+        return local_df(
+            spark, [(p, k, n) for p in paths for k in range(n)], "path string, k int, n int"
+        )
+    ks = F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
+    work = paths.select("path", ks.alias("k"), F.lit(n).alias("n"))
+    return work.repartition(n) if n > 1 else work
+
+
+def map_paths(spark: SparkSession, paths, rows_of, schema: str) -> DataFrame:
+    """Paths -> rows in one executor-side ``mapInPandas`` over
+    ``paths_df(spark, paths)``: ``rows_of(path)`` returns the path's
+    rows, as tuples in ``schema`` order or dicts keyed by column. The
+    header walks (TIFF chunk plan and metadata, PMTiles entries, WARC
+    splits) are this stage, so the driver ships only path strings and
+    opens no file."""
+    columns = DataType.fromDDL(schema).names
+
+    def kernel(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame([r for p in pdf["path"] for r in rows_of(p)], columns=columns)
+
+    return paths_df(spark, paths).mapInPandas(kernel, schema=schema)

@@ -11,19 +11,26 @@ decode step is a NumPy kernel inside one Spark Arrow stage.
 Spark-first architecture (scales to a 100 TB COG lake):
 
 1. ``chunk_plan_df``: a *paths* table (a driver list as a
-   ``LocalTableScan``, or a file-catalog DataFrame) goes through an Arrow
-   ``mapInPandas`` kernel that reads ONLY header/IFD bytes (seek-based
-   ranged reads — never the payload) and emits one row per
-   strip/tile chunk: ``(path, raster_id, image_idx, chunk, band,
+   ``LocalTableScan``, or a file-catalog DataFrame; ``session.
+   paths_df``) goes through the per-path ``mapInPandas`` header stage
+   (``session.map_paths``, shared with ``file_meta_df`` and the
+   PMTiles/WARC planners) that reads ONLY header/IFD bytes
+   (seek-based ranged reads — never the payload) and emits one row
+   per strip/tile chunk: ``(path, raster_id, image_idx, chunk, band,
    x0, y0, w, h, offset, nbytes, ...)``. Millions of files ⇒ still
-   one small row per chunk, fully distributed.
-2. ``pixels_df``: one ``mapInArrow`` stage over ``(path, k, n)`` rows.
-   Each task walks the file's header as ``chunk_plan_df`` does, then
-   does a ranged read of every n-th chunk's payload from the k-th,
-   inflates it (zlib for Deflate/OldDeflate, LZW), wraps it in NumPy,
-   clips grid padding, and emits Arrow pixel batches. ``n`` tasks per
-   file is how one giant COG spreads over the cluster; neither blobs
-   nor chunk rows shuffle, only decoded values leave the kernel.
+   one small row per chunk, fully distributed. It is a public call of
+   its own, not a stage of the decode.
+2. ``pixels_df`` and ``decimal_pixels_df``: one ``mapInArrow`` stage
+   over ``(path, k, n)`` rows. Each task walks the file's header as
+   ``chunk_plan_df`` does, then does a ranged read of every n-th
+   chunk's payload from the k-th, inflates it (zlib for
+   Deflate/OldDeflate, LZW), wraps it in NumPy, clips grid padding,
+   and hands the ``(h, w, spp)`` array to ``_pixel_batch``, the
+   engine's one chunk→pixel explode, which ``raster.tiles_to_pixels``
+   calls too (DOUBLE values, or DECIMAL(20,0) from the native integer
+   samples). ``n`` tasks per file is how one giant COG spreads over
+   the cluster; neither blobs nor chunk rows shuffle, only decoded
+   values leave the kernel.
 
 Supported (⊇ the reference fixture matrix, ``tests/geotiff.rs``):
 classic TIFF and BigTIFF (II/MM, magic 42/43), strips + tiles,
@@ -704,29 +711,12 @@ def chunk_plan_df(spark, paths, image_idx: int = 0):
     shuffles before the kernel — OR an existing DataFrame with a
     ``path`` string column (the scale form — a file-catalog table
     never materializes on the driver)."""
-    pdf_schema = CHUNK_SCHEMA
+    from georaster_spark.session import map_paths
 
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                tf = open_tiff(p)
-                rows.extend(chunk_descriptors(tf, image_idx))
-            yield pd.DataFrame(
-                rows,
-                columns=[c.split()[0] for c in pdf_schema.split(", ")],
-            )
-
-    from georaster_spark.session import local_df
-
-    if isinstance(paths, (list, tuple)):
-        _assert_unique_basenames(paths)
-        paths_df = local_df(spark, [(p,) for p in paths], "path string")
-    else:
-        paths_df = paths.select("path")
-    return paths_df.mapInPandas(kernel, schema=pdf_schema)
+    _assert_unique_basenames(paths)
+    return map_paths(
+        spark, paths, lambda p: chunk_descriptors(open_tiff(p), image_idx), CHUNK_SCHEMA
+    )
 
 
 FILE_META_SCHEMA = (
@@ -779,32 +769,19 @@ def file_meta_df(spark, paths):
     without a single driver-side file open (the r2 VERDICT's scale
     defect). Same paths contract (list as a ``LocalTableScan``, or a
     DataFrame) as ``chunk_plan_df``."""
+    from georaster_spark.session import map_paths
 
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                rows.extend(file_meta_rows(p))
-            yield pd.DataFrame(
-                rows, columns=[c.split()[0] for c in FILE_META_SCHEMA.split(", ")]
-            )
-
-    from georaster_spark.session import local_df
-
-    if isinstance(paths, (list, tuple)):
-        _assert_unique_basenames(paths)
-        paths_df = local_df(spark, [(p,) for p in paths], "path string")
-    else:
-        paths_df = paths.select("path")
-    return paths_df.mapInPandas(kernel, schema=FILE_META_SCHEMA)
+    _assert_unique_basenames(paths)
+    return map_paths(spark, paths, file_meta_rows, FILE_META_SCHEMA)
 
 
 def _assert_unique_basenames(paths) -> None:
     """raster_id is the file basename (golden-pinned), so two paths
     sharing a basename would silently merge in every raster_id
-    groupBy — refuse early (ADVICE r2)."""
+    groupBy — refuse early (ADVICE r2). A paths DataFrame is not
+    checked: it never reaches the driver."""
+    if not isinstance(paths, (list, tuple)):
+        return
     names: dict[str, str] = {}
     for p in paths:
         b = p.rsplit("/", 1)[-1]
@@ -814,6 +791,74 @@ def _assert_unique_basenames(paths) -> None:
                 "raster_id would collide; rename or ingest separately"
             )
         names[b] = p
+
+
+PIXELS_SCHEMA = (
+    "raster_id string, image_idx int, band int, x int, y int, value double"
+)
+
+
+def _pixel_batch(
+    arr: np.ndarray, raster_id: str, image_idx: int, band: int, x0: int, y0: int, schema
+):
+    """The one chunk→pixel explode (the reference's ``Pixels`` walk,
+    ``src/geotiff.rs:293-363``), shared by ``pixels_df``,
+    ``decimal_pixels_df`` and ``raster.tiles_to_pixels``: an ``(h, w,
+    spp)`` chunk whose top-left pixel is ``(x0, y0)`` becomes one Arrow
+    batch in the ``pa.Schema`` ``schema``, sample ``s`` as band ``band +
+    s``, band-major then row-major. Samples of either byte order are
+    taken (a big-endian file's native-dtype chunk keeps its order). NaN
+    lands as NULL (NoData ↔ NULL, FIXTURES.md §4.2) before the cast to
+    the schema's value type: DOUBLE, or DECIMAL(20,0) for integer
+    arrays (exact for all of u64/i64). pyarrow is imported here so a
+    worker that runs a decode kernel loads only this module."""
+    import pyarrow as pa
+
+    h, w, spp = arr.shape
+    npx = h * w
+    flat = arr.transpose(2, 0, 1).ravel()
+    flat = flat.astype(flat.dtype.newbyteorder("="), copy=False)  # Arrow takes native order only
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.repeat(raster_id, npx * spp),
+            np.full(npx * spp, image_idx, np.int32),
+            np.repeat(np.arange(band, band + spp, dtype=np.int32), npx),
+            np.tile(np.arange(x0, x0 + w, dtype=np.int32), h * spp),
+            np.tile(np.repeat(np.arange(y0, y0 + h, dtype=np.int32), w), spp),
+            pa.array(flat, from_pandas=True).cast(schema.field("value").type),
+        ],
+        schema=schema,
+    )
+
+
+def _pixels_stage(spark, paths, image_idx: int, n: int, schema: str, chunk_array):
+    """The one decode stage behind ``pixels_df`` and
+    ``decimal_pixels_df``: a ``mapInArrow`` over ``(path, k, n)`` rows
+    (``session.paths_df``) that walks the file's header and turns its
+    chunks ``k::n`` into pixel batches, ``chunk_array(desc)`` giving each
+    chunk's ``(h, w, spp)`` array and ``_pixel_batch`` exploding it into
+    ``schema``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    from georaster_spark.session import paths_df
+
+    _assert_unique_basenames(paths)
+    arrow_schema = to_arrow_schema(DataType.fromDDL(schema))
+
+    def kernel(batches):
+        for batch in batches:
+            for r in batch.to_pylist():
+                descs = chunk_descriptors(open_tiff(r["path"]), image_idx)
+                for d in descs[r["k"] :: r["n"]]:
+                    # chunky samples are bands 0..spp-1; a planar chunk is its run's band
+                    band = 0 if d["spp"] > 1 else d["band_run"]
+                    yield _pixel_batch(
+                        chunk_array(d), d["raster_id"], d["image_idx"], band,
+                        d["x0"], d["y0"], arrow_schema,
+                    )
+
+    return paths_df(spark, paths, n).mapInArrow(kernel, schema=schema)
 
 
 def pixels_df(
@@ -845,101 +890,36 @@ def pixels_df(
     sentinel to NULL at decode (engine-added: the reference reads the
     tag but does not apply it, src/geotiff.rs:55; off by default for
     parity)."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import DataType
-
-    from georaster_spark.operators.raster import PIXELS_SCHEMA
-    from georaster_spark.session import local_df
-
-    n = chunk_partitions or 1
-    if isinstance(paths, (list, tuple)):
-        _assert_unique_basenames(paths)
-        work = local_df(spark, [(p, k, n) for p in paths for k in range(n)], "path string, k int, n int")
-    else:
-        ks = F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
-        work = paths.select("path", ks.alias("k"), F.lit(n).alias("n"))
-        if n > 1:
-            work = work.repartition(n)
-    schema = to_arrow_schema(DataType.fromDDL(PIXELS_SCHEMA))
-
-    def chunk_batch(d: dict) -> pa.RecordBatch:
+    def chunk_array(d: dict) -> np.ndarray:
         arr = read_chunk(d)
         if apply_nodata and d["nodata"] is not None:
             try:
                 arr = np.where(arr == float(d["nodata"]), np.nan, arr)
             except ValueError:
                 pass  # non-numeric GDAL_NODATA string: ignore
-        h, w, spp = arr.shape
-        npx = h * w
-        # chunky samples are bands 0..spp-1; a planar chunk is its run's band
-        first = 0 if d["spp"] > 1 else d["band_run"]
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.repeat(d["raster_id"], npx * spp),
-                np.full(npx * spp, d["image_idx"], np.int32),
-                np.repeat(np.arange(first, first + spp, dtype=np.int32), npx),
-                np.tile(np.arange(d["x0"], d["x0"] + w, dtype=np.int32), h * spp),
-                np.tile(np.repeat(np.arange(d["y0"], d["y0"] + h, dtype=np.int32), w), spp),
-                pa.array(arr.transpose(2, 0, 1).ravel(), from_pandas=True),
-            ],
-            schema=schema,
-        )
+        return arr
 
-    def kernel(batches):
-        for batch in batches:
-            for r in batch.to_pylist():
-                descs = chunk_descriptors(open_tiff(r["path"]), image_idx)
-                for d in descs[r["k"] :: r["n"]]:
-                    yield chunk_batch(d)
-
-    return work.mapInArrow(kernel, schema=PIXELS_SCHEMA)
+    return _pixels_stage(spark, paths, image_idx, chunk_partitions or 1, PIXELS_SCHEMA, chunk_array)
 
 
-def decimal_pixels_df(spark, paths: list[str], image_idx: int = 0):
+def decimal_pixels_df(spark, paths, image_idx: int = 0):
     """Exact-integer variant of ``pixels_df``: value is DECIMAL(20,0),
     so u64 samples above 2^53 (inexact in DOUBLE) survive decode
     (src/lib.rs:33-51 U64 variant; SURVEY §7 risk 3). For integral
-    rasters only — float families raise."""
-    from decimal import Decimal
+    rasters only — float families raise. The same one stage as
+    ``pixels_df``; chunks are read in their native integer dtype, and
+    a sparse chunk (no payload) as all-NaN, which lands as NULL."""
 
-    chunks = chunk_plan_df(spark, paths, image_idx)
-    schema = "raster_id string, image_idx int, band int, x int, y int, value decimal(20,0)"
+    def chunk_array(d: dict) -> np.ndarray:
+        if d["dtype"].startswith("f"):
+            raise ValueError(f"{d['path']}: decimal decode is for integral dtypes")
+        return read_chunk(d, as_float=d["nbytes"] == 0)
 
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                d = r._asdict()
-                if d["dtype"].startswith("f"):
-                    raise ValueError(f"{d['path']}: decimal decode is for integral dtypes")
-                sparse = d["nbytes"] == 0
-                if not sparse:
-                    arr = read_chunk(d, as_float=False)
-                h, w, spp = (d["h"], d["w"], d["spp"]) if sparse else arr.shape
-                yy, xx = np.mgrid[0:h, 0:w]
-                for s in range(spp):
-                    band = d["band_run"] if d["spp"] == 1 else s
-                    yield pd.DataFrame(
-                        {
-                            "raster_id": d["raster_id"],
-                            "image_idx": d["image_idx"],
-                            "band": band,
-                            "x": (xx.ravel() + d["x0"]).astype("int32"),
-                            "y": (yy.ravel() + d["y0"]).astype("int32"),
-                            # sparse chunk = NoData: NULL is exact in
-                            # DECIMAL, matching pixels_df's NaN->NULL
-                            "value": (
-                                [None] * (h * w)
-                                if sparse
-                                else [Decimal(int(v)) for v in arr[:, :, s].ravel()]
-                            ),
-                        }
-                    )
-
-    return chunks.mapInPandas(kernel, schema=schema)
+    return _pixels_stage(
+        spark, paths, image_idx, 1,
+        "raster_id string, image_idx int, band int, x int, y int, value decimal(20,0)",
+        chunk_array,
+    )
 
 
 # ------------------------------------------------------------- writer

@@ -567,38 +567,23 @@ def pmtiles_entries_df(spark, paths):
     """Stage 1: archive paths → tile-entry table. Directory walks run
     in an Arrow kernel (executor-side ranged reads) so a catalog of
     many archives never opens a file on the driver — the same
-    executor-side header walk as the TIFF ``chunk_plan_df``.
+    executor-side header stage (``session.map_paths``) as the TIFF
+    ``chunk_plan_df``.
 
     ``paths``: list of path strings, or a DataFrame with a ``path``
     column (the scale form)."""
+    from georaster_spark.session import map_paths
 
-    def kernel(batches):
-        import pandas as pd
+    def entry_rows(p):
+        rd = PmtilesReader(p)
+        base = rd.header.data_offset
+        comp = rd.header.tile_compression
+        for e in rd.entries():
+            for k in range(e.run_length):
+                z, x, y = tileid_to_zxy(e.tile_id + k)
+                yield (p, z, x, y, base + e.offset, e.length, comp)
 
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                rd = PmtilesReader(p)
-                base = rd.header.data_offset
-                comp = rd.header.tile_compression
-                for e in rd.entries():
-                    for k in range(e.run_length):
-                        z, x, y = tileid_to_zxy(e.tile_id + k)
-                        rows.append(
-                            (p, z, x, y, base + e.offset, e.length, comp)
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[c.split()[0] for c in _ENTRY_SCHEMA.split(", ")],
-            )
-
-    from georaster_spark.session import local_df
-
-    if isinstance(paths, (list, tuple)):
-        paths_df = local_df(spark, [(p,) for p in paths], "path string")
-    else:
-        paths_df = paths.select("path")
-    return paths_df.mapInPandas(kernel, schema=_ENTRY_SCHEMA)
+    return map_paths(spark, paths, entry_rows, _ENTRY_SCHEMA)
 
 
 def tile_stats_df(

@@ -249,41 +249,29 @@ def warc_splits_df(spark, paths, split_bytes: int = DEFAULT_SPLIT_BYTES):
     pack greedily into ~``split_bytes`` splits (a split always starts
     on a member boundary, so stage 2 needs exactly one ranged read
     and no resync scan). Without a sidecar the file is one split —
-    correct, just file-granular parallelism. Runs in an Arrow kernel:
-    the driver opens no files."""
+    correct, just file-granular parallelism. Runs in the per-path
+    header stage (``session.map_paths``): the driver opens no files."""
+    from georaster_spark.session import map_paths
 
-    def kernel(batches):
-        import pandas as pd
+    def split_rows(p):
+        cdx = p + ".cdx.jsonl"
+        if not os.path.exists(cdx):
+            return [(p, 0, os.path.getsize(p), -1)]
+        rows = []
+        start = length = count = 0
+        with open(cdx) as f:
+            for line in f:
+                e = json.loads(line)
+                if length >= split_bytes:
+                    rows.append((p, start, length, count))
+                    start, length, count = e["o"], 0, 0
+                length += e["l"]
+                count += 1
+        if length:
+            rows.append((p, start, length, count))
+        return rows
 
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                cdx = p + ".cdx.jsonl"
-                if os.path.exists(cdx):
-                    start = length = count = 0
-                    with open(cdx) as f:
-                        for line in f:
-                            e = json.loads(line)
-                            if length >= split_bytes:
-                                rows.append((p, start, length, count))
-                                start, length, count = e["o"], 0, 0
-                            length += e["l"]
-                            count += 1
-                    if length:
-                        rows.append((p, start, length, count))
-                else:
-                    rows.append((p, 0, os.path.getsize(p), -1))
-            yield pd.DataFrame(
-                rows, columns=["path", "offset", "length", "n_records"]
-            )
-
-    from georaster_spark.session import local_df
-
-    if isinstance(paths, (list, tuple)):
-        paths_df = local_df(spark, [(p,) for p in paths], "path string")
-    else:
-        paths_df = paths.select("path")
-    return paths_df.mapInPandas(kernel, schema=_SPLIT_SCHEMA)
+    return map_paths(spark, paths, split_rows, _SPLIT_SCHEMA)
 
 
 def warc_records_df(

@@ -1,7 +1,8 @@
 """In-repo TIFF decode matrix: files written by ``write_tiff`` over every
 sample type, compression, predictor and samples-per-pixel it supports,
 plus a sparse strip and a GDAL_NODATA file, decoded by ONE
-``pixels_df`` call and compared pixel by pixel with the arrays written.
+``pixels_df`` call and compared pixel by pixel with the arrays written;
+the integer files also by ONE ``decimal_pixels_df`` call, exactly.
 
 ``write_tiff`` writes chunky strips only, so tiled and planar layouts
 are covered by the reference fixtures, not here."""
@@ -9,8 +10,11 @@ are covered by the reference fixtures, not here."""
 from __future__ import annotations
 
 import itertools
+import zlib
+from decimal import Decimal
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from georaster_spark.session import local_df
@@ -18,6 +22,9 @@ from georaster_spark.sources.geotiff import (
     COMPRESSION_DEFLATE,
     COMPRESSION_LZW,
     COMPRESSION_NONE,
+    _pixel_batch,
+    decimal_pixels_df,
+    decode_chunk_bytes,
     pixels_df,
     write_tiff,
 )
@@ -113,3 +120,59 @@ def test_paths_dataframe_gives_identical_rows(spark, matrix):
         df = pixels_df(spark, catalog, chunk_partitions=n, apply_nodata=True)
         got = sorted(df.collect(), key=lambda r: (r.raster_id, r.band, r.y, r.x))
         assert got == want, n
+
+
+def test_decimal_decode_matrix_is_exact(spark, matrix):
+    """The exact path over every integer file (spp 1 and 3, predictor
+    1 and 2, none/Deflate/LZW) and the sparse strip (NULL): one Arrow
+    stage over the path table, values equal to the written integers."""
+    ints = {rid: v for rid, v in matrix.items() if rid[0] in "ui" or rid == "sparse"}
+    df = decimal_pixels_df(spark, [p for p, _ in ints.values()])
+    assert df.schema.simpleString() == (
+        "struct<raster_id:string,image_idx:int,band:int,x:int,y:int,value:decimal(20,0)>"
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
+    assert "LocalTableScan" in plan and "Exchange" not in plan
+    rows = df.collect()
+    assert len(rows) == sum(a.size for _, a in ints.values())
+    got = {(r.raster_id, r.band, r.y, r.x): r.value for r in rows}
+    for rid, (_, want) in ints.items():
+        for (y, x, b), v in np.ndenumerate(want):
+            # the written integers stay inside 2^53, so the float copy is exact
+            assert got[(rid, b, y, x)] == (None if np.isnan(v) else Decimal(int(v))), (rid, b, y, x)
+
+
+def test_big_endian_chunks_explode_exactly():
+    """A big-endian (``MM``) file's chunks keep the file's byte order on
+    the exact path; the explode still gives the exact DECIMAL(20,0)
+    values. ``write_tiff`` writes little-endian files only, so the
+    chunks are built here: u64 above 2^53 (no predictor, no
+    compression) and i16 spp 3 with predictor 2 and Deflate."""
+    decimal = pa.schema(
+        [("raster_id", pa.string()), ("image_idx", pa.int32()), ("band", pa.int32()),
+         ("x", pa.int32()), ("y", pa.int32()), ("value", pa.decimal128(20, 0))]
+    )
+    u64 = np.array([[2**64 - 1, 2**53 + 1, 0], [2**63, 2**60 + 7, 12345]], np.uint64)[..., None]
+    i16 = np.arange(-9, 9, dtype=np.int16).reshape(2, 3, 3) * 1000
+    deltas = i16.copy()
+    deltas[:, 1:] = i16[:, 1:] - i16[:, :-1]  # predictor 2, wraps in int16
+    cases = [
+        (u64, u64.astype(">u8").tobytes(), "u64", COMPRESSION_NONE, 1),
+        (i16, zlib.compress(deltas.astype(">i2").tobytes()), "i16", COMPRESSION_DEFLATE, 2),
+    ]
+    for want, raw, dtype, comp, pred in cases:
+        h, w, spp = want.shape
+        desc = {
+            "chunk": 0, "nbytes": len(raw), "compression": comp, "predictor": pred,
+            "dtype": dtype, "byte_order": ">", "spp": spp,
+            "stored_h": h, "stored_w": w, "h": h, "w": w,
+        }
+        arr = decode_chunk_bytes(raw, desc, as_float=False)
+        if pred == 1:  # nothing re-computed the samples: the file's order survives
+            assert arr.dtype.byteorder == ">"
+        batch = _pixel_batch(arr, "mm", 0, 0, 4, 2, decimal)
+        got = {(r["band"], r["y"], r["x"]): r["value"] for r in batch.to_pylist()}
+        assert got == {
+            (b, 2 + y, 4 + x): Decimal(int(v)) for (y, x, b), v in np.ndenumerate(want)
+        }, dtype

@@ -6,13 +6,10 @@ from __future__ import annotations
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from georaster_spark.operators.multimodal import (
-    audio_meta,
     decode_image_features,
     downsample_image,
-    frame_sample,
     with_media,
 )
 
@@ -47,35 +44,6 @@ def test_decode_image_features_matches_local_stub(media_docs):
         assert got["mean_luma"] == int(h[8:10], 16)
         assert got["digest"] == h
         assert 1 <= got["width"] <= 1024 and 1 <= got["height"] <= 1024
-
-
-def test_frame_sample_covers_every_stride_frame(media_docs):
-    fb, st = 8, 2
-    out = frame_sample(media_docs, frame_bytes=fb, stride=st).collect()
-    by_doc: dict[int, list] = {}
-    for r in out:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    for r in media_docs.select("doc_id", "media").collect():
-        b = bytes(r["media"])
-        n_frames = (len(b) + fb - 1) // fb
-        expect = list(range(0, n_frames, st))
-        got = sorted(x["frame_idx"] for x in by_doc[r["doc_id"]])
-        assert got == expect
-        for x in by_doc[r["doc_id"]]:
-            chunk = b[x["frame_idx"] * fb : (x["frame_idx"] + 1) * fb]
-            assert x["frame_digest"] == hashlib.md5(chunk).hexdigest()
-            assert x["frame_len"] == len(chunk)
-
-
-def test_audio_meta_is_column_algebra(media_docs):
-    # no Python stage: the plan must stay whole-stage-codegen-able
-    plan = audio_meta(media_docs)._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
-    r = audio_meta(media_docs).where(F.col("doc_id") == 1).collect()[0]
-    n = len(b"IMG0doc 1 body " + b"x" * 7)
-    assert r["n_bytes"] == n
-    assert r["n_samples"] == n // 2
-    assert r["duration_ms"] == (n // 2) * 1000 // 16000
 
 
 def test_downsample_is_a_real_box_average(spark):
@@ -239,42 +207,3 @@ def test_downsample_webp_is_exact(spark):
     assert (r["width"], r["height"]) == (6, 4)
     assert r["mean_luma"] == int(small.sum() // small.size)
 
-
-def test_malformed_riff_degrades_to_digest_row(spark):
-    """ADVICE r4: a blob carrying the RIFF/WAVE or RIFF/AVI magic
-    that the codec REJECTS (non-PCM fmt, truncated container) must
-    degrade to the disclosed kind='other' digest row — one bad blob
-    in a lake must not fail the whole job."""
-    import struct
-
-    import numpy as np
-
-    from georaster_spark.operators.multimodal import (
-        decode_audio_features,
-        decode_video_features,
-        _digest_features,
-    )
-    import hashlib as _hl
-    import pandas as pd
-
-    # RIFF/WAVE with fmt audio_format=2 (ADPCM — not PCM) + data
-    fmt = struct.pack("<HHIIHH", 2, 1, 16000, 32000, 2, 16)
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"data" + struct.pack("<I", 4) + b"\x01\x02\x03\x04"
-    bad_wav = b"RIFF" + struct.pack("<I", len(body)) + body
-    # RIFF/AVI that is truncated garbage past the magic
-    bad_avi = b"RIFF" + struct.pack("<I", 20) + b"AVI " + b"\x00" * 8
-
-    df = spark.createDataFrame(
-        [(1, bytearray(bad_wav)), (2, bytearray(bad_avi))],
-        "doc_id long, media binary",
-    )
-    audio = {r["doc_id"]: r for r in decode_audio_features(df).collect()}
-    video = {r["doc_id"]: r for r in decode_video_features(df).collect()}
-    assert audio[1]["kind"] == "other" and audio[2]["kind"] == "other"
-    assert video[1]["kind"] == "other" and video[2]["kind"] == "other"
-    # and the fallback really is the documented digest formula
-    h = _hl.md5(bad_wav).hexdigest()
-    f = _digest_features(pd.Series([h]))
-    assert audio[1]["mean_abs"] == int(f["mean_luma"][0])
-    assert video[1]["mean_luma"] == int(f["mean_luma"][0])

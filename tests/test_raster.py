@@ -130,9 +130,17 @@ class TestDecode:
         rows = window_from_tiles(tiles, geom, 0, 0, 1, 1).collect()
         assert len(rows) == 1 and rows[0].value is None
 
-    def test_roundtrip_pixels_tiles(self, spark, world400):
-        """tiles → pixels → tiles is the identity on data layout."""
-        geom, arr, tiles = world400
+    @pytest.mark.parametrize(
+        "fixture",
+        [fixture_world400, fixture_sat200],  # planar; chunky, one padded tile
+        ids=["world400", "sat200"],
+    )
+    def test_roundtrip_pixels_tiles(self, spark, fixture):
+        """tiles → pixels → tiles is the identity on data layout: a
+        chunky chunk comes back as one interleaved row, not a row per
+        band."""
+        geom, arr = fixture()
+        tiles = array_to_tiles_df(spark, fixture.__name__, geom, arr)
         px = tiles_to_pixels(tiles, geom)
         back = pixels_to_tiles(px, geom)
         a = {
@@ -144,6 +152,13 @@ class TestDecode:
             for r in back.collect()
         }
         assert a == b
+
+    def test_tiles_to_pixels_is_one_arrow_stage(self, spark, world400):
+        """The chunk explode is one Arrow kernel; NaN→NULL happens in it,
+        not in a projection after it."""
+        geom, arr, tiles = world400
+        plan = tiles_to_pixels(tiles, geom)._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan and "MapInPandas" not in plan and "isnan" not in plan
 
 
 class TestDtm:
@@ -353,10 +368,7 @@ class TestFocalStats:
         """Tile-halo kernel == the 9×-explode JVM formulation on
         sparse rasters with holes, across block-size regimes and
         negative coordinates."""
-        from georaster_spark.operators.raster import (
-            focal_stats_explode,
-            focal_stats_halo,
-        )
+        from georaster_spark.operators.raster import focal_stats_halo
 
         pts = [
             (x, y, float((x * 7 + y * 13) % 29))
@@ -369,6 +381,41 @@ class TestFocalStats:
         ref = sorted(map(tuple, focal_stats_explode(px).collect()))
         assert len(halo) == len(pts)
         assert halo == ref
+
+
+def focal_stats_explode(pixels, x_col: str = "x", y_col: str = "y", v_col: str = "value"):
+    """Reference formulation of ``focal_stats_halo``: every pixel
+    contributes itself to all 9 neighbor positions (9× shuffle), one
+    groupBy on the position, then an inner join back onto the pixel
+    set to keep only positions that actually exist. 100% JVM/codegen
+    — used as the equality oracle in tests and viable when the 9×
+    shuffle is cheaper than a Python kernel (small rasters)."""
+    x, y = F.col(x_col), F.col(y_col)
+    contrib = pixels.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        (x + dx).cast("long").alias("cx"),
+                        (y + dy).cast("long").alias("cy"),
+                    )
+                    for dx in (-1, 0, 1)
+                    for dy in (-1, 0, 1)
+                ]
+            )
+        ).alias("_t"),
+        F.col(v_col).cast("double").alias("_v"),
+    )
+    agg = contrib.groupBy(
+        F.col("_t.cx").alias("x"), F.col("_t.cy").alias("y")
+    ).agg(
+        F.count("_v").alias("n_nb"),
+        F.sum("_v").alias("sum_v"),
+        F.min("_v").alias("min_v"),
+        F.max("_v").alias("max_v"),
+    )
+    present = pixels.select(x.cast("long").alias("x"), y.cast("long").alias("y"))
+    return agg.join(present, ["x", "y"])
 
 
 class TestHornGradients:

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import importlib
 import inspect
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -137,3 +139,26 @@ def test_zip_directory_is_reread_only_when_the_archive_changes(tmp_path, monkeyp
     importlib.invalidate_caches()
     assert reads.count(arc) == 1
     assert importlib.import_module("gr_zipcache_b").Y == 2
+
+
+def test_get_spark_runs_python_stages_outside_the_repo(tmp_path):
+    """A driver started in another directory still runs Python stages:
+    the workers, started as ``python -m georaster_spark.pyworker``,
+    find the package through ``spark.executorEnv.PYTHONPATH``."""
+    script = tmp_path / "job.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {str(PKG.parent)!r})\n"
+        "from georaster_spark.session import get_spark\n"
+        "def ids(batches):\n"
+        "    yield from batches\n"
+        "spark = get_spark('outside', cores=1, extra_conf={'spark.driver.memory': '1g'})\n"
+        "print('ROWS', spark.range(3).mapInArrow(ids, 'id long').count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "ROWS 3" in out.stdout, out.stderr[-2000:]

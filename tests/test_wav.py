@@ -71,24 +71,6 @@ class TestDecoder:
             decode_wav(blob[:-10])
 
 
-def test_audio_feature_kernel_real_and_fallback(spark):
-    """WAV rows decode for real; a non-RIFF blob keeps the disclosed
-    digest fallback. Hand-checked doc: 4 samples [100,-200,300,-400]
-    at 8 kHz -> mean_abs = 250, duration 0 ms."""
-    from georaster_spark.operators.multimodal import decode_audio_features
-
-    blob = encode_wav(np.array([100, -200, 300, -400], np.int16), 8000)
-    df = spark.createDataFrame(
-        [(1, bytearray(blob)), (2, bytearray(b"MP3junkbytes"))],
-        "doc_id long, media binary",
-    )
-    rows = {r["doc_id"]: r for r in decode_audio_features(df).collect()}
-    assert rows[1]["kind"] == "wav"
-    assert (rows[1]["n_samples"], rows[1]["sample_rate"]) == (4, 8000)
-    assert rows[1]["mean_abs"] == 250
-    assert rows[2]["kind"] == "other"
-
-
 class TestAviMjpeg:
     def test_round_trip_exact(self):
         from georaster_spark.sources.avi import decode_avi_mjpeg, encode_avi_mjpeg
@@ -120,22 +102,3 @@ class TestAviMjpeg:
         with pytest.raises(AviError, match="non-JPEG frame"):
             decode_avi_mjpeg(bad)
 
-    def test_video_feature_kernel_real_and_fallback(self, spark):
-        """Hand-checked: 3 constant 8x8 frames [10, 27, 44] at stride 2
-        sample frames 0 and 2 -> mean (10+44)//2 = 27."""
-        from georaster_spark.operators.multimodal import decode_video_features
-        from georaster_spark.sources.avi import encode_avi_mjpeg
-
-        frames = [np.full((8, 8), 10 + 17 * f, np.uint8) for f in range(3)]
-        blob = encode_avi_mjpeg(frames, usec_per_frame=7000)
-        df = spark.createDataFrame(
-            [(1, bytearray(blob)), (2, bytearray(b"notavideo"))],
-            "doc_id long, media binary",
-        )
-        rows = {r["doc_id"]: r for r in decode_video_features(df, stride=2).collect()}
-        r = rows[1]
-        assert r["kind"] == "mjpeg"
-        assert (r["n_frames"], r["n_sampled"]) == (3, 2)
-        assert (r["width"], r["height"], r["usec_per_frame"]) == (8, 8, 7000)
-        assert r["mean_luma"] == 27
-        assert rows[2]["kind"] == "other"

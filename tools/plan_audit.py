@@ -51,12 +51,30 @@ def explain_str(df) -> str:
     return buf.getvalue()
 
 
+def _blank_partition_counts(plan: str) -> str:
+    """``hashpartitioning(<keys>, 4)`` -> ``hashpartitioning(<keys>, N)``
+    (and ``rangepartitioning``), the keys being any nested expressions."""
+    parts, pos = [], 0
+    for m in re.finditer(r"(?:hash|range)partitioning\(", plan):
+        depth, j = 1, m.end()
+        while depth and j < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        parts.append(plan[pos : m.start()] + re.sub(r", \d+\)$", ", N)", plan[m.start() : j]))
+        pos = j
+    return "".join(parts) + plan[pos:]
+
+
 def normalize_ids(plan: str) -> str:
     """Blank what a session numbers as it goes (``#<exprId>``,
     ``plan_id=<n>``, ``RDD[<n>]``, lambda-variable suffixes, RDD call
-    sites) so dumps from different sessions diff cleanly; the
+    sites) and what follows the core count (the partition count of
+    ``hashpartitioning``/``rangepartitioning``, ``splits=Some(<n>)``)
+    so dumps from different sessions and hosts diff cleanly; the
     invariants are checked on the raw plan."""
     plan = re.sub(r"#\d+", "#N", plan)
+    plan = _blank_partition_counts(plan)
+    plan = re.sub(r"splits=Some\(\d+\)", "splits=Some(N)", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
     plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
     plan = re.sub(r"(lambda \w+_)\d+", r"\1N", plan)
