@@ -210,19 +210,6 @@ def polygon_rects_sql() -> str:
 
 # ------------------------------------------------------- raster fixtures
 
-TILES_SCHEMA = T.StructType(
-    [
-        T.StructField("raster_id", T.StringType(), False),
-        T.StructField("image_idx", T.IntegerType(), False),
-        T.StructField("band", T.IntegerType(), False),
-        T.StructField("tile_col", T.IntegerType(), False),
-        T.StructField("tile_row", T.IntegerType(), False),
-        T.StructField("pad_right", T.IntegerType(), False),
-        T.StructField("pad_down", T.IntegerType(), False),
-        T.StructField("data", T.ArrayType(T.DoubleType()), False),
-    ]
-)
-
 
 def array_to_tiles_df(
     spark: SparkSession,
@@ -241,6 +228,8 @@ def array_to_tiles_df(
       ``tile_w - pad_right``, last-row chunks have ``tile_h -
       pad_down`` rows.
     """
+    from georaster_spark.operators.raster import TILES_SCHEMA
+
     if arr.ndim == 2:
         arr = arr[:, :, None]
     h, w, nb = arr.shape

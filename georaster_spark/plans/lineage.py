@@ -14,10 +14,15 @@ data and lineage become visible together, so there is no
 "data-written-but-lineage-missing" window. A crash mid-write leaves
 only unreachable files (invisible to readers, GC-able).
 
-``checksum`` is an order-independent content hash (sum of xxhash64
-over the carried columns): it enforces the north-rule byte-identity
-invariant — the checksum of (url, text) per partition must match
-between pipeline entry and exit (``verify_text_identity``).
+``checksum`` is an order-independent content hash (``bit_xor`` of
+xxhash64 over the carried columns), taken per partition from the
+committed files themselves: the stage writes its output once, then
+reads back only the partition and checksum columns of the files that
+write produced, before the pointer swap. A failed read-back commits
+nothing, like a crash mid-write. On the input side a stage only
+counts rows per pending partition (``input_rows``). The north-rule
+byte-identity audit — the checksum of (url, text) per partition must
+match between pipeline entry and exit — is ``verify_text_identity``.
 
 Resume = ``left_anti`` join of the input's partitions against the
 committed lineage: done partitions are never recomputed.
@@ -85,48 +90,49 @@ def run_stage(
 
     The transform must preserve ``part_col`` (the checkpoint key):
     output rows of partition p derive only from input rows of p.
+    The output is written once and not persisted: each partition's
+    ``output_rows``/``checksum`` come from a read-back of the written
+    files (``write_table``'s ``extra`` function), before the commit.
     Returns {"pending": n, "done_before": m}.
     """
     done = sorted(done_partitions(output_path, stage))
     done_df = local_df(spark, [(p,) for p in done], f"{part_col} long")
     pending = source.join(F.broadcast(done_df), part_col, "left_anti")
 
-    ck_cols = checksum_cols or [part_col]
-    in_stats = {
-        r["part"]: (r["n_rows"], r["checksum"])
-        for r in content_checksum(pending, part_col, ck_cols).collect()
+    in_rows = {
+        r["part"]: r["count"]
+        for r in pending.groupBy(F.col(part_col).cast("long").alias("part")).count().collect()
     }
-    if not in_stats:
+    if not in_rows:
         return {"pending": 0, "done_before": len(done)}
 
     out = transform(pending)
     if part_col not in out.columns:
         raise ValueError(f"transform must preserve the checkpoint column {part_col!r}")
-    out = out.persist()
-    try:
+    ck_cols = checksum_cols or [part_col]
+
+    def lineage_extra(written: DataFrame) -> dict:
         out_stats = {
             r["part"]: (r["n_rows"], r["checksum"])
-            for r in content_checksum(out, part_col, ck_cols).collect()
+            for r in content_checksum(written, part_col, ck_cols).collect()
         }
         now = time.time()
         rows = [
             {
                 "stage": stage,
                 "part": int(p),
-                "input_rows": int(in_stats[p][0]),
+                "input_rows": int(n),
                 "output_rows": int(out_stats.get(p, (0, 0))[0]),
                 "checksum": int(out_stats.get(p, (0, 0))[1]),
                 "committed_at": now,
             }
-            for p in in_stats
+            for p, n in in_rows.items()
         ]
-        mode = "append" if icetable.current_snapshot(output_path) else "overwrite"
-        icetable.write_table(
-            out, output_path, mode=mode, extra={"stage": stage, "lineage": rows}
-        )
-    finally:
-        out.unpersist()
-    return {"pending": len(in_stats), "done_before": len(done)}
+        return {"stage": stage, "lineage": rows}
+
+    mode = "append" if icetable.current_snapshot(output_path) else "overwrite"
+    icetable.write_table(out, output_path, mode=mode, extra=lineage_extra)
+    return {"pending": len(in_rows), "done_before": len(done)}
 
 
 def metrics_df(spark: SparkSession, output_path: str) -> DataFrame:

@@ -15,8 +15,9 @@ implements the same *contract* on plain partitioned Parquet:
 - **time travel**: ``read_table(..., snapshot_id=...)``;
 - **rollback**: repoint without deleting data;
 - **file skipping**: each commit records per-file column min/max/
-  null-count stats (read from the parquet footers in an
-  executor-side kernel — the driver never opens a data file), and
+  null-count stats (read from the parquet footers with pyarrow on
+  the driver, which lists and sizes the files anyway; a footer is a
+  few KB, so this starts no Spark job), and
   ``read_table(..., filters=[...])`` prunes whole files whose stat
   range cannot satisfy the predicate before Spark ever lists them —
   Iceberg's manifest-level ``lower_bounds``/``upper_bounds`` scan
@@ -36,6 +37,7 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -182,73 +184,43 @@ def _stat_key(v):
     return None
 
 
-def collect_file_stats(spark, table_path: str, files: list[dict]) -> dict[str, dict]:
-    """Per-file column stats from the parquet footers, gathered in an
-    executor-side Arrow kernel (the driver ships relative paths and
-    receives a few rows per file — it opens no data file; same
-    architecture as the raster header kernel). A column whose stats
-    are missing in ANY row group is marked unknown for that file
-    (min/max null => never pruned on)."""
-    if not files:
-        return {}
+def collect_file_stats(path: str) -> dict[str, dict]:
+    """Per-column min/max/null-count stats of one parquet file, read
+    from its footer with pyarrow on the driver (a footer is a few KB,
+    and ``write_table`` already walks and sizes every data file there).
+    A column whose stats are missing in ANY row group is marked
+    unknown for the file (min/max None => never pruned on)."""
+    import pyarrow.parquet as pq
 
-    def kernel(batches):
-        import json as _json
-
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for rel, full in zip(pdf["rel"], pdf["full"]):
-                md = pq.ParquetFile(full).metadata
-                per_col: dict[str, dict] = {}
-                for rg in range(md.num_row_groups):
-                    for ci in range(md.num_columns):
-                        col = md.row_group(rg).column(ci)
-                        name = col.path_in_schema
-                        if "." in name:
-                            continue  # nested leaves: not prunable here
-                        s = col.statistics
-                        cs = per_col.setdefault(
-                            name, {"min": None, "max": None, "nulls": 0, "ok": True}
-                        )
-                        if s is None or not s.has_min_max:
-                            cs["ok"] = False
-                            continue
-                        mn, mx = _stat_key(s.min), _stat_key(s.max)
-                        if mn is None or mx is None:
-                            cs["ok"] = False
-                        else:
-                            cs["min"] = mn if cs["min"] is None else min(cs["min"], mn)
-                            cs["max"] = mx if cs["max"] is None else max(cs["max"], mx)
-                        if s.null_count is not None:
-                            cs["nulls"] += s.null_count
-                for name, cs in per_col.items():
-                    rows.append(
-                        {
-                            "rel": rel,
-                            "col": name,
-                            "stat_json": _json.dumps(
-                                {
-                                    "min": cs["min"] if cs["ok"] else None,
-                                    "max": cs["max"] if cs["ok"] else None,
-                                    "nulls": cs["nulls"],
-                                }
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["rel", "col", "stat_json"])
-
-    paths_df = local_df(
-        spark,
-        [(f["path"], os.path.join(table_path, f["path"])) for f in files],
-        "rel string, full string",
-    )
-    out: dict[str, dict] = {}
-    for r in paths_df.mapInPandas(kernel, schema="rel string, col string, stat_json string").collect():
-        out.setdefault(r["rel"], {})[r["col"]] = json.loads(r["stat_json"])
-    return out
+    md = pq.read_metadata(path)
+    per_col: dict[str, dict] = {}
+    for rg in range(md.num_row_groups):
+        for ci in range(md.num_columns):
+            col = md.row_group(rg).column(ci)
+            name = col.path_in_schema
+            if "." in name:
+                continue  # nested leaves: not prunable here
+            s = col.statistics
+            cs = per_col.setdefault(name, {"min": None, "max": None, "nulls": 0, "ok": True})
+            if s is None or not s.has_min_max:
+                cs["ok"] = False
+                continue
+            mn, mx = _stat_key(s.min), _stat_key(s.max)
+            if mn is None or mx is None:
+                cs["ok"] = False
+            else:
+                cs["min"] = mn if cs["min"] is None else min(cs["min"], mn)
+                cs["max"] = mx if cs["max"] is None else max(cs["max"], mx)
+            if s.null_count is not None:
+                cs["nulls"] += s.null_count
+    return {
+        name: {
+            "min": cs["min"] if cs["ok"] else None,
+            "max": cs["max"] if cs["ok"] else None,
+            "nulls": cs["nulls"],
+        }
+        for name, cs in per_col.items()
+    }
 
 
 def file_matches(f: dict, filters: list[tuple]) -> bool:
@@ -368,7 +340,7 @@ def write_table(
     path: str,
     partition_by: list[str] | None = None,
     mode: str = "overwrite",
-    extra: dict[str, Any] | None = None,
+    extra: dict[str, Any] | Callable[[DataFrame], dict[str, Any]] | None = None,
     cluster_by: list[str] | None = None,
     n_files: int | None = None,
     expected_parent: str | None = "auto",
@@ -386,6 +358,13 @@ def write_table(
     ``CommitConflict`` here instead of being silently clobbered
     (lost update). Pass ``expected_parent`` to pin an explicit basis
     (e.g. a snapshot id read earlier in a read-modify-write).
+
+    ``extra`` is stored in the manifest as is, or, when it is a
+    function, called with a DataFrame over the rows this call wrote
+    (its data files only, read back with ``df``'s schema) and its
+    result stored: it runs after the files exist and before the
+    manifest is built, so what it derives from them commits in the
+    same snapshot, and if it raises nothing is committed.
 
     ``cluster_by`` range-partitions and sorts the data on the given
     keys before writing (Iceberg ``write.sort-order`` analog): each
@@ -425,11 +404,14 @@ def write_table(
         for n in names:
             if n.endswith(".parquet"):
                 p = os.path.join(root, n)
-                files.append({"path": os.path.relpath(p, path), "bytes": os.path.getsize(p)})
+                files.append(
+                    {
+                        "path": os.path.relpath(p, path),
+                        "bytes": os.path.getsize(p),
+                        "stats": collect_file_stats(p),
+                    }
+                )
     files.sort(key=lambda f: f["path"])  # part order == range order
-    stats = collect_file_stats(df.sparkSession, path, files)
-    for f in files:
-        f["stats"] = stats.get(f["path"], {})
     if mode == "append" and parent is not None:
         pm = read_manifest(path, parent)
         # schema evolution (Iceberg add/drop-column semantics): the
@@ -450,6 +432,8 @@ def write_table(
                     f"{fld.dataType.simpleString()}"
                 )
         files = manifest_files(path, pm)[0] + files
+    if callable(extra):
+        extra = extra(_scan(df.sparkSession, df.schema, data_dir, [data_dir]))
 
     manifest = {
         "snapshot_id": snapshot_id,
@@ -500,6 +484,20 @@ def write_table(
     return snapshot_id
 
 
+def _scan(spark: SparkSession, schema, base: str, paths: list[str]) -> DataFrame:
+    """Parquet ``paths`` (files or directories) under the snapshot
+    directory ``base`` (the one that sits directly above the
+    hive-style partition dirs), read with ``schema``.
+
+    The schema is the reader schema: no parquet footer is opened to
+    infer it, pre-evolution files read added columns as NULL of the
+    declared type, and columns the schema no longer carries are not
+    read. Hive partition columns come out after the data columns, so
+    the schema's column order is restored."""
+    d = spark.read.schema(schema).option("basePath", base).parquet(*paths)
+    return d.select(*schema.fieldNames())
+
+
 def read_table(
     spark: SparkSession,
     path: str,
@@ -528,19 +526,7 @@ def read_table(
         base = os.path.join(path, *parts[:2])
         by_snap.setdefault(base, []).append(os.path.join(path, rel))
 
-    def _align(d: DataFrame) -> DataFrame:
-        # hive partition columns come out after the data columns:
-        # restore the manifest's column order
-        return d.select(*schema.fieldNames())
-
-    # the manifest schema is the reader schema: no parquet footer is
-    # opened to infer it, pre-evolution files read added columns as
-    # NULL of the declared type, and columns the live schema no
-    # longer carries are not read
-    dfs = [
-        _align(spark.read.schema(schema).option("basePath", base).parquet(*files))
-        for base, files in sorted(by_snap.items())
-    ]
+    dfs = [_scan(spark, schema, base, files) for base, files in sorted(by_snap.items())]
     out = dfs[0]
     for d in dfs[1:]:
         out = out.unionByName(d)

@@ -19,9 +19,7 @@ from georaster_spark.sources.vp8_tables import (
     COEF_TREE,
     COEF_UPDATE_PROBS,
     DCT_0,
-    DCT_4,
     DCT_CAT1,
-    DCT_CAT6,
     DCT_EOB,
     DEFAULT_COEF_PROBS,
     KF_BMODE_PROB,

@@ -4,6 +4,7 @@ including the kill-and-resume scenario."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -223,6 +224,30 @@ class TestLineageResume:
         assert len(rows) == 8
         assert all(r["input_rows"] == r["output_rows"] == 50 for r in rows)
 
+    def test_lineage_matches_committed_output(self, spark, docs, tmp_path):
+        """Each lineage row's output_rows/checksum is the content
+        checksum of the committed rows of its part; a part whose rows
+        the transform drops records 0 rows and checksum 0."""
+        out_path = str(tmp_path / "out")
+
+        def drop_part3(df):
+            return self._xform(df).where(F.col("part") != 3)
+
+        lineage.run_stage(
+            spark, "s1", docs, drop_part3, "part", out_path, checksum_cols=["url", "text"]
+        )
+        want = {
+            r["part"]: (r["n_rows"], r["checksum"])
+            for r in lineage.content_checksum(
+                icetable.read_table(spark, out_path), "part", ["url", "text"]
+            ).collect()
+        }
+        rows = {r["part"]: r for r in lineage.lineage_rows(out_path, "s1")}
+        assert sorted(rows) == list(range(8)) and 3 not in want
+        for p, r in rows.items():
+            assert r["input_rows"] == 50
+            assert (r["output_rows"], r["checksum"]) == want.get(p, (0, 0))
+
     def test_rerun_is_noop(self, spark, docs, tmp_path):
         out_path = str(tmp_path / "out")
         lineage.run_stage(spark, "s1", docs, self._xform, "part", out_path)
@@ -275,6 +300,52 @@ class TestLineageResume:
             "text", F.when(F.col("part") == 2, F.lit("X")).otherwise(F.col("text"))
         )
         assert not lineage.verify_text_identity(docs, corrupted, "part", ["url", "text"])
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs launched by ``fn()``, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestJobsPerCall:
+    def test_write_table_is_one_job(self, spark, docs, tmp_path):
+        """The write is the only job: footer stats are read on the
+        driver, not in a second Spark job."""
+        path = str(tmp_path / "one")
+        assert _jobs(spark, lambda: icetable.write_table(docs.select("url", "part"), path)) == 1
+        assert all(f["stats"] for f in icetable.read_manifest(path)["files"])
+
+    def test_run_stage_writes_once_and_persists_nothing(self, spark, docs, tmp_path, monkeypatch):
+        """One stage is a per-part input count, the write and a narrow
+        read-back of the written files (5 jobs with adaptive
+        execution), and no DataFrame is cached when the write starts."""
+        persistent = spark.sparkContext._jsc.getPersistentRDDs
+        before = persistent().size()
+        seen = []
+        write = icetable.write_table
+
+        def watched(df, *args, **kwargs):
+            seen.append(persistent().size())
+            return write(df, *args, **kwargs)
+
+        monkeypatch.setattr(icetable, "write_table", watched)
+        out_path = str(tmp_path / "out")
+        n = _jobs(
+            spark,
+            lambda: lineage.run_stage(
+                spark, "s1", docs, TestLineageResume._xform, "part", out_path,
+                checksum_cols=["url", "text"],
+            ),
+        )
+        assert n <= 5
+        assert seen == [before]
 
 
 class TestExpireSnapshots:

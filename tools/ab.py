@@ -12,8 +12,10 @@ metric of ``BENCHMARK.json``, every seed's pair, each side's median
 and quartiles, and the pairs the change won (ties count for neither),
 with the verdict of the claim rule: at least 9/10 of the pairs won and
 the medians apart by more than the base's interquartile range.
-Every run is also printed to stderr as one JSON line; keep them with
-``2> runs.jsonl``.
+Every run is also printed to stderr as one JSON line, with the run's
+``context`` line (per-iteration ``wall_samples_s``, sample counts,
+loadavg), so a slow host can be told apart from slow iterations; keep
+them with ``2> runs.jsonl``.
 """
 
 from __future__ import annotations
@@ -34,7 +36,8 @@ def parse_seeds(text: str) -> list[int]:
     return seeds
 
 
-def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
+def run_once(checkout: str, workload: str, seed: int, seconds: float) -> tuple[dict, dict]:
+    """The run's end-to-end values and its ``context`` line."""
     cmd = [
         sys.executable, "perfbench/run.py", "--workload", workload,
         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0",
@@ -44,11 +47,15 @@ def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
     if proc.returncode or not lines:
         raise SystemExit(f"{checkout} seed {seed} failed:\n{proc.stderr[-3000:]}")
     out = json.loads(lines[-1])
-    return {
+    context = next(
+        (json.loads(ln)["context"] for ln in reversed(lines) if ln.startswith('{"context"')), {}
+    )
+    values = {
         "failed": out["failed"],
         "attempted": out["attempted"],
         **{k: v["value"] for k, v in out["metrics"].items()},
     }
+    return values, context
 
 
 def quartiles(vals: list[float]) -> tuple[float, float, float]:
@@ -99,8 +106,9 @@ def main(argv: list[str] | None = None) -> int:
     for i, seed in enumerate(seeds):
         order = ("base", "change") if i % 2 == 0 else ("change", "base")
         for side in order:
-            r = runs[side, seed] = run_once(sides[side], args.workload, seed, seconds)
-            line = {"side": side, "seed": seed, "workload": args.workload, **r}
+            r, context = run_once(sides[side], args.workload, seed, seconds)
+            runs[side, seed] = r
+            line = {"side": side, "seed": seed, "workload": args.workload, **r, "context": context}
             print(json.dumps(line), file=sys.stderr, flush=True)
     failed = {k: r["failed"] for k, r in runs.items() if r["failed"]}
     print(f"# {args.workload}: {len(seeds)} pairs, failed runs: {failed or 'none'}")
