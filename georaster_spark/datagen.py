@@ -25,7 +25,6 @@ from dataclasses import dataclass, field
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from georaster_spark.grid import RasterGeometry
 from georaster_spark.session import local_df
@@ -156,45 +155,6 @@ def polygons() -> list[Polygon]:
         y0 = HOT_LAT0 + _EPS
         polys.append(_rect(f"poly{j + k}", x0, y0, x0 + 0.003, y0 + HOT_SZ - 2 * _EPS))
     return polys
-
-
-POLYGON_SCHEMA = T.StructType(
-    [
-        T.StructField("poly_id", T.StringType(), False),
-        T.StructField(
-            "ring",
-            T.ArrayType(
-                T.StructType(
-                    [T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType())]
-                )
-            ),
-        ),
-        T.StructField(
-            "bbox",
-            T.StructType(
-                [
-                    T.StructField("xmin", T.DoubleType()),
-                    T.StructField("ymin", T.DoubleType()),
-                    T.StructField("xmax", T.DoubleType()),
-                    T.StructField("ymax", T.DoubleType()),
-                ]
-            ),
-        ),
-    ]
-)
-
-
-def polygons_df(spark: SparkSession, polys: list[Polygon] | None = None) -> DataFrame:
-    polys = polys if polys is not None else polygons()
-    rows = [
-        (
-            p.poly_id,
-            [(float(x), float(y)) for x, y in p.ring],
-            p.bbox,
-        )
-        for p in polys
-    ]
-    return local_df(spark, rows, POLYGON_SCHEMA)
 
 
 def polygon_rects_sql() -> str:

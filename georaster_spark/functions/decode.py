@@ -16,7 +16,7 @@ Mirrors the reference's ``RasterValue`` conversions:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -33,16 +33,6 @@ def mapbox_height(r: Column, g: Column, b: Column) -> Column:
         (r.cast("double") * 65536.0 + g.cast("double") * 256.0 + b.cast("double")) / 10.0
         - 10000.0
     )
-
-
-def height_from_rgba(rgba: Column, encoding: str = "terrarium") -> Column:
-    """Height from an assembled ARRAY<INT> rgb(a) column."""
-    r, g, b = rgba[0], rgba[1], rgba[2]
-    if encoding == "terrarium":
-        return terrarium_height(r, g, b)
-    if encoding == "mapbox":
-        return mapbox_height(r, g, b)
-    raise ValueError(encoding)
 
 
 # per-target source families, matching the reference's TryFrom arms
@@ -140,14 +130,3 @@ def format_value(value: Column, rgba: Column | None = None) -> Column:
         rgba.isNotNull(),
         F.concat(F.lit("("), F.array_join(rgba, ","), F.lit(")")),
     ).otherwise(scalar)
-
-
-def nullify_nodata(pixels: DataFrame, nodata: float | None) -> DataFrame:
-    """Map a sentinel nodata value to NULL (e.g. the DTM's nodata=0,
-    ``data/Makefile:13``)."""
-    if nodata is None:
-        return pixels
-    return pixels.withColumn(
-        "value",
-        F.when(F.col("value") == F.lit(nodata), F.lit(None)).otherwise(F.col("value")),
-    )

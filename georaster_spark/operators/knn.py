@@ -9,8 +9,9 @@ documents are probed with an equi-join on ``cell`` and the top-k
 window shuffles only the candidates, partitioned by query id.
 
 ``knn_table_join`` (every document): the same index and guarantee
-keyed by cell, broadcast once; top-k, proof and exact fallback are one
-projection per document, so the call shuffles nothing.
+keyed by cell, shipped as sorted NumPy arrays inside one ``mapInArrow``
+kernel; lookup, top-k, proof and exact fallback run per Arrow batch,
+so the call shuffles and joins nothing.
 
 Generalizes the reference's world→tile→local-sample lookup
 (``src/pmtiles.rs:37-51``) from one tile to an expanding disk.
@@ -19,18 +20,15 @@ Generalizes the reference's world→tile→local-sample lookup
 from __future__ import annotations
 
 import math
+from collections.abc import Iterator
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from georaster_spark.cells import (
-    cell_bounds,
-    cell_bounds_cols,
-    cell_disk_py,
-    cell_encode_cols,
-    cell_encode_py,
-)
-from georaster_spark.functions.geo import EARTH_RADIUS_M, haversine_cols
+from georaster_spark.cells import cell_bounds, cell_disk_py, cell_encode_cols, cell_encode_py
+from georaster_spark.functions.geo import EARTH_RADIUS_M, haversine_cols, haversine_np
 from georaster_spark.session import local_df
 
 
@@ -61,73 +59,78 @@ def knn_table_join(
     ``lon``, ``lat``) — the table-scale kNN (E6 generalized from
     per-query to per-row, the shape a 100 TB enrichment actually runs).
 
-    Plan: each POI's cell-disk at resolution ``res`` is expanded
-    driver-side and grouped into one index row per cell carrying that
-    cell's candidate POIs as an array; the index is a ``LocalTableScan``
-    (``local_df``), broadcast and left-joined to the docs on their own
-    cell (Chebyshev symmetry makes the poi→disk index equivalent to
-    probing the doc's own disk). One
-    projection per doc then sorts its candidates by (dist, poi_id) and
-    keeps k. A doc whose kth candidate is NOT provably inside the
-    searched disk (ring-boundary bound, cf. ``_disk_boundary_dist_m``)
-    — or with < k candidates, or no index row at all — takes the same
-    top-k over the literal array of all POIs instead, so every doc gets
+    Plan: one ``mapInArrow`` NumPy kernel over ``(doc_id, lon, lat,
+    cell)``. The driver expands each POI's cell-disk at resolution
+    ``res`` into a sorted cell array, a ``-1``-padded candidate matrix
+    (one row per cell, at least ``k`` wide) and a per-cell bound
+    (``_disk_boundary_dist_m``); they ship inside the kernel.
+    Chebyshev symmetry makes the poi→disk index equivalent to probing
+    the doc's own disk. Each batch looks its cells up with
+    ``searchsorted`` and takes a stable haversine top-k over the
+    candidates. A doc whose kth candidate is NOT provably inside the
+    searched disk — or with < k candidates, or no index row at all —
+    takes the same top-k over all POIs instead, so every doc gets
     exactly the brute-force result.
 
-    Returns (doc_id, poi_id, dist_m, rank); ties break on
-    (dist, poi_id). No shuffle, no window: one broadcast join, one
-    projection, one explode.
+    Returns (doc_id, poi_id, dist_m, rank); ``doc_id`` keeps its input
+    type, ties break on (dist, poi_id). No shuffle and no join.
     """
-    spark: SparkSession = docs.sparkSession
-    cand_t = "array<struct<poi_id: string, p_lon: double, p_lat: double>>"
-    by_cell: dict[int, list[tuple[str, float, float]]] = {}
-    for pid, plon, plat in pois:
-        for c in cell_disk_py(cell_encode_py(plon, plat, res), ring):
-            by_cell.setdefault(c, []).append((pid, plon, plat))
-    idx = local_df(spark, sorted(by_cell.items()), f"cell long, cands {cand_t}")
-    all_pois = F.array(
-        *(
-            F.struct(F.lit(pid).alias("poi_id"), F.lit(plon).alias("p_lon"), F.lit(plat).alias("p_lat"))
-            for pid, plon, plat in pois
-        )
-    )
+    pois = sorted(pois)  # a stable sort on distance then breaks ties on poi_id
+    n, kk = len(pois), min(k, len(pois))
+    pid = pa.array([p[0] for p in pois], pa.string())
+    plon, plat = np.array([p[1:] for p in pois], dtype=np.float64).reshape(n, 2).T
+    by_cell: dict[int, list[int]] = {}
+    for i, (_, lon, lat) in enumerate(pois):
+        for c in cell_disk_py(cell_encode_py(lon, lat, res), ring):
+            by_cell.setdefault(c, []).append(i)
+    keys = sorted(by_cell)
+    # a last sentinel cell stands for every unindexed cell: no candidates, never proven
+    cells = np.array(keys + [np.iinfo(np.int64).max], dtype=np.int64)
+    cand = np.full((len(cells), max([k] + [len(v) for v in by_cell.values()])), -1, np.int64)
+    for row, c in enumerate(keys):
+        cand[row, : len(by_cell[c])] = by_cell[c]
+    bound = np.array([_disk_boundary_dist_m(c, ring) for c in keys] + [-1.0])
+    # fallback rows per block: caps the (rows, POIs) distance matrix
+    step = max(1, (1 << 22) // max(n, 1))
 
-    def top_k(cands: Column) -> Column:
-        by_dist = F.transform(
-            cands,
-            lambda p: F.struct(
-                haversine_cols(F.col("lon"), F.col("lat"), p["p_lon"], p["p_lat"]).alias("dist_m"),
-                p["poi_id"].alias("poi_id"),
-            ),
-        )
-        return F.slice(F.sort_array(by_dist), 1, k)
+    def top(lon: np.ndarray, lat: np.ndarray, idx: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Stable distance sort of each row's POI indexes (-1 = none)."""
+        d = haversine_np(lon[:, None], lat[:, None], plon[idx], plat[idx])
+        d[idx < 0] = np.inf
+        order = np.argsort(d, axis=1, kind="stable")
+        return np.take_along_axis(d, order, 1), np.take_along_axis(idx, order, 1)
 
-    # per-doc disk-boundary bound from the doc's OWN cell geometry —
-    # Column form of _disk_boundary_dist_m
-    lon0, lat0, lon1, lat1 = cell_bounds_cols(F.col("cell"), res)
-    m_per_deg_lat = math.pi * EARTH_RADIUS_M / 180.0
-    lat_mid = (lat0 + lat1) / 2
-    cell_h = (lat1 - lat0) * F.lit(m_per_deg_lat)
-    cell_w = (lon1 - lon0) * F.lit(m_per_deg_lat) * F.cos(F.radians(lat_mid))
-    half_diag = F.sqrt(cell_w * cell_w + cell_h * cell_h) / 2
-    boundary = F.greatest(
-        F.lit(float(ring)) * F.least(cell_w, cell_h) - half_diag, F.lit(0.0)
-    )
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            lon = batch.column("lon").to_numpy(zero_copy_only=False)
+            lat = batch.column("lat").to_numpy(zero_copy_only=False)
+            cell = batch.column("cell").to_numpy(zero_copy_only=False)
+            row = np.minimum(np.searchsorted(cells, cell), len(cells) - 1)
+            row[cells[row] != cell] = len(cells) - 1
+            dist, poi = top(lon, lat, cand[row])
+            proven = dist[:, k - 1] <= bound[row]  # inf: fewer than k candidates
+            dist, poi = dist[:, :kk], poi[:, :kk]
+            redo = np.flatnonzero(~proven)
+            for s in range(0, len(redo), step):
+                r = redo[s : s + step]
+                d, p = top(lon[r], lat[r], np.broadcast_to(np.arange(n), (len(r), n)))
+                dist[r], poi[r] = d[:, :kk], p[:, :kk]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("doc_id").take(np.repeat(np.arange(batch.num_rows), kk)),
+                    pid.take(poi.ravel()),
+                    pa.array(dist.ravel()),
+                    pa.array(np.tile(np.arange(1, kk + 1, dtype=np.int32), batch.num_rows)),
+                ],
+                names=["doc_id", "poi_id", "dist_m", "rank"],
+            )
 
-    # a doc with no index row has null cands: empty, hence unproven
-    near = top_k(F.coalesce("cands", F.array().cast(cand_t))).alias("near")
-    # `when` reads the kth entry only where it exists
-    kth_ok = F.col("near")[k - 1]["dist_m"] <= boundary
-    proven = F.when(F.size("near") >= k, kth_ok).otherwise(False)
+    lon, lat = F.col("lon"), F.col("lat")
+    doc_t = docs.schema["doc_id"].dataType.simpleString()
     return (
-        docs.where(F.col("lon").isNotNull())
-        .select("doc_id", "lon", "lat", cell_encode_cols(F.col("lon"), F.col("lat"), res).alias("cell"))
-        .join(F.broadcast(idx), "cell", "left")
-        # `near` gets its own projection so the candidate sort runs once
-        # per doc, not once per use below
-        .select("doc_id", "lon", "lat", "cell", near)
-        .select("doc_id", F.posexplode(F.when(proven, F.col("near")).otherwise(top_k(all_pois))))
-        .select("doc_id", "col.poi_id", "col.dist_m", (F.col("pos") + 1).alias("rank"))
+        docs.where(lon.isNotNull() & lat.isNotNull())
+        .select("doc_id", "lon", "lat", cell_encode_cols(lon, lat, res).alias("cell"))
+        .mapInArrow(kernel, f"doc_id {doc_t}, poi_id string, dist_m double, rank int")
     )
 
 
@@ -151,8 +154,9 @@ def knn_join(
     query point (|Q| x disk(rings) rows through ``local_df`` +
     broadcast), which is right for interactive / few-hundred-query
     workloads only. For large query SETS use ``knn_table_join`` —
-    the table-scale path where candidates come from a broadcast disk
-    index and the corpus side never leaves the executors.
+    the table-scale path where candidates come from a per-cell disk
+    index shipped to one kernel and the corpus side never leaves the
+    executors.
     """
     spark: SparkSession = docs.sparkSession
     docs_c = docs.where(F.col(lon_col).isNotNull())

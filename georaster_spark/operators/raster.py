@@ -661,7 +661,6 @@ def d8_flow_halo(
         V[iy, ix] = pdf["_v"].to_numpy(dtype=np.float64)
         M[iy, ix] = True
         center = V[1 : T + 1, 1 : T + 1]
-        C = np.zeros((T, T), dtype=np.int64)
         n_down = np.zeros((T, T), dtype=np.int64)
         best_key = np.zeros((T, T))
         best_code = np.zeros((T, T), dtype=np.int64)

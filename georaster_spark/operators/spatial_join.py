@@ -306,7 +306,6 @@ def salted_cell_counts(
     salt_k: int = 16,
     count_col: str = "n_docs",
     salt_key: str | None = None,
-    salt_expr: Column | None = None,
 ) -> DataFrame:
     """Per-cell counts via two-level salted aggregation (E5).
 
@@ -319,11 +318,9 @@ def salted_cell_counts(
     (monotonically_increasing_id / rand) blocks Catalyst reordering
     and measurably anti-scaled.
     """
-    if salt_expr is None:
-        if salt_key is None:
-            salt_key = next(c for c in docs_with_cell.columns if c != "cell")
-        salt_expr = F.pmod(F.xxhash64(F.col(salt_key)), F.lit(salt_k))
-    salted = docs_with_cell.withColumn("_salt", salt_expr)
+    if salt_key is None:
+        salt_key = next(c for c in docs_with_cell.columns if c != "cell")
+    salted = docs_with_cell.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_key)), F.lit(salt_k)))
     partial = salted.groupBy("cell", "_salt").agg(F.count(F.lit(1)).alias("_partial"))
     return partial.groupBy("cell").agg(F.sum("_partial").cast("long").alias(count_col))
 

@@ -260,9 +260,9 @@ def sql_dwithin_pairs():
 
 def q_knn_table(spark, sf_dir):
     """Table-scale kNN (operators/knn.py knn_table_join): every doc's
-    3 nearest POIs via broadcast per-cell candidate index + per-doc
-    top-k projection, exact fallback for boundary cases — equals brute
-    force."""
+    3 nearest POIs from one Arrow kernel that probes a sorted per-cell
+    candidate index, exact all-POI fallback for boundary cases — equals
+    brute force."""
     from georaster_spark.operators.knn import knn_table_join
 
     d = docs_geocoded(spark, sf_dir)

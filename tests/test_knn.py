@@ -61,19 +61,32 @@ def test_knn_k_larger_than_ring(spark, docs):
 POIS = [(f"poi{i}", 7.1 + (i % 8) * 0.25, 45.1 + (i // 8) * 0.45) for i in range(40)]
 # far from every doc: no doc has an index row, so every doc falls back
 FAR_POIS = [(f"far{i}", 20.0 + i, 60.0) for i in range(5)]
+# an exact planted tie, listed out of poi_id order: ranks follow poi_id.
+# With k=2 the pair alone proves 16 docs near it on the cell-index path
+# (at res 9 / ring 1 the grid POIs prove none: every doc falls back).
+TIE_POIS = [("tie_b", 8.0, 46.0), ("tie_a", 8.0, 46.0)] + POIS[:6]
+# k=1: for 24 docs `in` is the only candidate but `out`, outside their
+# disk, is nearer; only the ring-boundary bound sends them to the fallback
+BOUND_POIS = [("in", 8.0, 46.0), ("out", 8.6, 44.5)]
 
 
-@pytest.mark.parametrize("pois", [POIS, FAR_POIS], ids=["grid", "far"])
-def test_knn_table_join_matches_brute_force(spark, docs, pois):
-    """Every doc's top-3 POIs must equal the exact brute-force result —
-    covering the cell-index fast path, the boundary/too-few fallback
-    and (far POIs) docs with no candidate cell at all."""
+@pytest.mark.parametrize(
+    "pois,k",
+    [(POIS, 3), (FAR_POIS, 3), (TIE_POIS, 2), (FAR_POIS, 7), (BOUND_POIS, 1)],
+    ids=["grid", "far", "tie", "k_over_pois", "bound"],
+)
+def test_knn_table_join_matches_brute_force(spark, docs, pois, k):
+    """Every doc's top-k POIs must equal the exact brute-force result —
+    covering the cell-index path, the boundary/too-few fallback, (far
+    POIs) docs with no candidate cell at all, an exact distance tie on
+    both paths, k above the POI count (every POI, ranked) and a nearer
+    POI outside the searched disk."""
     from georaster_spark.operators.knn import knn_table_join
 
     docs_k = docs.withColumn("doc_id", F.col("doc_seq"))
     got = {
         (r["doc_id"], r["rank"]): r["poi_id"]
-        for r in knn_table_join(docs_k, pois, k=3, res=9, ring=1).collect()
+        for r in knn_table_join(docs_k, pois, k=k, res=9, ring=1).collect()
     }
     # brute force in NumPy
     i = np.arange(N_DOCS)
@@ -85,20 +98,20 @@ def test_knn_table_join_matches_brute_force(spark, docs, pois):
                           np.array([plon]), np.array([plat]))[0], pid)
             for pid, plon, plat in pois
         )
-        for rank, (_, pid) in enumerate(dists[:3], 1):
+        for rank, (_, pid) in enumerate(dists[:k], 1):
             want[(j, rank)] = pid
     assert got == want
-    assert len(got) == N_DOCS * 3
+    assert len(got) == N_DOCS * min(k, len(pois))
 
 
 def test_knn_table_join_candidate_path_is_broadcast(spark, docs):
-    """One broadcast probe and no shuffle: no hash exchange, no
-    sort-merge join, no window anywhere in the executed plan."""
+    """The candidate index ships inside one Arrow kernel over the docs:
+    no Exchange, no join and exactly one MapInArrow in the executed
+    plan."""
     from georaster_spark.operators.knn import knn_table_join
 
     docs_k = docs.withColumn("doc_id", F.col("doc_seq"))
     plan = knn_table_join(docs_k, POIS, k=3, res=9)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") == 1
-    assert "hashpartitioning" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "Window" not in plan
+    assert "Exchange" not in plan
+    assert "Join" not in plan
+    assert plan.count("MapInArrow") == 1

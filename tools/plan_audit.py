@@ -12,11 +12,11 @@ Checked invariants:
   table directly; PMTiles and WARC decode kernels sit next to the
   kernels that plan them. Payload bytes never cross an Exchange, and
   path lists are not spread by a shuffle;
-- driver-built tables (cover, kNN and zone indexes, path lists) are
+- driver-built tables (cover and zone indexes, path lists) are
   ``LocalTableScan``s, never a pickled-RDD ``Scan ExistingRDD``;
-- vector joins (dwithin, kNN table, zonal stats): broadcast or cell
-  equi-joins, never a nested loop; the kNN table call is one
-  broadcast join and no shuffle, sort-merge join or window;
+- vector joins (dwithin, zonal stats): broadcast or cell equi-joins,
+  never a nested loop; the kNN table call is one Arrow kernel with
+  no Exchange and no join;
 - raster stencils and resampling: one block Exchange into the kernel,
   no Python evaluator after it;
 - ice_prune: manifest stats prune files before Spark lists them.
@@ -264,24 +264,20 @@ def main() -> int:
     check("zonal_stats", "zone index joined via BroadcastHashJoin", n_nodes(p, "BroadcastHashJoin") >= 1)
     check("zonal_stats", "single Exchange (the per-zone aggregate)", n_nodes(p, "Exchange") == 1)
 
-    # table kNN: one broadcast probe of the per-cell candidate index;
-    # top-k, proof and exact fallback are one projection, so nothing
-    # shuffles
+    # table kNN: the per-cell candidate index ships inside one Arrow
+    # kernel; lookup, top-k, proof and exact fallback run there, so
+    # nothing shuffles or joins
     p = plans["knn_table"] = explain_str(Q.q_knn_table(spark, SF))
     check(
         "knn_table",
-        "exactly one join: the BroadcastHashJoin candidate probe",
-        n_nodes(p, "BroadcastHashJoin") == 1
-        and len(re.findall(r"^\(\d+\) \w*Join\b", p, re.M)) == 1,
-    )
-    check(
-        "knn_table",
-        "no hashpartitioning Exchange, SortMergeJoin or Window",
-        "hashpartitioning" not in p and "SortMergeJoin" not in p and n_nodes(p, "Window") == 0,
+        "no Exchange, no join, exactly one MapInArrow",
+        n_nodes(p, "Exchange") == 0
+        and not re.findall(r"^\(\d+\) \w*Join\b", p, re.M)
+        and n_nodes(p, "MapInArrow") == 1,
     )
 
-    # driver-built tables (polygon cover, kNN and zone indexes, path
-    # lists) ship inside the plan, never as a pickled Python RDD
+    # driver-built tables (polygon cover, zone index, path lists) ship
+    # inside the plan, never as a pickled Python RDD
     for name in ("flagship", "knn_table", "zonal_stats", "raster_ingest", "pmtiles_ingest"):
         check(
             name,
