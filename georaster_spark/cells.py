@@ -18,8 +18,8 @@ keeps every oracle SQL-expressible. A Z-order (Morton) variant is
 provided separately for locality-preserving sort/partition keys.
 
 The hot path is the pure-Column form (JVM, whole-stage codegen). The
-pandas-UDF form exists for parity with the Arrow-vectorized-kernel
-contract and for callers that need NumPy-side logic.
+NumPy form (``cell_encode_np``) is the array spelling of the same
+formula; the tests check it and the Column form against the scalar one.
 """
 
 from __future__ import annotations
@@ -27,10 +27,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 MAX_LAT = 85.05112878  # web-mercator latitude clamp
 _ZSHIFT = 1 << 58  # z * 4^29
@@ -109,16 +107,21 @@ def cell_bounds(cell: int) -> tuple[float, float, float, float]:
 
     Mirrors the per-tile bounds the reference derives from the TMS
     (``src/pmtiles.rs:45``); note the top-origin y (lat_max at y=0).
+    The expression text of the oracle's ``tile_bounds_sql``, in scalar
+    ``math``, so both give the same doubles: sinh is spelled
+    ``(exp(t) - exp(-t)) / 2.0`` because DuckDB 1.0 has no ``sinh``
+    (``math.sinh`` differs in the last bit on 360 of the 816 XYZ
+    fixture tiles, and a NumPy spelling of this text on 312).
     """
     z, x, y = cell_to_zxy(cell)
-    n = 1 << z
+    n = float(1 << z)
 
-    def lon_of(xi: float) -> float:
-        return xi / n * 360.0 - 180.0
+    def lon_of(xi: int) -> float:
+        return float(xi) / n * 360.0 - 180.0
 
-    def lat_of(yi: float) -> float:
-        t = math.pi * (1 - 2 * yi / n)
-        return math.degrees(math.atan(math.sinh(t)))
+    def lat_of(yi: int) -> float:
+        t = math.pi * (1.0 - 2.0 * float(yi) / n)
+        return math.degrees(math.atan((math.exp(t) - math.exp(-t)) / 2.0))
 
     return lon_of(x), lat_of(y + 1), lon_of(x + 1), lat_of(y)
 
@@ -138,18 +141,6 @@ def tile_xy_np(lon: np.ndarray, lat: np.ndarray, z: int) -> tuple[np.ndarray, np
 def cell_encode_np(lon: np.ndarray, lat: np.ndarray, z: int) -> np.ndarray:
     x, y = tile_xy_np(lon, lat, z)
     return np.int64(z) * np.int64(_ZSHIFT) + x * np.int64(_XSHIFT) + y
-
-
-# ------------------------------------------------------------ pandas UDF
-def cell_encode_pudf(z: int):
-    """Arrow-vectorized cell encoder (the input_hint-mandated form)."""
-
-    @F.pandas_udf(T.LongType())
-    def _encode(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        out = cell_encode_np(lon.to_numpy(np.float64), lat.to_numpy(np.float64), z)
-        return pd.Series(out)
-
-    return _encode
 
 
 # ------------------------------------------------------- Column exprs
@@ -201,29 +192,6 @@ def morton_key_cols(cell: Column) -> Column:
     return key
 
 
-def cell_bounds_cols(cell: Column, z: int) -> tuple[Column, Column, Column, Column]:
-    """(lon_min, lat_min, lon_max, lat_max) of a cell as pure Column
-    algebra — the per-tile bounds the reference gets from
-    ``tms.bounds(&xyz)`` (``src/pmtiles.rs:45``). ``z`` is a Python
-    int so the grid size is a literal.
-
-    sinh is spelled ``(exp(t) - exp(-t)) / 2.0`` because DuckDB 1.0
-    has no ``sinh``; the oracle uses the identical expression text so
-    the IEEE doubles agree bit-for-bit (``tile_bounds_sql``).
-    """
-    n = float(1 << z)
-    _, x, y = cell_zxy_cols(cell)
-
-    def lon_of(xx: Column) -> Column:
-        return xx.cast("double") / F.lit(n) * F.lit(360.0) - F.lit(180.0)
-
-    def lat_of(yy: Column) -> Column:
-        t = F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * yy.cast("double") / F.lit(n))
-        return F.degrees(F.atan((F.exp(t) - F.exp(-t)) / F.lit(2.0)))
-
-    return lon_of(x), lat_of(y + F.lit(1)), lon_of(x + F.lit(1)), lat_of(y)
-
-
 # --------------------------------------------------------- oracle SQL
 def cell_encode_sql(lon_expr: str, lat_expr: str, z: int) -> str:
     """The SAME encode formula as ANSI SQL for the DuckDB oracle."""
@@ -248,8 +216,8 @@ def cell_zxy_sql(cell_expr: str) -> tuple[str, str, str]:
 
 def tile_bounds_sql(x_expr: str, y_expr: str, z: int) -> tuple[str, str, str, str]:
     """(lon_min, lat_min, lon_max, lat_max) SQL — the exact expression
-    text of ``cell_bounds_cols`` so both engines compute identical
-    doubles."""
+    text of ``cell_bounds`` so the oracle and the engine compute
+    identical doubles."""
     n = float(1 << z)
 
     def lon_of(xx: str) -> str:

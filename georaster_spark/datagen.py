@@ -340,36 +340,38 @@ def _xyz_rgb(xt, yt, px, py):
     return r, g, b
 
 
-def xyz_tile_pixels_df(spark: SparkSession, partitions: int = 16) -> DataFrame:
-    """Deterministic XYZ raster-tile table over the doc box: one row
-    per (cell, px, py) with RGB fill — the engine's stand-in for a
-    PMTiles archive (tiles are data, fetch is a join)."""
+def xyz_tile_pixels_df(spark: SparkSession) -> DataFrame:
+    """Deterministic XYZ raster-tile table over the doc box — the
+    engine's stand-in for a PMTiles archive (tiles are data, fetch is a
+    join). One row per tile, as the reference fetches and decodes one
+    tile (``src/pmtiles.rs:37-51``): ``cell`` plus a row-major
+    ``XYZ_TILE_SIZE²`` ``array<int>`` per band (``r``, ``g``, ``b``;
+    pixel (px, py) at ``py * XYZ_TILE_SIZE + px``) with the ``_xyz_rgb``
+    fill."""
     from georaster_spark.cells import _XSHIFT, _ZSHIFT
 
     x0, x1, y0, y1 = xyz_fixture_range()
-    nx, npx = x1 - x0 + 1, XYZ_TILE_SIZE * XYZ_TILE_SIZE
-    n_tiles = nx * (y1 - y0 + 1)
-    df = spark.range(0, n_tiles * npx, 1, partitions)
-    i = F.col("id")
-    ti = F.floor(i / npx).cast("long")
-    wi = i % npx
-    px = (wi % XYZ_TILE_SIZE).cast("long")
-    py = F.floor(wi / XYZ_TILE_SIZE).cast("long")
+    nx, ts = x1 - x0 + 1, XYZ_TILE_SIZE
+    ti = F.col("id")
     xt = F.lit(x0) + ti % nx
     yt = F.lit(y0) + F.floor(ti / nx).cast("long")
-    r, g, b = _xyz_rgb(xt, yt, px, py)
-    return df.select(
+    pixel = F.sequence(F.lit(0), F.lit(ts * ts - 1))
+
+    def band(k: int) -> Column:
+        """Band k of every pixel, row-major."""
+        return F.transform(pixel, lambda i: _xyz_rgb(xt, yt, i % ts, F.floor(i / ts))[k].cast("int"))
+
+    return spark.range(nx * (y1 - y0 + 1)).select(
         (F.lit(XYZ_Z).cast("long") * _ZSHIFT + xt * _XSHIFT + yt).alias("cell"),
-        px.cast("int").alias("px"),
-        py.cast("int").alias("py"),
-        r.cast("int").alias("r"),
-        g.cast("int").alias("g"),
-        b.cast("int").alias("b"),
+        band(0).alias("r"),
+        band(1).alias("g"),
+        band(2).alias("b"),
     )
 
 
 def xyz_tile_pixels_sql() -> str:
-    """The same tile table as DuckDB SQL."""
+    """The same tiles as DuckDB SQL, one row per (cell, px, py) pixel:
+    the oracle's form."""
     from georaster_spark.cells import _XSHIFT, _ZSHIFT
 
     x0, x1, y0, y1 = xyz_fixture_range()

@@ -24,6 +24,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -73,7 +74,8 @@ def knn_table_join(
     exactly the brute-force result.
 
     Returns (doc_id, poi_id, dist_m, rank); ``doc_id`` keeps its input
-    type, ties break on (dist, poi_id). No shuffle and no join.
+    type, ties break on (dist, poi_id); a doc with a null ``lon`` or
+    ``lat`` has no rows. No shuffle, no join and no Filter.
     """
     pois = sorted(pois)  # a stable sort on distance then breaks ties on poi_id
     n, kk = len(pois), min(k, len(pois))
@@ -102,6 +104,10 @@ def knn_table_join(
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
+            # a doc without a location has no neighbours: drop it here, before a
+            # null cell becomes a NaN, and not as a Filter that re-runs the geocode
+            lon, lat = batch.column("lon"), batch.column("lat")
+            batch = batch.filter(pc.and_(lon.is_valid(), lat.is_valid()))
             lon = batch.column("lon").to_numpy(zero_copy_only=False)
             lat = batch.column("lat").to_numpy(zero_copy_only=False)
             cell = batch.column("cell").to_numpy(zero_copy_only=False)
@@ -127,10 +133,8 @@ def knn_table_join(
 
     lon, lat = F.col("lon"), F.col("lat")
     doc_t = docs.schema["doc_id"].dataType.simpleString()
-    return (
-        docs.where(lon.isNotNull() & lat.isNotNull())
-        .select("doc_id", "lon", "lat", cell_encode_cols(lon, lat, res).alias("cell"))
-        .mapInArrow(kernel, f"doc_id {doc_t}, poi_id string, dist_m double, rank int")
+    return docs.select("doc_id", "lon", "lat", cell_encode_cols(lon, lat, res).alias("cell")).mapInArrow(
+        kernel, f"doc_id {doc_t}, poi_id string, dist_m double, rank int"
     )
 
 

@@ -42,10 +42,11 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import DataType
+from pyspark.sql.types import DataType, IntegerType, StructField, StructType
 
 from georaster_spark.grid import RasterGeometry
 from georaster_spark.session import local_df
@@ -233,43 +234,65 @@ def ascii_lines(chars: DataFrame, x: str = "x", y: str = "y", ch: str = "ch") ->
     )
 
 
-def xyz_lookup(
-    points: DataFrame,
-    tile_pixels: DataFrame,
-    z: int,
-    tile_size: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
+def xyz_lookup(points: DataFrame, tiles: DataFrame, z: int, tile_size: int) -> DataFrame:
     """World→value via the XYZ tile pyramid — the engine form of
     ``get_pixel_at(z, coord)`` (``src/pmtiles.rs:37-51``):
 
-    1. cell-encode each point at zoom z (``tms.tile``, ``:43``),
-    2. per-tile linear geotransform in the tile's lon/lat bounds with
-       the top-origin y-flip (``coord_to_pixel``, ``:53-69``; flip at
-       ``:67``) and ``.round()`` pixel snapping,
-    3. equi-join to ``tile_pixels (cell, px, py, ...)`` — the "tile
-       fetch"; a missing tile/pixel yields NO row (the reference
-       errors on missing tiles, ``:28`` — we diverge to empty-result
-       semantics, assertable, like OOB reads).
+    1. cell-encode each point's ``lon``/``lat`` at zoom z
+       (``tms.tile``, ``:43``) in a Project;
+    2. one ``mapInArrow`` that drops points with a null ``lon`` or
+       ``lat``, takes each distinct cell's bounds from
+       ``cells.cell_bounds`` and snaps to the per-tile linear
+       geotransform with the top-origin y-flip (``coord_to_pixel``,
+       ``:53-69``; flip at ``:67``) and ``.round()`` (half away from
+       zero, ``pmtiles.round_half_away``), keeping only points with
+       ``0 <= px, py < tile_size``. Every column of ``points`` crosses
+       into this Arrow worker, so select what the caller needs first;
+    3. an equi-join on ``cell`` alone to ``tiles`` (one row per tile:
+       ``cell`` plus row-major ``tile_size²`` ``r``/``g``/``b`` arrays)
+       — the "tile fetch" — then each band indexed at
+       ``py * tile_size + px``.
 
-    The async tile-archive I/O boundary of the reference becomes the
-    join's shuffle boundary (SURVEY.md §3.3). At scale the join is a
-    shuffle on ``cell`` — the tile table side is pre-partitioned by
-    cell, so only the probe side moves.
+    Returns the ``points`` columns plus ``cell``, ``px``, ``py`` and
+    ``r``, ``g``, ``b`` (int). A missing tile or a ``px``/``py``
+    outside the tile yields NO row (the reference errors on missing
+    tiles, ``:28`` — we diverge to empty-result semantics, assertable,
+    like OOB reads). The keys are computed once, in the kernel, so no
+    predicate on them reaches below the cell-encode Project.
     """
     from georaster_spark import cells
+    from georaster_spark.sources.pmtiles import round_half_away
 
-    pts = points.withColumn(
-        "cell", cells.cell_encode_cols(F.col(lon_col), F.col(lat_col), z)
+    ts = float(tile_size)
+
+    def locate(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            lon, lat = batch.column("lon"), batch.column("lat")
+            batch = batch.filter(pc.and_(lon.is_valid(), lat.is_valid()))
+            lon = batch.column("lon").to_numpy(zero_copy_only=False)
+            lat = batch.column("lat").to_numpy(zero_copy_only=False)
+            tile_cells, inv = np.unique(batch.column("cell").to_numpy(zero_copy_only=False), return_inverse=True)
+            bounds = np.array([cells.cell_bounds(int(c)) for c in tile_cells]).reshape(-1, 4)
+            lon0, lat0, lon1, lat1 = bounds[inv].T
+            px = round_half_away((lon - lon0) / ((lon1 - lon0) / ts))
+            py = round_half_away((lat1 - lat) / ((lat1 - lat0) / ts))
+            keep = (px >= 0) & (px < ts) & (py >= 0) & (py < ts)
+            yield (
+                batch.filter(pa.array(keep))
+                .append_column("px", pa.array(px[keep].astype(np.int32)))
+                .append_column("py", pa.array(py[keep].astype(np.int32)))
+            )
+
+    pts = points.withColumn("cell", cells.cell_encode_cols(F.col("lon"), F.col("lat"), z))
+    located = pts.mapInArrow(
+        locate, StructType([*pts.schema, StructField("px", IntegerType()), StructField("py", IntegerType())])
     )
-    lon0, _lat0, lon1, lat1 = cells.cell_bounds_cols(F.col("cell"), z)
-    psx = (lon1 - lon0) / F.lit(float(tile_size))
-    psy = (lat1 - _lat0) / F.lit(float(tile_size))
-    pts = pts.withColumn(
-        "px", F.round((F.col(lon_col) - lon0) / psx, 0).cast("int")
-    ).withColumn("py", F.round((lat1 - F.col(lat_col)) / psy, 0).cast("int"))
-    return pts.join(tile_pixels, ["cell", "px", "py"])
+    pixel = F.col("py") * tile_size + F.col("px")
+    return located.join(tiles, ["cell"]).select(
+        "cell", "px", "py",
+        *(c for c in points.columns if c != "cell"),
+        *(F.col(b)[pixel].alias(b) for b in ("r", "g", "b")),
+    )
 
 
 def assemble_rgb(pixels: DataFrame) -> DataFrame:

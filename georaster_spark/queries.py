@@ -1075,12 +1075,14 @@ def sql_img2ascii():
 
 def q_xyz_lookup(spark, sf_dir):
     """World→value via the XYZ tile pyramid (src/pmtiles.rs:37-51):
-    geocoded docs probed against a synthetic tile archive — cell
-    encode, per-tile y-flip geotransform, tile join, terrarium
-    height decode."""
+    geocoded docs probed against a synthetic tile archive of one row
+    per tile — cell encode, per-tile y-flip geotransform, tile join on
+    ``cell``, pixel picked from the tile's band arrays, terrarium
+    height decode. Only ``doc_id, lon, lat`` enter the lookup's Arrow
+    kernel, so the documents scan still prunes text/html."""
     from georaster_spark.datagen import XYZ_TILE_SIZE, XYZ_Z, xyz_tile_pixels_df
 
-    d = docs_geocoded(spark, sf_dir)
+    d = docs_geocoded(spark, sf_dir).select("doc_id", "lon", "lat")
     out = R.xyz_lookup(d, xyz_tile_pixels_df(spark), XYZ_Z, XYZ_TILE_SIZE)
     h = terrarium_height(F.col("r"), F.col("g"), F.col("b"))
     return out.select(
@@ -1093,16 +1095,27 @@ def q_xyz_lookup(spark, sf_dir):
     )
 
 
-def sql_xyz_lookup():
+def _xyz_locate_sql() -> tuple[str, str, str]:
+    """(cell, px, py) of the XYZ lookup as DuckDB SQL over ``lon`` and
+    ``lat`` columns: the oracle's spelling of ``raster.xyz_lookup``'s
+    keys (``px``/``py`` read a ``cell`` column)."""
     from georaster_spark.cells import cell_zxy_sql, tile_bounds_sql
-    from georaster_spark.datagen import XYZ_TILE_SIZE, XYZ_Z, xyz_tile_pixels_sql
+    from georaster_spark.datagen import XYZ_TILE_SIZE, XYZ_Z
 
-    cell = cells.cell_encode_sql("lon", "lat", XYZ_Z)
     _, xe, ye = cell_zxy_sql("cell")
     lon0, _lat0, lon1, lat1 = tile_bounds_sql(xe, ye, XYZ_Z)
     ts = float(XYZ_TILE_SIZE)
-    px = f"CAST(round((lon - {lon0}) / (({lon1} - {lon0}) / {ts!r}), 0) AS INT)"
-    py = f"CAST(round(({lat1} - lat) / (({lat1} - {_lat0}) / {ts!r}), 0) AS INT)"
+    return (
+        cells.cell_encode_sql("lon", "lat", XYZ_Z),
+        f"CAST(round((lon - {lon0}) / (({lon1} - {lon0}) / {ts!r}), 0) AS INT)",
+        f"CAST(round(({lat1} - lat) / (({lat1} - {_lat0}) / {ts!r}), 0) AS INT)",
+    )
+
+
+def sql_xyz_lookup():
+    from georaster_spark.datagen import xyz_tile_pixels_sql
+
+    cell, px, py = _xyz_locate_sql()
     return f"""
     WITH g AS ({_geo_cte()}),
     pts AS (SELECT doc_id, lon, lat, {cell} AS cell FROM g),

@@ -457,9 +457,6 @@ def open_tiff(path: str) -> TiffFile:
         )
 
 
-GEOKEY_MODEL_TYPE = 1024  # 1=projected, 2=geographic
-GEOKEY_RASTER_TYPE = 1025
-GEOKEY_CITATION = 1026
 GEOKEY_GEOGRAPHIC_TYPE = 2048
 GEOKEY_PROJECTED_CS_TYPE = 3072
 

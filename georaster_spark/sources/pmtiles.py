@@ -36,15 +36,11 @@ MAGIC = b"PMTiles"
 VERSION = 3
 HEADER_SIZE = 127
 
-COMPRESSION_UNKNOWN = 0
 COMPRESSION_NONE = 1
 COMPRESSION_GZIP = 2
 
 TILETYPE_UNKNOWN = 0
-TILETYPE_MVT = 1
 TILETYPE_PNG = 2
-TILETYPE_JPEG = 3
-TILETYPE_WEBP = 4
 
 
 class PmtilesError(ValueError):
@@ -500,12 +496,17 @@ def decode_tile(blob: bytes):
     )
 
 
-def _round_half_away(x: float) -> int:
-    """Rust ``f64::round()``: half away from zero (Python ``round``
-    is half-to-even and disagrees at exact .5)."""
-    import math
+def round_half_away(x):
+    """Rust ``f64::round()``, elementwise over a float or an array:
+    half away from zero, exact for every double, as DuckDB's
+    ``round(x, 0)``. Python ``round`` and ``np.round`` are half-to-even
+    and disagree at exact .5; ``floor(x + 0.5)`` errs where ``x + 0.5``
+    itself rounds (just below 0.5, and past 2**52). Returns floats."""
+    import numpy as np
 
-    return int(math.floor(x + 0.5)) if x >= 0 else int(math.ceil(x - 0.5))
+    a = np.abs(x)
+    f = np.floor(a)
+    return np.copysign(f + (a - f >= 0.5), x)
 
 
 def get_pixel_at(reader: PmtilesReader, z: int, lon: float, lat: float):
@@ -529,8 +530,8 @@ def get_pixel_at(reader: PmtilesReader, z: int, lon: float, lat: float):
     # Rust f64::round() rounds half AWAY FROM ZERO; Python round() is
     # banker's — they diverge on exact .5 offsets (reachable: tile
     # bounds and pixel sizes are exact binary fractions)
-    px = _round_half_away((lon - lon0) / psx)
-    py = _round_half_away((lat1 - lat) / psy)
+    px = int(round_half_away((lon - lon0) / psx))
+    py = int(round_half_away((lat1 - lat) / psy))
     if not (0 <= px < w and 0 <= py < h):
         return None
     pix = arr[py, px]

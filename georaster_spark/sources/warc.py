@@ -62,8 +62,6 @@ __all__ = [
     "iter_warc_members",
 ]
 
-_GZ_MTIME0 = 0  # fixed gzip mtime → byte-deterministic fixtures
-
 
 class WarcError(ValueError):
     """Malformed WARC/gzip structure (file + offset in the message)."""

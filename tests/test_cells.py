@@ -68,7 +68,7 @@ def test_numpy_matches_scalar():
         assert (got == want).all()
 
 
-def test_column_and_pudf_match_scalar(spark):
+def test_column_and_numpy_match_scalar(spark):
     rng = np.random.default_rng(7)
     lon = rng.uniform(-179.9, 179.9, 500)
     lat = rng.uniform(-84.9, 84.9, 500)
@@ -77,15 +77,15 @@ def test_column_and_pudf_match_scalar(spark):
     )
     z = 12
     out = df.select(
-        cells.cell_encode_cols(F.col("lon"), F.col("lat"), z).alias("c_expr"),
-        cells.cell_encode_pudf(z)(F.col("lon"), F.col("lat")).alias("c_udf"),
-        "lon",
-        "lat",
+        cells.cell_encode_cols(F.col("lon"), F.col("lat"), z).alias("c_expr"), "lon", "lat"
     ).collect()
-    for r in out:
+    got_np = cells.cell_encode_np(
+        np.array([r.lon for r in out]), np.array([r.lat for r in out]), z
+    )
+    for r, c_np in zip(out, got_np):
         want = cells.cell_encode_py(r.lon, r.lat, z)
         assert r.c_expr == want
-        assert r.c_udf == want
+        assert c_np == want
 
 
 def test_parent_cols(spark):

@@ -84,6 +84,9 @@ def test_knn_table_join_matches_brute_force(spark, docs, pois, k):
     from georaster_spark.operators.knn import knn_table_join
 
     docs_k = docs.withColumn("doc_id", F.col("doc_seq"))
+    # a doc without a location yields no rows (len(got) below)
+    no_loc = docs_k.limit(1).withColumn("doc_id", F.lit(N_DOCS))
+    docs_k = docs_k.unionByName(no_loc.withColumn("lon", F.lit(None).cast("double")))
     got = {
         (r["doc_id"], r["rank"]): r["poi_id"]
         for r in knn_table_join(docs_k, pois, k=k, res=9, ring=1).collect()
@@ -106,12 +109,14 @@ def test_knn_table_join_matches_brute_force(spark, docs, pois, k):
 
 def test_knn_table_join_candidate_path_is_broadcast(spark, docs):
     """The candidate index ships inside one Arrow kernel over the docs:
-    no Exchange, no join and exactly one MapInArrow in the executed
-    plan."""
+    no Exchange, no join, no Filter (null locations drop in the kernel,
+    so the geocode is not evaluated twice) and exactly one MapInArrow
+    in the executed plan."""
     from georaster_spark.operators.knn import knn_table_join
 
     docs_k = docs.withColumn("doc_id", F.col("doc_seq"))
     plan = knn_table_join(docs_k, POIS, k=3, res=9)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Join" not in plan
+    assert "Filter" not in plan
     assert plan.count("MapInArrow") == 1

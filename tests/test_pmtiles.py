@@ -158,15 +158,20 @@ def test_png_errors():
 def test_round_half_away_matches_rust():
     """Rust f64::round() is half AWAY FROM ZERO; Python round() is
     banker's and disagrees at exact .5 (reachable: tile bounds and
-    pixel sizes are exact binary fractions)."""
-    from georaster_spark.sources.pmtiles import _round_half_away
-
-    assert _round_half_away(2.5) == 3  # Python round(2.5) == 2
-    assert _round_half_away(3.5) == 4
-    assert _round_half_away(-2.5) == -3  # Python round(-2.5) == -2
-    assert _round_half_away(2.4) == 2
-    assert _round_half_away(-2.4) == -2
-    assert _round_half_away(0.0) == 0
+    pixel sizes are exact binary fractions). Exact for every double:
+    floor(x + 0.5) gets the largest double below 0.5 and 2**52 + 1
+    wrong, because x + 0.5 itself rounds there."""
+    round_half_away = P.round_half_away
+    assert round_half_away(2.5) == 3  # Python round(2.5) == 2
+    assert round_half_away(3.5) == 4
+    assert round_half_away(-2.5) == -3  # Python round(-2.5) == -2
+    assert round_half_away(2.4) == 2
+    assert round_half_away(-2.4) == -2
+    assert round_half_away(0.0) == 0
+    below_half = np.nextafter(0.5, 0)
+    assert round_half_away(below_half) == 0
+    assert round_half_away(-below_half) == 0
+    assert round_half_away(2.0**52 + 1) == 2**52 + 1
 
 
 def test_png_ignores_ancillary_suggested_palette():

@@ -69,36 +69,3 @@ class TestDecoder:
         blob = encode_wav(np.zeros(50, np.int16), 8000)
         with pytest.raises(WavError, match="truncated"):
             decode_wav(blob[:-10])
-
-
-class TestAviMjpeg:
-    def test_round_trip_exact(self):
-        from georaster_spark.sources.avi import decode_avi_mjpeg, encode_avi_mjpeg
-
-        frames = []
-        for f in range(5):
-            py, px = np.mgrid[0:16, 0:24]
-            frames.append(
-                (((px // 8) * 5 + (py // 8) * 11 + f * 17) % 256).astype(np.uint8)
-            )
-        out, usec = decode_avi_mjpeg(encode_avi_mjpeg(frames, usec_per_frame=50000))
-        assert usec == 50000 and len(out) == 5
-        for a, b in zip(frames, out):
-            assert (a == b).all()
-
-    def test_not_avi_and_non_jpeg_frame(self):
-        from georaster_spark.sources.avi import (
-            AviError,
-            decode_avi_mjpeg,
-            encode_avi_mjpeg,
-        )
-
-        with pytest.raises(AviError, match="RIFF/AVI"):
-            decode_avi_mjpeg(b"RIFF\x04\x00\x00\x00WAVE")
-        blob = encode_avi_mjpeg([np.zeros((8, 8), np.uint8)])
-        # corrupt the frame bytes so they are no longer JPEG
-        i = blob.find(b"\xff\xd8\xff")
-        bad = blob[:i] + b"H264" + blob[i + 4 :]
-        with pytest.raises(AviError, match="non-JPEG frame"):
-            decode_avi_mjpeg(bad)
-

@@ -4,8 +4,7 @@ pyramid lookup (src/pmtiles.rs:37-69) with its golden height."""
 
 from __future__ import annotations
 
-import math
-
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -85,17 +84,13 @@ class TestXyzLookup:
     CHASSERAL = (7.059309, 47.133037)  # src/pmtiles.rs:96-103
     GOLDEN_H = 1598.5294117647063  # src/pmtiles.rs:121-133
 
-    def _tile(self, spark, xt: int, yt: int, rgb=(134, 62, 135)):
-        """One constant-fill 512×512 tile as (cell, px, py, r, g, b)."""
+    def _tile(self, spark, xt: int, yt: int, rgb=(134, 62, 135), ts: int = TS):
+        """One constant-fill ts×ts tile row: (cell, r, g, b) with
+        row-major band arrays."""
         cell = cells.zxy_to_cell(self.Z, xt, yt)
-        r, g, b = rgb
-        return spark.range(self.TS * self.TS).select(
+        return spark.range(1).select(
             F.lit(cell).alias("cell"),
-            (F.col("id") % self.TS).cast("int").alias("px"),
-            (F.col("id") / self.TS).cast("int").alias("py"),
-            F.lit(r).cast("int").alias("r"),
-            F.lit(g).cast("int").alias("g"),
-            F.lit(b).cast("int").alias("b"),
+            *(F.array_repeat(F.lit(v), ts * ts).alias(b) for v, b in zip(rgb, "rgb")),
         )
 
     def test_pmtiles_golden_height(self, spark):
@@ -112,18 +107,59 @@ class TestXyzLookup:
         lon, lat = self.CHASSERAL
         pts = spark.createDataFrame([(lon, lat)], "lon double, lat double")
         row = R.xyz_lookup(pts, self._tile(spark, 2128, 1438), self.Z, self.TS).collect()[0]
-        # scalar mirror of cell_bounds_cols' exact spelling
-        n = float(1 << self.Z)
-        lon0, lon1 = 2128 / n * 360.0 - 180.0, 2129 / n * 360.0 - 180.0
-
-        def lat_of(yy: float) -> float:
-            t = math.pi * (1.0 - 2.0 * yy / n)
-            return math.degrees(math.atan((math.exp(t) - math.exp(-t)) / 2.0))
-
-        lat1, lat0 = lat_of(1438.0), lat_of(1439.0)
+        lon0, lat0, lon1, lat1 = cells.cell_bounds(cells.zxy_to_cell(self.Z, 2128, 1438))
         assert row["px"] == round((lon - lon0) / ((lon1 - lon0) / self.TS))
         assert row["py"] == round((lat1 - lat) / ((lat1 - lat0) / self.TS))
         assert (row["px"], row["py"]) == (163, 230)
+
+    def test_half_pixel_boundaries_match_oracle(self, spark):
+        """Probes on a half-pixel boundary of tile z12 (2128, 1438), and
+        one ulp either side, on both axes, get the px/py that the
+        DuckDB oracle's expressions (round half away from zero) give on
+        the same doubles; a probe that rounds to px == tile_size or
+        py == tile_size yields no row. A lon lands exactly on x.5; no
+        lat does (one ulp of lat moves y by ~4e-12 pixels), so the lat
+        probes are the double nearest x.5 and its two neighbours."""
+        import duckdb
+        import pandas as pd
+
+        from georaster_spark.datagen import XYZ_TILE_SIZE as ts
+        from georaster_spark.queries import _xyz_locate_sql
+
+        cell = cells.zxy_to_cell(self.Z, 2128, 1438)
+        lon0, lat0, lon1, lat1 = cells.cell_bounds(cell)
+
+        def fx(v: float) -> float:
+            return (v - lon0) / ((lon1 - lon0) / ts)
+
+        def fy(v: float) -> float:
+            return (lat1 - v) / ((lat1 - lat0) / ts)
+
+        def around_half(f, v0: float, v1: float, j: int) -> list[float]:
+            """The double between v0 and v1 nearest to f == j + 0.5, and
+            its two neighbours."""
+            v = v0 + (j + 0.5) / ts * (v1 - v0)
+            near = [v + i * np.spacing(v) for i in range(-64, 65)]
+            mid = min(range(len(near)), key=lambda i: abs(f(near[i]) - (j + 0.5)))
+            return near[mid - 1 : mid + 2]
+
+        lon_c, lat_c = lon0 + 10.25 / ts * (lon1 - lon0), lat1 - 10.25 / ts * (lat1 - lat0)
+        on_x = [around_half(fx, lon0, lon1, j) for j in (6, ts - 1)]
+        on_y = [around_half(fy, lat1, lat0, j) for j in (6, ts - 1)]
+        assert [fx(v[1]) for v in on_x] == [6.5, ts - 0.5]  # half-to-even would give 6
+        probes = [(u, lat_c) for v in on_x for u in v] + [(lon_c, u) for v in on_y for u in v]
+        pdf = pd.DataFrame(probes, columns=["lon", "lat"]).reset_index(names="id")
+
+        c, px, py = _xyz_locate_sql()
+        want = duckdb.sql(f"SELECT id, cell, {px} AS px, {py} AS py FROM (SELECT *, {c} AS cell FROM pdf)").df()
+        assert (want["cell"] == cell).all()
+        # both sides of each boundary, and the right/bottom edge
+        assert {6, 7, ts - 1, ts} <= set(want["px"]) and {6, 7, ts - 1, ts} <= set(want["py"])
+        got = R.xyz_lookup(spark.createDataFrame(pdf), self._tile(spark, 2128, 1438, ts=ts), self.Z, ts)
+        inside = want[(want["px"] < ts) & (want["py"] < ts)]
+        assert {(r["id"], r["px"], r["py"]) for r in got.collect()} == {
+            (int(r.id), int(r.px), int(r.py)) for r in inside.itertuples()
+        }
 
     def test_missing_tile_yields_no_row(self, spark):
         # invalid_tiles analog (src/pmtiles.rs:107-119): the archive

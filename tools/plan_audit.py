@@ -16,7 +16,9 @@ Checked invariants:
   ``LocalTableScan``s, never a pickled-RDD ``Scan ExistingRDD``;
 - vector joins (dwithin, zonal stats): broadcast or cell equi-joins,
   never a nested loop; the kNN table call is one Arrow kernel with
-  no Exchange and no join;
+  no Exchange, no join and no Filter; the XYZ lookup computes its
+  probe keys once (one Arrow kernel, a join on ``cell`` alone, no
+  Filter repeating the cell encode);
 - raster stencils and resampling: one block Exchange into the kernel,
   no Python evaluator after it;
 - ice_prune: manifest stats prune files before Spark lists them.
@@ -68,7 +70,8 @@ def _blank_partition_counts(plan: str) -> str:
 def normalize_ids(plan: str) -> str:
     """Blank what a session numbers as it goes (``#<exprId>``,
     ``plan_id=<n>``, ``RDD[<n>]``, lambda-variable suffixes, RDD call
-    sites) and what follows the core count (the partition count of
+    sites, the identity hash of a folded array literal) and what
+    follows the core count (the partition count of
     ``hashpartitioning``/``rangepartitioning``, ``splits=Some(<n>)``)
     so dumps from different sessions and hosts diff cleanly; the
     invariants are checked on the raw plan."""
@@ -77,6 +80,7 @@ def normalize_ids(plan: str) -> str:
     plan = re.sub(r"splits=Some\(\d+\)", "splits=Some(N)", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
     plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+    plan = re.sub(r"UnsafeArrayData@[0-9a-f]+", "UnsafeArrayData@N", plan)
     plan = re.sub(r"(lambda \w+_)\d+", r"\1N", plan)
     return re.sub(r" at (?:\S+\.java|<unknown>):\d+", "", plan)
 
@@ -194,6 +198,19 @@ def main() -> int:
     # columns beyond doc_id (pruning through the probe side)
     p = plans["xyz_lookup"] = explain_str(Q.q_xyz_lookup(spark, SF))
     check("xyz_lookup", "documents scan prunes text/html for the probe", "text" not in p and "html" not in p)
+    # ... and the probe keys are computed once: px/py in one Arrow
+    # kernel, a join on cell alone, and no Filter that re-runs the
+    # cell encode under the Project
+    join_keys = re.findall(r"^Left keys \[\d+\]: \[(.*)\]$", p, re.M)
+    filters = [para for para in p.split("\n\n") if re.match(r"\(\d+\) Filter\b", para.strip())]
+    check(
+        "xyz_lookup",
+        "exactly one MapInArrow, one join keyed on cell alone, no Filter "
+        "repeating the cell encode",
+        n_nodes(p, "MapInArrow") == 1
+        and len(join_keys) == 1 and re.fullmatch(r"cell#\d+L?", join_keys[0]) is not None
+        and not any("TAN(RADIANS" in para for para in filters),
+    )
 
     # dwithin: the theta-join must have been rewritten away — cell
     # equi-join only, never a nested-loop
@@ -270,9 +287,10 @@ def main() -> int:
     p = plans["knn_table"] = explain_str(Q.q_knn_table(spark, SF))
     check(
         "knn_table",
-        "no Exchange, no join, exactly one MapInArrow",
+        "no Exchange, no join, no Filter, exactly one MapInArrow",
         n_nodes(p, "Exchange") == 0
         and not re.findall(r"^\(\d+\) \w*Join\b", p, re.M)
+        and n_nodes(p, "Filter") == 0
         and n_nodes(p, "MapInArrow") == 1,
     )
 
