@@ -39,9 +39,9 @@ def main(n_docs: int = 100_000) -> None:
     print("hottest cells:")
     salted_cell_counts(docs, salt_k=16).orderBy(F.desc("n_docs")).show(5)
 
-    # 5. kNN around a query point via cell-ring expansion
+    # 5. exact kNN around a query point: one pass, a top-k per task
     print("5 nearest docs to (7.5, 46.0):")
-    knn_join(docs, [("q", 7.5, 46.0)], k=5, res=11, doc_key="url").show(truncate=False)
+    knn_join(docs, [("q", 7.5, 46.0)], k=5, doc_key="url").show(truncate=False)
 
 
 if __name__ == "__main__":

@@ -8,8 +8,7 @@ reference uses for PMTiles (``src/pmtiles.rs:15``): at resolution
 contains lon/lat (7.059309, 47.133037) (``src/pmtiles.rs:96-103``).
 
 Cell id packing (pure arithmetic, so the SAME formula runs as a Spark
-Column expression, a NumPy kernel, DuckDB oracle SQL, and scalar
-Python):
+Column expression, DuckDB oracle SQL, and scalar Python):
 
     cell = z * 4^29  +  x * 2^29  +  y          (z ≤ 29)
 
@@ -17,16 +16,14 @@ Arithmetic packing keeps parent/children/ring as integer math and
 keeps every oracle SQL-expressible. A Z-order (Morton) variant is
 provided separately for locality-preserving sort/partition keys.
 
-The hot path is the pure-Column form (JVM, whole-stage codegen). The
-NumPy form (``cell_encode_np``) is the array spelling of the same
-formula; the tests check it and the Column form against the scalar one.
+The hot path is the pure-Column form (JVM, whole-stage codegen); the
+tests check it against the scalar one.
 """
 
 from __future__ import annotations
 
 import math
 
-import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -124,23 +121,6 @@ def cell_bounds(cell: int) -> tuple[float, float, float, float]:
         return math.degrees(math.atan((math.exp(t) - math.exp(-t)) / 2.0))
 
     return lon_of(x), lat_of(y + 1), lon_of(x + 1), lat_of(y)
-
-
-# ---------------------------------------------------------------- numpy
-def tile_xy_np(lon: np.ndarray, lat: np.ndarray, z: int) -> tuple[np.ndarray, np.ndarray]:
-    lat = np.clip(lat, -MAX_LAT, MAX_LAT)
-    n = 1 << z
-    xt = np.floor((lon + 180.0) / 360.0 * n).astype(np.int64)
-    lat_rad = np.radians(lat)
-    yt = np.floor(
-        (1.0 - np.log(np.tan(lat_rad) + 1.0 / np.cos(lat_rad)) / np.pi) / 2.0 * n
-    ).astype(np.int64)
-    return np.clip(xt, 0, n - 1), np.clip(yt, 0, n - 1)
-
-
-def cell_encode_np(lon: np.ndarray, lat: np.ndarray, z: int) -> np.ndarray:
-    x, y = tile_xy_np(lon, lat, z)
-    return np.int64(z) * np.int64(_ZSHIFT) + x * np.int64(_XSHIFT) + y
 
 
 # ------------------------------------------------------- Column exprs

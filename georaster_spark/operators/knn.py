@@ -1,17 +1,14 @@
-"""kNN via cell-ring expansion (engine op E6).
+"""kNN (engine op E6): exact per query point, cell-ring expansion per row.
 
-``knn_join`` (per query point): start at the query's cell, expand
-Chebyshev rings until every query has ≥ k candidates AND the kth
-candidate distance is provably inside the searched disk (ring-boundary
-distance guarantee) — then an exact haversine top-k over candidates
-only. The (query, cell) candidate index is tiny and broadcast;
-documents are probed with an equi-join on ``cell`` and the top-k
-window shuffles only the candidates, partitioned by query id.
+``knn_join`` (a few query points): the exact form, one ``mapInArrow``
+pass that keeps a haversine top-k per query point in each task; the
+driver merges the per-partition results. No index, no shuffle.
 
-``knn_table_join`` (every document): the same index and guarantee
-keyed by cell, shipped as sorted NumPy arrays inside one ``mapInArrow``
-kernel; lookup, top-k, proof and exact fallback run per Arrow batch,
-so the call shuffles and joins nothing.
+``knn_table_join`` (every document): cell-ring expansion. Each POI's
+Chebyshev cell-disk becomes a per-cell candidate index with a
+ring-boundary distance guarantee, shipped as sorted NumPy arrays
+inside one ``mapInArrow`` kernel; lookup, top-k, proof and exact
+fallback run per Arrow batch, so the call shuffles and joins nothing.
 
 Generalizes the reference's world→tile→local-sample lookup
 (``src/pmtiles.rs:37-51``) from one tile to an expanding disk.
@@ -25,11 +22,11 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from georaster_spark.cells import cell_bounds, cell_disk_py, cell_encode_cols, cell_encode_py
-from georaster_spark.functions.geo import EARTH_RADIUS_M, haversine_cols, haversine_np
+from georaster_spark.functions.geo import EARTH_RADIUS_M, haversine_np
 from georaster_spark.session import local_df
 
 
@@ -142,77 +139,70 @@ def knn_join(
     docs: DataFrame,
     query_points: list[tuple[str, float, float]],
     k: int,
-    res: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     doc_key: str = "url",
-    max_rings: int = 64,
 ) -> DataFrame:
-    """k nearest documents to each query point.
+    """k nearest documents to each query point, exact, in one pass.
 
     ``query_points``: [(query_id, lon, lat)]. Returns
-    (query_id, <doc_key>, dist_m, rank) with deterministic
-    tie-breaking on (dist, doc_key).
+    (query_id, <doc_key>, dist_m, rank); ``doc_key`` keeps its input
+    type, ties break on (dist, doc_key), and a document with a null
+    ``lon`` or ``lat`` has no rows. With fewer than k documents every
+    document is returned, ranked.
 
-    SCALE BOUNDARY: the ring-candidate list is built driver-side per
-    query point (|Q| x disk(rings) rows through ``local_df`` +
-    broadcast), which is right for interactive / few-hundred-query
-    workloads only. For large query SETS use ``knn_table_join`` —
-    the table-scale path where candidates come from a per-cell disk
-    index shipped to one kernel and the corpus side never leaves the
-    executors.
+    Plan: one ``mapInArrow`` over (doc_key, lon, lat) keeps a running
+    top-k per query point in each task and yields it at the end of the
+    partition; the driver merges those |Q|·k rows per partition and
+    returns them through ``local_df``. One Spark job, no shuffle, no
+    persist; the call is eager.
+
+    The cost is O(N·|Q|) haversines. Every caller in this repo has
+    |Q| ≤ 3, where that costs less than a cell encode and a probe. For
+    large query SETS use ``knn_table_join``: its per-cell disk index
+    and ring-boundary proof touch only nearby candidates.
     """
-    spark: SparkSession = docs.sparkSession
-    docs_c = docs.where(F.col(lon_col).isNotNull())
-    from georaster_spark.cells import cell_encode_cols
+    ids = {qid: (lon, lat) for qid, lon, lat in query_points}
+    qid = pa.array(list(ids), pa.string())
+    qlon, qlat = np.array(list(ids.values()), dtype=np.float64).reshape(-1, 2).T
+    order = [("q", "ascending"), ("dist_m", "ascending"), (doc_key, "ascending")]
 
-    docs_c = docs_c.withColumn("cell", cell_encode_cols(F.col(lon_col), F.col(lat_col), res))
-    # cache: probed once per expansion round
-    docs_c = docs_c.persist()
-    try:
-        qcells = {qid: cell_encode_py(lon, lat, res) for qid, lon, lat in query_points}
-        pending = {qid: (lon, lat) for qid, lon, lat in query_points}
-        rings = 1
-        while True:
-            cand_rows = [
-                (qid, c, pending[qid][0], pending[qid][1])
-                for qid in pending
-                for c in cell_disk_py(qcells[qid], rings)
-            ]
-            cand_idx = local_df(
-                spark, cand_rows, "query_id string, cell long, q_lon double, q_lat double"
+    def top(t: pa.Table) -> tuple[pa.Table, np.ndarray]:
+        """The first k rows of each query ``q`` in (dist_m, doc_key)
+        order, sorted, with their ranks."""
+        t = t.take(pc.sort_indices(t, order))
+        q = t.column("q").to_numpy()
+        rank = np.arange(1, len(q) + 1) - np.searchsorted(q, q)
+        keep = rank <= k
+        return t.filter(keep), rank[keep]
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        best = None
+        for batch in batches:
+            lon, lat = batch.column("lon"), batch.column("lat")
+            batch = batch.filter(pc.and_(lon.is_valid(), lat.is_valid()))
+            lon = batch.column("lon").to_numpy(zero_copy_only=False)
+            lat = batch.column("lat").to_numpy(zero_copy_only=False)
+            d = haversine_np(lon[None, :], lat[None, :], qlon[:, None], qlat[:, None])
+            # the k nearest of this batch and every tie at the kth distance;
+            # not `d <= cut`, which drops every row when a NaN coordinate
+            # leaves fewer than k finite distances (the cut is then NaN)
+            cut = np.partition(d, k - 1, axis=1)[:, [k - 1]] if batch.num_rows > k else np.inf
+            q, row = np.nonzero(~(d > cut))
+            cand = pa.Table.from_arrays(
+                [pa.array(q, pa.int32()), batch.column(doc_key).take(row), pa.array(d[q, row])],
+                names=["q", doc_key, "dist_m"],
             )
-            cand = docs_c.join(F.broadcast(cand_idx), "cell")
-            w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(), F.col(doc_key).asc())
-            topk = (
-                cand.withColumn(
-                    "dist_m",
-                    haversine_cols(
-                        F.col(lon_col), F.col(lat_col), F.col("q_lon"), F.col("q_lat")
-                    ),
-                )
-                .withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select("query_id", doc_key, "dist_m", "rank")
-            )
-            # top-k is at most k rows per query — collect it ONCE and
-            # derive both the convergence check and (when done) the
-            # result from the same rows; returning `topk` directly
-            # would recompute the whole candidate join at the caller's
-            # first action.
-            rows = topk.collect()
-            got: dict[str, tuple[int, float]] = {}
-            for r in rows:
-                cnt, kth = got.get(r["query_id"], (0, 0.0))
-                got[r["query_id"]] = (cnt + 1, max(kth, r["dist_m"]))
-            done = all(
-                qid in got
-                and got[qid][0] >= k
-                and got[qid][1] <= _disk_boundary_dist_m(qcells[qid], rings)
-                for qid in pending
-            )
-            if done or rings >= max_rings:
-                return local_df(spark, rows, topk.schema)
-            rings *= 2
-    finally:
-        docs_c.unpersist()
+            best, _ = top(cand if best is None else pa.concat_tables([best, cand]))
+        if best is not None:
+            yield from best.to_batches()
+
+    key_t = docs.schema[doc_key].dataType.simpleString()
+    parts = docs.select(doc_key, "lon", "lat").mapInArrow(
+        kernel, f"q int, {doc_key} {key_t}, dist_m double"
+    )
+    rows, rank = top(parts.toArrow())
+    cols = [qid.take(rows.column("q")), rows.column(doc_key), rows.column("dist_m"), pa.array(rank)]
+    return local_df(
+        docs.sparkSession,
+        list(zip(*(c.to_pylist() for c in cols))),
+        f"query_id string, {doc_key} {key_t}, dist_m double, rank int",
+    )

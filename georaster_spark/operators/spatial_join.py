@@ -244,14 +244,12 @@ def within_distance_pairs(
     docs: DataFrame,
     d_meters: float,
     res: int | None = None,
-    key: str = "doc_id",
-    lon: str = "lon",
-    lat: str = "lat",
     max_abs_lat: float = 85.0,
 ) -> DataFrame:
-    """All (a < b) document pairs within ``d_meters`` — the
-    ST_DWithin self-join, rewritten from a quadratic theta-join into
-    a cell EQUI-join (the only shape that scales):
+    """All (a < b) ``doc_id`` pairs of ``docs`` whose ``lon``/``lat``
+    lie within ``d_meters`` — the ST_DWithin self-join, rewritten from
+    a quadratic theta-join into a cell EQUI-join (the only shape that
+    scales):
 
     - left side explodes each doc onto its Chebyshev disk(1) cells
       (9x narrow amplification, no shuffle to build);
@@ -276,17 +274,17 @@ def within_distance_pairs(
             f" {res} for |lat|<={max_abs_lat} — use a coarser res"
         )
 
-    keyed = docs.withColumn("cell", cell_encode_cols(F.col(lon), F.col(lat), res))
+    keyed = docs.withColumn("cell", cell_encode_cols(F.col("lon"), F.col("lat"), res))
     left = keyed.select(
-        F.col(key).alias("key_a"),
-        F.col(lon).alias("lon_a"),
-        F.col(lat).alias("lat_a"),
+        F.col("doc_id").alias("key_a"),
+        F.col("lon").alias("lon_a"),
+        F.col("lat").alias("lat_a"),
         F.explode(_disk1_cells_col(F.col("cell"), res)).alias("cell"),
     )
     right = keyed.select(
-        F.col(key).alias("key_b"),
-        F.col(lon).alias("lon_b"),
-        F.col(lat).alias("lat_b"),
+        F.col("doc_id").alias("key_b"),
+        F.col("lon").alias("lon_b"),
+        F.col("lat").alias("lat_b"),
         "cell",
     )
     from georaster_spark.functions.geo import haversine_cols as _hav

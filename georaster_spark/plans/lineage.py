@@ -39,9 +39,6 @@ from pyspark.sql import functions as F
 from georaster_spark.session import local_df
 from georaster_spark.sources import icetable
 
-LINEAGE_COLS = ["stage", "part", "input_rows", "output_rows", "checksum", "committed_at"]
-
-
 def content_checksum(df: DataFrame, part_col: str, cols: list[str]) -> DataFrame:
     """Order-independent per-partition checksum:
     bit_xor(xxhash64(cols)).
@@ -133,16 +130,6 @@ def run_stage(
     mode = "append" if icetable.current_snapshot(output_path) else "overwrite"
     icetable.write_table(out, output_path, mode=mode, extra=lineage_extra)
     return {"pending": len(in_rows), "done_before": len(done)}
-
-
-def metrics_df(spark: SparkSession, output_path: str) -> DataFrame:
-    """Lineage/metrics as a DataFrame (for rollups and dashboards)."""
-    rows = lineage_rows(output_path)
-    schema = (
-        "stage string, part long, input_rows long, output_rows long, "
-        "checksum long, committed_at double"
-    )
-    return local_df(spark, [[r[c] for c in LINEAGE_COLS] for r in rows], schema)
 
 
 def verify_text_identity(

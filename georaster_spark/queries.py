@@ -207,7 +207,7 @@ def sql_pip_join():
 
 def q_knn(spark, sf_dir):
     d = docs_geocoded(spark, sf_dir)
-    out = knn_join(d, KNN_QUERIES, k=5, res=RES, doc_key="doc_id")
+    out = knn_join(d, KNN_QUERIES, k=5, doc_key="doc_id")
     return out.select(
         "query_id", F.col("doc_id").cast("long").alias("doc_id"), F.col("rank").cast("long").alias("rank")
     )

@@ -590,19 +590,15 @@ def pmtiles_entries_df(spark, paths):
 def tile_stats_df(
     spark,
     paths,
-    tile_partitions: int | None = None,
     anchor_px: int = ANCHOR_PX,
     anchor_py: int = ANCHOR_PY,
 ):
     """Stage 2: entry table → per-tile decode stats. Each tile decodes
     independently (ranged read + inflate + numpy); only small typed
-    rows leave the kernel — tile bytes never shuffle. Repartitioning
-    the tiny entry table (not the blobs) spreads decode work."""
+    rows leave the kernel — tile bytes never shuffle."""
     import pandas as pd
 
     entries = pmtiles_entries_df(spark, paths)
-    if tile_partitions:
-        entries = entries.repartition(tile_partitions)
 
     def kernel(batches):
         handles: dict[str, object] = {}  # one open per archive per task

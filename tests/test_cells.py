@@ -58,17 +58,7 @@ def test_bounds_contains_point():
     assert lat0 <= GOLDEN_LAT < lat1
 
 
-def test_numpy_matches_scalar():
-    rng = np.random.default_rng(42)
-    lon = rng.uniform(-179.9, 179.9, 2000)
-    lat = rng.uniform(-84.9, 84.9, 2000)
-    for z in (0, 4, 12, 16):
-        got = cells.cell_encode_np(lon, lat, z)
-        want = np.array([cells.cell_encode_py(a, b, z) for a, b in zip(lon, lat)])
-        assert (got == want).all()
-
-
-def test_column_and_numpy_match_scalar(spark):
+def test_column_matches_scalar(spark):
     rng = np.random.default_rng(7)
     lon = rng.uniform(-179.9, 179.9, 500)
     lat = rng.uniform(-84.9, 84.9, 500)
@@ -79,13 +69,8 @@ def test_column_and_numpy_match_scalar(spark):
     out = df.select(
         cells.cell_encode_cols(F.col("lon"), F.col("lat"), z).alias("c_expr"), "lon", "lat"
     ).collect()
-    got_np = cells.cell_encode_np(
-        np.array([r.lon for r in out]), np.array([r.lat for r in out]), z
-    )
-    for r, c_np in zip(out, got_np):
-        want = cells.cell_encode_py(r.lon, r.lat, z)
-        assert r.c_expr == want
-        assert c_np == want
+    for r in out:
+        assert r.c_expr == cells.cell_encode_py(r.lon, r.lat, z)
 
 
 def test_parent_cols(spark):

@@ -1,7 +1,8 @@
-"""kNN ring-expansion tests vs brute-force cross-join oracle
-(SURVEY.md M5)."""
+"""kNN tests vs a brute-force NumPy oracle (SURVEY.md M5)."""
 
 from __future__ import annotations
+
+import uuid
 
 import numpy as np
 import pytest
@@ -9,6 +10,7 @@ from pyspark.sql import functions as F
 
 from georaster_spark.datagen import documents_df, geocode_cols, geocode_np
 from georaster_spark.functions.geo import haversine_np
+from georaster_spark.operators import knn
 from georaster_spark.operators.knn import knn_join
 
 N_DOCS = 500
@@ -40,7 +42,10 @@ def brute_force(k: int) -> dict[str, list[str]]:
 
 
 def test_knn_matches_brute_force(spark, docs):
-    got_df = knn_join(docs, QUERIES, k=K, res=10)
+    # a doc without a location yields no rows
+    no_loc = docs.limit(1).withColumn("url", F.lit("https://nowhere.example/"))
+    docs = docs.unionByName(no_loc.withColumn("lon", F.lit(None).cast("double")))
+    got_df = knn_join(docs, QUERIES, k=K)
     got: dict[str, list[str]] = {}
     for r in got_df.orderBy("query_id", "rank").collect():
         got.setdefault(r.query_id, []).append(r.url)
@@ -49,13 +54,61 @@ def test_knn_matches_brute_force(spark, docs):
 
 
 def test_knn_k_larger_than_ring(spark, docs):
-    """k big enough that the first disk can't satisfy it — exercises
-    the expansion loop and the boundary-distance guarantee."""
-    got_df = knn_join(docs, [QUERIES[1]], k=60, res=12)
+    """A k of 60 takes neighbours far beyond the query's own cell: the
+    one pass must still equal brute force, rank for rank."""
+    got_df = knn_join(docs, [QUERIES[1]], k=60)
     rows = got_df.orderBy("rank").collect()
     assert len(rows) == 60
     want = brute_force(60)["q1"]
     assert [r.url for r in rows] == want
+
+
+def test_knn_join_ties_merge_across_partitions(spark):
+    """24 docs at one point, 6 per partition, keys out of partition
+    order: each task cuts a tie at its kth distance and the driver's
+    merge must keep the 5 smallest keys of all partitions. With k above
+    the doc count every doc comes back, ranked by key, and a doc with a
+    null ``lat`` is not among them."""
+    i = F.col("id")
+    tied = spark.range(24, numPartitions=4).select(
+        F.format_string("k%02d", (i * 7) % 24).alias("url"),
+        F.lit(8.0).alias("lon"),
+        F.lit(46.0).alias("lat"),
+    )
+    no_loc = tied.limit(1).select(F.lit("k-none").alias("url"), "lon", F.lit(None).cast("double").alias("lat"))
+    docs = tied.unionByName(no_loc)
+
+    def urls(k):
+        return [r.url for r in knn_join(docs, [("q", 8.1, 46.1)], k=k).orderBy("rank").collect()]
+
+    assert urls(5) == [f"k{j:02d}" for j in range(5)]
+    assert urls(30) == [f"k{j:02d}" for j in range(24)]
+
+
+def test_knn_join_is_one_job(spark, docs, monkeypatch):
+    """One call is one Spark job of one stage (nothing shuffles), and no
+    DataFrame is cached when the result table is built."""
+    sc = spark.sparkContext
+    persistent = sc._jsc.getPersistentRDDs
+    before = persistent().size()
+    seen = []
+    local_df = knn.local_df
+
+    def watched(*args):
+        seen.append(persistent().size())
+        return local_df(*args)
+
+    monkeypatch.setattr(knn, "local_df", watched)
+    group = f"knn-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        knn_join(docs, QUERIES, k=K)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+    assert seen == [before]
 
 
 POIS = [(f"poi{i}", 7.1 + (i % 8) * 0.25, 45.1 + (i // 8) * 0.45) for i in range(40)]
