@@ -11,9 +11,17 @@ cell-encode→tile-fetch→local-sample lifecycle, ``src/pmtiles.rs:37-51``):
    shuffle). Cells fully inside a polygon are marked ``full`` —
    documents landing there skip the exact test entirely.
 2. **Exact ray-cast** (fine): candidates from partial cells run an
-   even-odd test as flat Column arithmetic over the polygon edges
-   that ride along in the cover (no Python), parsed from one SQL
-   text (``ray_cast_edge_cols``).
+   even-odd test as flat Column arithmetic (no Python), parsed from
+   one SQL text (``ray_cast_edge_cols``). Each partial cover row
+   carries only the polygon edges that a rightward ray from a point
+   of its cell can cross, and one ``base`` bit for the edges every
+   such ray crosses (the full/partial/empty split of Raster
+   Intervals, PAPERS.md); the test is ``full OR (base != fold)``.
+   A partial cell that no kept edge crosses is decided whole: full,
+   or dropped from the cover, so an empty cell gives no candidates.
+   The edges are chosen against the cell bounds widened by a margin,
+   so a document a few ulps outside its own cell still gets the
+   whole-ring answer.
 
 Building the plan is itself kept cheap for the driver: the cover's
 corner test is one NumPy call per polygon, and the whole join is
@@ -34,11 +42,13 @@ unless the caller aggregates.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from georaster_spark.cells import cell_bounds, cell_encode_cols, zxy_to_cell, tile_xy
+from georaster_spark.cells import cell_bounds, cell_encode_cols, cell_to_zxy, tile_xy, zxy_to_cell
 from georaster_spark.datagen import Polygon
 from georaster_spark.functions.geo import points_in_ring
 from georaster_spark.session import local_df
@@ -103,17 +113,19 @@ def build_cover(polys: list[Polygon], res: int) -> list[tuple[int, str, bool]]:
     return out
 
 
-def ray_cast_edge_cols(max_vertices: int) -> Column:
+def ray_cast_edge_cols(max_edges: int) -> Column:
     """Even-odd point-in-polygon of the ``lon``/``lat`` columns over
-    FLAT edge columns.
+    the FLAT cell-local edge columns of a cover row.
 
-    Expects the joined row to carry ``x0_j, y0_j, x1_j, y1_j`` double
-    columns (one quad per polygon edge, NULL-padded to
-    ``max_vertices`` — see ``cover_df``). The parity fold is plain
-    scalar arithmetic on flat doubles: small expression tree, fully
-    inside WholeStageCodegen. Alternatives measured on 48M candidate
-    rows: higher-order ``aggregate`` over ARRAY<STRUCT> ~33µs/row
-    (interpreted); unrolled ``try_element_at`` worse (codegen
+    Expects the joined row to carry the ``base`` parity bit and
+    ``x0_j, y0_j, x1_j, y1_j`` double columns (one quad per kept edge,
+    NULL-padded to ``max_edges`` — see ``cover_df``). The fold starts
+    from ``base`` and flips once per kept edge the point's rightward
+    ray crosses, so it is ``base != fold(kept edges)``. The parity
+    fold is plain scalar arithmetic on flat doubles: small expression
+    tree, fully inside WholeStageCodegen. Alternatives measured on 48M
+    candidate rows: higher-order ``aggregate`` over ARRAY<STRUCT>
+    ~33µs/row (interpreted); unrolled ``try_element_at`` worse (codegen
     fallback); a pandas-UDF kernel anti-scaled with cores (Python
     workers compete with executor threads). Flat-column unroll is the
     one that scales.
@@ -123,11 +135,9 @@ def ray_cast_edge_cols(max_vertices: int) -> Column:
     one JVM round trip instead of ~100.
 
     NULL padding: the edge test is NULL → ``coalesce(…, false)``.
-    Horizontal edges: division yields ±Inf/NaN but the crossing guard
-    is false (double division never throws, even under ANSI).
     """
-    inside = "false"
-    for j in range(max_vertices):
+    inside = "base"
+    for j in range(max_edges):
         x0, y0, x1, y1 = (f"{p}_{j}" for p in ("x0", "y0", "x1", "y1"))
         test = (
             f"((({y0} > lat) != ({y1} > lat))"
@@ -137,33 +147,88 @@ def ray_cast_edge_cols(max_vertices: int) -> Column:
     return F.expr(inside)
 
 
+# Degrees by which a cell's bounds are widened before any edge is
+# pruned. The cell encode (``log(tan + 1/cos)``, ``floor`` on lon) and
+# ``cell_bounds`` (``atan`` of an exp-spelled ``sinh``) round
+# differently, so a document can sit a few ulps outside its own cell.
+# A wider margin only keeps more edges, so it is always safe.
+_CELL_MARGIN = 1e-9
+
+
+def _cell_local_edges(
+    ring: np.ndarray, cell: int
+) -> tuple[bool, list[tuple[float, float, float, float]]]:
+    """``(base, kept)``: the edges of ``ring`` that a rightward ray
+    from a point of ``cell`` can cross, as ``(x0, y0, x1, y1)`` quads
+    in ring order, and the parity of the edges that every such ray
+    crosses.
+
+    Decided against the cell's ``cell_bounds`` widened by
+    ``_CELL_MARGIN``; a cell on the grid's border is open on that side,
+    because the encode clamps points beyond the grid into it.
+    Horizontal edges, edges whose y-span misses the band and edges
+    wholly left of the cell are never crossed. An edge wholly right of
+    the cell whose y-span strictly contains the band is always
+    crossed, so it flips ``base``. For every point within the margin
+    of the cell, ``base != fold(kept)`` is the even-odd fold over the
+    whole ring, bit for bit.
+    """
+    z, tx, ty = cell_to_zxy(cell)
+    last = (1 << z) - 1
+    lon0, lat0, lon1, lat1 = cell_bounds(cell)
+    lon0 = -math.inf if tx == 0 else lon0 - _CELL_MARGIN
+    lon1 = math.inf if tx == last else lon1 + _CELL_MARGIN
+    lat0 = -math.inf if ty == last else lat0 - _CELL_MARGIN
+    lat1 = math.inf if ty == 0 else lat1 + _CELL_MARGIN
+    base = False
+    kept = []
+    pts = ring.tolist()
+    for (x0, y0), (x1, y1) in zip(pts[-1:] + pts[:-1], pts):
+        ylo, yhi = min(y0, y1), max(y0, y1)
+        if ylo == yhi or yhi < lat0 or ylo > lat1 or max(x0, x1) < lon0:
+            continue
+        if min(x0, x1) > lon1 and ylo < lat0 and yhi > lat1:
+            base = not base
+        else:
+            kept.append((x0, y0, x1, y1))
+    return base, kept
+
+
 def cover_df(spark, polys: list[Polygon], res: int) -> tuple[DataFrame, int]:
-    """Broadcastable cover index with FLAT edge columns:
-    (cell, poly_id, full, x0_0, y0_0, x1_0, y1_0, …) — the polygon
-    edges ride along (NULL for full cells / padding) so the exact
-    test is pure flat-double arithmetic after the join. The cover is
-    a ``LocalTableScan`` (``local_df``), so shipping it to the
-    broadcast costs no Spark job over a Python RDD. Returns
-    (cover, max_vertices)."""
-    mv = max(len(p.ring) for p in polys)
+    """Broadcastable cover index with FLAT cell-local edge columns:
+    (cell, poly_id, full, base, x0_0, y0_0, x1_0, y1_0, …).
+
+    A partial row of ``build_cover`` keeps only the edges a ray from
+    its cell can cross, and ``base`` holds the parity of the edges
+    every such ray crosses (``_cell_local_edges``). A partial row that
+    keeps no edge is decided for its whole cell: full when ``base`` is
+    true, dropped when it is false, so an empty cell gives no
+    candidates. Full rows carry no edges; padding is NULL. The edge
+    columns number the most edges any row keeps, so the exact test
+    is unrolled no further. The cover is a ``LocalTableScan``
+    (``local_df``), so shipping it to the broadcast costs no Spark job
+    over a Python RDD. Returns (cover, max_edges)."""
     rings = {p.poly_id: p.ring for p in polys}
     rows = []
     for cell, pid, full in build_cover(polys, res):
-        ring = rings[pid]
-        edges: list[float | None] = []
-        for j in range(mv):
-            if full or j >= len(ring):
-                edges += [None, None, None, None]
-            else:
-                x1, y1 = ring[j]
-                x0, y0 = ring[j - 1]
-                edges += [float(x0), float(y0), float(x1), float(y1)]
-        rows.append((cell, pid, full, *edges))
-    edge_schema = ", ".join(
-        f"x0_{j} double, y0_{j} double, x1_{j} double, y1_{j} double" for j in range(mv)
+        base, edges = (False, []) if full else _cell_local_edges(rings[pid], cell)
+        if not (full or edges):
+            if not base:
+                continue
+            full = True
+        rows.append((cell, pid, full, base, edges))
+    mv = max((len(edges) for *_, edges in rows), default=0)
+    flat = []
+    for *row, edges in rows:
+        pad = [None] * (4 * (mv - len(edges)))
+        flat.append((*row, *(v for edge in edges for v in edge), *pad))
+    edge_schema = "".join(
+        f", x0_{j} double, y0_{j} double, x1_{j} double, y1_{j} double" for j in range(mv)
     )
     return (
-        local_df(spark, rows, f"cell long, poly_id string, full boolean, {edge_schema}"),
+        local_df(
+            spark, flat, f"cell long, poly_id string, full boolean, base boolean{edge_schema}"
+        ),
         mv,
     )
 
@@ -174,9 +239,9 @@ def pip_join(docs: DataFrame, polys: list[Polygon], res: int) -> DataFrame:
 
     Emits one output row per (document, containing polygon) pair —
     overlapping polygons multiply rows, matching the relational
-    semantics the oracle checks. The exact ray-cast runs as Column
-    algebra over the broadcast cover's edge columns (JVM, scales
-    linearly with cores).
+    semantics the oracle checks. The exact test is ``full OR (base !=
+    fold)``: Column algebra over the broadcast cover row's cell-local
+    edge columns (JVM, scales linearly with cores).
     """
     spark = docs.sparkSession
     docs_c = docs.withColumn("cell", cell_encode_cols(F.col("lon"), F.col("lat"), res))
@@ -184,7 +249,7 @@ def pip_join(docs: DataFrame, polys: list[Polygon], res: int) -> DataFrame:
     cand = docs_c.join(F.broadcast(cover), "cell")
     edge_cols = [f"{p}_{j}" for j in range(max_v) for p in ("x0", "y0", "x1", "y1")]
     return cand.where(F.col("full") | ray_cast_edge_cols(max_v)).drop(
-        "full", *edge_cols
+        "full", "base", *edge_cols
     )
 
 

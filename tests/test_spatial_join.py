@@ -7,12 +7,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from georaster_spark.cells import cell_bounds, cell_encode_cols, tile_xy, zxy_to_cell
-from georaster_spark.datagen import documents_df, geocode_cols, geocode_np, polygons
+from georaster_spark.cells import cell_bounds, cell_encode_cols, cell_to_zxy, tile_xy, zxy_to_cell
+from georaster_spark.datagen import Polygon, documents_df, geocode_cols, geocode_np, polygons
 from georaster_spark.functions.geo import points_in_ring
 from georaster_spark.operators.spatial_join import (
+    _cell_local_edges,
     _segment_intersects_box,
     build_cover,
+    cover_df,
     pip_join,
     salted_cell_counts,
 )
@@ -82,6 +84,148 @@ def test_build_cover_matches_scalar_reference(res):
         assert any(full for *_, full in got)
     if res == RES:
         assert len(got) == 325
+
+
+# A document within this many degrees of its cell gets the same
+# answer from the cell-local edges as from the whole ring.
+MARGIN = 1e-9
+
+
+def grid_point(res: int, tx: int, ty: int) -> tuple[float, float]:
+    """The grid corner (tx, ty): the top-left corner of that cell."""
+    lon0, _, _, lat1 = cell_bounds(zxy_to_cell(res, tx, ty))
+    return lon0, lat1
+
+
+def sloped_polygons() -> list[Polygon]:
+    """Polygons with sloped edges (the fixture polygons are all
+    axis-aligned): a concave 10-point star across lon 0 and the
+    equator, a triangle, a triangle across the clamp at the grid's
+    top-right corner, and a triangle whose vertices sit half a margin
+    off res-9 grid corners (res-9 corners are res-11 and res-13 corners
+    too)."""
+    k = np.arange(10)
+    r = np.where(k % 2 == 0, 0.3, 0.12)
+    ang = np.pi / 2 + k * np.pi / 5
+    star = np.column_stack([0.05 + r * np.cos(ang), 0.02 + r * np.sin(ang)])
+    tri = np.array([[-120.31, 60.2], [-119.77, 60.33], [-120.12, 60.71]])
+    clamp = np.array([[179.2, 84.6], [179.97, 86.0], [179.5, 89.5]])
+    corners = np.array([grid_point(9, tx, ty) for tx, ty in ((270, 181), (273, 182), (271, 184))])
+    near = corners + np.sign(corners - corners.mean(axis=0)) * (MARGIN / 2)
+    return [
+        Polygon("star", star),
+        Polygon("tri", tri),
+        Polygon("clamp", clamp),
+        Polygon("near_grid", near),
+    ]
+
+
+def probe_points(cell: int, rng: np.random.Generator) -> tuple[np.ndarray, np.ndarray]:
+    """Random points in ``cell``, points exactly on its edges and
+    corners, and points one ``MARGIN`` outside them; for a cell on the
+    grid's border also points beyond the grid, which the encode clamps
+    into it."""
+    z, tx, ty = cell_to_zxy(cell)
+    last = (1 << z) - 1
+    lon0, lat0, lon1, lat1 = cell_bounds(cell)
+    xs = [lon0 - MARGIN, lon0, *rng.uniform(lon0, lon1, 6), lon1, lon1 + MARGIN]
+    ys = [lat0 - MARGIN, lat0, *rng.uniform(lat0, lat1, 6), lat1, lat1 + MARGIN]
+    xs += [-185.0] * (tx == 0) + [185.0] * (tx == last)
+    ys += [-89.0] * (ty == last) + [89.0] * (ty == 0)
+    px, py = np.meshgrid(xs, ys)
+    return px.ravel(), py.ravel()
+
+
+def edge_parity(px: np.ndarray, py: np.ndarray, edges) -> np.ndarray:
+    """``points_in_ring``'s even-odd fold over ``(x0, y0, x1, y1)``
+    quads, in the operation order of ``ray_cast_edge_cols``."""
+    inside = np.zeros(px.shape, dtype=bool)
+    for x0, y0, x1, y1 in edges:
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = (x1 - x0) * (py - y0) / (y1 - y0) + x0
+        inside ^= ((y0 > py) != (y1 > py)) & (px < xint)
+    return inside
+
+
+@pytest.mark.parametrize("res", [9, 11, 13])
+def test_cell_local_edges_match_whole_ring(res):
+    """For every partial cover row, ``base != fold(kept)`` equals the
+    whole-ring fold on random points of the cell, on its edges and
+    corners, and one margin outside. A row that keeps no edge and has
+    ``base`` false (dropped by ``cover_df``) is thus false on all of
+    them."""
+    rng = np.random.default_rng(res)
+    polys = polygons() + sloped_polygons()
+    rings = {p.poly_id: p.ring for p in polys}
+    dropped, sloped_rows = 0, 0
+    for cell, pid, full in build_cover(polys, res):
+        if full:
+            continue
+        ring = rings[pid]
+        base, kept = _cell_local_edges(ring, cell)
+        px, py = probe_points(cell, rng)
+        got = base != edge_parity(px, py, kept)
+        assert np.array_equal(got, points_in_ring(px, py, ring)), (res, pid, cell)
+        dropped += not (kept or base)
+        sloped_rows += not pid.startswith("poly")
+    assert dropped and sloped_rows
+
+
+def test_cover_df_keeps_cell_local_edges(spark):
+    """On the benchmark polygons at res 11 the 19 partial cells that
+    no ray crosses into are dropped (325 → 306 rows) and no row keeps
+    more than 3 edges."""
+    cover, max_v = cover_df(spark, polygons(), RES)
+    assert (cover.count(), max_v) == (306, 3)
+
+
+def test_pip_join_exact_on_cell_edges_and_corners(spark):
+    """Docs exactly on cell edges and corners, on polygon vertices that
+    sit on cell corners, and a few ulps either side of each (the encode
+    can put such a doc a few ulps outside its own cell's bounds), plus
+    docs beyond the grid's clamp: ``pip_join`` equals
+    ``points_in_ring`` row for row. The FIXTURES.md boundary nudge does
+    not apply; one polygon's vertices sit 2 ulps off the corners."""
+    n = 1 << RES
+    tx0, ty0 = n // 2 + 1, n // 2 - 5  # just east of lon 0, north of the equator
+    pts = np.array(
+        [[grid_point(RES, tx0 + i, ty0 + j) for i in range(6)] for j in range(6)]
+    )
+    tri = pts[[5, 3, 0], [0, 4, 1]]
+    notch = pts[[0, 0, 5, 5, 3, 3], [0, 4, 4, 3, 3, 0]]
+    out = np.sign(tri - tri.mean(axis=0))
+    tri_off = np.nextafter(np.nextafter(tri, tri + out * 1.0), tri + out * 1.0)
+    clamp = np.array([[179.2, 84.6], [179.97, 86.0], [179.5, 89.5]])
+    polys = [Polygon(f"b{k}", ring) for k, ring in enumerate((tri, notch, tri_off, clamp))]
+
+    corners = pts.reshape(-1, 2)
+    mid_x = (pts[:, :-1, 0] + pts[:, 1:, 0]) / 2  # on the cells' top and bottom edges
+    mid_y = (pts[:-1, :, 1] + pts[1:, :, 1]) / 2  # on their left and right edges
+    lon_edges = np.column_stack([mid_x.ravel(), pts[:, :-1, 1].ravel()])
+    lat_edges = np.column_stack([pts[:-1, :, 0].ravel(), mid_y.ravel()])
+    anchors = np.concatenate([corners, lon_edges, lat_edges, tri_off])
+    steps = []
+    for a in anchors:
+        xs, ys = [a[0]], [a[1]]
+        for _ in range(3):
+            xs = [np.nextafter(xs[0], -np.inf), *xs, np.nextafter(xs[-1], np.inf)]
+            ys = [np.nextafter(ys[0], -np.inf), *ys, np.nextafter(ys[-1], np.inf)]
+        steps += [(x, y) for x in xs for y in ys]
+    gx, gy = np.meshgrid(np.linspace(179.0, 181.0, 9), np.linspace(84.0, 89.9, 25))
+    lon, lat = np.concatenate([steps, np.column_stack([gx.ravel(), gy.ravel()])]).T
+
+    docs = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "doc_id long, lon double, lat double",
+    )
+    got = {(r.doc_id, r.poly_id) for r in pip_join(docs, polys, RES).collect()}
+    want = {
+        (int(i), p.poly_id)
+        for p in polys
+        for i in np.nonzero(points_in_ring(lon, lat, p.ring))[0]
+    }
+    assert got == want
+    assert {pid for _, pid in want} == {p.poly_id for p in polys}
 
 
 def test_pip_join_builds_in_few_jvm_round_trips(spark, docs, monkeypatch):
