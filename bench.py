@@ -145,25 +145,6 @@ def main() -> None:
         print(f"# {name}: {n} rows in {best:.2f}s (min of {reps})", file=sys.stderr)
     loads.append(round(os.getloadavg()[0], 1))
 
-    # E5 identity at benchmark scale: the salted two-level aggregate
-    # (timed above as pip_join_hot) must equal the naive groupBy on
-    # the same degenerate-skew input — run once, outside the timing
-    salted = {
-        r["poly_id"]: r["n_docs"]
-        for r in Q.pip_join_hot_counts(spark, sf_dir, salted=True).collect()
-    }
-    naive = {
-        r["poly_id"]: r["n_docs"]
-        for r in Q.pip_join_hot_counts(spark, sf_dir, salted=False).collect()
-    }
-    if salted != naive:
-        raise AssertionError(f"salted != naive per-poly counts: {salted} vs {naive}")
-    print(
-        f"# pip_join_hot identity: salted == naive over {len(salted)} polys, "
-        f"hot key n={max(salted.values())}",
-        file=sys.stderr,
-    )
-
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else None
     _write_micro(sf_dir, sf, cpus, per_query, rows_out, total, loads)
     print(

@@ -35,9 +35,9 @@ def main(n_docs: int = 100_000) -> None:
     print("docs in polygons:")
     joined.groupBy("poly_id").count().orderBy(F.desc("count")).show(5)
 
-    # 4. skew-safe per-cell counts (20% of docs share one hot cell)
+    # 4. per-cell counts, aggregated map-side (20% of docs share one hot cell)
     print("hottest cells:")
-    salted_cell_counts(docs, salt_k=16).orderBy(F.desc("n_docs")).show(5)
+    salted_cell_counts(docs).orderBy(F.desc("n_docs")).show(5)
 
     # 5. exact kNN around a query point: one pass, a top-k per task
     print("5 nearest docs to (7.5, 46.0):")

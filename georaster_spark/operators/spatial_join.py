@@ -21,7 +21,10 @@ cell-encode→tile-fetch→local-sample lifecycle, ``src/pmtiles.rs:37-51``):
    or dropped from the cover, so an empty cell gives no candidates.
    The edges are chosen against the cell bounds widened by a margin,
    so a document a few ulps outside its own cell still gets the
-   whole-ring answer.
+   whole-ring answer. Every edge slot is NOT NULL: a row that keeps
+   fewer edges than the widest row pads with the zero edge
+   ``(0, 0, 0, 0)``, which no ray crosses, so the fold carries no
+   null handling.
 
 Building the plan is itself kept cheap for the driver: the cover's
 corner test is one NumPy call per polygon, and the whole join is
@@ -30,9 +33,12 @@ capture off), so a warm call's fixed cost stays small next to the
 scan it plans.
 
 Skew: hot cells concentrate candidates. The join itself is broadcast
-(no shuffle to skew), but downstream per-cell aggregations shuffle on
-``cell`` — ``salted_cell_counts`` shows the two-level (salted
-partial → final) pattern; AQE skew-join is the configured backstop.
+(no shuffle to skew), and the per-cell aggregations after it
+(``salted_cell_counts``) aggregate map-side before their one shuffle,
+so a hot cell reaches the reducers as at most one partial row per
+task. The explicit salt is kept only where partial aggregation cannot
+help, on a shuffled equi-join (``salted_equi_join``); AQE skew-join is
+the configured backstop.
 
 At 100 TB scale: stage 1 is a map-side-only narrow pass (encode +
 broadcast hash join + filter), stage 2 is vectorized compute on the
@@ -119,22 +125,26 @@ def ray_cast_edge_cols(max_edges: int) -> Column:
 
     Expects the joined row to carry the ``base`` parity bit and
     ``x0_j, y0_j, x1_j, y1_j`` double columns (one quad per kept edge,
-    NULL-padded to ``max_edges`` — see ``cover_df``). The fold starts
-    from ``base`` and flips once per kept edge the point's rightward
-    ray crosses, so it is ``base != fold(kept edges)``. The parity
-    fold is plain scalar arithmetic on flat doubles: small expression
-    tree, fully inside WholeStageCodegen. Alternatives measured on 48M
-    candidate rows: higher-order ``aggregate`` over ARRAY<STRUCT>
-    ~33µs/row (interpreted); unrolled ``try_element_at`` worse (codegen
-    fallback); a pandas-UDF kernel anti-scaled with cores (Python
-    workers compete with executor threads). Flat-column unroll is the
-    one that scales.
+    padded to ``max_edges`` with the zero edge — see ``cover_df``).
+    The fold starts from ``base`` and flips once per kept edge the
+    point's rightward ray crosses, so it is ``base != fold(kept
+    edges)``. The parity fold is plain scalar arithmetic on flat
+    doubles: small expression tree, fully inside WholeStageCodegen.
+    Alternatives measured on 48M candidate rows: higher-order
+    ``aggregate`` over ARRAY<STRUCT> ~33µs/row (interpreted); unrolled
+    ``try_element_at`` worse (codegen fallback); a pandas-UDF kernel
+    anti-scaled with cores (Python workers compete with executor
+    threads). Flat-column unroll is the one that scales.
 
     The fold is written as one SQL text and parsed by a single
     ``F.expr``: the same expression as chaining Column operators, in
     one JVM round trip instead of ~100.
 
-    NULL padding: the edge test is NULL → ``coalesce(…, false)``.
+    Zero-edge padding: for ``(0, 0, 0, 0)`` both sides of the first
+    comparison are ``0.0 > lat``, so the crossing test is false for
+    every ``lat`` (±0.0 and NaN included) and the ``AND`` never
+    evaluates the division. Kept edges are never horizontal, so their
+    divisor is never zero.
     """
     inside = "base"
     for j in range(max_edges):
@@ -143,7 +153,7 @@ def ray_cast_edge_cols(max_edges: int) -> Column:
             f"((({y0} > lat) != ({y1} > lat))"
             f" AND (lon < ((({x1} - {x0}) * (lat - {y0})) / ({y1} - {y0})) + {x0}))"
         )
-        inside = f"({inside} != coalesce({test}, false))"
+        inside = f"({inside} != {test})"
     return F.expr(inside)
 
 
@@ -203,11 +213,14 @@ def cover_df(spark, polys: list[Polygon], res: int) -> tuple[DataFrame, int]:
     every such ray crosses (``_cell_local_edges``). A partial row that
     keeps no edge is decided for its whole cell: full when ``base`` is
     true, dropped when it is false, so an empty cell gives no
-    candidates. Full rows carry no edges; padding is NULL. The edge
-    columns number the most edges any row keeps, so the exact test
-    is unrolled no further. The cover is a ``LocalTableScan``
-    (``local_df``), so shipping it to the broadcast costs no Spark job
-    over a Python RDD. Returns (cover, max_edges)."""
+    candidates. Every column is NOT NULL: a row that keeps fewer
+    edges than the widest row (full rows keep none) pads each empty
+    slot with the zero edge ``(0, 0, 0, 0)``, which the exact test
+    never counts as crossed. The edge columns number the most edges
+    any row keeps, so the exact test is unrolled no further. The cover
+    is a ``LocalTableScan`` (``local_df``), so shipping it to the
+    broadcast costs no Spark job over a Python RDD. Returns (cover,
+    max_edges)."""
     rings = {p.poly_id: p.ring for p in polys}
     rows = []
     for cell, pid, full in build_cover(polys, res):
@@ -220,17 +233,16 @@ def cover_df(spark, polys: list[Polygon], res: int) -> tuple[DataFrame, int]:
     mv = max((len(edges) for *_, edges in rows), default=0)
     flat = []
     for *row, edges in rows:
-        pad = [None] * (4 * (mv - len(edges)))
+        pad = [0.0] * (4 * (mv - len(edges)))
         flat.append((*row, *(v for edge in edges for v in edge), *pad))
     edge_schema = "".join(
-        f", x0_{j} double, y0_{j} double, x1_{j} double, y1_{j} double" for j in range(mv)
+        f", {p}_{j} double NOT NULL" for j in range(mv) for p in ("x0", "y0", "x1", "y1")
     )
-    return (
-        local_df(
-            spark, flat, f"cell long, poly_id string, full boolean, base boolean{edge_schema}"
-        ),
-        mv,
+    schema = (
+        "cell long NOT NULL, poly_id string NOT NULL, full boolean NOT NULL,"
+        f" base boolean NOT NULL{edge_schema}"
     )
+    return local_df(spark, flat, schema), mv
 
 
 def pip_join(docs: DataFrame, polys: list[Polygon], res: int) -> DataFrame:
@@ -364,28 +376,17 @@ def within_distance_pairs(
     )
 
 
-def salted_cell_counts(
-    docs_with_cell: DataFrame,
-    salt_k: int = 16,
-    count_col: str = "n_docs",
-    salt_key: str | None = None,
-) -> DataFrame:
-    """Per-cell counts via two-level salted aggregation (E5).
+def salted_cell_counts(docs_with_cell: DataFrame, count_col: str = "n_docs") -> DataFrame:
+    """Per-cell counts ``(cell, count_col bigint)`` in one shuffle (E5).
 
-    Level 1 groups on (cell, salt) — the hot cell's rows spread over
-    ``salt_k`` reducers; level 2 sums the tiny partials. Same result
-    as a direct groupBy(cell).count(), immune to single-key skew.
-
-    The salt hashes a DETERMINISTIC per-row key (``salt_key``, else
-    the first non-cell column): a nondeterministic salt
-    (monotonically_increasing_id / rand) blocks Catalyst reordering
-    and measurably anti-scaled.
+    A plain ``groupBy("cell")``: Spark counts map-side before the
+    Exchange, so a hot cell reaches the reducers as at most one
+    partial row per task and cannot make a straggler. A salted
+    two-level form would add a second shuffle stage for nothing. The
+    name is kept for its callers; the explicit salt lives on in
+    ``salted_equi_join``, where partial aggregation cannot help.
     """
-    if salt_key is None:
-        salt_key = next(c for c in docs_with_cell.columns if c != "cell")
-    salted = docs_with_cell.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_key)), F.lit(salt_k)))
-    partial = salted.groupBy("cell", "_salt").agg(F.count(F.lit(1)).alias("_partial"))
-    return partial.groupBy("cell").agg(F.sum("_partial").cast("long").alias(count_col))
+    return docs_with_cell.groupBy("cell").agg(F.count(F.lit(1)).alias(count_col))
 
 
 def salted_equi_join(

@@ -156,9 +156,7 @@ def sql_coord_interop():
 def q_cell_hist(spark, sf_dir):
     d = docs_geocoded(spark, sf_dir)
     d = d.withColumn("cell", cells.cell_encode_cols(F.col("lon"), F.col("lat"), 8))
-    return salted_cell_counts(d, salt_k=8).select(
-        "cell", F.col("n_docs").cast("long").alias("n_docs")
-    )
+    return salted_cell_counts(d)
 
 
 def sql_cell_hist():
@@ -1594,17 +1592,16 @@ def sql_pmtiles_webp_ingest():
     """
 
 
-def pip_join_hot_counts(spark, sf_dir, salted: bool = True):
+def pip_join_hot_counts(spark, sf_dir):
     """Point-in-polygon join under DEGENERATE key skew, then per-
     polygon counts (E5 measured, not just tested): half of all
     documents sit at ONE exact point (7.505, 46.005) — a single cell
     at RES, inside two polygons — so the per-polygon aggregation has
-    two keys holding ~50% of the joined rows each. ``salted=True``
-    routes the count through the two-level salted aggregation
-    (operators/spatial_join.py salted_cell_counts); ``salted=False``
-    is the naive groupBy used for the identity check in bench.py.
-    The broadcast-cover pip_join itself is skew-immune (no shuffle on
-    the cell); the aggregation after it is where a hot key bites."""
+    two keys holding ~50% of the joined rows each. The count is
+    ``salted_cell_counts`` keyed on ``poly_id``: a groupBy that
+    aggregates map-side, so each hot key crosses its one shuffle as
+    at most one partial row per task. The broadcast-cover pip_join
+    itself is skew-immune (no shuffle on the cell)."""
     d = _t(spark, sf_dir, "documents")
     lon, lat = geocode_cols(F.col("doc_id"))
     one_pt = F.pmod(F.col("doc_id"), F.lit(2)) == 0
@@ -1612,16 +1609,12 @@ def pip_join_hot_counts(spark, sf_dir, salted: bool = True):
         "lat", F.when(one_pt, F.lit(46.005)).otherwise(lat)
     )
     joined = pip_join(d, polygons(), RES)
-    keyed = joined.select(F.col("poly_id").alias("cell"), "doc_id")
-    if salted:
-        counts = salted_cell_counts(keyed, salt_k=16, salt_key="doc_id")
-    else:
-        counts = keyed.groupBy("cell").agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+    counts = salted_cell_counts(joined.select(F.col("poly_id").alias("cell")))
     return counts.select(F.col("cell").alias("poly_id"), "n_docs")
 
 
 def q_pip_join_hot(spark, sf_dir):
-    return pip_join_hot_counts(spark, sf_dir, salted=True)
+    return pip_join_hot_counts(spark, sf_dir)
 
 
 def sql_pip_join_hot():
@@ -1906,8 +1899,8 @@ ORACLES = {
 
 def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> DataFrame:
     """The headline pipeline: geocode → cell encode → point-in-polygon
-    join → per-polygon document stats (one broadcast join, one salted
-    aggregation — zero big-side shuffles before the final group)."""
+    join → per-polygon document stats (one broadcast join, one plain
+    groupBy — zero big-side shuffles before the final group)."""
     d = docs_geocoded(spark, sf_dir)
     joined = pip_join(d, polygons(), RES)
     return (

@@ -1,7 +1,10 @@
 """Point-in-polygon join tests — engine vs brute-force Python oracle
-(SURVEY.md M4: salted vs unsalted row counts must match)."""
+(SURVEY.md M4: per-cell counts must match a Python count)."""
 
 from __future__ import annotations
+
+import re
+from collections import Counter
 
 import numpy as np
 import pytest
@@ -228,6 +231,43 @@ def test_pip_join_exact_on_cell_edges_and_corners(spark):
     assert {pid for _, pid in want} == {p.poly_id for p in polys}
 
 
+def test_pip_join_padded_edge_slots_are_inert(spark):
+    """A row that keeps fewer edges than the widest row pads with the
+    zero edge, which no ray crosses: docs at lon/lat exactly 0.0, -0.0
+    and 1–2 ulps either side (the zero edge's own endpoints), and docs
+    at lon < 0, 0 < lat < 1 (where a padded edge up from the origin
+    would be crossed), give ``points_in_ring``'s answer row for row.
+    The polygon's lower-left edge runs through the origin, so the
+    origin's cell is partial and keeps 1 of 2 edge slots. Every cover
+    column is NOT NULL."""
+    ring = np.array([(0.25, -0.5), (0.6, -0.5), (0.6, 0.5), (0.1, 0.5), (-0.15, 0.3)])
+    polys = [Polygon("origin", ring)]
+    cover, max_v = cover_df(spark, polys, RES)
+    assert not [f.name for f in cover.schema.fields if f.nullable]
+    kept = {
+        cell: len(_cell_local_edges(ring, cell)[1])
+        for cell, _, full in build_cover(polys, RES)
+        if not full
+    }
+    assert max_v == 2 and set(kept.values()) == {1, 2}
+    assert kept[zxy_to_cell(RES, *tile_xy(0.0, 0.0, RES))] == 1
+
+    tiny = [np.nextafter(np.nextafter(0.0, d), d) for d in (-1.0, 1.0)]
+    tiny += [np.nextafter(0.0, -1.0), -0.0, 0.0, np.nextafter(0.0, 1.0)]
+    west = np.meshgrid([-0.12, -0.09, -0.06, -0.03, -0.01], [0.02, 0.1, 0.2, 0.28, 0.35, 0.45])
+    lon, lat = np.concatenate(
+        [np.array([(x, y) for x in tiny for y in tiny]), np.column_stack([w.ravel() for w in west])]
+    ).T
+    docs = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "doc_id long, lon double, lat double",
+    )
+    got = sorted(r.doc_id for r in pip_join(docs, polys, RES).collect())
+    want = np.nonzero(points_in_ring(lon, lat, ring))[0].tolist()
+    assert got == want
+    assert 0 < len(want) < len(lon)
+
+
 def test_pip_join_builds_in_few_jvm_round_trips(spark, docs, monkeypatch):
     """Building the join (no action) stays in a few hundred py4j
     commands: no per-call call-site capture, a one-``F.expr`` ray-cast
@@ -270,16 +310,22 @@ def test_pip_join_text_byte_identity(spark, docs):
 
 
 def test_salted_counts_match_plain(spark, docs):
-    """Salted two-level agg ≡ plain groupBy — the E5 row-count gate."""
+    """Per-cell counts equal a Python count of the ``cell`` column —
+    the E5 row-count gate — and run in exactly one shuffle: the hot
+    cell is aggregated map-side, with no salted second stage."""
     d = docs.withColumn("cell", cell_encode_cols(F.col("lon"), F.col("lat"), RES))
-    plain = {r.cell: r.n for r in d.groupBy("cell").agg(F.count("*").alias("n")).collect()}
-    salted = {r.cell: r.n_docs for r in salted_cell_counts(d, salt_k=8).collect()}
-    assert plain == salted
+    plain = Counter(r.cell for r in d.select("cell").collect())
+    counts = salted_cell_counts(d)
+    assert {r.cell: r.n_docs for r in counts.collect()} == plain
+    aqe = counts._jdf.queryExecution().executedPlan()
+    final = aqe.executedPlan().toString()  # the plan AQE ran, not its initial one
+    assert len(re.findall(r"\bExchange hashpartitioning\(", final)) == 1, final
 
 
 def test_hot_cell_skew_exists(spark, docs):
     """The generator really does produce a hot cell (FIXTURES.md §1),
-    so the salting path is exercised, not decorative."""
+    so the map-side partial aggregation of ``salted_cell_counts`` is
+    exercised, not decorative."""
     d = docs.withColumn("cell", cell_encode_cols(F.col("lon"), F.col("lat"), RES))
     counts = sorted(
         (r.n for r in d.groupBy("cell").agg(F.count("*").alias("n")).collect()),

@@ -8,6 +8,8 @@ Checked invariants:
 - flagship pip_join: polygon cover index is BROADCAST (the big doc
   side never shuffles before the ray-cast), and column pruning keeps
   the BINARY ``html`` column out of the parquet scan;
+- cell_hist: per-cell counts are one Exchange (map-side partial
+  aggregation takes the hot cell; no salted second shuffle);
 - ingestion: raster decode is one Arrow kernel reading its path
   table directly; PMTiles and WARC decode kernels sit next to the
   kernels that plan them. Payload bytes never cross an Exchange, and
@@ -102,6 +104,15 @@ def main() -> int:
     p = plans["flagship"] = explain_str(flagship)
     check("flagship", "cover index joined via BroadcastHashJoin", "BroadcastHashJoin" in p)
     check("flagship", "documents scan prunes the BINARY html column", "html" not in p)
+
+    # cell_hist: per-cell counts aggregate map-side into ONE shuffle
+    # (no salted second stage for the hot cell)
+    p = plans["cell_hist"] = explain_str(Q.q_cell_hist(spark, SF))
+    check(
+        "cell_hist",
+        "exactly one Exchange (partial count map-side, final count after it)",
+        n_nodes(p, "Exchange") == 1,
+    )
 
     # raster_ingest: decode is ONE Arrow kernel reading its (path, k,
     # n) LocalTableScan directly (no chunk-row stage or Exchange before
