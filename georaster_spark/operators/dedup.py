@@ -5,8 +5,6 @@
 - MinHash + LSH: portable numeric minhash (md5-derived base hash,
   arithmetic permutations) computed as K MIN-aggregates in ONE
   groupBy; banding; bucket self-join for candidate pairs.
-- SimHash: 64-bit sign-aggregated fingerprint; near-dup = small
-  Hamming distance within prefix buckets.
 
 Materialization note: the signature/shingle stages feed multiple
 consumers (self-join sides, size lookups). Spark's exchange reuse
@@ -406,240 +404,4 @@ def connected_components(
     )
     return nodes.join(labels, "node", "left").select(
         "node", F.coalesce("component", "node").alias("component")
-    )
-
-
-def simhash64(sh: DataFrame) -> DataFrame:
-    """64-bit SimHash per doc: sign of the per-bit sum of ±1 votes
-    from each shingle hash bit. Bit j of the base hash h: uses two
-    independent 60-bit hashes to cover 64 bits portably.
-
-    Returns (doc_id, simhash) with simhash as BIGINT (bit 63 unused
-    to stay positive — 63 effective bits).
-    """
-    # md5 is evaluated ONCE per shingle here; the vote aggregates
-    # below see only cheap long shifts (md5 inside each agg expr is
-    # not CSE'd across aggregates and costs ~60x the whole stage).
-    md = F.md5("sh")
-    hashed = sh.select(
-        "doc_id",
-        F.conv(F.substring(md, 1, 15), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(md, 16, 15), 16, 10).cast("long").alias("h2"),
-    )
-
-    def bit(j):
-        src = F.col("h1") if j < 32 else F.col("h2")
-        return F.shiftright(src, j if j < 32 else j - 32) % 2
-
-    # pack THREE per-bit counters into each long (21-bit slots): 22
-    # aggregates instead of 64 — a 64-agg HashAggregate costs ~7 s of
-    # one-time whole-stage-codegen JIT; slots shrink that ~3x with
-    # bit-identical results. ones_j per doc must stay < 2^21 (2M
-    # shingles/doc — far beyond any real document).
-    packs = []
-    for g in range(21):
-        packed = None
-        for s in range(3):
-            term = F.shiftleft(bit(g * 3 + s), 21 * s)
-            packed = term if packed is None else packed + term
-        packs.append(F.sum(packed).alias(f"p{g}"))
-    agg = hashed.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"), *packs)
-    # bit j set <=> votes_j > 0 <=> 2*ones_j - n_sh > 0
-    sim = F.lit(0).cast("long")
-    for j in range(63):
-        g, s = divmod(j, 3)
-        ones = F.shiftright(F.col(f"p{g}"), 21 * s) % (1 << 21)
-        sim = sim + F.when(
-            ones * 2 - F.col("n_sh") > 0, F.lit(1).cast("long") * (1 << j)
-        ).otherwise(0)
-    return agg.select("doc_id", sim.alias("simhash"))
-
-
-def simhash_near_pairs(
-    docs: DataFrame, max_hamming: int = 8, bucket_cap: int = 4096
-) -> DataFrame:
-    """Near-dup pairs by SimHash with pigeonhole multi-block LSH.
-
-    The 63 fingerprint bits split into ``max_hamming + 1`` blocks —
-    any pair within Hamming distance k must agree exactly on ≥ 1
-    block (pigeonhole), so recall is 100%, no probabilistic miss.
-    Candidate generation is an equi-join on (block_idx, block_val);
-    the exact bit_count(xor) check filters false positives JVM-side.
-
-    **Hot-bucket cap** (``bucket_cap``): a degenerate corpus — many
-    near-identical docs — concentrates one (block, value) bucket, and
-    an unsalted equi self-join would put that whole bucket's n² work
-    in ONE reducer task. Buckets over the cap are chunked (chunk =
-    doc_id mod m, m = ceil(n/cap)) and the self-join becomes the
-    blocked **triangle join**: the left side replicates each row to
-    every target chunk ≥ its own, the right side to every source
-    chunk ≤ its own, and the equi-key grows to (block, value,
-    src_chunk, dst_chunk) — every task now reads ≤ 2·cap rows and the
-    n² work spreads across m·(m+1)/2 tasks. Cold buckets (m = 1)
-    take the identical single-cell path. The census itself routes the
-    plan: when NO bucket exceeds the cap (the healthy-corpus common
-    case) an ``isEmpty`` probe over the cached signatures selects the
-    plain (block, value) self-join — no chunk columns, no broadcast,
-    no explodes. Output is identical either way: each unordered pair
-    lands in exactly one (src, dst) cell — both orders only on the
-    diagonal, where the doc_id ordering filter keeps one.
-    """
-    n_blocks = max_hamming + 1
-    sig = simhash64(shingles(docs)).persist()
-    bounds = [round(i * 63 / n_blocks) for i in range(n_blocks + 1)]
-    entries = []
-    for i in range(n_blocks):
-        lo, hi = bounds[i], bounds[i + 1]
-        width = hi - lo
-        block_val = F.shiftright(F.col("simhash"), lo) % (1 << width)
-        entries.append(F.struct(F.lit(i).alias("bi"), block_val.alias("bv")))
-    blocked = sig.select(
-        "doc_id", "simhash", F.explode(F.array(*entries)).alias("blk")
-    ).select("doc_id", "simhash", F.col("blk.bi").alias("bi"), F.col("blk.bv").alias("bv"))
-    # hot-bucket census: ONLY over-cap buckets are kept (a degenerate
-    # corpus has few hot buckets by definition), so the list is tiny
-    # and broadcastable; cold rows join to NULL and stay single-chunk.
-    # The census is materialized as its own tiny job (an isEmpty probe
-    # over the cached signatures — the same runtime-stats-decide-the-
-    # plan move AQE makes): a healthy corpus has NO over-cap bucket,
-    # and the plain (bi, bv) self-join then skips the chunk columns,
-    # the broadcast, and both explodes entirely (~1.6 s of fixed
-    # overhead at sf0.1). The chunked triangle plan is reserved for
-    # inputs that actually trip the cap, where its per-task bound is
-    # what keeps one reducer from absorbing the hot bucket's n² work.
-    hot = (
-        blocked.groupBy("bi", "bv")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") > bucket_cap)
-        .select("bi", "bv", F.ceil(F.col("_n") / bucket_cap).cast("int").alias("m"))
-    )
-    if hot.isEmpty():
-        a = blocked.alias("a")
-        b = blocked.alias("b")
-        ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-        return (
-            a.join(
-                b,
-                (F.col("a.bi") == F.col("b.bi"))
-                & (F.col("a.bv") == F.col("b.bv"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .where(ham <= max_hamming)
-            .select(
-                F.col("a.doc_id").cast("long").alias("doc_a"),
-                F.col("b.doc_id").cast("long").alias("doc_b"),
-                ham.cast("long").alias("hamming"),
-            )
-            .distinct()
-        )
-    chunked = (
-        blocked.join(F.broadcast(hot), ["bi", "bv"], "left")
-        .withColumn("m", F.coalesce(F.col("m"), F.lit(1)))
-        .withColumn("ci", F.pmod(F.col("doc_id"), F.col("m")).cast("int"))
-    )
-    a = (
-        chunked.withColumn(
-            "ct", F.explode(F.sequence(F.col("ci"), F.col("m") - F.lit(1)))
-        )
-        .select("doc_id", "simhash", "bi", "bv", F.col("ci").alias("ca"), "ct")
-        .alias("a")
-    )
-    b = (
-        chunked.withColumn("cs", F.explode(F.sequence(F.lit(0), F.col("ci"))))
-        .select("doc_id", "simhash", "bi", "bv", "cs", F.col("ci").alias("cb"))
-        .alias("b")
-    )
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    same_chunk = F.col("a.ca") == F.col("b.cb")
-    return (
-        a.join(
-            b,
-            (F.col("a.bi") == F.col("b.bi"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.ca") == F.col("b.cs"))
-            & (F.col("a.ct") == F.col("b.cb"))
-            # diagonal cells see both orders of a pair — keep one;
-            # off-diagonal cells see each pair exactly once
-            & (~same_chunk | (F.col("a.doc_id") < F.col("b.doc_id"))),
-        )
-        .where(ham <= max_hamming)
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id"))
-            .cast("long")
-            .alias("doc_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id"))
-            .cast("long")
-            .alias("doc_b"),
-            ham.cast("long").alias("hamming"),
-        )
-        .distinct()
-    )
-
-
-def paragraph_chunks(
-    docs: DataFrame,
-    chunk_words: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Positioned fixed-width word chunks — the line/paragraph unit of
-    corpus-level sub-document dedup (RefinedWeb/MassiveText dedup at
-    line granularity; the synthetic corpus has no newlines, so the
-    unit is a ``chunk_words``-word window, which exercises the same
-    pipeline shape). Emits ``(id, chunk_idx, chunk)``; the last chunk
-    may be short."""
-    tok = F.split(F.col(text_col), " ")
-    n_ch = F.ceil(F.size(tok) / float(chunk_words)).cast("int")
-    chunks_arr = F.transform(
-        F.sequence(F.lit(0), n_ch - 1),
-        lambda i: F.array_join(F.slice(tok, i * chunk_words + 1, chunk_words), " "),
-    )
-    return docs.select(
-        F.col(id_col), F.posexplode(chunks_arr).alias("chunk_idx", "chunk")
-    )
-
-
-def paragraph_dedup(
-    docs: DataFrame,
-    chunk_words: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Corpus-level paragraph (line) dedup with document reassembly —
-    each chunk survives only at its FIRST occurrence in corpus order
-    ``(id, chunk_idx)``; every document is rebuilt from its surviving
-    chunks. Per doc: total chunks, kept chunks, and the md5 of the
-    reassembled text.
-
-    Scale design: first-occurrence is computed as a ``min(struct)``
-    AGGREGATE on the chunk key, not a ``row_number`` window — the
-    aggregate takes map-side partial combine, so a pathological chunk
-    duplicated 10^9 times arrives at its reducer as a handful of
-    partial minima, where a window partition would sort all copies on
-    one task; the winner join back is AQE-skew-splittable (a window
-    is not). Three linear shuffles total (chunk agg, winner join,
-    doc reassembly) — the RefinedWeb exact-line-dedup plan shape.
-    """
-    ch = paragraph_chunks(docs, chunk_words, id_col, text_col)
-    winners = ch.groupBy("chunk").agg(
-        F.min(F.struct(id_col, "chunk_idx")).alias("_w")
-    )
-    flagged = ch.join(winners, "chunk").withColumn(
-        "_kept",
-        (F.col(id_col) == F.col("_w." + id_col))
-        & (F.col("chunk_idx") == F.col("_w.chunk_idx")),
-    )
-    kept_struct = F.when(F.col("_kept"), F.struct("chunk_idx", "chunk"))
-    return flagged.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_chunks"),
-        F.sum(F.col("_kept").cast("long")).cast("long").alias("n_kept"),
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(kept_struct)),
-                    lambda s: s["chunk"],
-                ),
-                " ",
-            )
-        ).alias("kept_md5"),
     )

@@ -249,9 +249,10 @@ def xyz_lookup(points: DataFrame, tiles: DataFrame, z: int, tile_size: int) -> D
        ``0 <= px, py < tile_size``. Every column of ``points`` crosses
        into this Arrow worker, so select what the caller needs first;
     3. an equi-join on ``cell`` alone to ``tiles`` (one row per tile:
-       ``cell`` plus row-major ``tile_size²`` ``r``/``g``/``b`` arrays)
-       — the "tile fetch" — then each band indexed at
-       ``py * tile_size + px``.
+       ``cell`` plus row-major ``tile_size²`` ``r``/``g``/``b`` arrays;
+       only those four columns are read, so ``pmtiles.tiles_df`` rows
+       feed it as they are) — the "tile fetch" — then each band
+       indexed at ``py * tile_size + px``.
 
     Returns the ``points`` columns plus ``cell``, ``px``, ``py`` and
     ``r``, ``g``, ``b`` (int). A missing tile or a ``px``/``py``
@@ -288,7 +289,7 @@ def xyz_lookup(points: DataFrame, tiles: DataFrame, z: int, tile_size: int) -> D
         locate, StructType([*pts.schema, StructField("px", IntegerType()), StructField("py", IntegerType())])
     )
     pixel = F.col("py") * tile_size + F.col("px")
-    return located.join(tiles, ["cell"]).select(
+    return located.join(tiles.select("cell", "r", "g", "b"), ["cell"]).select(
         "cell", "px", "py",
         *(c for c in points.columns if c != "cell"),
         *(F.col(b)[pixel].alias(b) for b in ("r", "g", "b")),
@@ -352,7 +353,6 @@ def zonal_stats(
     pixels: DataFrame,
     zones: list[tuple[str, int, int, int, int]],
     block: int = 256,
-    values: str = "value",
 ) -> DataFrame:
     """Zonal statistics: per-zone count/min/max/sum/mean over pixel
     windows — the raster analog of the polygon cover join (E3/E4
@@ -386,7 +386,7 @@ def zonal_stats(
         F.col("x").between(F.col("zx0"), F.col("zx1"))
         & F.col("y").between(F.col("zy0"), F.col("zy1"))
     )
-    v = F.col(values)
+    v = F.col("value")
     return cand.groupBy("zone_id").agg(
         F.count(v).alias("n_px"),
         F.min(v).alias("min_v"),
@@ -457,19 +457,18 @@ def pick_overview(
     return cascade[-1]
 
 
-def _halo_exploded(
-    pixels: DataFrame, tile: int, x_col: str, y_col: str, v_col: str
-) -> DataFrame:
-    """Shared stage 1 of the tile-halo stencils: assign each pixel to
-    its own ``tile×tile`` block plus a halo copy into adjacent blocks
-    when it sits on the 1-px block border (≤4 targets at corners,
-    1 typically — duplication 1 + ~4/tile). Output columns:
+def _halo_exploded(pixels: DataFrame, tile: int) -> DataFrame:
+    """Shared stage 1 of the tile-halo stencils, over ``x, y, value``
+    pixel rows: assign each pixel to its own ``tile×tile`` block plus
+    a halo copy into adjacent blocks when it sits on the 1-px block
+    border (≤4 targets at corners, 1 typically — duplication
+    1 + ~4/tile). Output columns:
     ``_tx,_ty`` block key, ``_x,_y,_v`` pixel. NULL values (NoData)
     are dropped here — a NoData cell behaves exactly like a missing
     neighbor (n_nb excludes it), instead of poisoning the NumPy sums
     with NaN."""
-    pixels = pixels.where(F.col(v_col).isNotNull())
-    x, y = F.col(x_col), F.col(y_col)
+    pixels = pixels.where(F.col("value").isNotNull())
+    x, y = F.col("x"), F.col("y")
     tx, ty = F.floor(x / tile), F.floor(y / tile)
     # pmod, not %: Spark's % keeps the dividend's sign, which would
     # mis-place halo copies for negative pixel coordinates
@@ -492,17 +491,48 @@ def _halo_exploded(
         F.explode(F.array_compact(F.array(*targets))).alias("_t"),
         x.cast("long").alias("_x"),
         y.cast("long").alias("_y"),
-        F.col(v_col).cast("double").alias("_v"),
+        F.col("value").cast("double").alias("_v"),
     ).select(F.col("_t.tx").alias("_tx"), F.col("_t.ty").alias("_ty"), "_x", "_y", "_v")
 
 
-def focal_stats_halo(
-    pixels: DataFrame,
-    tile: int = 256,
-    x_col: str = "x",
-    y_col: str = "y",
-    v_col: str = "value",
-) -> DataFrame:
+def _halo_stencil(pixels: DataFrame, tile: int, schema: str, stencil) -> DataFrame:
+    """Stage 2 of the tile-halo stencils: one groupBy on the block key
+    of ``_halo_exploded``, and per block the dense ``(tile + 2)²`` grid
+    of the block plus its 1-px halo: values ``V`` and presence ``M``.
+    ``stencil(V, M)`` returns the ``tile×tile`` mask of the owned
+    pixels to emit and a dict of ``tile×tile`` output grids, named as
+    in ``schema`` after its ``x, y``."""
+    T = tile
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        gx = int(pdf["_tx"].iloc[0]) * T - 1  # grid covers block + 1px halo
+        gy = int(pdf["_ty"].iloc[0]) * T - 1
+        ix = pdf["_x"].to_numpy() - gx
+        iy = pdf["_y"].to_numpy() - gy
+        V = np.zeros((T + 2, T + 2))
+        M = np.zeros((T + 2, T + 2), dtype=bool)
+        V[iy, ix] = pdf["_v"].to_numpy(dtype=np.float64)
+        M[iy, ix] = True
+        own, grids = stencil(V, M)
+        oy, ox = np.nonzero(own)
+        return pd.DataFrame(
+            {
+                "x": (gx + 1 + ox).astype(np.int64),
+                "y": (gy + 1 + oy).astype(np.int64),
+                **{name: grid[own] for name, grid in grids.items()},
+            }
+        )
+
+    return _halo_exploded(pixels, tile).groupBy("_tx", "_ty").applyInPandas(kernel, schema=schema)
+
+
+def _window(A: np.ndarray, dx: int, dy: int) -> np.ndarray:
+    """The block view of a halo grid shifted by (dx, dy)."""
+    T = A.shape[0] - 2
+    return A[1 + dy : T + 1 + dy, 1 + dx : T + 1 + dx]
+
+
+def focal_stats_halo(pixels: DataFrame, tile: int = 256) -> DataFrame:
     """3×3 focal (neighborhood) statistics via tile-halo exchange —
     the canonical distributed stencil.
 
@@ -523,56 +553,27 @@ def focal_stats_halo(
     shuffle volume is ~1.02× the input at tile=256. Larger stencils
     only widen the halo; the plan shape is unchanged.
     """
-    exploded = _halo_exploded(pixels, tile, x_col, y_col, v_col)
-    T = tile
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        gx = int(pdf["_tx"].iloc[0]) * T - 1  # grid covers block + 1px halo
-        gy = int(pdf["_ty"].iloc[0]) * T - 1
-        ix = pdf["_x"].to_numpy() - gx
-        iy = pdf["_y"].to_numpy() - gy
-        vals = pdf["_v"].to_numpy(dtype=np.float64)
-        V = np.zeros((T + 2, T + 2))
-        M = np.zeros((T + 2, T + 2), dtype=bool)
-        V[iy, ix] = vals
-        M[iy, ix] = True
-        S = np.zeros((T, T))
-        C = np.zeros((T, T), dtype=np.int64)
-        MN = np.full((T, T), np.inf)
-        MX = np.full((T, T), -np.inf)
+    def stencil(V: np.ndarray, M: np.ndarray):
+        S = np.zeros((tile, tile))
+        C = np.zeros((tile, tile), dtype=np.int64)
+        MN = np.full((tile, tile), np.inf)
+        MX = np.full((tile, tile), -np.inf)
         for dy in (-1, 0, 1):
             for dx in (-1, 0, 1):
-                Vw = V[1 + dy : T + 1 + dy, 1 + dx : T + 1 + dx]
-                Mw = M[1 + dy : T + 1 + dy, 1 + dx : T + 1 + dx]
+                Vw, Mw = _window(V, dx, dy), _window(M, dx, dy)
                 S += np.where(Mw, Vw, 0.0)
                 C += Mw
                 MN = np.minimum(MN, np.where(Mw, Vw, np.inf))
                 MX = np.maximum(MX, np.where(Mw, Vw, -np.inf))
-        own = M[1 : T + 1, 1 : T + 1]  # emit only pixels owned by this block
-        oy, ox = np.nonzero(own)
-        return pd.DataFrame(
-            {
-                "x": (gx + 1 + ox).astype(np.int64),
-                "y": (gy + 1 + oy).astype(np.int64),
-                "n_nb": C[own],
-                "sum_v": S[own],
-                "min_v": MN[own],
-                "max_v": MX[own],
-            }
-        )
+        return _window(M, 0, 0), {"n_nb": C, "sum_v": S, "min_v": MN, "max_v": MX}
 
-    return exploded.groupBy("_tx", "_ty").applyInPandas(
-        kernel, schema="x long, y long, n_nb long, sum_v double, min_v double, max_v double"
+    return _halo_stencil(
+        pixels, tile, "x long, y long, n_nb long, sum_v double, min_v double, max_v double", stencil
     )
 
 
-def horn_gradients_halo(
-    pixels: DataFrame,
-    tile: int = 256,
-    x_col: str = "x",
-    y_col: str = "y",
-    v_col: str = "value",
-) -> DataFrame:
+def horn_gradients_halo(pixels: DataFrame, tile: int = 256) -> DataFrame:
     """Horn 3×3 gradient NUMERATORS via the same tile-halo exchange
     as ``focal_stats_halo`` (one ~1.02× shuffle, per-block NumPy
     stencil).
@@ -591,25 +592,14 @@ def horn_gradients_halo(
     exactly. Edge pixels (incomplete window) are not emitted,
     matching GDAL's default edge behavior for hillshade.
     """
-    exploded = _halo_exploded(pixels, tile, x_col, y_col, v_col)
-    T = tile
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        gx0 = int(pdf["_tx"].iloc[0]) * T - 1
-        gy0 = int(pdf["_ty"].iloc[0]) * T - 1
-        ix = pdf["_x"].to_numpy() - gx0
-        iy = pdf["_y"].to_numpy() - gy0
-        V = np.zeros((T + 2, T + 2))
-        M = np.zeros((T + 2, T + 2), dtype=bool)
-        V[iy, ix] = pdf["_v"].to_numpy(dtype=np.float64)
-        M[iy, ix] = True
-        GX = np.zeros((T, T))
-        GY = np.zeros((T, T))
-        C = np.zeros((T, T), dtype=np.int64)
+    def stencil(V: np.ndarray, M: np.ndarray):
+        GX = np.zeros((tile, tile))
+        GY = np.zeros((tile, tile))
+        C = np.zeros((tile, tile), dtype=np.int64)
         for dy in (-1, 0, 1):
             for dx in (-1, 0, 1):
-                Vw = V[1 + dy : T + 1 + dy, 1 + dx : T + 1 + dx]
-                Mw = M[1 + dy : T + 1 + dy, 1 + dx : T + 1 + dx]
+                Vw, Mw = _window(V, dx, dy), _window(M, dx, dy)
                 wx = dx * (2 if dy == 0 else 1)
                 wy = dy * (2 if dx == 0 else 1)
                 if wx:
@@ -617,20 +607,9 @@ def horn_gradients_halo(
                 if wy:
                     GY += wy * np.where(Mw, Vw, 0.0)
                 C += Mw
-        own = M[1 : T + 1, 1 : T + 1] & (C == 9)
-        oy, ox = np.nonzero(own)
-        return pd.DataFrame(
-            {
-                "x": (gx0 + 1 + ox).astype(np.int64),
-                "y": (gy0 + 1 + oy).astype(np.int64),
-                "gx_num": GX[own],
-                "gy_num": GY[own],
-            }
-        )
+        return _window(M, 0, 0) & (C == 9), {"gx_num": GX, "gy_num": GY}
 
-    return exploded.groupBy("_tx", "_ty").applyInPandas(
-        kernel, schema="x long, y long, gx_num double, gy_num double"
-    )
+    return _halo_stencil(pixels, tile, "x long, y long, gx_num double, gy_num double", stencil)
 
 
 # D8 neighbor ring in ESRI code order (E=1 clockwise to NE=128); the
@@ -648,13 +627,7 @@ D8_NEIGHBORS = (
 )
 
 
-def d8_flow_halo(
-    pixels: DataFrame,
-    tile: int = 256,
-    x_col: str = "x",
-    y_col: str = "y",
-    v_col: str = "value",
-) -> DataFrame:
+def d8_flow_halo(pixels: DataFrame, tile: int = 256) -> DataFrame:
     """D8 flow direction (O'Callaghan & Mark 1984; ESRI codes) via
     the same tile-halo exchange as the other 3×3 stencils — one
     ~1.02× shuffle, per-block NumPy kernel.
@@ -671,26 +644,15 @@ def d8_flow_halo(
     integer for integer rasters). Edge pixels (incomplete window)
     are not emitted, as in hillshade.
     """
-    exploded = _halo_exploded(pixels, tile, x_col, y_col, v_col)
-    T = tile
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        gx0 = int(pdf["_tx"].iloc[0]) * T - 1
-        gy0 = int(pdf["_ty"].iloc[0]) * T - 1
-        ix = pdf["_x"].to_numpy() - gx0
-        iy = pdf["_y"].to_numpy() - gy0
-        V = np.zeros((T + 2, T + 2))
-        M = np.zeros((T + 2, T + 2), dtype=bool)
-        V[iy, ix] = pdf["_v"].to_numpy(dtype=np.float64)
-        M[iy, ix] = True
-        center = V[1 : T + 1, 1 : T + 1]
-        n_down = np.zeros((T, T), dtype=np.int64)
-        best_key = np.zeros((T, T))
-        best_code = np.zeros((T, T), dtype=np.int64)
-        best_drop = np.zeros((T, T))
+    def stencil(V: np.ndarray, M: np.ndarray):
+        center = _window(V, 0, 0)
+        n_down = np.zeros((tile, tile), dtype=np.int64)
+        best_key = np.zeros((tile, tile))
+        best_code = np.zeros((tile, tile), dtype=np.int64)
+        best_drop = np.zeros((tile, tile))
         for dx, dy, code in D8_NEIGHBORS:
-            Vw = V[1 + dy : T + 1 + dy, 1 + dx : T + 1 + dx]
-            Mw = M[1 + dy : T + 1 + dy, 1 + dx : T + 1 + dx]
+            Vw, Mw = _window(V, dx, dy), _window(M, dx, dy)
             drop = center - Vw
             down = Mw & (drop > 0)
             n_down += down
@@ -699,27 +661,11 @@ def d8_flow_halo(
             best_key = np.where(upd, key, best_key)
             best_code = np.where(upd, code, best_code)
             best_drop = np.where(upd, drop, best_drop)
-        own = M[1 : T + 1, 1 : T + 1]
-        C = sum(
-            M[1 + dy : T + 1 + dy, 1 + dx : T + 1 + dx]
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        )
-        full = own & (C == 9)
-        oy, ox = np.nonzero(full)
-        return pd.DataFrame(
-            {
-                "x": (gx0 + 1 + ox).astype(np.int64),
-                "y": (gy0 + 1 + oy).astype(np.int64),
-                "d8": best_code[full],
-                "n_down": n_down[full],
-                "drop_v": best_drop[full].astype(np.int64),
-            }
-        )
+        C = sum(_window(M, dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1))
+        full = _window(M, 0, 0) & (C == 9)
+        return full, {"d8": best_code, "n_down": n_down, "drop_v": best_drop.astype(np.int64)}
 
-    return exploded.groupBy("_tx", "_ty").applyInPandas(
-        kernel, schema="x long, y long, d8 long, n_down long, drop_v long"
-    )
+    return _halo_stencil(pixels, tile, "x long, y long, d8 long, n_down long, drop_v long", stencil)
 
 
 def _d8_cells_edges(flow: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -884,12 +830,9 @@ def resample_bilinear(
     src_h: int,
     dst_w: int,
     dst_h: int,
-    x_col: str = "x",
-    y_col: str = "y",
-    v_col: str = "value",
 ) -> DataFrame:
-    """Bilinear resampling of a source pixel window onto a dst_w×dst_h
-    target grid (pixel-center convention: target pixel (i, j) samples
+    """Bilinear resampling of a source pixel window (``x, y, value``
+    pixel rows) onto a dst_w×dst_h target grid (pixel-center convention: target pixel (i, j) samples
     source coords ``src_x0 + (i + 0.5) * scale - 0.5``).
 
     Scale shape: the target grid is GENERATED executor-side
@@ -949,10 +892,10 @@ def resample_bilinear(
     )
     # NULL (NoData) source pixels act like absent corners: the
     # remaining weights renormalize (same rule as the halo stencils)
-    src = pixels.where(F.col(v_col).isNotNull()).select(
-        F.col(x_col).cast("long").alias("x"),
-        F.col(y_col).cast("long").alias("y"),
-        F.col(v_col).cast("double").alias("v"),
+    src = pixels.where(F.col("value").isNotNull()).select(
+        F.col("x").cast("long").alias("x"),
+        F.col("y").cast("long").alias("y"),
+        F.col("value").cast("double").alias("v"),
     )
     # renormalize by the sum of MATCHED weights: corners that fall
     # outside the source window (upsampling edges) or on raster holes

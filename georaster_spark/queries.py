@@ -1448,16 +1448,17 @@ def sql_raster_ingest():
 def q_pmtiles_ingest(spark, sf_dir):
     """Real PMTiles v3 archive ingestion (R21, src/pmtiles.rs:14-51):
     directory walk + ranged tile reads + stdlib PNG decode, all
-    executor-side (two mapInPandas stages, no driver file opens).
+    executor-side (one mapInArrow stage, ``pmtiles.tiles_df``; no
+    driver file opens), projected to per-tile stats.
     The anchor pixel (163, 230) of tile z12 (2128, 1438) carries the
     reference's Chasseral golden — anchor_um is its terrarium height
     in µm: round(1598.5294117647063e6) (src/pmtiles.rs:121-133).
     Every aggregate is derived independently by the oracle from the
     closed-form tile fill (no pinned decode output)."""
-    from georaster_spark.datagen import fixture_pmtiles_path
+    from georaster_spark.datagen import PMTILES_ANCHOR, fixture_pmtiles_path
     from georaster_spark.sources.pmtiles import tile_stats_df
 
-    df = tile_stats_df(spark, [fixture_pmtiles_path()])
+    df = tile_stats_df(spark, [fixture_pmtiles_path()], *PMTILES_ANCHOR[2:4])
     h_um = F.round(
         (
             F.col("anchor_r") * 256.0

@@ -148,9 +148,8 @@ def map_paths(spark: SparkSession, paths, rows_of, schema: str) -> DataFrame:
     """Paths -> rows in one executor-side ``mapInPandas`` over
     ``paths_df(spark, paths)``: ``rows_of(path)`` returns the path's
     rows, as tuples in ``schema`` order or dicts keyed by column. The
-    header walks (TIFF chunk plan and metadata, PMTiles entries, WARC
-    splits) are this stage, so the driver ships only path strings and
-    opens no file."""
+    header walks (TIFF chunk plan and metadata, WARC splits) are this
+    stage, so the driver ships only path strings and opens no file."""
     columns = DataType.fromDDL(schema).names
 
     def kernel(batches):

@@ -32,6 +32,9 @@ import gzip
 import struct
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
+
 MAGIC = b"PMTiles"
 VERSION = 3
 HEADER_SIZE = 127
@@ -431,22 +434,30 @@ class PmtilesReader:
             self.header.internal_compression,
         )
 
+    def _leaf(self, e: Entry) -> list[Entry]:
+        """The entries of the leaf directory ``e`` points at."""
+        return deserialize_directory(
+            _decompress(
+                self._read(self.header.leaf_offset + e.offset, e.length),
+                self.header.internal_compression,
+            )
+        )
+
     def entries(self) -> list[Entry]:
         """All tile entries (leaves resolved) in tile-id order —
         drives the distributed scan plan."""
         out: list[Entry] = []
         for e in self.root:
-            if e.run_length == 0:
-                leaf = deserialize_directory(
-                    _decompress(
-                        self._read(self.header.leaf_offset + e.offset, e.length),
-                        self.header.internal_compression,
-                    )
-                )
-                out.extend(leaf)
-            else:
-                out.append(e)
+            out.extend(self._leaf(e) if e.run_length == 0 else [e])
         return out
+
+    def tile_data(self, e: Entry) -> bytes:
+        """The tile bytes a (non-leaf) entry points at — the one
+        tile-data read of ``get_tile`` and ``tiles_df``."""
+        return _decompress(
+            self._read(self.header.data_offset + e.offset, e.length),
+            self.header.tile_compression,
+        )
 
     def get_tile(self, z: int, x: int, y: int) -> bytes | None:
         """Tile bytes, or ``None`` for a missing tile (the reference
@@ -458,17 +469,9 @@ class PmtilesReader:
             if e is None:
                 return None
             if e.run_length == 0:
-                entries = deserialize_directory(
-                    _decompress(
-                        self._read(self.header.leaf_offset + e.offset, e.length),
-                        self.header.internal_compression,
-                    )
-                )
+                entries = self._leaf(e)
                 continue
-            return _decompress(
-                self._read(self.header.data_offset + e.offset, e.length),
-                self.header.tile_compression,
-            )
+            return self.tile_data(e)
         raise PmtilesError("directory nesting exceeds spec depth")
 
 
@@ -502,11 +505,22 @@ def round_half_away(x):
     ``round(x, 0)``. Python ``round`` and ``np.round`` are half-to-even
     and disagree at exact .5; ``floor(x + 0.5)`` errs where ``x + 0.5``
     itself rounds (just below 0.5, and past 2**52). Returns floats."""
-    import numpy as np
-
     a = np.abs(x)
     f = np.floor(a)
     return np.copysign(f + (a - f >= 0.5), x)
+
+
+def _tile_bands(arr) -> list:
+    """A decoded tile's ``r``, ``g``, ``b`` planes, plus its alpha
+    plane when it has one: grey ``(h, w)`` and grey+alpha
+    ``(h, w, 2)`` tiles give ``r = g = b = v``, and an alpha plane
+    stays last as RGBA's does."""
+    if arr.ndim == 2:
+        arr = arr[:, :, None]
+    planes = [arr[:, :, c] for c in range(arr.shape[2])]
+    if len(planes) <= 2:
+        planes = planes[:1] * 3 + planes[1:]
+    return planes
 
 
 def get_pixel_at(reader: PmtilesReader, z: int, lon: float, lat: float):
@@ -534,11 +548,7 @@ def get_pixel_at(reader: PmtilesReader, z: int, lon: float, lat: float):
     py = int(round_half_away((lat1 - lat) / psy))
     if not (0 <= px < w and 0 <= py < h):
         return None
-    pix = arr[py, px]
-    if arr.ndim == 2:
-        v = int(pix)
-        return (v, v, v)
-    return tuple(int(c) for c in pix)
+    return tuple(int(band[py, px]) for band in _tile_bands(arr))
 
 
 def terrarium_height_py(r: int, g: int, b: int) -> float:
@@ -547,105 +557,77 @@ def terrarium_height_py(r: int, g: int, b: int) -> float:
 
 
 # ----------------------------------------------------- distributed scan
-# tile pixel (163, 230) is the parity anchor: in fixture tile
-# z12 (2128, 1438) it carries the Chasseral RGB whose terrarium height
-# is the reference golden 1598.5294117647063 (src/pmtiles.rs:121-133).
-ANCHOR_PX = 163
-ANCHOR_PY = 230
-
-_ENTRY_SCHEMA = (
-    "archive string, z long, x long, y long, "
-    "abs_offset long, length long, tile_compression long"
-)
-_STATS_SCHEMA = (
-    "archive string, z long, x long, y long, width long, height long, "
-    "n_px long, sum_r long, sum_g long, sum_b long, "
-    "anchor_r long, anchor_g long, anchor_b long"
+_TILE_SCHEMA = (
+    "archive string, z long, x long, y long, cell long, width long, height long, "
+    "sum_r long, sum_g long, sum_b long, r array<int>, g array<int>, b array<int>"
 )
 
 
-def pmtiles_entries_df(spark, paths):
-    """Stage 1: archive paths → tile-entry table. Directory walks run
-    in an Arrow kernel (executor-side ranged reads) so a catalog of
-    many archives never opens a file on the driver — the same
-    executor-side header stage (``session.map_paths``) as the TIFF
-    ``chunk_plan_df``.
+def tiles_df(spark, paths):
+    """Archive paths → one row per tile, the XYZ tile row that
+    ``raster.xyz_lookup`` reads: ``(archive, z, x, y, cell, width,
+    height, sum_r, sum_g, sum_b, r, g, b)`` with ``cell =
+    zxy_to_cell(z, x, y)`` and row-major ``array<int>`` bands (pixel
+    (px, py) at ``py * width + px``).
+
+    One ``mapInArrow`` over ``session.paths_df(spark, paths)``: per
+    archive, one ``PmtilesReader`` walks the directory, and each
+    entry's bytes are read and decoded once (``decode_tile``) and
+    emitted for every tile of its run, with the band sums of that
+    decode. Tile bytes never shuffle.
 
     ``paths``: list of path strings, or a DataFrame with a ``path``
     column (the scale form)."""
-    from georaster_spark.session import map_paths
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
 
-    def entry_rows(p):
-        rd = PmtilesReader(p)
-        base = rd.header.data_offset
-        comp = rd.header.tile_compression
-        for e in rd.entries():
-            for k in range(e.run_length):
-                z, x, y = tileid_to_zxy(e.tile_id + k)
-                yield (p, z, x, y, base + e.offset, e.length, comp)
+    from georaster_spark.cells import zxy_to_cell
+    from georaster_spark.session import paths_df
 
-    return map_paths(spark, paths, entry_rows, _ENTRY_SCHEMA)
+    arrow_schema = to_arrow_schema(DataType.fromDDL(_TILE_SCHEMA))
 
-
-def tile_stats_df(
-    spark,
-    paths,
-    anchor_px: int = ANCHOR_PX,
-    anchor_py: int = ANCHOR_PY,
-):
-    """Stage 2: entry table → per-tile decode stats. Each tile decodes
-    independently (ranged read + inflate + numpy); only small typed
-    rows leave the kernel — tile bytes never shuffle."""
-    import pandas as pd
-
-    entries = pmtiles_entries_df(spark, paths)
+    def entry_batches(archive: str, e: Entry, arr):
+        """One row per tile of ``e``'s run, all from its one decode
+        ``arr``; the band arrays are built once and shared."""
+        h, w = arr.shape[:2]
+        bands = [p.astype(np.int32).ravel() for p in _tile_bands(arr)[:3]]
+        sums = [int(v.sum()) for v in bands]
+        offsets = pa.array([0, h * w], pa.int32())
+        lists = [
+            pa.ListArray.from_arrays(offsets, v, type=arrow_schema.field(b).type)
+            for v, b in zip(bands, "rgb")
+        ]
+        for tile_id in range(e.tile_id, e.tile_id + e.run_length):
+            z, x, y = tileid_to_zxy(tile_id)
+            row = [archive, z, x, y, zxy_to_cell(z, x, y), w, h, *sums]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([v], f.type) for v, f in zip(row, arrow_schema)] + lists,
+                schema=arrow_schema,
+            )
 
     def kernel(batches):
-        handles: dict[str, object] = {}  # one open per archive per task
+        for batch in batches:
+            for archive in batch.column("path").to_pylist():
+                with PmtilesReader(archive) as rd:
+                    for e in rd.entries():
+                        yield from entry_batches(archive, e, decode_tile(rd.tile_data(e)))
 
-        def pread(path, offset, length):
-            f = handles.get(path)
-            if f is None:
-                f = handles[path] = open(path, "rb")
-            f.seek(offset)
-            data = f.read(length)
-            if len(data) != length:
-                raise PmtilesError(
-                    f"truncated read at {offset}+{length} in {path}"
-                )
-            return data
+    return paths_df(spark, paths).mapInArrow(kernel, schema=_TILE_SCHEMA)
 
-        for pdf in batches:
-            out = {c.split()[0]: [] for c in _STATS_SCHEMA.split(", ")}
-            for row in pdf.itertuples(index=False):
-                blob = _decompress(
-                    pread(row.archive, row.abs_offset, row.length),
-                    int(row.tile_compression),
-                )
-                arr = decode_tile(blob)
-                h, w = arr.shape[:2]
-                if arr.ndim == 2:
-                    rch = gch = bch = arr.astype("int64")
-                else:
-                    rch = arr[:, :, 0].astype("int64")
-                    gch = arr[:, :, 1].astype("int64")
-                    bch = arr[:, :, 2].astype("int64")
-                anchor = (
-                    (int(rch[anchor_py, anchor_px]),
-                     int(gch[anchor_py, anchor_px]),
-                     int(bch[anchor_py, anchor_px]))
-                    if (w > anchor_px and h > anchor_py)
-                    else (None, None, None)
-                )
-                vals = (
-                    row.archive, row.z, row.x, row.y, w, h, w * h,
-                    int(rch.sum()), int(gch.sum()), int(bch.sum()),
-                    *anchor,
-                )
-                for k, v in zip(out, vals):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-        for f in handles.values():
-            f.close()
 
-    return entries.mapInPandas(kernel, schema=_STATS_SCHEMA)
+def tile_stats_df(spark, paths, anchor_px: int, anchor_py: int):
+    """Per-tile decode stats as a projection of ``tiles_df``: size,
+    band sums and the bands of pixel ``(anchor_px, anchor_py)``, NULL
+    where that pixel lies outside the tile."""
+    from pyspark.sql import functions as F
+
+    w, h = F.col("width"), F.col("height")
+    inside = (w > anchor_px) & (h > anchor_py)
+    return tiles_df(spark, paths).select(
+        "archive", "z", "x", "y", "width", "height", (w * h).alias("n_px"),
+        "sum_r", "sum_g", "sum_b",
+        *(
+            F.when(inside, F.col(b)[anchor_py * w + anchor_px].cast("long")).alias(f"anchor_{b}")
+            for b in "rgb"
+        ),
+    )

@@ -35,7 +35,7 @@ Scale design (the 100-TB shape):
   same blobs-never-shuffle invariant the TIFF/PMTiles ingest plans
   are audited for).
 - Neither stage opens a file on the driver; paths travel as a tiny
-  DataFrame exactly like ``pmtiles_entries_df`` / TIFF
+  DataFrame exactly like PMTiles ``tiles_df`` / TIFF
   ``chunk_plan_df``.
 
 Reference parity: the reference engine has no web-archive source (it

@@ -9,7 +9,6 @@ from georaster_spark.operators.dedup import (
     lsh_candidate_pairs,
     ngram_jaccard_pairs,
     shingles,
-    simhash_near_pairs,
 )
 
 
@@ -48,12 +47,6 @@ def test_jaccard_finds_and_scores(spark, docs):
     }
     assert out[(3, 100)] == 1000000  # exact dup -> jaccard 1.0
     assert 500000 <= out[(5, 101)] < 1000000
-
-
-def test_simhash_near_pairs(spark, docs):
-    pairs = {(r.doc_a, r.doc_b): r.hamming for r in simhash_near_pairs(docs, max_hamming=10).collect()}
-    assert pairs.get((3, 100)) == 0  # identical fingerprint
-    assert (5, 101) in pairs
 
 
 def test_winnow_matches_scalar_reference(spark, docs):
@@ -215,62 +208,6 @@ def test_connected_components_random_graphs_match_transitive_closure(spark):
         assert got == want, f"trial {trial}"
 
 
-def test_simhash_hot_bucket_cap_equivalence(spark):
-    """The capped (chunked triangle) self-join must emit the SAME
-    pair set as the unchunked path on a corpus that actually trips
-    the cap: 200 identical docs (one hot (block, value) bucket per
-    block) + 60 distinct docs."""
-    base = " ".join(f"w{k % 53}" for k in range(40))
-    rows = [(i, base) for i in range(200)] + [
-        (1000 + i, " ".join(f"x{(i * 11 + k) % 89}" for k in range(40)))
-        for i in range(60)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    capped = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in simhash_near_pairs(docs, max_hamming=6, bucket_cap=32).collect()
-    }
-    uncapped = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in simhash_near_pairs(docs, max_hamming=6, bucket_cap=10**9).collect()
-    }
-    assert capped == uncapped
-    assert len({(a, b) for a, b, _ in capped if a < 200 and b < 200}) == 200 * 199 // 2
-
-
-def test_simhash_hot_bucket_degenerate_bounded(spark):
-    """Adversarial skew (the r3 VERDICT watch item): 1500 copies of
-    one doc concentrate every LSH block in a single (block, value)
-    bucket. With the cap the self-join key carries the chunk pair —
-    no task reads more than ~2·cap bucket rows — and the result is
-    still the full C(1500,2) pair set."""
-    n, cap = 1500, 100
-    base = " ".join(f"w{k % 53}" for k in range(40))
-    rows = [(i, base) for i in range(n)] + [
-        (10_000 + i, " ".join(f"y{(i * 13 + k) % 97}" for k in range(40)))
-        for i in range(50)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(16)
-    out = simhash_near_pairs(docs, max_hamming=3, bucket_cap=cap)
-    # plan invariant: the self-join is NOT on the bare (block, value)
-    # key — the chunk columns (ca/cs, ct/cb) are part of the equi-key,
-    # so a hot bucket's work spreads over m·(m+1)/2 tasks
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ca" in plan and "ct" in plan and "cs" in plan and "cb" in plan
-    hot_pairs = (
-        out.where((F.col("doc_a") < n) & (F.col("doc_b") < n)).count()
-    )
-    assert hot_pairs == n * (n - 1) // 2
-    # chunk balance: ids are assigned chunk doc_id % m, so with
-    # sequential ids every chunk holds ceil(n/m) == cap rows exactly
-    import math
-
-    m = math.ceil(n / cap)
-    assert max(
-        sum(1 for i in range(n) if i % m == c) for c in range(m)
-    ) <= cap
-
-
 def test_exact_substring_spans_hand_checked(spark):
     """Hand-checked ExactSubstr semantics (gram_len=3):
     doc 1 'a b c d e f g h' and doc 2 'x x a b c d y z' share the
@@ -301,65 +238,6 @@ def test_exact_substring_spans_hand_checked(spark):
         2: (8, 1, 4),
         4: (10, 2, 6),
     }
-
-
-# ------------------------------------------------- paragraph dedup
-
-
-def test_paragraph_dedup_hand_checked(spark):
-    """Hand-computed tiny corpus (chunk_words=2): 'a b' first occurs
-    in doc 0 at chunk 0, 'c d' in doc 0 at chunk 1, 'x' in doc 1 —
-    every later occurrence is dropped and docs reassemble from the
-    survivors only."""
-    import hashlib
-
-    from georaster_spark.operators.dedup import paragraph_dedup
-
-    docs = spark.createDataFrame(
-        [(0, "a b c d"), (1, "a b x"), (2, "c d a b")], "doc_id long, text string"
-    )
-    got = {
-        r["doc_id"]: (r["n_chunks"], r["n_kept"], r["kept_md5"])
-        for r in paragraph_dedup(docs, chunk_words=2).collect()
-    }
-    md5 = lambda s: hashlib.md5(s.encode()).hexdigest()  # noqa: E731
-    assert got == {
-        0: (2, 2, md5("a b c d")),
-        1: (2, 1, md5("x")),  # 'a b' dropped, short tail chunk kept
-        2: (2, 0, md5("")),  # both chunks are repeats -> empty doc
-    }
-
-
-def test_paragraph_dedup_first_occurrence_is_corpus_ordered(spark):
-    """Within one doc, an earlier chunk_idx wins; across docs, the
-    smaller doc_id wins even when it explodes later in the scan."""
-    from georaster_spark.operators.dedup import paragraph_dedup
-
-    docs = spark.createDataFrame(
-        [(5, "p q p q"), (9, "p q")], "doc_id long, text string"
-    ).repartition(4)
-    got = {
-        r["doc_id"]: (r["n_chunks"], r["n_kept"])
-        for r in paragraph_dedup(docs, chunk_words=2).collect()
-    }
-    assert got == {5: (2, 1), 9: (1, 0)}
-
-
-def test_paragraph_dedup_aggregates_map_side(spark):
-    """Scale invariant: the first-occurrence reduction is an
-    aggregate with a PARTIAL phase below its Exchange (map-side
-    combine), never a window sort over the chunk partition."""
-    from georaster_spark.operators.dedup import paragraph_dedup
-
-    docs = spark.createDataFrame([(0, "a b c d")], "doc_id long, text string")
-    plan = (
-        paragraph_dedup(docs, chunk_words=2)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Window" not in plan
-    assert "partial_min" in plan or "PartialAggregate" in plan or "HashAggregate" in plan
 
 
 def test_exact_substring_spans_match_scalar_reference(spark):
@@ -416,49 +294,3 @@ def test_exact_substring_spans_match_scalar_reference(spark):
     assert got == want
 
 
-def test_paragraph_dedup_matches_scalar_reference(spark):
-    """Property check: 30 seeded random corpora vs a scalar reference
-    of the first-corpus-occurrence recipe — non-overlapping cw-word
-    chunks (last short), a chunk survives only at its min (doc_id,
-    chunk_idx) occurrence, docs rebuilt from survivors in chunk
-    order. Per-trial word prefixes isolate the trials in one run; a
-    3-word alphabet with cw=2 makes duplicate chunks dense."""
-    import hashlib
-    import random
-
-    from georaster_spark.operators.dedup import paragraph_dedup
-
-    cw = 2
-    rng = random.Random(23)
-    rows, want = [], {}
-    for trial in range(30):
-        first: dict[str, tuple] = {}
-        corpora = {}
-        for d in range(rng.randrange(2, 6)):
-            doc_id = trial * 100 + d
-            ws = [f"t{trial}w{rng.randrange(3)}" for _ in range(rng.randrange(1, 12))]
-            corpora[doc_id] = ws
-            rows.append((doc_id, " ".join(ws)))
-            for ci in range(-(-len(ws) // cw)):
-                ch = " ".join(ws[ci * cw : (ci + 1) * cw])
-                if ch not in first:
-                    first[ch] = (doc_id, ci)
-        for did, ws in sorted(corpora.items()):
-            chunks = [
-                " ".join(ws[ci * cw : (ci + 1) * cw])
-                for ci in range(-(-len(ws) // cw))
-            ]
-            kept = [
-                ch for ci, ch in enumerate(chunks) if first[ch] == (did, ci)
-            ]
-            want[did] = (
-                len(chunks),
-                len(kept),
-                hashlib.md5(" ".join(kept).encode()).hexdigest(),
-            )
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_chunks"], r["n_kept"], r["kept_md5"])
-        for r in paragraph_dedup(docs, chunk_words=cw).collect()
-    }
-    assert got == want

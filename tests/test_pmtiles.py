@@ -369,11 +369,11 @@ def test_lossy_vp8_tile_decode(tmp_path):
 
 # ------------------------------------------------------------ spark scan
 def test_tile_stats_df_anchor(spark, fixture_path):
-    from georaster_spark.sources.pmtiles import tile_stats_df
+    from georaster_spark.datagen import PMTILES_ANCHOR
 
     rows = {
         (r["z"], r["x"], r["y"]): r
-        for r in tile_stats_df(spark, [fixture_path]).collect()
+        for r in P.tile_stats_df(spark, [fixture_path], *PMTILES_ANCHOR[2:4]).collect()
     }
     assert len(rows) == 12
     chasseral = rows[(12, 2128, 1438)]
@@ -386,8 +386,108 @@ def test_tile_stats_df_anchor(spark, fixture_path):
     assert const["sum_r"] == 0 and const["sum_g"] == 80 * 128 * 128
 
 
-def test_entries_df_accepts_paths_dataframe(spark, fixture_path):
-    from georaster_spark.sources.pmtiles import pmtiles_entries_df
-
+def test_tiles_df_accepts_paths_dataframe(spark, fixture_path):
     paths_df = spark.createDataFrame([(fixture_path,)], "path string")
-    assert pmtiles_entries_df(spark, paths_df).count() == 12
+    assert P.tiles_df(spark, paths_df).count() == 12
+
+
+def test_tiles_df_equals_scalar_decode(spark):
+    """Every tile row of the mixed PNG/WebP archive holds the bands of
+    ``decode_tile(get_tile(z, x, y))``, row-major, with their sums —
+    the two constant tiles that share bytes included."""
+    from georaster_spark.cells import zxy_to_cell
+    from georaster_spark.datagen import fixture_webp_pmtiles_path
+
+    path = fixture_webp_pmtiles_path()
+    rows = P.tiles_df(spark, [path]).collect()
+    assert len(rows) == 12
+    with P.PmtilesReader(path) as rd:
+        for row in rows:
+            z, x, y = row["z"], row["x"], row["y"]
+            arr = P.decode_tile(rd.get_tile(z, x, y))
+            assert row["archive"] == path
+            assert row["cell"] == zxy_to_cell(z, x, y)
+            assert (row["height"], row["width"]) == arr.shape[:2]
+            for k, b in enumerate("rgb"):
+                band = arr[:, :, k].ravel()
+                assert row[b] == band.tolist()
+                assert row[f"sum_{b}"] == int(band.sum())
+    const = [r for r in rows if (r["x"], r["y"]) in ((2120, 1430), (2121, 1430))]
+    assert len(const) == 2 and const[0]["r"] == const[1]["r"]
+
+
+def test_xyz_lookup_over_archive_tiles(spark, fixture_path):
+    """``xyz_lookup`` over ``tiles_df`` of the fixture archive at z12
+    gives the reference's Chasseral golden (src/pmtiles.rs:120-133)
+    through the engine, and agrees with ``get_pixel_at`` on probes
+    spread over the 512-px tiles (it takes one ``tile_size``)."""
+    from georaster_spark import cells
+    from georaster_spark.operators.raster import xyz_lookup
+
+    chasseral = (7.059309, 47.133037)
+    probes = [chasseral]
+    for xt in range(2127, 2130):
+        for yt in range(1437, 1440):
+            lon0, lat0, lon1, lat1 = cells.cell_bounds(cells.zxy_to_cell(12, xt, yt))
+            for f, g in ((0.1, 0.7), (0.93, 0.31)):
+                probes.append((lon0 + f * (lon1 - lon0), lat1 - g * (lat1 - lat0)))
+    # probe columns x, y, z: the tile rows' own z/x/y must not clash
+    pts = spark.createDataFrame(
+        [(i, lon, lat, 0, 0, 0) for i, (lon, lat) in enumerate(probes)],
+        "id int, lon double, lat double, x int, y int, z int",
+    )
+    out = xyz_lookup(pts, P.tiles_df(spark, [fixture_path]), 12, 512)
+    got = {r["id"]: (r["r"], r["g"], r["b"]) for r in out.collect()}
+    assert P.terrarium_height_py(*got[0]) == 1598.5294117647063
+    with P.PmtilesReader(fixture_path) as rd:
+        assert got == {i: P.get_pixel_at(rd, 12, lon, lat) for i, (lon, lat) in enumerate(probes)}
+
+
+def test_grey_and_grey_alpha_tiles(spark, tmp_path):
+    """Grey and grey+alpha PNG tiles map to r = g = b = v: the scalar
+    lookup keeps alpha last, as for RGBA, and the tile rows carry the
+    grey plane in every band."""
+    grey = np.arange(64, dtype=np.uint8).reshape(8, 8) * 3
+    ga = np.stack([grey, 255 - grey], axis=-1)
+    p = str(tmp_path / "grey.pmtiles")
+    P.write_pmtiles(p, {(1, 0, 0): encode_png(grey), (1, 1, 0): encode_png(ga)})
+    from georaster_spark import cells
+
+    def probe(xt: int, px: int, py: int) -> tuple[float, float]:
+        lon0, lat0, lon1, lat1 = cells.cell_bounds(cells.zxy_to_cell(1, xt, 0))
+        return lon0 + (px + 0.2) * (lon1 - lon0) / 8, lat1 - (py + 0.2) * (lat1 - lat0) / 8
+
+    v = int(grey[2, 4])
+    with P.PmtilesReader(p) as rd:
+        assert P.get_pixel_at(rd, 1, *probe(0, 4, 2)) == (v, v, v)
+        assert P.get_pixel_at(rd, 1, *probe(1, 4, 2)) == (v, v, v, 255 - v)
+    rows = {(r["x"], r["y"]): r for r in P.tiles_df(spark, [p]).collect()}
+    for xy in ((0, 0), (1, 0)):
+        row = rows[xy]
+        assert row["r"] == row["g"] == row["b"] == grey.ravel().tolist()
+        assert row["sum_r"] == row["sum_g"] == row["sum_b"] == int(grey.sum())
+
+
+def test_tiles_df_expands_runs(spark, tmp_path):
+    """One directory entry with ``run_length`` 2 (the writer never
+    emits runs, so the archive is assembled here) yields a row for
+    each tile of the run, both from the entry's one decode."""
+    tile = encode_png(np.arange(16, dtype=np.uint8).reshape(4, 4))
+    root = P.serialize_directory([P.Entry(1, 0, len(tile), 2)])
+    header = P.Header(
+        root_offset=P.HEADER_SIZE, root_length=len(root),
+        metadata_offset=P.HEADER_SIZE + len(root), metadata_length=0,
+        leaf_offset=P.HEADER_SIZE + len(root), leaf_length=0,
+        data_offset=P.HEADER_SIZE + len(root), data_length=len(tile),
+        n_addressed_tiles=2, n_tile_entries=1, n_tile_contents=1, clustered=True,
+        internal_compression=P.COMPRESSION_NONE, tile_compression=P.COMPRESSION_NONE,
+        tile_type=P.TILETYPE_PNG, min_zoom=1, max_zoom=1,
+        bounds_e7=(0, 0, 0, 0), center_zoom=1, center_e7=(0, 0),
+    )
+    p = tmp_path / "run.pmtiles"
+    p.write_bytes(header.pack() + root + tile)
+    with P.PmtilesReader(str(p)) as rd:
+        assert rd.get_tile(*P.tileid_to_zxy(2)) == tile
+    rows = P.tiles_df(spark, [str(p)]).collect()
+    assert [(r["z"], r["x"], r["y"]) for r in rows] == [P.tileid_to_zxy(1), P.tileid_to_zxy(2)]
+    assert rows[0]["r"] == rows[1]["b"] == list(range(16))

@@ -148,36 +148,21 @@ def main() -> int:
         n_nodes(p, "Exchange") == 1,
     )
 
-    # pmtiles_ingest: directory walk and tile decode are adjacent
-    # Arrow kernels over the path list's LocalTableScan — nothing
-    # shuffles
-    p = plans["pmtiles_ingest"] = explain_str(Q.q_pmtiles_ingest(spark, SF))
-    pmt_kernels = sorted(
-        int(m.group(1)) for m in re.finditer(r"^\((\d+)\) MapInPandas", p, re.M)
-    )
-    check(
-        "pmtiles_ingest",
-        "entry and decode kernels ADJACENT (tile bytes never shuffle)",
-        len(pmt_kernels) == 2 and pmt_kernels[1] - pmt_kernels[0] == 1,
-    )
-    check("pmtiles_ingest", "zero Exchanges", n_nodes(p, "Exchange") == 0)
-
-    # pmtiles_webp_ingest: identical shape over the mixed PNG/WebP
-    # archive — format sniffing happens inside the decode kernel, so
-    # adding a codec must not add a stage or shuffle
-    p = plans["pmtiles_webp_ingest"] = explain_str(
-        Q.q_pmtiles_webp_ingest(spark, SF)
-    )
-    webp_kernels = sorted(
-        int(m.group(1)) for m in re.finditer(r"^\((\d+)\) MapInPandas", p, re.M)
-    )
-    check(
-        "pmtiles_webp_ingest",
-        "entry and decode kernels ADJACENT (tile bytes never shuffle; "
-        "per-tile PNG/WebP dispatch is inside the kernel)",
-        len(webp_kernels) == 2 and webp_kernels[1] - webp_kernels[0] == 1,
-    )
-    check("pmtiles_webp_ingest", "zero Exchanges", n_nodes(p, "Exchange") == 0)
+    # pmtiles_ingest / pmtiles_webp_ingest: directory walk and tile
+    # decode (per-tile PNG/WebP dispatch included) are one Arrow kernel
+    # directly over the path list's LocalTableScan, so tile bytes never
+    # shuffle and adding a codec adds no stage
+    for name in ("pmtiles_ingest", "pmtiles_webp_ingest"):
+        p = plans[name] = explain_str(Q.QUERIES[name](spark, SF))
+        check(
+            name,
+            "exactly one MapInArrow, directly over the path list's "
+            "LocalTableScan; no MapInPandas (tile bytes never shuffle)",
+            n_nodes(p, "MapInArrow") == 1
+            and n_nodes(p, "MapInPandas") == 0
+            and re.search(r"MapInArrow \(\d+\)\n[ :|]*\+- LocalTableScan \(\d+\)", p) is not None,
+        )
+        check(name, "zero Exchanges", n_nodes(p, "Exchange") == 0)
 
     # warc_ingest: two-stage crawl-shard read — split planning and
     # member parsing are both Arrow kernels; the ONLY shuffles carry
