@@ -135,8 +135,8 @@ def main() -> None:
             n = df.count()
             dt = time.time() - t0
             best = dt if best is None or dt < best else best
-            # operators persist() intermediates (LSH bands, shingle
-            # tables); freed so storage pressure from one query can't
+            # operators persist() intermediates (loop rounds, cached
+            # inputs); freed so storage pressure from one query can't
             # evict/GC-thrash a later one
             spark.catalog.clearCache()
         per_query[name] = round(best, 3)

@@ -8,8 +8,9 @@ joins and the checkpointed snapshot-table ingest that a web-scale
 
 Design rules (see SURVEY.md):
 - DataFrame/SQL first; Catalyst does pushdown/pruning/broadcast.
-- Custom kernels only as Arrow-vectorized pandas UDFs — never
-  per-row Python.
+- Custom kernels only as Arrow batch kernels (pandas for the group
+  kernels) — Python loops over rows only where a row is a whole file,
+  split or chunk (``session.map_rows``), never per pixel or document.
 - Partitioning, shuffle and skew handled explicitly (salting,
   broadcast cell-cover joins, AQE backstop).
 """

@@ -34,11 +34,11 @@ from georaster_spark.session import local_df
 LANGS = ["en", "de", "fr", "es", "it"]
 
 
-def documents_df(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
+def documents_df(spark: SparkSession, n: int) -> DataFrame:
     """Synthetic web-page table per input_hint schema, built from
     ``spark.range`` with pure Column exprs (scales to any n without
-    driver-side materialization)."""
-    df = spark.range(0, n, 1, partitions or max(8, n // 250_000))
+    driver-side materialization) over max(8, n / 250k) partitions."""
+    df = spark.range(0, n, 1, max(8, n // 250_000))
     i = F.col("id")
     text = F.format_string("doc %d cell %d", i, i % 1024)
     return df.select(
@@ -176,9 +176,8 @@ def array_to_tiles_df(
     raster_id: str,
     geom: RasterGeometry,
     arr: np.ndarray,
-    image_idx: int = 0,
 ) -> DataFrame:
-    """NumPy array → ``tiles`` DataFrame, reproducing the reference's
+    """NumPy array → ``tiles`` DataFrame (image 0), reproducing the reference's
     chunk layout exactly (``TileAttributes``, ``src/geotiff.rs:433-517``):
 
     - ``arr`` is (h, w) for single band, (h, w, bands) otherwise;
@@ -209,7 +208,7 @@ def array_to_tiles_df(
                 else:
                     block = arr[y0:y1, x0:x1, :]
                     data = block.astype(np.float64).ravel().tolist()
-                rows.append((raster_id, image_idx, run, tc, tr, pr, pd, data))
+                rows.append((raster_id, 0, run, tc, tr, pr, pd, data))
     return local_df(spark, rows, TILES_SCHEMA)
 
 

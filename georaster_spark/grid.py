@@ -126,11 +126,6 @@ class RasterGeometry:
         wy = py.cast("double") * F.lit(self.px_sz_y) + F.lit(self.origin_y)
         return wx, wy
 
-    def in_bounds_col(self, x: Column, y: Column) -> Column:
-        return (
-            (x >= 0) & (x < F.lit(self.width)) & (y >= 0) & (y < F.lit(self.height))
-        )
-
     def tile_index_cols(self, x: Column, y: Column, band: Column | None = None) -> Column:
         """Chunk index — this IS the engine's partitioner for rasters."""
         base = (y / F.lit(self.tile_h)).cast("long") * F.lit(self.tiles_across) + (
@@ -142,15 +137,6 @@ class RasterGeometry:
 
     def tile_col_row_cols(self, x: Column, y: Column) -> tuple[Column, Column]:
         return (x / F.lit(self.tile_w)).cast("int"), (y / F.lit(self.tile_h)).cast("int")
-
-    def pad_cols(self, tile_col: Column, tile_row: Column) -> tuple[Column, Column]:
-        pr = F.when(tile_col == F.lit(self.tiles_across - 1), F.lit(self.padding_right)).otherwise(
-            F.lit(0)
-        )
-        pd = F.when(tile_row == F.lit(self.tiles_down - 1), F.lit(self.padding_down)).otherwise(
-            F.lit(0)
-        )
-        return pr, pd
 
     def tile_offset_cols(self, x: Column, y: Column) -> Column:
         """In-chunk flat offset honoring the shrunken right-edge stride."""

@@ -1,309 +1,16 @@
-"""Deduplication operators for webtext pipelines.
+"""Deduplication clustering for webtext pipelines: connected
+components over near-duplicate pairs, the step that turns pairwise
+matches into dedup groups (keep one doc per component).
 
-- exact: content-hash groupBy (one shuffle on the hash).
-- n-gram Jaccard: shingle equi-join → common counts → threshold.
-- MinHash + LSH: portable numeric minhash (md5-derived base hash,
-  arithmetic permutations) computed as K MIN-aggregates in ONE
-  groupBy; banding; bucket self-join for candidate pairs.
-
-Materialization note: the signature/shingle stages feed multiple
-consumers (self-join sides, size lookups). Spark's exchange reuse
-does not canonicalize across these branches, so we persist the small
-intermediate (signatures/bands — a few rows per doc) explicitly. At
-10^12-doc scale the same stage is written to a table (the E10 layer)
-instead of memory — same plan shape, durable medium.
+The pair finders that fed it (shingles, MinHash/LSH, n-gram Jaccard,
+winnowing, exact substrings, SimHash, paragraph dedup) ran on no
+north-star path and are deleted; callers bring their own pairs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MH_P = 1000000007  # permutation modulus: keeps a*h+b inside int64
-
-
-def mh_perm_params(seed: int) -> tuple[int, int]:
-    return 2 * seed + 3, 5 * seed + 7
-
-
-def _shingle_array(text_col: str, n: int) -> F.Column:
-    """ARRAY of word n-gram shingles. Built with ``zip_with`` over
-    shifted slices instead of per-index ``slice``+``array_join`` —
-    the same distinct output, ~2-3x less interpreted-HOF work per row
-    (measured at sf0.1; HOFs never enter whole-stage codegen, so
-    constant-factor work here is the dedup stack's hot path).
-    A doc shorter than n words keeps one shingle (all its words,
-    concat_ws skipping the NULL zip padding)."""
-    tok = F.split(F.col(text_col), " ")
-    n_sh = F.greatest(F.size(tok) - (n - 1), F.lit(1))
-    acc = tok
-    for j in range(2, n + 1):
-        acc = F.zip_with(acc, F.slice(tok, j, F.size(tok)), lambda a, b: F.concat_ws(" ", a, b))
-    return F.slice(acc, 1, n_sh)
-
-
-def shingles(docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, sh)."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(_shingle_array(text_col, n))).alias("sh"),
-    )
-
-
-def shingle_hash() -> F.Column:
-    """Portable 60-bit base hash of a shingle, reduced mod P: the
-    SAME value is derivable in DuckDB via CAST('0x'||substr(md5,1,15))."""
-    return F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10).cast("long") % MH_P
-
-
-def minhash_signatures(sh: DataFrame, n_seeds: int = 16) -> DataFrame:
-    """(doc_id, s0..s{n-1}) — all permutations as MIN aggregates in a
-    single groupBy: one shuffle, no row blowup."""
-    hashed = sh.select("doc_id", shingle_hash().alias("h"))
-    aggs = []
-    for s in range(n_seeds):
-        a, b = mh_perm_params(s)
-        aggs.append(F.min((F.col("h") * a + b) % MH_P).alias(f"s{s}"))
-    return hashed.groupBy("doc_id").agg(*aggs)
-
-
-def lsh_bands(sig: DataFrame, n_seeds: int = 16, rows_per_band: int = 4) -> DataFrame:
-    """(doc_id, band, bucket) via a single explode — one pass over sig."""
-    entries = []
-    for band in range(n_seeds // rows_per_band):
-        cols = [f"s{band * rows_per_band + j}" for j in range(rows_per_band)]
-        entries.append(
-            F.struct(F.lit(band).alias("band"), F.md5(F.concat_ws(",", *cols)).alias("bucket"))
-        )
-    return sig.select(
-        "doc_id", F.explode(F.array(*entries)).alias("bb")
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-
-def lsh_candidate_pairs(
-    docs: DataFrame, n_seeds: int = 16, rows_per_band: int = 4, shingle_n: int = 3
-) -> DataFrame:
-    """Distinct (doc_a < doc_b) candidate pairs sharing ≥1 LSH bucket.
-
-    Bands (≤ n_seeds/rows_per_band rows per doc) are persisted so the
-    self-join computes the upstream pipeline once.
-    """
-    sh = shingles(docs, n=shingle_n)
-    bands = lsh_bands(minhash_signatures(sh, n_seeds), n_seeds, rows_per_band).persist()
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").cast("long").alias("doc_a"),
-            F.col("b.doc_id").cast("long").alias("doc_b"),
-        )
-        .distinct()
-    )
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame, threshold_e6: int, shingle_n: int = 3
-) -> DataFrame:
-    """(doc_a, doc_b, jaccard_e6) for pairs with Jaccard ≥ threshold.
-
-    The shingle table feeds three consumers (both join sides + the
-    per-doc sizes) → persisted once.
-    """
-    sh = shingles(docs, n=shingle_n).persist()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    jac_e6 = F.round(
-        F.col("n_common").cast("double")
-        / (F.col("na") + F.col("nb") - F.col("n_common")).cast("double")
-        * 1000000.0,
-        0,
-    ).cast("long")
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard_e6", jac_e6)
-        .where(F.col("jaccard_e6") >= threshold_e6)
-        .select(F.col("doc_a").cast("long"), F.col("doc_b").cast("long"), "jaccard_e6")
-    )
-
-
-def ngram_jaccard_pairs_lsh(
-    docs: DataFrame,
-    threshold_e6: int,
-    shingle_n: int = 3,
-    n_seeds: int = 16,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """Scale-safe exact-Jaccard: compute Jaccard ONLY on MinHash-LSH
-    candidate pairs instead of joining raw shingles.
-
-    The raw-shingle self-join (``ngram_jaccard_pairs``) goes
-    quadratic on any high-document-frequency shingle — one piece of
-    boilerplate shared by M docs creates M² join rows. Here the
-    candidate set comes from the banded-bucket equi-join (bounded
-    amplification), and the exact Jaccard runs per candidate pair:
-    candidates × shingles(doc_a) equi-joined to shingles on
-    (doc_b, sh) — row count is linear in |candidates| × doc size.
-
-    Result equals the all-pairs form whenever LSH recall at the
-    configured (bands, rows) covers every pair ≥ threshold — the
-    standard banding argument P(candidate) = 1-(1-s^r)^b. Tune
-    rows_per_band DOWN for low thresholds: with 16 seeds, r=4/b=4
-    gives 0.879 at s=0.8 but only ~0.23 at s=0.5, while r=2/b=8
-    gives 0.90 at s=0.5 and 0.9997 at s=0.8 (the catalog runs r=2
-    for its τ=0.5 entry). Tests assert exact equality with the
-    all-pairs form on the testdata; on unseen data near-threshold
-    pairs can still miss with probability 1-P. Pairs BELOW threshold
-    are filtered exactly either way, so precision is always 1.
-    """
-    cand = lsh_candidate_pairs(docs, n_seeds, rows_per_band, shingle_n)
-    sh = shingles(docs, n=shingle_n).withColumn("doc_id", F.col("doc_id").cast("long")).persist()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    common = (
-        cand.join(sh.select(F.col("doc_id").alias("doc_a"), "sh"), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "sh"), ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    jac_e6 = F.round(
-        F.col("n_common").cast("double")
-        / (F.col("na") + F.col("nb") - F.col("n_common")).cast("double")
-        * 1000000.0,
-        0,
-    ).cast("long")
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard_e6", jac_e6)
-        .where(F.col("jaccard_e6") >= threshold_e6)
-        .select(F.col("doc_a").cast("long"), F.col("doc_b").cast("long"), "jaccard_e6")
-    )
-
-
-def positioned_shingles(
-    docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Word n-gram shingles WITH position: (doc_id, pos, sh). Unlike
-    ``shingles`` this keeps duplicates and order — required by
-    position-sensitive fingerprinting (winnowing)."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(_shingle_array(text_col, n)).alias("pos", "sh"),
-    )
-
-
-def winnow_fingerprints(
-    docs: DataFrame, shingle_n: int = 3, window: int = 4
-) -> DataFrame:
-    """Winnowing document fingerprints (the rolling-hash selection
-    scheme of Schleimer/Wilkerson/Aiken, SIGMOD'03): hash every
-    positioned k-gram, slide a ``window``-wide frame over the hash
-    sequence, keep each window's MINIMUM, dedupe.
-
-    Guarantee: any shared substring of length ≥ window+k-1 words
-    between two documents yields at least one shared fingerprint —
-    the local property that makes winnowed sets comparable across
-    documents without aligning them. Distinct (doc_id, fp) rows out;
-    one shuffle (the per-doc window sort).
-    """
-    hashed = positioned_shingles(docs, n=shingle_n).select(
-        "doc_id", "pos", shingle_hash().alias("h")
-    )
-    from pyspark.sql import Window as W
-
-    frame = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, window - 1)
-    n_pos = W.partitionBy("doc_id")
-    # full windows only — except a doc shorter than one window, which
-    # contributes its single (shortened) window so no doc is dropped
-    fp = (
-        hashed.withColumn("_n", F.max("pos").over(n_pos))
-        .withColumn("fp", F.min("h").over(frame))
-        .where(
-            (F.col("pos") + window - 1 <= F.col("_n"))
-            | ((F.col("_n") < window - 1) & (F.col("pos") == 0))
-        )
-    )
-    return fp.select("doc_id", "fp").distinct()
-
-
-def exact_substring_spans(
-    docs: DataFrame, gram_len: int = 5, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Cross-document exact-substring duplication spans — the
-    distributed form of ExactSubstr dedup (Lee et al. 2022,
-    "Deduplicating Training Data Makes Language Models Better"),
-    which the original computes with a single-machine suffix array.
-
-    Semantics: every word ``gram_len``-gram of every document is
-    hashed; a gram occurring in ≥2 DISTINCT documents marks all its
-    occurrences (in every holder) as duplicated; per document,
-    OVERLAPPING marked windows merge into maximal spans (adjacent but
-    non-overlapping windows stay separate spans — they are distinct
-    duplicated substrings). Output: one row per document that has at
-    least one cross-document duplicated span, with the span count,
-    total duplicated word positions, and the e6 duplication ratio.
-    Documents shorter than ``gram_len`` words carry no full gram and
-    are skipped.
-
-    Scale shape (the reason this is NOT a suffix array): three
-    shuffles, each linear in corpus tokens —
-      1. groupBy gram hash with map-side partial min/max(doc_id);
-         min≠max ⟺ ≥2 distinct holders, so the dup flag needs no
-         countDistinct state;
-      2. equi-join of positioned grams against the dup-flagged hash
-         set: each position row meets exactly ONE flag row, so a
-         boilerplate gram shared by M documents costs M join rows,
-         never M²;
-      3. the per-document window sort that merges overlapping
-         windows (same-length intervals sorted by position merge via
-         one lag(): new span ⟺ pos - lag(pos) ≥ gram_len).
-    The driver holds nothing; no broadcast is required (AQE may pick
-    one for the flag side when it is small).
-    """
-    tok = F.split(F.col(text_col), " ")
-    d = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")).where(
-        F.size(tok) >= gram_len
-    )
-    g = d.select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).alias("n_words"),
-        F.posexplode(_shingle_array("text", gram_len)).alias("pos", "sh"),
-    ).select("doc_id", "n_words", "pos", shingle_hash().alias("h"))
-    dup = g.groupBy("h").agg(F.min("doc_id").alias("_mn"), F.max("doc_id").alias("_mx"))
-    dup = dup.where(F.col("_mn") != F.col("_mx")).select("h")
-    marked = g.join(dup, "h").select("doc_id", "n_words", "pos")
-
-    from pyspark.sql import Window as W
-
-    by_pos = W.partitionBy("doc_id").orderBy("pos")
-    run = by_pos.rowsBetween(W.unboundedPreceding, W.currentRow)
-    spans = (
-        marked.withColumn(
-            "brk",
-            (F.col("pos") - F.lag("pos", 1, -gram_len).over(by_pos) >= gram_len).cast("int"),
-        )
-        .withColumn("island", F.sum("brk").over(run))
-        .groupBy("doc_id", "n_words", "island")
-        .agg(F.min("pos").alias("s"), (F.max("pos") + gram_len - 1).alias("e"))
-    )
-    return spans.groupBy("doc_id", "n_words").agg(
-        F.count(F.lit(1)).cast("long").alias("n_spans"),
-        F.sum(F.col("e") - F.col("s") + 1).cast("long").alias("dup_words"),
-    )
 
 
 def _symmetric(e: DataFrame) -> DataFrame:

@@ -94,30 +94,22 @@ def tiles_to_pixels(tiles: DataFrame, geom: RasterGeometry) -> DataFrame:
     return tiles.mapInArrow(decode, schema=PIXELS_SCHEMA)
 
 
-def pixels_to_tiles(
-    pixels: DataFrame, geom: RasterGeometry, fill: float = float("nan")
-) -> DataFrame:
+def pixels_to_tiles(pixels: DataFrame, geom: RasterGeometry) -> DataFrame:
     """Assemble pixel rows into padded-stride chunk rows (inverse of
-    ``tiles_to_pixels``; engine op E7 sink side). Missing pixels take
-    ``fill``. One shuffle, on the natural chunk key. A planar or
-    single-band chunk holds one band; a chunky multi-band chunk holds
-    its samples interleaved, ``(h, w, spp)``, in one row with ``band``
-    0 — the layout ``tiles_to_pixels`` reads."""
+    ``tiles_to_pixels``; engine op E7 sink side). Missing pixels are
+    NaN (NULL once decoded again). One shuffle, on the natural chunk
+    key. A planar or single-band chunk holds one band; a chunky
+    multi-band chunk holds its samples interleaved, ``(h, w, spp)``,
+    in one row with ``band`` 0 — the layout ``tiles_to_pixels`` reads."""
     tile_w, tile_h = geom.tile_w, geom.tile_h
-    ta, td = geom.tiles_across, geom.tiles_down
-    pr_last, pd_last = geom.padding_right, geom.padding_down
     spp = geom.spp()
-
-    keyed = pixels.withColumn("tile_col", (F.col("x") / tile_w).cast("int")).withColumn(
-        "tile_row", (F.col("y") / tile_h).cast("int")
-    )
+    tile_col, tile_row = geom.tile_col_row_cols(F.col("x"), F.col("y"))
+    keyed = pixels.withColumns({"tile_col": tile_col, "tile_row": tile_row})
 
     def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         raster_id, image_idx, tc, tr = key[0], key[1], key[-2], key[-1]
-        pr = pr_last if tc == ta - 1 else 0
-        pdn = pd_last if tr == td - 1 else 0
-        th_eff, tw_eff = tile_h - pdn, tile_w - pr
-        arr = np.full((th_eff, tw_eff, spp), fill, np.float64)
+        pr, pdn = geom.get_padding(tr * geom.tiles_across + tc)
+        arr = np.full((tile_h - pdn, tile_w - pr, spp), np.nan)
         xs = pdf["x"].to_numpy(np.int64) - tc * tile_w
         ys = pdf["y"].to_numpy(np.int64) - tr * tile_h
         samples = 0 if spp == 1 else pdf["band"].to_numpy(np.int64)
@@ -218,15 +210,15 @@ def rgb_to_ascii_cols(r: Column, g: Column, b: Column) -> Column:
     return grey_to_ascii_cols(lum)
 
 
-def ascii_lines(chars: DataFrame, x: str = "x", y: str = "y", ch: str = "ch") -> DataFrame:
-    """Assemble per-pixel chars into one text line per raster row —
+def ascii_lines(chars: DataFrame) -> DataFrame:
+    """Assemble per-pixel ``(x, y, ch)`` chars into one text line per raster row —
     the img2ascii sink (``examples/img2ascii.rs:45-52``). collect_list
     is unordered; the (x, char) structs are array_sorted so the line
     is deterministic regardless of physical row order."""
-    return chars.groupBy(F.col(y).alias("y")).agg(
+    return chars.groupBy("y").agg(
         F.array_join(
             F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col(x).alias("x"), F.col(ch).alias("ch")))),
+                F.array_sort(F.collect_list(F.struct("x", "ch"))),
                 lambda e: e["ch"],
             ),
             "",
@@ -258,8 +250,11 @@ def xyz_lookup(points: DataFrame, tiles: DataFrame, z: int, tile_size: int) -> D
     ``r``, ``g``, ``b`` (int). A missing tile or a ``px``/``py``
     outside the tile yields NO row (the reference errors on missing
     tiles, ``:28`` — we diverge to empty-result semantics, assertable,
-    like OOB reads). The keys are computed once, in the kernel, so no
-    predicate on them reaches below the cell-encode Project.
+    like OOB reads). So does a tile whose bands do not hold
+    ``tile_size²`` pixels: it is filtered out before the join, while
+    ``pmtiles.get_pixel_at`` samples such a tile at its own width.
+    The keys are computed once, in the kernel, so no predicate on
+    them reaches below the cell-encode Project.
     """
     from georaster_spark import cells
     from georaster_spark.sources.pmtiles import round_half_away
@@ -289,7 +284,8 @@ def xyz_lookup(points: DataFrame, tiles: DataFrame, z: int, tile_size: int) -> D
         locate, StructType([*pts.schema, StructField("px", IntegerType()), StructField("py", IntegerType())])
     )
     pixel = F.col("py") * tile_size + F.col("px")
-    return located.join(tiles.select("cell", "r", "g", "b"), ["cell"]).select(
+    sized = tiles.select("cell", "r", "g", "b").where(F.size("r") == tile_size * tile_size)
+    return located.join(sized, ["cell"]).select(
         "cell", "px", "py",
         *(c for c in points.columns if c != "cell"),
         *(F.col(b)[pixel].alias(b) for b in ("r", "g", "b")),
@@ -318,10 +314,10 @@ def rasterize(
     lat: Column,
     value: Column,
     agg: str = "count",
-    raster_id: str = "rasterized",
 ) -> DataFrame:
     """Vector→raster: world points binned onto the pixel grid via the
-    forward geotransform (R8 math), aggregated per pixel. The single
+    forward geotransform (R8 math), aggregated per pixel into image 0,
+    band 0 of raster ``rasterized``. The single
     shuffle is the groupBy on the pixel key — minimal by construction.
     """
     px, py = geom.world_to_pixel_cols(lon, lat)
@@ -340,7 +336,7 @@ def rasterize(
         "avg": F.avg("v"),
     }[agg]
     return binned.groupBy("x", "y").agg(agg_col.cast("double").alias("value")).select(
-        F.lit(raster_id).alias("raster_id"),
+        F.lit("rasterized").alias("raster_id"),
         F.lit(0).alias("image_idx"),
         F.lit(0).alias("band"),
         "x",
@@ -758,7 +754,10 @@ def d8_accumulation_k(flow: DataFrame, k: int = 4) -> DataFrame:
     )
 
 
-def d8_accumulation(flow: DataFrame, max_rounds: int = 100_000) -> DataFrame:
+D8_MAX_ROUNDS = 100_000  # d8_accumulation's cycle guard
+
+
+def d8_accumulation(flow: DataFrame) -> DataFrame:
     """FULL D8 flow accumulation (contributing-area count,
     O'Callaghan & Mark 1984): for every cell, how many other cells'
     flow paths reach it in ANY number of steps — the fixpoint form of
@@ -794,9 +793,9 @@ def d8_accumulation(flow: DataFrame, max_rounds: int = 100_000) -> DataFrame:
     rounds = 0
     while not frontier.isEmpty():
         rounds += 1
-        if rounds > max_rounds:  # cycle guard: a DAG input terminates
+        if rounds > D8_MAX_ROUNDS:  # cycle guard: a DAG input terminates
             raise RuntimeError(
-                f"d8_accumulation did not converge in {max_rounds} rounds"
+                f"d8_accumulation did not converge in {D8_MAX_ROUNDS} rounds"
             )
         frontier = (
             frontier.join(step, ["tx", "ty"])

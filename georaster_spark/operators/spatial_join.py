@@ -376,8 +376,8 @@ def within_distance_pairs(
     )
 
 
-def salted_cell_counts(docs_with_cell: DataFrame, count_col: str = "n_docs") -> DataFrame:
-    """Per-cell counts ``(cell, count_col bigint)`` in one shuffle (E5).
+def salted_cell_counts(docs_with_cell: DataFrame) -> DataFrame:
+    """Per-cell counts ``(cell, n_docs bigint)`` in one shuffle (E5).
 
     A plain ``groupBy("cell")``: Spark counts map-side before the
     Exchange, so a hot cell reaches the reducers as at most one
@@ -386,7 +386,7 @@ def salted_cell_counts(docs_with_cell: DataFrame, count_col: str = "n_docs") -> 
     name is kept for its callers; the explicit salt lives on in
     ``salted_equi_join``, where partial aggregation cannot help.
     """
-    return docs_with_cell.groupBy("cell").agg(F.count(F.lit(1)).alias(count_col))
+    return docs_with_cell.groupBy("cell").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
 def salted_equi_join(

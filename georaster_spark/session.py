@@ -4,7 +4,7 @@ Local-mode settings mirror what we would set cluster-side:
 - shuffle partitions ~ cores (AQE coalesces further at runtime),
 - AQE on (runtime re-plan, skew-join backstop behind our explicit
   salting),
-- Arrow on (every custom kernel is a vectorized pandas UDF),
+- Arrow on (every custom kernel exchanges Arrow batches with the JVM),
 - UTC session timezone (DuckDB-oracle comparisons are UTC-naive),
 - no Python call-site capture (``dataFrameDebugging`` off): PySpark
   otherwise wraps every ``F.*``/``Column`` call in ~5 extra JVM round
@@ -28,8 +28,9 @@ Local-mode settings mirror what we would set cluster-side:
 
 ``local_df`` is the one way the engine turns driver-built rows (cover
 and kNN indexes, path lists, fixtures) into a DataFrame; ``paths_df``
-is the one reading of a source's ``paths`` argument, and
-``map_paths`` the one per-path header stage.
+is the one reading of a source's ``paths`` argument, and ``map_rows``
+the one per-row executor stage that every file source reads its files
+in. ``arrow_batch`` packs Python tuples for both ends.
 """
 
 from __future__ import annotations
@@ -102,6 +103,16 @@ def get_spark(
     return spark
 
 
+def arrow_batch(rows, schema: pa.Schema) -> pa.RecordBatch:
+    """Tuples in ``schema`` order as one Arrow record batch: how the
+    driver (``local_df``) and the ``map_rows`` kernels pack Python
+    rows."""
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+
+
 def local_df(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
     """Driver-built rows (tuples in ``schema`` order; a DDL string or a
     ``StructType``) as an Arrow table, which Spark plans as a
@@ -111,11 +122,7 @@ def local_df(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
     ``Scan ExistingRDD`` that is read again on every action."""
     if isinstance(schema, str):
         schema = DataType.fromDDL(schema)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
+    table = pa.Table.from_batches([arrow_batch(rows, to_arrow_schema(schema))])
     return spark.createDataFrame(table, schema)
 
 
@@ -144,18 +151,20 @@ def paths_df(spark: SparkSession, paths, n: int | None = None) -> DataFrame:
     return work.repartition(n) if n > 1 else work
 
 
-def map_paths(spark: SparkSession, paths, rows_of, schema: str) -> DataFrame:
-    """Paths -> rows in one executor-side ``mapInPandas`` over
-    ``paths_df(spark, paths)``: ``rows_of(path)`` returns the path's
-    rows, as tuples in ``schema`` order or dicts keyed by column. The
-    header walks (TIFF chunk plan and metadata, WARC splits) are this
-    stage, so the driver ships only path strings and opens no file."""
-    columns = DataType.fromDDL(schema).names
+def map_rows(df: DataFrame, batches_of, schema: str) -> DataFrame:
+    """The per-row executor stage: one Arrow map over ``df`` that
+    calls ``batches_of(row, arrow_schema)`` with each input row as a
+    dict and the output schema (``schema``, a DDL string) in Arrow
+    form, and yields the record batches it returns (``arrow_batch``
+    packs tuples). Every file source reads its files here: TIFF chunk
+    plan, metadata and decode over ``paths_df`` rows, PMTiles tiles,
+    WARC splits and records. The driver ships only those small rows
+    and opens no file."""
+    arrow = to_arrow_schema(DataType.fromDDL(schema))
 
     def kernel(batches):
-        import pandas as pd
+        for batch in batches:
+            for row in batch.to_pylist():
+                yield from batches_of(row, arrow)
 
-        for pdf in batches:
-            yield pd.DataFrame([r for p in pdf["path"] for r in rows_of(p)], columns=columns)
-
-    return paths_df(spark, paths).mapInPandas(kernel, schema=schema)
+    return df.mapInArrow(kernel, schema=schema)

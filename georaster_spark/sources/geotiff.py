@@ -8,20 +8,21 @@ walk, ``:103-117`` origin/pixel_size rules, ``:255-289`` chunk
 decode routing) without translating its implementation: here the
 decode step is a NumPy kernel inside one Spark Arrow stage.
 
-Spark-first architecture (scales to a 100 TB COG lake):
+Spark-first architecture (scales to a 100 TB COG lake): every stage
+below is one ``session.map_rows`` call, the per-row Arrow stage that
+the PMTiles and WARC readers use too, over a *paths* table (a driver
+list as a ``LocalTableScan``, or a file-catalog DataFrame;
+``session.paths_df``).
 
-1. ``chunk_plan_df``: a *paths* table (a driver list as a
-   ``LocalTableScan``, or a file-catalog DataFrame; ``session.
-   paths_df``) goes through the per-path ``mapInPandas`` header stage
-   (``session.map_paths``, shared with ``file_meta_df`` and the
-   PMTiles/WARC planners) that reads ONLY header/IFD bytes
-   (seek-based ranged reads — never the payload) and emits one row
-   per strip/tile chunk: ``(path, raster_id, image_idx, chunk, band,
-   x0, y0, w, h, offset, nbytes, ...)``. Millions of files ⇒ still
-   one small row per chunk, fully distributed. It is a public call of
+1. ``chunk_plan_df`` and ``file_meta_df``: each path row reads ONLY
+   header/IFD bytes (seek-based ranged reads — never the payload) and
+   emits one row per strip/tile chunk (``(path, raster_id,
+   image_idx, chunk, band, x0, y0, w, h, offset, nbytes, ...)``) or
+   one metadata row per IFD. Millions of files ⇒ still one small row
+   per chunk, fully distributed. The chunk plan is a public call of
    its own, not a stage of the decode.
-2. ``pixels_df`` and ``decimal_pixels_df``: one ``mapInArrow`` stage
-   over ``(path, k, n)`` rows. Each task walks the file's header as
+2. ``pixels_df`` and ``decimal_pixels_df``: one stage over ``(path,
+   k, n)`` rows. Each row walks the file's header as
    ``chunk_plan_df`` does, then does a ranged read of every n-th
    chunk's payload from the k-th, inflates it (zlib for
    Deflate/OldDeflate, LZW), wraps it in NumPy, clips grid padding,
@@ -698,22 +699,25 @@ CHUNK_SCHEMA = (
     "spp int, byte_order string, nodata string"
 )
 
-def chunk_plan_df(spark, paths, image_idx: int = 0):
-    """Paths -> chunk table. Header parse happens in an Arrow
-    kernel (executor-side ranged reads); the driver only ships path
-    strings, so a million-file catalog stays distributed.
+def chunk_plan_df(spark, paths):
+    """Paths -> chunk table of each file's first image. Header parse
+    happens in the per-row Arrow stage (``session.map_rows``,
+    executor-side ranged reads); the driver only ships path strings,
+    so a million-file catalog stays distributed.
 
     ``paths``: a list of path strings — a ``LocalTableScan`` already
     split into min(paths, default parallelism) slices, so nothing
     shuffles before the kernel — OR an existing DataFrame with a
     ``path`` string column (the scale form — a file-catalog table
     never materializes on the driver)."""
-    from georaster_spark.session import map_paths
+    from georaster_spark.session import arrow_batch, map_rows, paths_df
+
+    def batches_of(row, schema):
+        descs = chunk_descriptors(open_tiff(row["path"]))
+        return [arrow_batch([tuple(d[c] for c in schema.names) for d in descs], schema)]
 
     _assert_unique_basenames(paths)
-    return map_paths(
-        spark, paths, lambda p: chunk_descriptors(open_tiff(p), image_idx), CHUNK_SCHEMA
-    )
+    return map_rows(paths_df(spark, paths), batches_of, CHUNK_SCHEMA)
 
 
 FILE_META_SCHEMA = (
@@ -761,15 +765,19 @@ def file_meta_rows(path: str) -> list[tuple]:
 
 def file_meta_df(spark, paths):
     """Distributed raster metadata registration (R1/R2 at lake scale):
-    header walks run in an Arrow kernel on executors — the driver
-    ships only path strings, so a million-file catalog registers
+    header walks run in the per-row Arrow stage on executors — the
+    driver ships only path strings, so a million-file catalog registers
     without a single driver-side file open (the r2 VERDICT's scale
     defect). Same paths contract (list as a ``LocalTableScan``, or a
     DataFrame) as ``chunk_plan_df``."""
-    from georaster_spark.session import map_paths
+    from georaster_spark.session import arrow_batch, map_rows, paths_df
 
     _assert_unique_basenames(paths)
-    return map_paths(spark, paths, file_meta_rows, FILE_META_SCHEMA)
+    return map_rows(
+        paths_df(spark, paths),
+        lambda row, schema: [arrow_batch(file_meta_rows(row["path"]), schema)],
+        FILE_META_SCHEMA,
+    )
 
 
 def _assert_unique_basenames(paths) -> None:
@@ -830,32 +838,25 @@ def _pixel_batch(
 
 def _pixels_stage(spark, paths, image_idx: int, n: int, schema: str, chunk_array):
     """The one decode stage behind ``pixels_df`` and
-    ``decimal_pixels_df``: a ``mapInArrow`` over ``(path, k, n)`` rows
-    (``session.paths_df``) that walks the file's header and turns its
-    chunks ``k::n`` into pixel batches, ``chunk_array(desc)`` giving each
-    chunk's ``(h, w, spp)`` array and ``_pixel_batch`` exploding it into
-    ``schema``."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import DataType
+    ``decimal_pixels_df``: ``session.map_rows`` over ``(path, k, n)``
+    rows (``session.paths_df``), each row walking the file's header and
+    turning its chunks ``k::n`` into pixel batches, ``chunk_array(desc)``
+    giving each chunk's ``(h, w, spp)`` array and ``_pixel_batch``
+    exploding it into ``schema``."""
+    from georaster_spark.session import map_rows, paths_df
 
-    from georaster_spark.session import paths_df
+    def batches_of(row, arrow_schema):
+        descs = chunk_descriptors(open_tiff(row["path"]), image_idx)
+        for d in descs[row["k"] :: row["n"]]:
+            # chunky samples are bands 0..spp-1; a planar chunk is its run's band
+            band = 0 if d["spp"] > 1 else d["band_run"]
+            yield _pixel_batch(
+                chunk_array(d), d["raster_id"], d["image_idx"], band,
+                d["x0"], d["y0"], arrow_schema,
+            )
 
     _assert_unique_basenames(paths)
-    arrow_schema = to_arrow_schema(DataType.fromDDL(schema))
-
-    def kernel(batches):
-        for batch in batches:
-            for r in batch.to_pylist():
-                descs = chunk_descriptors(open_tiff(r["path"]), image_idx)
-                for d in descs[r["k"] :: r["n"]]:
-                    # chunky samples are bands 0..spp-1; a planar chunk is its run's band
-                    band = 0 if d["spp"] > 1 else d["band_run"]
-                    yield _pixel_batch(
-                        chunk_array(d), d["raster_id"], d["image_idx"], band,
-                        d["x0"], d["y0"], arrow_schema,
-                    )
-
-    return paths_df(spark, paths, n).mapInArrow(kernel, schema=schema)
+    return map_rows(paths_df(spark, paths, n), batches_of, schema)
 
 
 def pixels_df(
@@ -867,7 +868,7 @@ def pixels_df(
 ):
     """Paths -> pixel rows in ONE Arrow stage: a ``(path, k, n)`` table
     (``n = chunk_partitions or 1``, one row per path and k < n) goes
-    through a ``mapInArrow`` kernel that walks the file's header and
+    through ``session.map_rows``, whose kernel walks the file's header and
     decodes its chunks ``k::n`` (ranged payload read + inflate +
     NumPy). Splitting the chunk list this way is how one big COG
     spreads over ``n`` tasks without shuffling chunk rows; the header
@@ -899,13 +900,14 @@ def pixels_df(
     return _pixels_stage(spark, paths, image_idx, chunk_partitions or 1, PIXELS_SCHEMA, chunk_array)
 
 
-def decimal_pixels_df(spark, paths, image_idx: int = 0):
-    """Exact-integer variant of ``pixels_df``: value is DECIMAL(20,0),
-    so u64 samples above 2^53 (inexact in DOUBLE) survive decode
-    (src/lib.rs:33-51 U64 variant; SURVEY §7 risk 3). For integral
-    rasters only — float families raise. The same one stage as
-    ``pixels_df``; chunks are read in their native integer dtype, and
-    a sparse chunk (no payload) as all-NaN, which lands as NULL."""
+def decimal_pixels_df(spark, paths):
+    """Exact-integer variant of ``pixels_df`` over each file's first
+    image: value is DECIMAL(20,0), so u64 samples above 2^53 (inexact
+    in DOUBLE) survive decode (src/lib.rs:33-51 U64 variant; SURVEY §7
+    risk 3). For integral rasters only — float families raise. The
+    same one stage as ``pixels_df``; chunks are read in their native
+    integer dtype, and a sparse chunk (no payload) as all-NaN, which
+    lands as NULL."""
 
     def chunk_array(d: dict) -> np.ndarray:
         if d["dtype"].startswith("f"):
@@ -913,7 +915,7 @@ def decimal_pixels_df(spark, paths, image_idx: int = 0):
         return read_chunk(d, as_float=d["nbytes"] == 0)
 
     return _pixels_stage(
-        spark, paths, image_idx, 1,
+        spark, paths, 0, 1,
         "raster_id string, image_idx int, band int, x int, y int, value decimal(20,0)",
         chunk_array,
     )
@@ -939,11 +941,12 @@ def _encode_tag_values(typ, vals):
 def _image_block(
     arr, dtype, pixel_scale, origin, rows_per_strip, block_off, next_ifd,
     compression=COMPRESSION_NONE, predictor=1, big=False, sparse_value=None,
-    nodata=None,
+    nodata=None, planar=False,
 ):
     """Serialize ONE image as (IFD + out-of-line values + payloads)
     at absolute offset ``block_off``; returns the bytes. ``next_ifd``
-    is the absolute offset of the following IFD (0 = last)."""
+    is the absolute offset of the following IFD (0 = last). A planar
+    image stores every strip of sample 0, then of sample 1, …."""
     if arr.ndim == 2:
         arr = arr[:, :, None]
     h, w, spp = arr.shape
@@ -952,8 +955,8 @@ def _image_block(
     rps = rows_per_strip or h
     n_strips = -(-h // rps)
 
-    def encode_strip(s):
-        block = arr[s * rps : (s + 1) * rps].astype(np_dt)
+    def encode_strip(block):
+        block = block.astype(np_dt)
         if sparse_value is not None and bool(np.all(block == sparse_value)):
             return b""  # GDAL SPARSE_OK layout: offset/bytecount 0
         if predictor == 2:
@@ -971,7 +974,8 @@ def _image_block(
             raw = lzw_encode(raw)
         return raw
 
-    payloads = [encode_strip(s) for s in range(n_strips)]
+    planes = [arr[:, :, b : b + 1] for b in range(spp)] if planar else [arr]
+    payloads = [encode_strip(p[s * rps : (s + 1) * rps]) for p in planes for s in range(n_strips)]
 
     tags: list[tuple[int, int, list]] = [
         (TAG_WIDTH, 3, [w]),
@@ -981,7 +985,7 @@ def _image_block(
         (TAG_PHOTOMETRIC, 3, [2 if spp >= 3 else 1]),
         (TAG_SAMPLES_PER_PIXEL, 3, [spp]),
         (TAG_ROWS_PER_STRIP, 3, [rps]),
-        (TAG_PLANAR_CONFIG, 3, [1]),
+        (TAG_PLANAR_CONFIG, 3, [2 if planar else 1]),
         (TAG_SAMPLE_FORMAT, 3, [fmt] * spp),
     ]
     if predictor != 1:
@@ -993,7 +997,7 @@ def _image_block(
     if origin is not None:
         tags.append((TAG_MODEL_TIEPOINT, 12, [0.0, 0.0, 0.0, origin[0], origin[1], 0.0]))
     off_typ = 16 if big else 4  # LONG8 offsets in BigTIFF
-    tags.append((TAG_STRIP_OFFSETS, off_typ, [0] * n_strips))
+    tags.append((TAG_STRIP_OFFSETS, off_typ, [0] * len(payloads)))
     tags.append((TAG_STRIP_BYTE_COUNTS, off_typ, [len(p) for p in payloads]))
     tags.sort(key=lambda t: t[0])
 
@@ -1056,8 +1060,10 @@ def write_tiff(
     bigtiff: bool = False,
     sparse_value: float | int | None = None,
     nodata: float | int | None = None,
+    planar: bool = False,
 ) -> None:
-    """Minimal TIFF writer (little-endian, chunky strips; optional
+    """Minimal TIFF writer (little-endian strips, chunky or — with
+    ``planar`` — one strip run per sample (PlanarConfiguration 2); optional
     Deflate/LZW compression, horizontal-differencing predictor,
     BigTIFF layout, and GDAL-style sparse strips where an all-
     ``sparse_value`` strip stores no payload) — the engine's raster
@@ -1091,6 +1097,7 @@ def write_tiff(
                     compression=compression, predictor=predictor, big=bigtiff,
                     sparse_value=sparse_value,
                     nodata=nodata if i == 0 else None,
+                    planar=planar,
                 )
             )
             off += len(new_blocks[-1])

@@ -24,6 +24,11 @@ Lookup semantics mirror ``src/pmtiles.rs:21-34``: a hit returns the
 tile bytes; a miss (tile id outside every entry/run) returns ``None``
 (the reference raises ``PmtError::InvalidEntry``; callers that need
 error parity check for ``None``).
+
+The Spark surface is ``tiles_df``: archives are read in the engine's
+per-row Arrow stage (``session.map_rows``), the one the GeoTIFF and
+WARC readers use, so the driver opens no archive and tile bytes never
+shuffle.
 """
 
 from __future__ import annotations
@@ -570,23 +575,18 @@ def tiles_df(spark, paths):
     zxy_to_cell(z, x, y)`` and row-major ``array<int>`` bands (pixel
     (px, py) at ``py * width + px``).
 
-    One ``mapInArrow`` over ``session.paths_df(spark, paths)``: per
-    archive, one ``PmtilesReader`` walks the directory, and each
-    entry's bytes are read and decoded once (``decode_tile``) and
-    emitted for every tile of its run, with the band sums of that
+    One ``session.map_rows`` stage over ``session.paths_df(spark,
+    paths)``: per archive, one ``PmtilesReader`` walks the directory,
+    and each entry's bytes are read and decoded once (``decode_tile``)
+    and emitted for every tile of its run, with the band sums of that
     decode. Tile bytes never shuffle.
 
     ``paths``: list of path strings, or a DataFrame with a ``path``
     column (the scale form)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import DataType
-
     from georaster_spark.cells import zxy_to_cell
-    from georaster_spark.session import paths_df
+    from georaster_spark.session import map_rows, paths_df
 
-    arrow_schema = to_arrow_schema(DataType.fromDDL(_TILE_SCHEMA))
-
-    def entry_batches(archive: str, e: Entry, arr):
+    def entry_batches(archive: str, e: Entry, arr, schema: pa.Schema):
         """One row per tile of ``e``'s run, all from its one decode
         ``arr``; the band arrays are built once and shared."""
         h, w = arr.shape[:2]
@@ -594,25 +594,22 @@ def tiles_df(spark, paths):
         sums = [int(v.sum()) for v in bands]
         offsets = pa.array([0, h * w], pa.int32())
         lists = [
-            pa.ListArray.from_arrays(offsets, v, type=arrow_schema.field(b).type)
+            pa.ListArray.from_arrays(offsets, v, type=schema.field(b).type)
             for v, b in zip(bands, "rgb")
         ]
         for tile_id in range(e.tile_id, e.tile_id + e.run_length):
             z, x, y = tileid_to_zxy(tile_id)
             row = [archive, z, x, y, zxy_to_cell(z, x, y), w, h, *sums]
             yield pa.RecordBatch.from_arrays(
-                [pa.array([v], f.type) for v, f in zip(row, arrow_schema)] + lists,
-                schema=arrow_schema,
+                [pa.array([v], f.type) for v, f in zip(row, schema)] + lists, schema=schema
             )
 
-    def kernel(batches):
-        for batch in batches:
-            for archive in batch.column("path").to_pylist():
-                with PmtilesReader(archive) as rd:
-                    for e in rd.entries():
-                        yield from entry_batches(archive, e, decode_tile(rd.tile_data(e)))
+    def batches_of(row, schema):
+        with PmtilesReader(row["path"]) as rd:
+            for e in rd.entries():
+                yield from entry_batches(row["path"], e, decode_tile(rd.tile_data(e)), schema)
 
-    return paths_df(spark, paths).mapInArrow(kernel, schema=_TILE_SCHEMA)
+    return map_rows(paths_df(spark, paths), batches_of, _TILE_SCHEMA)
 
 
 def tile_stats_df(spark, paths, anchor_px: int, anchor_py: int):

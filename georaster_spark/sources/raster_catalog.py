@@ -98,7 +98,8 @@ def entries_from_files(paths: list[str]) -> list[RasterEntry]:
 def register_files_df(spark: SparkSession, paths) -> DataFrame:
     """Distributed registration: the ``raster_meta`` table emitted by
     the executor-side header kernel — zero driver-side file opens, so
-    a million-file lake registers as one narrow mapInPandas stage.
+    a million-file lake registers as one narrow Arrow stage
+    (``session.map_rows``).
     ``paths`` may be a list or a DataFrame with a ``path`` column."""
     from georaster_spark.sources.geotiff import file_meta_df
 

@@ -34,9 +34,10 @@ Scale design (the 100-TB shape):
   before any shuffle, so page bytes never cross an Exchange (the
   same blobs-never-shuffle invariant the TIFF/PMTiles ingest plans
   are audited for).
-- Neither stage opens a file on the driver; paths travel as a tiny
-  DataFrame exactly like PMTiles ``tiles_df`` / TIFF
-  ``chunk_plan_df``.
+- Neither stage opens a file on the driver: both are the engine's
+  per-row Arrow stage (``session.map_rows``), which the PMTiles
+  ``tiles_df`` and TIFF ``chunk_plan_df`` readers use too, so paths
+  and splits travel as tiny DataFrames.
 
 Reference parity: the reference engine has no web-archive source (it
 is a raster library); this source exists for the BASELINE.json north
@@ -88,18 +89,19 @@ def _warc_record(rec_type: str, headers: dict[str, str], content: bytes) -> byte
     return ("\r\n".join(head) + "\r\n\r\n").encode("ascii") + content + b"\r\n\r\n"
 
 
-def http_response_bytes(payload: bytes, content_type: str = "text/html") -> bytes:
-    """Minimal deterministic HTTP/1.1 200 message wrapping a payload."""
+def http_response_bytes(payload: bytes) -> bytes:
+    """Minimal deterministic HTTP/1.1 200 ``text/html`` message
+    wrapping a payload."""
     head = (
         "HTTP/1.1 200 OK\r\n"
-        f"Content-Type: {content_type}\r\n"
+        "Content-Type: text/html\r\n"
         f"Content-Length: {len(payload)}\r\n"
         "\r\n"
     )
     return head.encode("ascii") + payload
 
 
-def write_warc(path: str, records, with_index: bool = True) -> str:
+def write_warc(path: str, records) -> str:
     """Write ``records`` as a per-member-gzipped WARC + CDX sidecar.
 
     ``records``: iterable of ``(rec_type, headers_dict, content_bytes)``.
@@ -108,18 +110,13 @@ def write_warc(path: str, records, with_index: bool = True) -> str:
     (offset, length) contract as Common Crawl's published CDX index,
     reduced to what the split planner needs.
     """
-    idx: list[dict] = []
     off = 0
-    with open(path, "wb") as f:
+    with open(path, "wb") as f, open(path + ".cdx.jsonl", "w") as cdx:
         for rec_type, headers, content in records:
             member = _gzip_member(_warc_record(rec_type, headers, content))
             f.write(member)
-            idx.append({"o": off, "l": len(member), "t": rec_type})
+            cdx.write(json.dumps({"o": off, "l": len(member), "t": rec_type}) + "\n")
             off += len(member)
-    if with_index:
-        with open(path + ".cdx.jsonl", "w") as f:
-            for row in idx:
-                f.write(json.dumps(row) + "\n")
     return path
 
 
@@ -247,9 +244,10 @@ def warc_splits_df(spark, paths, split_bytes: int = DEFAULT_SPLIT_BYTES):
     pack greedily into ~``split_bytes`` splits (a split always starts
     on a member boundary, so stage 2 needs exactly one ranged read
     and no resync scan). Without a sidecar the file is one split —
-    correct, just file-granular parallelism. Runs in the per-path
-    header stage (``session.map_paths``): the driver opens no files."""
-    from georaster_spark.session import map_paths
+    correct, just file-granular parallelism. Runs in the per-row
+    Arrow stage (``session.map_rows``) over the path rows: the driver
+    opens no files."""
+    from georaster_spark.session import arrow_batch, map_rows, paths_df
 
     def split_rows(p):
         cdx = p + ".cdx.jsonl"
@@ -269,66 +267,45 @@ def warc_splits_df(spark, paths, split_bytes: int = DEFAULT_SPLIT_BYTES):
             rows.append((p, start, length, count))
         return rows
 
-    return map_paths(spark, paths, split_rows, _SPLIT_SCHEMA)
+    return map_rows(
+        paths_df(spark, paths),
+        lambda row, schema: [arrow_batch(split_rows(row["path"]), schema)],
+        _SPLIT_SCHEMA,
+    )
 
 
-def warc_records_df(
-    spark,
-    paths,
-    split_bytes: int = DEFAULT_SPLIT_BYTES,
-    split_partitions: int | None = None,
-):
+def warc_records_df(spark, paths, split_bytes: int = DEFAULT_SPLIT_BYTES):
     """Stage 2: splits → one row per WARC record.
 
-    Each task preads its split once and walks the gzip members inside
-    (independently decodable by construction). Only typed columns +
-    the payload blob leave the kernel; callers filter/project before
-    any shuffle so page bytes stay in the scan stage.
+    Each split row preads its split once and walks the gzip members
+    inside (independently decodable by construction), in the per-row
+    Arrow stage (``session.map_rows``), one record batch per split.
+    Only typed columns + the payload blob leave the kernel; callers
+    filter/project before any shuffle so page bytes stay in the scan
+    stage.
 
-    The split table is repartitioned before the parse kernel — without
-    it, stage-2 task count would equal the stage-1 PATH partitioning
-    and a single 1 GB shard would parse in one task no matter how many
-    splits its index yields. This shuffles only the tiny
-    (path, offset, length) descriptors (a handful of rows per GB of
-    archive), never the page bytes."""
-    import pandas as pd  # noqa: F401 — kernel closure
+    The split table is repartitioned (over the default parallelism)
+    before the parse kernel — without it, stage-2 task count would
+    equal the stage-1 PATH partitioning and a single 1 GB shard would
+    parse in one task no matter how many splits its index yields.
+    This shuffles only the tiny (path, offset, length) descriptors (a
+    handful of rows per GB of archive), never the page bytes."""
+    from georaster_spark.session import arrow_batch, map_rows
 
-    from pyspark.sql import functions as F
+    def split_records(row, schema):
+        path, offset, length = row["path"], row["offset"], row["length"]
+        with open(path, "rb") as f:
+            f.seek(offset)
+            buf = f.read(length)
+        if len(buf) != length:
+            raise WarcError(f"{path}: truncated read at {offset}+{length}")
+        rows = []
+        for off, _mlen, rec in iter_warc_members(buf, path, offset):
+            rtype, url, ts_s, lang, status, ctype, payload = parse_warc_member(rec, path, off)
+            rows.append((path, off, rtype, url, ts_s, lang, status, ctype, payload, len(payload)))
+        return [arrow_batch(rows, schema)]
 
-    splits = warc_splits_df(spark, paths, split_bytes=split_bytes)
-    n = split_partitions or spark.sparkContext.defaultParallelism
-    splits = splits.repartition(n, F.col("path"), F.col("offset"))
-
-    def kernel(batches):
-        import pandas as pd
-
-        cols = [
-            "warc", "offset", "rec_type", "url", "ts_s", "lang",
-            "http_status", "content_type", "payload", "payload_len",
-        ]
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for row in pdf.itertuples(index=False):
-                with open(row.path, "rb") as f:
-                    f.seek(row.offset)
-                    buf = f.read(row.length)
-                if len(buf) != int(row.length):
-                    raise WarcError(
-                        f"{row.path}: truncated read at "
-                        f"{row.offset}+{row.length}"
-                    )
-                for off, _mlen, rec in iter_warc_members(
-                    buf, row.path, int(row.offset)
-                ):
-                    (rtype, url, ts_s, lang, status, ctype, payload) = (
-                        parse_warc_member(rec, row.path, off)
-                    )
-                    vals = (
-                        row.path, off, rtype, url, ts_s, lang,
-                        status, ctype, payload, len(payload),
-                    )
-                    for k, v in zip(cols, vals):
-                        out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return splits.mapInPandas(kernel, schema=_RECORD_SCHEMA)
+    splits = warc_splits_df(spark, paths, split_bytes=split_bytes).repartition(
+        spark.sparkContext.defaultParallelism, "path", "offset"
+    )
+    return map_rows(splits, split_records, _RECORD_SCHEMA)

@@ -4,8 +4,10 @@ plus a sparse strip and a GDAL_NODATA file, decoded by ONE
 ``pixels_df`` call and compared pixel by pixel with the arrays written;
 the integer files also by ONE ``decimal_pixels_df`` call, exactly.
 
-``write_tiff`` writes chunky strips only, so tiled and planar layouts
-are covered by the reference fixtures, not here."""
+``write_tiff`` writes strips only, so tiled layouts are covered by the
+reference fixtures, not here. The header stages (``chunk_plan_df``,
+``file_meta_df``) are checked here over an overview pyramid, a planar
+file and a file with no geotransform."""
 
 from __future__ import annotations
 
@@ -23,8 +25,13 @@ from georaster_spark.sources.geotiff import (
     COMPRESSION_LZW,
     COMPRESSION_NONE,
     _pixel_batch,
+    chunk_descriptors,
+    chunk_plan_df,
     decimal_pixels_df,
     decode_chunk_bytes,
+    file_meta_df,
+    file_meta_rows,
+    open_tiff,
     pixels_df,
     write_tiff,
 )
@@ -176,3 +183,48 @@ def test_big_endian_chunks_explode_exactly():
         assert got == {
             (b, 2 + y, 4 + x): Decimal(int(v)) for (y, x, b), v in np.ndenumerate(want)
         }, dtype
+
+
+def test_header_stages_equal_scalar_rows(spark, tmp_path):
+    """``chunk_plan_df`` and ``file_meta_df`` over in-repo files (an
+    overview pyramid with GDAL_NODATA, a planar u8 file and a file with
+    no geotransform) equal ``chunk_descriptors`` / ``file_meta_rows``
+    row for row, NULLs included; each is one Arrow stage over the path
+    list, with no pandas stage."""
+    rng = np.random.default_rng(11)
+    base = rng.integers(0, 60000, (9, 10), endpoint=True).astype(np.uint16)
+    planar = rng.integers(0, 255, (5, 6, 3), endpoint=True).astype(np.uint8)
+    paths = [str(tmp_path / f) for f in ("pyramid.tif", "planar.tif", "bare.tif")]
+    write_tiff(
+        paths[0], base, "u16", pixel_scale=(0.5, -0.25), origin=(7.0, 47.0), rows_per_strip=4,
+        overviews=[base[::2, ::2], base[::4, ::4]], compression=COMPRESSION_DEFLATE, nodata=0,
+    )
+    write_tiff(paths[1], planar, "u8", pixel_scale=(2.0, -2.0), origin=(-180.0, 90.0),
+               rows_per_strip=2, planar=True)
+    write_tiff(paths[2], rng.normal(0, 1, (3, 4)).astype(np.float32), "f32")
+
+    plan_df = chunk_plan_df(spark, paths)
+    meta_df = file_meta_df(spark, paths)
+    for df in (plan_df, meta_df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
+    cols = plan_df.columns
+    want = [
+        tuple(d[c] for c in cols) for p in paths for d in chunk_descriptors(open_tiff(p))
+    ]
+    assert sorted(map(tuple, plan_df.collect())) == sorted(want)
+    assert {w[cols.index("band_run")] for w in want if w[1] == "planar"} == {0, 1, 2}
+    assert {w[cols.index("nodata")] for w in want} == {"0", None}
+    want = [r for p in paths for r in file_meta_rows(p)]
+    got = meta_df.collect()
+    assert sorted(map(tuple, got), key=lambda r: (r[1], r[2])) == sorted(
+        want, key=lambda r: (r[1], r[2])
+    )
+    assert len(got) == 5
+    bare = [r for r in got if r.raster_id == "bare"]
+    assert [r.origin_x for r in bare] == [None] and [r.px_y_e9 for r in bare] == [None]
+    assert {r.planar for r in got if r.raster_id == "planar"} == {True}
+    # the planar file decodes to the array written
+    px = pixels_df(spark, [paths[1]]).collect()
+    assert len(px) == planar.size
+    assert all(planar[r.y, r.x, r.band] == r.value for r in px)

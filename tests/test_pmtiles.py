@@ -420,17 +420,24 @@ def test_xyz_lookup_over_archive_tiles(spark, fixture_path):
     """``xyz_lookup`` over ``tiles_df`` of the fixture archive at z12
     gives the reference's Chasseral golden (src/pmtiles.rs:120-133)
     through the engine, and agrees with ``get_pixel_at`` on probes
-    spread over the 512-px tiles (it takes one ``tile_size``)."""
+    spread over the 512-px tiles (it takes one ``tile_size``). A probe
+    in the 128-px tile (12, 2120, 1430) gives no row instead of failing
+    the query."""
     from georaster_spark import cells
     from georaster_spark.operators.raster import xyz_lookup
+
+    def probe(xt: int, yt: int, f: float, g: float) -> tuple[float, float]:
+        lon0, lat0, lon1, lat1 = cells.cell_bounds(cells.zxy_to_cell(12, xt, yt))
+        return lon0 + f * (lon1 - lon0), lat1 - g * (lat1 - lat0)
 
     chasseral = (7.059309, 47.133037)
     probes = [chasseral]
     for xt in range(2127, 2130):
         for yt in range(1437, 1440):
-            lon0, lat0, lon1, lat1 = cells.cell_bounds(cells.zxy_to_cell(12, xt, yt))
             for f, g in ((0.1, 0.7), (0.93, 0.31)):
-                probes.append((lon0 + f * (lon1 - lon0), lat1 - g * (lat1 - lat0)))
+                probes.append(probe(xt, yt, f, g))
+    small = len(probes)
+    probes.append(probe(2120, 1430, 0.6, 0.8))
     # probe columns x, y, z: the tile rows' own z/x/y must not clash
     pts = spark.createDataFrame(
         [(i, lon, lat, 0, 0, 0) for i, (lon, lat) in enumerate(probes)],
@@ -439,8 +446,12 @@ def test_xyz_lookup_over_archive_tiles(spark, fixture_path):
     out = xyz_lookup(pts, P.tiles_df(spark, [fixture_path]), 12, 512)
     got = {r["id"]: (r["r"], r["g"], r["b"]) for r in out.collect()}
     assert P.terrarium_height_py(*got[0]) == 1598.5294117647063
+    assert small not in got
     with P.PmtilesReader(fixture_path) as rd:
-        assert got == {i: P.get_pixel_at(rd, 12, lon, lat) for i, (lon, lat) in enumerate(probes)}
+        assert P.get_pixel_at(rd, 12, *probes[small]) is not None  # sampled at 128 px
+        assert got == {
+            i: P.get_pixel_at(rd, 12, lon, lat) for i, (lon, lat) in enumerate(probes[:small])
+        }
 
 
 def test_grey_and_grey_alpha_tiles(spark, tmp_path):

@@ -11,9 +11,12 @@ Checked invariants:
 - cell_hist: per-cell counts are one Exchange (map-side partial
   aggregation takes the hot cell; no salted second shuffle);
 - ingestion: raster decode is one Arrow kernel reading its path
-  table directly; PMTiles and WARC decode kernels sit next to the
-  kernels that plan them. Payload bytes never cross an Exchange, and
+  table directly, and the metadata side is the other; PMTiles tiles
+  are one Arrow kernel over the path list, and WARC split planning and
+  record parsing are two. Payload bytes never cross an Exchange, and
   path lists are not spread by a shuffle;
+- no audited plan has a pandas map stage (``MapInPandas``): every
+  per-row source stage is ``session.map_rows``'s Arrow kernel;
 - driver-built tables (cover and zone indexes, path lists) are
   ``LocalTableScan``s, never a pickled-RDD ``Scan ExistingRDD``;
 - vector joins (dwithin, zonal stats): broadcast or cell equi-joins,
@@ -122,13 +125,13 @@ def main() -> int:
     check(
         "raster_ingest",
         "two executor kernels and NO driver-side file opens: the "
-        "decode MapInArrow and the metadata MapInPandas (the only "
-        "LocalTableScans are the driver-built path tables)",
-        n_nodes(p, "MapInArrow") == 1
-        and n_nodes(p, "MapInPandas") == 1
+        "decode and metadata MapInArrow stages, no MapInPandas (the "
+        "only LocalTableScans are the driver-built path tables)",
+        n_nodes(p, "MapInArrow") == 2
+        and n_nodes(p, "MapInPandas") == 0
         and len(re.findall(r"^\(\d+\) \w*(?:InPandas|InArrow|EvalPython)\b", p, re.M)) == 2,
     )
-    decode = re.search(r"^\((\d+)\) MapInArrow\nInput \[\d+\]: (\[.*\])$", p, re.M)
+    decode = re.search(r"^\((\d+)\) MapInArrow\nInput \[\d+\]: (\[path#\d+, k#\d+, n#\d+\])$", p, re.M)
     scan = decode and re.search(
         rf"^\({int(decode.group(1)) - 1}\) LocalTableScan\nOutput \[\d+\]: (\[.*\])$", p, re.M
     )
@@ -168,14 +171,11 @@ def main() -> int:
     # member parsing are both Arrow kernels; the ONLY shuffles carry
     # split/path descriptors (path, offset, length), never page bytes
     p = plans["warc_ingest"] = explain_str(Q.q_warc_ingest(spark, SF))
-    warc_kernels = sorted(
-        int(m.group(1)) for m in re.finditer(r"^\((\d+)\) MapInPandas", p, re.M)
-    )
     check(
         "warc_ingest",
         "two Arrow kernels (CDX split planner + gzip-member parse), "
         "no driver-side file opens",
-        len(warc_kernels) == 2,
+        n_nodes(p, "MapInArrow") == 2,
     )
     warc_exchanges = [
         para
@@ -334,6 +334,16 @@ def main() -> int:
         "ice_prune",
         "residual o_date filter pushed to the parquet scan",
         any("o_date" in l and "[]" not in l for l in p.splitlines() if "PushedFilters" in l),
+    )
+
+    # one per-row stage form: session.map_rows's Arrow kernel, never a
+    # pandas map (group kernels such as the halo stencils stay pandas)
+    pandas_maps = [name for name, plan in plans.items() if n_nodes(plan, "MapInPandas")]
+    check(
+        "every audited plan",
+        f"no MapInPandas in any of the {len(plans)} plans"
+        + (f" (found in {', '.join(pandas_maps)})" if pandas_maps else ""),
+        not pandas_maps,
     )
 
     out_dir = os.path.join(REPO, ".plan_audit")
