@@ -194,21 +194,14 @@ def array_to_tiles_df(
     h, w, nb = arr.shape
     assert (h, w, nb) == (geom.height, geom.width, geom.bands)
     rows = []
-    band_runs = range(nb) if geom.planar else [0]
-    for run in band_runs:
+    spp = geom.spp()
+    for run in range(nb // spp):  # a planar image has one band run per band
         for tr in range(geom.tiles_down):
             for tc in range(geom.tiles_across):
                 y0, x0 = tr * geom.tile_h, tc * geom.tile_w
-                y1, x1 = min(y0 + geom.tile_h, h), min(x0 + geom.tile_w, w)
-                pr = geom.padding_right if tc == geom.tiles_across - 1 else 0
-                pd = geom.padding_down if tr == geom.tiles_down - 1 else 0
-                if geom.planar:
-                    block = arr[y0:y1, x0:x1, run]
-                    data = block.astype(np.float64).ravel().tolist()
-                else:
-                    block = arr[y0:y1, x0:x1, :]
-                    data = block.astype(np.float64).ravel().tolist()
-                rows.append((raster_id, 0, run, tc, tr, pr, pd, data))
+                pr, pd = geom.get_padding(tr * geom.tiles_across + tc)
+                block = arr[y0 : y0 + geom.tile_h - pd, x0 : x0 + geom.tile_w - pr, run : run + spp]
+                rows.append((raster_id, 0, run, tc, tr, pr, pd, block.astype(np.float64).ravel().tolist()))
     return local_df(spark, rows, TILES_SCHEMA)
 
 
@@ -436,7 +429,7 @@ PMTILES_TILE_SIZE = 512  # reference tile width golden (src/pmtiles.rs:96-103)
 PMTILES_FORMULA_RANGE = (2127, 2129, 1437, 1439)  # inclusive x0,x1,y0,y1 at z12
 PMTILES_ANCHOR = (2128, 1438, 163, 230, 134, 62, 135)  # xt,yt,px,py,r,g,b
 PMTILES_Z0_SIZE = 64
-PMTILES_CONST_TILES = [(2120, 1430), (2121, 1430)]  # identical bytes (dedup)
+PMTILES_CONST_TILES = [(2120, 1430), (2121, 1430)]  # identical bytes, consecutive ids: one run
 PMTILES_CONST_SIZE = 128
 PMTILES_CONST_RGB = (0, 80, 120)
 
@@ -484,7 +477,8 @@ def fixture_pmtiles_path() -> str:
 
     d = os.path.join(tempfile.gettempdir(), "georaster_synth_ingest")
     os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, "chnw_synth.pmtiles")
+    # a new archive layout takes a new name, so no cached older file is reused
+    p = os.path.join(d, "chnw_synth_runs.pmtiles")
     if not os.path.exists(p):
         tmp = f"{p}.tmp.{os.getpid()}"
         write_pmtiles(tmp, fixture_pmtiles_tiles())
@@ -590,7 +584,8 @@ def fixture_webp_pmtiles_path() -> str:
 
     d = os.path.join(tempfile.gettempdir(), "georaster_synth_ingest")
     os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, "chnw_synth_webp.pmtiles")
+    # a new archive layout takes a new name, so no cached older file is reused
+    p = os.path.join(d, "chnw_synth_webp_runs.pmtiles")
     if not os.path.exists(p):
         tmp = f"{p}.tmp.{os.getpid()}"
         write_pmtiles(tmp, fixture_webp_pmtiles_tiles())

@@ -1,6 +1,16 @@
 """Raster grid geometry — geotransform + tile ("chunk") math.
 
-Mirrors the semantics (NOT the code) of the reference's
+``RasterGeometry`` is the engine's one home of the reference's
+``TileAttributes`` (``src/geotiff.rs:433-517``): the chunk grid,
+edge padding, samples per pixel, the 2^k overview geometry and the
+geotransform defaults live here and nowhere else. Its readers: the
+TIFF source (``geotiff.geometry_of`` builds it from a header, and
+``chunk_descriptors`` lays each file's chunks on its grid), the raster
+catalog (``raster_catalog.meta_row`` and ``register_files_df``), the
+raster operators (``tiles_to_pixels``, ``pixels_to_tiles``,
+``overview_cascade``) and the synthetic fixtures.
+
+It mirrors the semantics (NOT the code) of the reference's
 ``GeoTiffReader`` geotransform accessors and ``TileAttributes``:
 
 - world↔pixel affine: ``px = round((x - origin_x)/px_sz_x)``,
@@ -24,7 +34,7 @@ whole-stage-codegen'd — the scale path; no UDFs anywhere here).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -34,12 +44,17 @@ def _ceil_div(a: int, b: int) -> int:
     return -(-a // b)
 
 
+def _padding(dim: int, tile: int) -> int:
+    return (tile - dim % tile) % tile
+
+
 @dataclass(frozen=True)
 class RasterGeometry:
     """Static geometry of one raster image (one IFD / overview level).
 
     ``px_sz_y`` is normally negative (north-up rasters, reference
-    ``src/geotiff.rs:109``).
+    ``src/geotiff.rs:109``). The field defaults are the geometry of a
+    raster without a geotransform (origin 0, pixel size 1).
     """
 
     width: int
@@ -63,12 +78,17 @@ class RasterGeometry:
         return _ceil_div(self.height, self.tile_h)
 
     @property
+    def tiles_per_band(self) -> int:
+        """Chunks in one band run (a planar image stores one run per band)."""
+        return self.tiles_across * self.tiles_down
+
+    @property
     def padding_right(self) -> int:
-        return (self.tile_w - self.width % self.tile_w) % self.tile_w
+        return _padding(self.width, self.tile_w)
 
     @property
     def padding_down(self) -> int:
-        return (self.tile_h - self.height % self.tile_h) % self.tile_h
+        return _padding(self.height, self.tile_h)
 
     def spp(self) -> int:
         """Samples per pixel stored per chunk: planar ⇒ 1, else bands.
@@ -76,6 +96,17 @@ class RasterGeometry:
         Reference ``src/geotiff.rs:138-150`` (Gray=1, RGB=3, RGBA=4).
         """
         return 1 if self.planar else self.bands
+
+    def overview(self, level: int) -> RasterGeometry:
+        """The 2^level overview (COG pyramid, reference
+        ``data/Makefile:39``): width and height ceil-divided by 2^level,
+        pixel size times 2^level; origin, chunk size and bands kept."""
+        f = 1 << level
+        return replace(
+            self,
+            width=_ceil_div(self.width, f), height=_ceil_div(self.height, f),
+            px_sz_x=self.px_sz_x * f, px_sz_y=self.px_sz_y * f,
+        )
 
     # ---- scalar (driver-side) mirrors -------------------------------
     def get_padding(self, tile_index: int) -> tuple[int, int]:
@@ -93,7 +124,7 @@ class RasterGeometry:
         return band_offset + (y // self.tile_h) * self.tiles_across + (x // self.tile_w)
 
     def tile_offset(self, tile_index: int, x: int, y: int) -> int:
-        pr, _ = self.get_padding(tile_index % (self.tiles_across * self.tiles_down))
+        pr, _ = self.get_padding(tile_index % self.tiles_per_band)
         w = self.tile_w - pr
         return ((y % self.tile_h) * w + (x % self.tile_w)) * self.spp()
 

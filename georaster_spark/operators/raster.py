@@ -427,17 +427,10 @@ def overview_cascade(
     """Full pyramid: [(image_idx, geometry, pixels_df), ...] with
     image_idx 0 = full resolution."""
     out = [(0, geom, pixels)]
-    cur, g = pixels, geom
+    cur = pixels
     for i in range(1, levels + 1):
         cur = build_overview(cur, 2, agg, image_idx=i)
-        g = RasterGeometry(
-            width=-(-g.width // 2), height=-(-g.height // 2),
-            tile_w=g.tile_w, tile_h=g.tile_h,
-            origin_x=g.origin_x, origin_y=g.origin_y,
-            px_sz_x=g.px_sz_x * 2, px_sz_y=g.px_sz_y * 2,
-            bands=g.bands, planar=g.planar,
-        )
-        out.append((i, g, cur))
+        out.append((i, geom.overview(i), cur))
     return out
 
 
@@ -767,7 +760,7 @@ def d8_accumulation(flow: DataFrame) -> DataFrame:
     in elevation (d8_flow_halo emits an edge only for a positive
     drop), so the flow graph is a DAG and the frontier of live paths
     STRICTLY SHRINKS every round — iterate `frontier ⋈ edges` until
-    it empties (the ``connected_components`` driver-loop pattern).
+    it empties (the connected-components driver-loop pattern).
     Each round is eagerly ``localCheckpoint``-ed: lineage stays flat
     across rounds, the emptiness probe reads materialized blocks, and
     ContextCleaner reclaims every round's blocks when the result is

@@ -688,7 +688,7 @@ def q_flow_accum_fix(spark, sf_dir):
     degree 1 + strictly-descending edges make the interior flow graph
     a DAG, so the live-path frontier strictly shrinks; the driver
     loop iterates `frontier ⋈ edges` with an eager localCheckpoint
-    per round (the connected_components pattern) until the frontier
+    per round (a connected-components driver loop) until the frontier
     empties — 7 rounds on this crop (frontier 37k → 26k → … → 29 →
     0). The oracle is the same closure via DuckDB WITH RECURSIVE.
     Semantics anchor: the reference's DTM workload grid
@@ -1534,12 +1534,10 @@ def q_warc_ingest(spark, sf_dir):
     re-derives every field from the closed-form generator without
     ever touching the archives."""
     from georaster_spark.datagen import fixture_warc_paths
-    from georaster_spark.sources.warc import warc_records_df
+    from georaster_spark.sources.warc import body_text, warc_records_df
 
     recs = warc_records_df(spark, fixture_warc_paths(), split_bytes=16384)
-    text = F.regexp_extract(
-        F.col("payload").cast("string"), "<body>(.*)</body>", 1
-    )
+    text = body_text(F.col("payload"))
     return recs.where(F.col("rec_type") == "response").select(
         "url",
         F.col("ts_s").cast("long").alias("ts_s"),

@@ -52,6 +52,8 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
+from georaster_spark.grid import RasterGeometry
+
 # ---------------------------------------------------------------- tags
 
 TAG_WIDTH = 256
@@ -258,7 +260,10 @@ def _tag_values(f, bo: str, typ: int, cnt: int, inline: bytes, big: bool = False
 @dataclass
 class TiffImage:
     """One IFD — the reference's ``ImageInfo`` (src/geotiff.rs:30-40)
-    plus the chunk layout the decode plan needs."""
+    plus the storage facts of the TIFF format: tiles or strips, the
+    raw tile/strip tags and the chunk byte ranges. Its chunk grid,
+    padding and samples per chunk are the ``RasterGeometry`` that
+    ``geometry_of`` builds from it."""
 
     width: int
     height: int
@@ -280,30 +285,6 @@ class TiffImage:
     def is_tiled(self) -> bool:
         return self.tile_w is not None
 
-    @property
-    def chunk_w(self) -> int:
-        return self.tile_w if self.is_tiled else self.width
-
-    @property
-    def chunk_h(self) -> int:
-        return self.tile_h if self.is_tiled else min(self.rows_per_strip or self.height, self.height)
-
-    @property
-    def chunks_across(self) -> int:
-        return -(-self.width // self.chunk_w)
-
-    @property
-    def chunks_down(self) -> int:
-        return -(-self.height // self.chunk_h)
-
-    @property
-    def chunks_per_band(self) -> int:
-        return self.chunks_across * self.chunks_down
-
-    @property
-    def n_bands(self) -> int:
-        return self.spp
-
     def dtype(self, band: int = 0) -> str:
         """Engine dtype string (matches functions/decode.py families);
         reference RasterValue variants src/lib.rs:33-51."""
@@ -315,10 +296,6 @@ class TiffImage:
         ):
             raise ValueError(f"unsupported sample: format={fmt} bits={bits}")
         return f"{kind}{bits}"
-
-    def np_dtype(self, bo: str, band: int = 0) -> np.dtype:
-        d = self.dtype(band)
-        return np.dtype(("<" if bo == "<" else ">") + {"u": "u", "i": "i", "f": "f"}[d[0]] + str(int(d[1:]) // 8))
 
 
 @dataclass
@@ -520,49 +497,51 @@ def _check_supported(img: TiffImage, path: str) -> None:
 
 
 def chunk_descriptors(tf: TiffFile, image_idx: int = 0) -> list[dict]:
-    """One dict per strip/tile chunk: where it sits in the grid, which
-    band run it belongs to (planar: all chunks of band 0, then band 1,
-    … — TIFF6 planar layout), and its byte range."""
+    """One dict per strip/tile chunk: where it sits on the image's
+    ``geometry_of`` grid, which band run it belongs to (planar: all
+    chunks of band 0, then band 1, … — TIFF6 planar layout), and its
+    byte range. Tiles are stored padded; a short last strip is not."""
     img = tf.images[image_idx]
     _check_supported(img, tf.path)
-    spb = img.chunks_per_band
-    n_runs = img.spp if img.planar else 1
+    g = geometry_of(tf, image_idx)
+    spb = g.tiles_per_band
+    spp = g.spp()
+    n_runs = g.bands // spp  # one run per band when planar, else one
+    raster_id = raster_id_of(tf.path)
+    dtype = img.dtype()
     out = []
     for k, (off, cnt) in enumerate(zip(img.offsets, img.byte_counts)):
         # run is derived unconditionally so that a CHUNKY image with
         # more offset entries than its chunk grid raises too (k//spb
         # exceeds the single run) instead of silently wrapping onto
         # existing grid positions and double-counting pixels
-        run = k // spb
+        run, pos = divmod(k, spb)
         if run >= n_runs:  # trailing entries beyond expected grid
             raise ValueError(f"{tf.path}: chunk {k} beyond {n_runs} band runs x {spb}")
-        g = k % spb
-        row, col = divmod(g, img.chunks_across)
-        x0 = col * img.chunk_w
-        y0 = row * img.chunk_h
+        row, col = divmod(pos, g.tiles_across)
+        pad_right, pad_down = g.get_padding(pos)
+        h = g.tile_h - pad_down
         out.append(
             {
                 "path": tf.path,
-                "raster_id": os.path.splitext(os.path.basename(tf.path))[0],
+                "raster_id": raster_id,
                 "image_idx": image_idx,
                 "chunk": k,
                 "band_run": run,
-                "x0": x0,
-                "y0": y0,
-                # stored chunk extent (tiles stay padded on disk)
-                "stored_w": img.chunk_w,
-                "stored_h": (
-                    img.chunk_h if img.is_tiled else min(img.chunk_h, img.height - y0)
-                ),
+                "x0": col * g.tile_w,
+                "y0": row * g.tile_h,
+                # stored chunk extent
+                "stored_w": g.tile_w,
+                "stored_h": g.tile_h if img.is_tiled else h,
                 # valid (unpadded) extent
-                "w": min(img.chunk_w, img.width - x0),
-                "h": min(img.chunk_h, img.height - y0),
+                "w": g.tile_w - pad_right,
+                "h": h,
                 "offset": off,
                 "nbytes": cnt,
                 "compression": img.compression,
                 "predictor": img.predictor,
-                "dtype": img.dtype(),
-                "spp": 1 if img.planar else img.spp,
+                "dtype": dtype,
+                "spp": spp,
                 "byte_order": tf.byte_order,
                 "nodata": tf.nodata,
             }
@@ -675,16 +654,10 @@ def read_pixel(tf: TiffFile, x: int, y: int, image_idx: int = 0):
     img = tf.images[image_idx]
     if not (0 <= x < img.width and 0 <= y < img.height):
         return None
-    descs = chunk_descriptors(tf, image_idx)
     vals = []
-    for run in range(img.spp if img.planar else 1):
-        spb = img.chunks_per_band
-        col = x // img.chunk_w
-        row = y // img.chunk_h
-        d = descs[run * spb + row * img.chunks_across + col]
-        arr = read_chunk(d)
-        px = arr[y - d["y0"], x - d["x0"], :]
-        vals.extend(px.tolist())
+    for d in chunk_descriptors(tf, image_idx):  # (x, y)'s chunk in every band run
+        if d["x0"] <= x < d["x0"] + d["w"] and d["y0"] <= y < d["y0"] + d["h"]:
+            vals.extend(read_chunk(d)[y - d["y0"], x - d["x0"], :].tolist())
     if len(vals) == 1:
         return vals[0]
     return tuple(vals)
@@ -716,7 +689,7 @@ def chunk_plan_df(spark, paths):
         descs = chunk_descriptors(open_tiff(row["path"]))
         return [arrow_batch([tuple(d[c] for c in schema.names) for d in descs], schema)]
 
-    _assert_unique_basenames(paths)
+    _assert_unique_raster_ids(paths)
     return map_rows(paths_df(spark, paths), batches_of, CHUNK_SCHEMA)
 
 
@@ -731,12 +704,13 @@ FILE_META_SCHEMA = (
 
 
 def file_meta_rows(path: str) -> list[tuple]:
-    """One metadata row per IFD of one file — the shared row builder
-    behind both the distributed registration kernel (``file_meta_df``)
-    and the driver-side convenience (``raster_catalog.
-    entries_from_files``), so the two can never diverge."""
+    """One metadata row per IFD of one file — the row builder of the
+    distributed registration kernel (``file_meta_df``). Its grid
+    columns are ``geometry_of``'s, the geometry that
+    ``raster_catalog.entries_from_files`` registers too; the geotransform
+    columns stay NULL where the file has none."""
     tf = open_tiff(path)
-    rid = path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
+    rid = raster_id_of(path)
     o, ps = tf.origin(), tf.pixel_size()
     rows = []
     for idx, img in enumerate(tf.images):
@@ -746,11 +720,8 @@ def file_meta_rows(path: str) -> list[tuple]:
                 rid, path, idx, g.width, g.height, g.tile_w, g.tile_h,
                 (o[0] if o else None), (o[1] if o else None),
                 (ps[0] if ps else None), (ps[1] if ps else None),
-                img.dtype(), g.bands, g.planar,
-                (1 if g.planar else g.bands),
-                g.tiles_across, g.tiles_down,
-                (g.tile_w - g.width % g.tile_w) % g.tile_w,
-                (g.tile_h - g.height % g.tile_h) % g.tile_h,
+                img.dtype(), g.bands, g.planar, g.spp(),
+                g.tiles_across, g.tiles_down, g.padding_right, g.padding_down,
                 tf.geo_params,
                 # e6/e9 fixed-point ints rounded HERE (Python round)
                 # so they stay bit-identical to the pinned goldens
@@ -772,7 +743,7 @@ def file_meta_df(spark, paths):
     DataFrame) as ``chunk_plan_df``."""
     from georaster_spark.session import arrow_batch, map_rows, paths_df
 
-    _assert_unique_basenames(paths)
+    _assert_unique_raster_ids(paths)
     return map_rows(
         paths_df(spark, paths),
         lambda row, schema: [arrow_batch(file_meta_rows(row["path"]), schema)],
@@ -780,22 +751,27 @@ def file_meta_df(spark, paths):
     )
 
 
-def _assert_unique_basenames(paths) -> None:
-    """raster_id is the file basename (golden-pinned), so two paths
-    sharing a basename would silently merge in every raster_id
-    groupBy — refuse early (ADVICE r2). A paths DataFrame is not
-    checked: it never reaches the driver."""
+def raster_id_of(path: str) -> str:
+    """A file's raster_id: its basename without the extension
+    (golden-pinned)."""
+    return os.path.splitext(os.path.basename(path))[0]
+
+
+def _assert_unique_raster_ids(paths) -> None:
+    """Two paths with one ``raster_id_of`` would silently merge in
+    every raster_id groupBy — refuse early (ADVICE r2). A paths
+    DataFrame is not checked: it never reaches the driver."""
     if not isinstance(paths, (list, tuple)):
         return
     names: dict[str, str] = {}
     for p in paths:
-        b = p.rsplit("/", 1)[-1]
-        if b in names and names[b] != p:
+        rid = raster_id_of(p)
+        if rid in names and names[rid] != p:
             raise ValueError(
-                f"duplicate raster basename {b!r}: {names[b]} vs {p} — "
+                f"duplicate raster basename {rid!r}: {names[rid]} vs {p} — "
                 "raster_id would collide; rename or ingest separately"
             )
-        names[b] = p
+        names[rid] = p
 
 
 PIXELS_SCHEMA = (
@@ -855,7 +831,7 @@ def _pixels_stage(spark, paths, image_idx: int, n: int, schema: str, chunk_array
                 d["x0"], d["y0"], arrow_schema,
             )
 
-    _assert_unique_basenames(paths)
+    _assert_unique_raster_ids(paths)
     return map_rows(paths_df(spark, paths, n), batches_of, schema)
 
 
@@ -1111,23 +1087,25 @@ def write_tiff(
             f.write(b)
 
 
-def geometry_of(tf: TiffFile, image_idx: int = 0):
-    """RasterGeometry from real header bytes — feeds raster_catalog
-    (replacing spec-synthesized entries for ingested files)."""
-    from georaster_spark.grid import RasterGeometry
-
+def geometry_of(tf: TiffFile, image_idx: int = 0) -> RasterGeometry:
+    """The one header -> ``RasterGeometry`` converter, behind the chunk
+    plan, the decode, ``file_meta_rows`` and the raster catalog. A tile
+    is a chunk; a strip is a chunk as wide as the image and
+    ``RowsPerStrip`` (at most the height) tall. Without a geotransform
+    the origin and pixel size keep ``RasterGeometry``'s defaults."""
     img = tf.images[image_idx]
-    o = tf.origin() or [0.0, 0.0]
-    ps = tf.pixel_size() or [1.0, 1.0]
+    o, ps = tf.origin(), tf.pixel_size()
+    geo = {}
+    if o:
+        geo.update(origin_x=o[0], origin_y=o[1])
+    if ps:
+        geo.update(px_sz_x=ps[0], px_sz_y=ps[1])
     return RasterGeometry(
         width=img.width,
         height=img.height,
-        tile_w=img.chunk_w,
-        tile_h=img.chunk_h,
-        origin_x=o[0],
-        origin_y=o[1],
-        px_sz_x=ps[0],
-        px_sz_y=ps[1],
+        tile_w=img.tile_w if img.is_tiled else img.width,
+        tile_h=img.tile_h if img.is_tiled else min(img.rows_per_strip or img.height, img.height),
         bands=img.spp,
         planar=img.planar,
+        **geo,
     )

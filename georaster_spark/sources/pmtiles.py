@@ -305,9 +305,12 @@ def write_pmtiles(
     max_root_entries: int = 256,
 ) -> None:
     """Write a clustered v3 archive. Identical tile bytes are stored
-    once (``n_tile_contents`` < ``n_tile_entries``); entries past
-    ``max_root_entries`` spill into leaf directories so the reader's
-    two-level path gets exercised by fixtures."""
+    once (``n_tile_contents`` < ``n_tile_entries``), and consecutive
+    tile IDs with identical bytes share one entry whose ``run_length``
+    counts them (the spec's run-length form, so ``n_tile_entries`` <
+    ``n_addressed_tiles``); entries past ``max_root_entries`` spill into
+    leaf directories so the reader's two-level path gets exercised by
+    fixtures."""
     if not tiles:
         raise PmtilesError("refusing to write an empty archive")
     by_id = sorted((zxy_to_tileid(z, x, y), b) for (z, x, y), b in tiles.items())
@@ -323,7 +326,11 @@ def write_pmtiles(
             off, ln = len(data), len(comp)
             data.extend(comp)
             seen[comp] = (off, ln)
-        entries.append(Entry(tid, off, ln, 1))
+        last = entries[-1] if entries else None
+        if last and last.tile_id + last.run_length == tid and (last.offset, last.length) == (off, ln):
+            entries[-1] = Entry(last.tile_id, off, ln, last.run_length + 1)
+        else:
+            entries.append(Entry(tid, off, ln, 1))
 
     if len(entries) <= max_root_entries:
         root = _compress(serialize_directory(entries), internal_compression)
@@ -353,7 +360,7 @@ def write_pmtiles(
         metadata_offset=metadata_offset, metadata_length=len(meta),
         leaf_offset=leaf_offset, leaf_length=len(leaves),
         data_offset=data_offset, data_length=len(data),
-        n_addressed_tiles=len(entries),
+        n_addressed_tiles=len(by_id),
         n_tile_entries=len(entries),
         n_tile_contents=len(seen),
         clustered=True,

@@ -8,6 +8,12 @@ COG overviews included — ``seek_to_image`` ≙ ``image_idx`` filter).
 Schema is inferred at registration then fixed, mirroring the
 reference's header-decode-at-open model (``src/geotiff.rs:255-289``).
 
+Every entry's geometry is a ``grid.RasterGeometry``: ``geotiff.
+geometry_of`` for a file's image, the overview geometry for a pyramid
+level, a fixture's own for the synthetic rasters. A ``raster_meta`` row
+takes its chunk grid, padding and samples per pixel from it, and a file
+without a geotransform takes its defaults.
+
 At scale ``raster_meta`` is a tiny broadcast-able dimension; every
 pixel/tile query plans against it driver-side (overview routing,
 tile enumeration) without touching the big tables.
@@ -15,12 +21,13 @@ tile enumeration) without touching the big tables.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, fields
 
 from pyspark.sql import DataFrame, SparkSession
 
 from georaster_spark.grid import RasterGeometry
 from georaster_spark.session import local_df
+from georaster_spark.sources.geotiff import file_meta_df, geometry_of, open_tiff, raster_id_of
 
 META_SCHEMA = (
     "raster_id string, image_idx int, width int, height int, "
@@ -38,47 +45,20 @@ class RasterEntry:
     geom: RasterGeometry
     dtype: str
 
-    @property
-    def spp(self) -> int:
-        # samples-per-pixel rule (reference src/geotiff.rs:138-150):
-        # planar ⇒ 1, else band count
-        return 1 if self.geom.planar else self.geom.bands
-
 
 def meta_row(e: RasterEntry) -> tuple:
     g = e.geom
     return (
         e.raster_id, e.image_idx, g.width, g.height, g.tile_w, g.tile_h,
         float(g.origin_x), float(g.origin_y), float(g.px_sz_x), float(g.px_sz_y),
-        e.dtype, g.bands, g.planar, e.spp, g.tiles_across, g.tiles_down,
-        (g.tile_w - g.width % g.tile_w) % g.tile_w,
-        (g.tile_h - g.height % g.tile_h) % g.tile_h,
+        e.dtype, g.bands, g.planar, g.spp(), g.tiles_across, g.tiles_down,
+        g.padding_right, g.padding_down,
     )
 
 
 def raster_meta_df(spark: SparkSession, entries: list[RasterEntry]) -> DataFrame:
     """The ``raster_meta`` catalog table (R2 inspect surface)."""
     return local_df(spark, [meta_row(e) for e in entries], META_SCHEMA)
-
-
-def _entry_from_meta_row(row: tuple) -> RasterEntry:
-    """RasterEntry from a ``FILE_META_SCHEMA`` tuple (shared row
-    builder — the same geometry defaults as ``geometry_of``)."""
-    (rid, _path, idx, width, height, tile_w, tile_h, ox, oy, psx, psy,
-     dtype, bands, planar, *_rest) = row
-    return RasterEntry(
-        rid,
-        idx,
-        RasterGeometry(
-            width=width, height=height, tile_w=tile_w, tile_h=tile_h,
-            origin_x=(0.0 if ox is None else ox),
-            origin_y=(0.0 if oy is None else oy),
-            px_sz_x=(1.0 if psx is None else psx),
-            px_sz_y=(1.0 if psy is None else psy),
-            bands=bands, planar=planar,
-        ),
-        dtype,
-    )
 
 
 def entries_from_files(paths: list[str]) -> list[RasterEntry]:
@@ -88,30 +68,34 @@ def entries_from_files(paths: list[str]) -> list[RasterEntry]:
     (``src/geotiff.rs:44-91``) with bytes, not specs.
 
     Driver-side convenience for a handful of files; the scale path is
-    ``register_files_df`` (executor-side header kernel). Both route
-    through ``geotiff.file_meta_rows`` so they can never diverge."""
-    from georaster_spark.sources.geotiff import file_meta_rows
-
-    return [_entry_from_meta_row(r) for p in paths for r in file_meta_rows(p)]
+    ``register_files_df`` (executor-side header kernel). Both take each
+    image's geometry from ``geotiff.geometry_of`` and its raster_id from
+    ``geotiff.raster_id_of``, so they can never diverge."""
+    out = []
+    for p in paths:
+        tf = open_tiff(p)
+        out += [
+            RasterEntry(raster_id_of(p), idx, geometry_of(tf, idx), img.dtype())
+            for idx, img in enumerate(tf.images)
+        ]
+    return out
 
 
 def register_files_df(spark: SparkSession, paths) -> DataFrame:
     """Distributed registration: the ``raster_meta`` table emitted by
     the executor-side header kernel — zero driver-side file opens, so
     a million-file lake registers as one narrow Arrow stage
-    (``session.map_rows``).
+    (``session.map_rows``). A file without a geotransform gets
+    ``RasterGeometry``'s defaults in place of ``file_meta_df``'s NULLs.
     ``paths`` may be a list or a DataFrame with a ``path`` column."""
-    from georaster_spark.sources.geotiff import file_meta_df
-
-    defaults = {  # geometry defaults of geometry_of / _entry_from_meta_row
-        "origin_x": "coalesce(origin_x, 0.0d) AS origin_x",
-        "origin_y": "coalesce(origin_y, 0.0d) AS origin_y",
-        "px_sz_x": "coalesce(px_sz_x, 1.0d) AS px_sz_x",
-        "px_sz_y": "coalesce(px_sz_y, 1.0d) AS px_sz_y",
+    defaults = {
+        f.name: f.default
+        for f in fields(RasterGeometry)
+        if f.name in ("origin_x", "origin_y", "px_sz_x", "px_sz_y")
     }
     cols = [c.split()[0] for c in META_SCHEMA.split(", ")]
     return file_meta_df(spark, paths).selectExpr(
-        *[defaults.get(c, c) for c in cols]
+        *[f"coalesce({c}, {defaults[c]!r}d) AS {c}" if c in defaults else c for c in cols]
     )
 
 
@@ -127,25 +111,8 @@ def fixture_entries() -> list[RasterEntry]:
         fixture_world400,
     )
 
-    out = [RasterEntry("dtm5000", 0, DTM_GEOM, "u16")]
     # overview pyramid levels (2x cascade, reference data/Makefile:39)
-    g = DTM_GEOM
-    for idx in range(1, 5):
-        f = 1 << idx
-        out.append(
-            RasterEntry(
-                "dtm5000",
-                idx,
-                RasterGeometry(
-                    width=-(-g.width // f), height=-(-g.height // f),
-                    tile_w=g.tile_w, tile_h=g.tile_h,
-                    origin_x=g.origin_x, origin_y=g.origin_y,
-                    px_sz_x=g.px_sz_x * f, px_sz_y=g.px_sz_y * f,
-                    bands=g.bands, planar=g.planar,
-                ),
-                "u16",
-            )
-        )
+    out = [RasterEntry("dtm5000", idx, DTM_GEOM.overview(idx), "u16") for idx in range(5)]
     for name, fx, dtype in [
         ("world400", fixture_world400, "rgb8"),
         ("strips1x9", fixture_strips1x9, "u8"),

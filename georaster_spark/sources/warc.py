@@ -61,6 +61,7 @@ __all__ = [
     "warc_records_df",
     "parse_warc_member",
     "iter_warc_members",
+    "body_text",
 ]
 
 
@@ -309,3 +310,14 @@ def warc_records_df(spark, paths, split_bytes: int = DEFAULT_SPLIT_BYTES):
         spark.sparkContext.defaultParallelism, "path", "offset"
     )
     return map_rows(splits, split_records, _RECORD_SCHEMA)
+
+
+def body_text(payload):
+    """The page text of an HTML payload Column (binary or string): what
+    lies between ``<body>`` and the last ``</body>``, across line
+    breaks and inline tags (a codegen'd regexp, no Python in the row
+    path); ``""`` when the page has no body. The crawl ingest job and
+    the ``warc_ingest`` catalog entry both extract with it."""
+    from pyspark.sql import functions as F
+
+    return F.regexp_extract(payload.cast("string"), "(?s)<body>(.*)</body>", 1)

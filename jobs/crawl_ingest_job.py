@@ -18,8 +18,9 @@ without re-reading finished shards:
 - re-running with the same ``--output`` anti-joins committed
   partitions away first (no-op resume).
 
-Text extraction here is the fixture-corpus rule (``<body>…</body>``
-payload slice, codegen regexp — no Python in the row path); a real
+Text extraction here is ``warc.body_text`` (the ``<body>…</body>``
+payload slice across lines, codegen regexp — no Python in the row
+path), the rule the ``warc_ingest`` catalog entry uses too; a real
 deployment swaps in its extractor at the marked line. The downstream
 stages (geocode → cell-encode → PIP join) are ``flagship_job.py``.
 
@@ -52,12 +53,12 @@ def pages_from_warc(spark, paths, split_bytes: int, parts: int):
     """WARC response records → input_hint rows + the checkpoint key."""
     from pyspark.sql import functions as F
 
-    from georaster_spark.sources.warc import warc_records_df
+    from georaster_spark.sources.warc import body_text, warc_records_df
 
     recs = warc_records_df(spark, paths, split_bytes=split_bytes)
     html = F.col("payload")
-    # fixture-corpus extractor; a real deployment replaces this line
-    text = F.regexp_extract(html.cast("string"), "<body>(.*)</body>", 1)
+    # the body-text extractor; a real deployment replaces this line
+    text = body_text(html)
     return recs.where(F.col("rec_type") == "response").select(
         "url",
         F.timestamp_seconds(F.col("ts_s")).alias("warc_ts"),

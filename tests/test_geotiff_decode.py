@@ -4,10 +4,12 @@ plus a sparse strip and a GDAL_NODATA file, decoded by ONE
 ``pixels_df`` call and compared pixel by pixel with the arrays written;
 the integer files also by ONE ``decimal_pixels_df`` call, exactly.
 
-``write_tiff`` writes strips only, so tiled layouts are covered by the
-reference fixtures, not here. The header stages (``chunk_plan_df``,
-``file_meta_df``) are checked here over an overview pyramid, a planar
-file and a file with no geotransform."""
+``write_tiff`` writes strips only, so tiled files are decoded only by
+the reference fixtures' tests; ``chunk_descriptors``' grid over tiled
+and stripped images is pinned here without Spark, on headers built in
+memory. The header stages (``chunk_plan_df``, ``file_meta_df``,
+``register_files_df``) are checked here over an overview pyramid, a
+planar file and a file with no geotransform."""
 
 from __future__ import annotations
 
@@ -24,6 +26,8 @@ from georaster_spark.sources.geotiff import (
     COMPRESSION_DEFLATE,
     COMPRESSION_LZW,
     COMPRESSION_NONE,
+    TiffFile,
+    TiffImage,
     _pixel_batch,
     chunk_descriptors,
     chunk_plan_df,
@@ -34,6 +38,11 @@ from georaster_spark.sources.geotiff import (
     open_tiff,
     pixels_df,
     write_tiff,
+)
+from georaster_spark.sources.raster_catalog import (
+    entries_from_files,
+    raster_meta_df,
+    register_files_df,
 )
 
 DTYPES = ["u8", "u16", "u32", "u64", "i8", "i16", "i32", "i64", "f32", "f64"]
@@ -52,6 +61,74 @@ def _sample(rng, dtype: str, spp: int) -> np.ndarray:
     info = np.iinfo(np_dt)
     lo, hi = max(int(info.min), -(2**52)), min(int(info.max), 2**52)
     return rng.integers(lo, hi, shape, endpoint=True).astype(np_dt)
+
+
+def _header(width, height, spp, planar, tile=None, rows_per_strip=None):
+    """A one-image TIFF header built in memory (no file behind it)."""
+    tw, th = tile or (None, None)
+    cw, ch = (tw, th) if tile else (width, min(rows_per_strip or height, height))
+    n = -(-width // cw) * -(-height // ch) * (spp if planar else 1)
+    img = TiffImage(
+        width=width, height=height, bits=[8] * spp, formats=[1] * spp, spp=spp,
+        planar=planar, compression=COMPRESSION_NONE, photometric=2 if spp == 3 else 1,
+        rows_per_strip=rows_per_strip, tile_w=tw, tile_h=th,
+        offsets=[100 * (k + 1) for k in range(n)], byte_counts=[10 + k for k in range(n)],
+    )
+    return TiffFile("/data/scene.tif", "<", [img], None, None, None, None, None, None)
+
+
+@pytest.mark.parametrize(
+    "width, height, spp, planar, tile, rps",
+    [
+        (4, 4, 3, False, (2, 2), None),  # tiled, chunky, exact
+        (5, 3, 3, True, (2, 2), None),  # tiled, planar, ragged width and height
+        (5, 4, 1, False, (2, 2), None),  # tiled, ragged width only
+        (4, 5, 3, True, (4, 2), None),  # tiled, one tile across, ragged height
+        (3, 4, 3, False, None, 2),  # strips, chunky, exact
+        (3, 5, 3, True, None, 2),  # strips, planar, short last strip
+        (6, 5, 1, False, None, 4),  # strips, short last strip
+        (3, 2, 3, False, None, 8),  # RowsPerStrip beyond the height: one strip
+        (3, 2, 1, False, None, None),  # no RowsPerStrip tag: one strip
+    ],
+)
+def test_chunk_descriptors_grid(width, height, spp, planar, tile, rps):
+    """Each chunk's grid position, band run, stored extent (tiles
+    padded, a short last strip not) and valid extent, walked as the
+    TIFF6 layout stores them: band run, then rows, then columns."""
+    tf = _header(width, height, spp, planar, tile, rps)
+    cw, ch = tile or (width, min(rps or height, height))
+    want = []
+    for run in range(spp if planar else 1):
+        for y0 in range(0, height, ch):
+            for x0 in range(0, width, cw):
+                h = min(ch, height - y0)
+                stored_h = ch if tile else h
+                want.append((run, x0, y0, cw, stored_h, min(cw, width - x0), h))
+    got = chunk_descriptors(tf)
+    cols = ("band_run", "x0", "y0", "stored_w", "stored_h", "w", "h")
+    assert [tuple(d[c] for c in cols) for d in got] == want
+    assert [d["chunk"] for d in got] == list(range(len(want)))
+    assert [(d["offset"], d["nbytes"]) for d in got] == list(
+        zip(tf.images[0].offsets, tf.images[0].byte_counts)
+    )
+    assert {(d["raster_id"], d["spp"], d["dtype"]) for d in got} == {
+        ("scene", 1 if planar else spp, "u8")
+    }
+
+
+def test_chunk_descriptors_ragged_planar_tiles_pinned():
+    """A 5x3 planar RGB image in 2x2 tiles: 3 x 2 tiles a band, the last
+    of band 2 padded to 1x1 valid pixel; one offset too many raises."""
+    got = chunk_descriptors(_header(5, 3, 3, True, (2, 2)))
+    assert len(got) == 18
+    last = got[-1]
+    assert (last["band_run"], last["x0"], last["y0"]) == (2, 4, 2)
+    assert (last["stored_w"], last["stored_h"], last["w"], last["h"]) == (2, 2, 1, 1)
+    tf = _header(5, 3, 3, True, (2, 2))
+    tf.images[0].offsets.append(9999)
+    tf.images[0].byte_counts.append(1)
+    with pytest.raises(ValueError, match="beyond 3 band runs"):
+        chunk_descriptors(tf)
 
 
 @pytest.fixture(scope="module")
@@ -215,6 +292,10 @@ def test_header_stages_equal_scalar_rows(spark, tmp_path):
     assert sorted(map(tuple, plan_df.collect())) == sorted(want)
     assert {w[cols.index("band_run")] for w in want if w[1] == "planar"} == {0, 1, 2}
     assert {w[cols.index("nodata")] for w in want} == {"0", None}
+    # the distributed and the driver-side catalog agree, geometry defaults included
+    assert sorted(map(tuple, register_files_df(spark, paths).collect())) == sorted(
+        map(tuple, raster_meta_df(spark, entries_from_files(paths)).collect())
+    )
     want = [r for p in paths for r in file_meta_rows(p)]
     got = meta_df.collect()
     assert sorted(map(tuple, got), key=lambda r: (r[1], r[2])) == sorted(

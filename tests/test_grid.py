@@ -94,3 +94,59 @@ class TestTileMath:
         for r in rows:
             assert r.i == g.tile_index(r.x, r.y), (r.x, r.y)
             assert r.o == g.tile_offset(g.tile_index(r.x, r.y), r.x, r.y), (r.x, r.y)
+
+
+class TestOverviewGeometry:
+    """The 2^k overview geometry of ``overview_cascade`` and of the
+    catalog's DTM pyramid, pinned to the figures of the halving each
+    used to spell for itself."""
+
+    def test_overview_cascade_geometries(self, spark):
+        from georaster_spark.operators.raster import overview_cascade
+
+        g = RasterGeometry(
+            width=401, height=199, tile_w=64, tile_h=20, origin_x=-180.0, origin_y=90.0,
+            px_sz_x=0.9, px_sz_y=-0.9, bands=3, planar=True,
+        )
+        px = spark.range(1).selectExpr(
+            "'r' AS raster_id", "0 AS band", "0 AS x", "0 AS y", "1.0d AS value"
+        )
+        cascade = overview_cascade(px, g, levels=4)
+        assert [i for i, _, _ in cascade] == [0, 1, 2, 3, 4]
+        assert [(c.width, c.height, c.px_sz_x, c.px_sz_y) for _, c, _ in cascade] == [
+            (401, 199, 0.9, -0.9),
+            (201, 100, 1.8, -1.8),
+            (101, 50, 3.6, -3.6),
+            (51, 25, 7.2, -7.2),
+            (26, 13, 14.4, -14.4),
+        ]
+        for _, c, _ in cascade:
+            assert (c.tile_w, c.tile_h, c.origin_x, c.origin_y, c.bands, c.planar) == (
+                64, 20, -180.0, 90.0, 3, True,
+            )
+
+    def test_fixture_entries_rows(self):
+        from georaster_spark.sources.raster_catalog import fixture_entries, meta_row
+
+        assert [meta_row(e) for e in fixture_entries()] == [
+            ("dtm5000", 0, 5000, 5000, 512, 512, 4250000.0, 2700000.0, 10.0, -10.0,
+             "u16", 1, False, 1, 10, 10, 120, 120),
+            ("dtm5000", 1, 2500, 2500, 512, 512, 4250000.0, 2700000.0, 20.0, -20.0,
+             "u16", 1, False, 1, 5, 5, 60, 60),
+            ("dtm5000", 2, 1250, 1250, 512, 512, 4250000.0, 2700000.0, 40.0, -40.0,
+             "u16", 1, False, 1, 3, 3, 286, 286),
+            ("dtm5000", 3, 625, 625, 512, 512, 4250000.0, 2700000.0, 80.0, -80.0,
+             "u16", 1, False, 1, 2, 2, 399, 399),
+            ("dtm5000", 4, 313, 313, 512, 512, 4250000.0, 2700000.0, 160.0, -160.0,
+             "u16", 1, False, 1, 1, 1, 199, 199),
+            ("world400", 0, 400, 200, 400, 20, -180.0, 90.0, 0.9, -0.9,
+             "rgb8", 3, True, 1, 1, 10, 0, 0),
+            ("strips1x9", 0, 1, 9, 1, 5, 0.0, 0.0, 1.0, 1.0,
+             "u8", 1, False, 1, 1, 2, 0, 1),
+            ("sat200", 0, 200, 200, 512, 512, 2747994.2968, 1205137.2435,
+             1.8898895579756552, -1.8898895306859578, "rgb8", 3, False, 3, 1, 1, 312, 312),
+            ("f32nan128", 0, 128, 128, 128, 16, 0.0, 0.0, 1.0, 1.0,
+             "f32", 1, False, 1, 1, 8, 0, 0),
+            ("byte20", 0, 20, 20, 20, 20, 440720.0, 3751320.0, 60.0, -60.0,
+             "u8", 1, False, 1, 1, 1, 0, 0),
+        ]

@@ -275,12 +275,14 @@ def test_reference_test_pixel(fixture_path):
 def test_dedup_and_counts(fixture_path):
     rd = P.PmtilesReader(fixture_path)
     h = rd.header
-    assert h.n_tile_entries == 12
+    # the two constant tiles have consecutive ids: one entry, run_length 2
+    assert h.n_addressed_tiles == 12
+    assert h.n_tile_entries == 11
     assert h.n_tile_contents == 11  # the two constant tiles share bytes
     t1 = rd.get_tile(12, 2120, 1430)
     t2 = rd.get_tile(12, 2121, 1430)
     assert t1 == t2 and t1 is not None
-    assert len(rd.entries()) == 12
+    assert len(rd.entries()) == 11
 
 
 def test_leaf_directories(tmp_path):
@@ -480,9 +482,9 @@ def test_grey_and_grey_alpha_tiles(spark, tmp_path):
 
 
 def test_tiles_df_expands_runs(spark, tmp_path):
-    """One directory entry with ``run_length`` 2 (the writer never
-    emits runs, so the archive is assembled here) yields a row for
-    each tile of the run, both from the entry's one decode."""
+    """One directory entry with ``run_length`` 2 (the archive is
+    assembled here, independent of the writer) yields a row for each
+    tile of the run, both from the entry's one decode."""
     tile = encode_png(np.arange(16, dtype=np.uint8).reshape(4, 4))
     root = P.serialize_directory([P.Entry(1, 0, len(tile), 2)])
     header = P.Header(

@@ -200,3 +200,41 @@ def test_http_response_roundtrip():
         "response", "http://e/x", 200, "text/html"
     )
     assert got == payload
+
+
+def test_multiline_body_text_through_both_extractors(spark, tmp_path, monkeypatch):
+    """A page whose body spans lines and holds inline tags extracts
+    whole, through the ``warc_ingest`` catalog entry and through the
+    crawl ingest job alike; a page without a body extracts as ""."""
+    import importlib.util
+
+    from georaster_spark import datagen, queries
+
+    body = "\n  <p>first line</p>\r\n  second <b>bold</b> line\n"
+    pages = {
+        "https://e.example/p/1": f"<html><head><title>t</title></head><body>{body}</body></html>",
+        "https://e.example/p/2": "<html><head></head></html>",
+    }
+    p = str(tmp_path / "multi.warc.gz")
+    write_warc(p, [
+        ("response", {
+            "WARC-Target-URI": url,
+            "WARC-Date": "2024-01-02T03:04:05Z",
+            "WARC-Identified-Content-Language": "en",
+        }, http_response_bytes(html.encode()))
+        for url, html in pages.items()
+    ])
+    want = {"https://e.example/p/1": body, "https://e.example/p/2": ""}
+
+    monkeypatch.setattr(datagen, "fixture_warc_paths", lambda: [p])
+    rows = queries.q_warc_ingest(spark, None).collect()
+    assert {r.url: r.text for r in rows} == want
+
+    spec = importlib.util.spec_from_file_location(
+        "crawl_ingest_job",
+        os.path.join(os.path.dirname(__file__), "..", "jobs", "crawl_ingest_job.py"),
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    rows = job.pages_from_warc(spark, [p], split_bytes=1 << 20, parts=4).collect()
+    assert {r.url: r.text for r in rows} == want
