@@ -25,7 +25,12 @@ byte-identity audit — the checksum of (url, text) per partition must
 match between pipeline entry and exit — is ``verify_text_identity``.
 
 Resume = ``left_anti`` join of the input's partitions against the
-committed lineage: done partitions are never recomputed.
+committed lineage: done partitions are never recomputed. Each resumed
+run appends one more snapshot, and the table is still read in one
+Parquet scan whatever the number of runs that wrote it. A run commits
+only onto the snapshot whose lineage it read, so two concurrent runs
+of a stage cannot both commit the same parts: the later one raises
+``icetable.CommitConflict``.
 """
 
 from __future__ import annotations
@@ -90,8 +95,13 @@ def run_stage(
     The output is written once and not persisted: each partition's
     ``output_rows``/``checksum`` come from a read-back of the written
     files (``write_table``'s ``extra`` function), before the commit.
-    Returns {"pending": n, "done_before": m}.
+    Raises ``icetable.CommitConflict`` if the table advanced after its
+    done parts were read. Returns {"pending": n, "done_before": m}.
     """
+    # the commit's basis: a run that commits after this read (say, a
+    # concurrent run of the same stage) makes this commit conflict
+    # instead of committing the same parts twice
+    basis = icetable.current_snapshot(output_path)
     done = sorted(done_partitions(output_path, stage))
     done_df = local_df(spark, [(p,) for p in done], f"{part_col} long")
     pending = source.join(F.broadcast(done_df), part_col, "left_anti")
@@ -127,8 +137,13 @@ def run_stage(
         ]
         return {"stage": stage, "lineage": rows}
 
-    mode = "append" if icetable.current_snapshot(output_path) else "overwrite"
-    icetable.write_table(out, output_path, mode=mode, extra=lineage_extra)
+    icetable.write_table(
+        out,
+        output_path,
+        mode="append" if basis else "overwrite",
+        extra=lineage_extra,
+        expected_parent=basis,
+    )
     return {"pending": len(in_rows), "done_before": len(done)}
 
 

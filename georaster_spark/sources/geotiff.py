@@ -507,17 +507,21 @@ def chunk_descriptors(tf: TiffFile, image_idx: int = 0) -> list[dict]:
     spb = g.tiles_per_band
     spp = g.spp()
     n_runs = g.bands // spp  # one run per band when planar, else one
+    # a list longer than the grid would wrap onto grid positions that
+    # already have a chunk, and a shorter one (or byte counts of another
+    # length) would drop chunks, so their pixels would vanish
+    n_chunks = n_runs * spb
+    if not len(img.offsets) == len(img.byte_counts) == n_chunks:
+        raise ValueError(
+            f"{tf.path}: {len(img.offsets)} chunk offsets and "
+            f"{len(img.byte_counts)} byte counts for a grid of "
+            f"{n_runs} band runs x {spb} = {n_chunks} chunks"
+        )
     raster_id = raster_id_of(tf.path)
     dtype = img.dtype()
     out = []
     for k, (off, cnt) in enumerate(zip(img.offsets, img.byte_counts)):
-        # run is derived unconditionally so that a CHUNKY image with
-        # more offset entries than its chunk grid raises too (k//spb
-        # exceeds the single run) instead of silently wrapping onto
-        # existing grid positions and double-counting pixels
         run, pos = divmod(k, spb)
-        if run >= n_runs:  # trailing entries beyond expected grid
-            raise ValueError(f"{tf.path}: chunk {k} beyond {n_runs} band runs x {spb}")
         row, col = divmod(pos, g.tiles_across)
         pad_right, pad_down = g.get_padding(pos)
         h = g.tile_h - pad_down

@@ -1,12 +1,15 @@
 """Iceberg-style table layer (engine op E10).
 
 The real Iceberg runtime jar is not in this image, so this module
-implements the same *contract* on plain partitioned Parquet:
+implements the same *contract* on plain Parquet files:
 
 - every write is a new immutable **snapshot** directory
-  (``data/snap-<id>/``) — readers never see partial writes;
-- a JSON **manifest** per snapshot records schema, partition
-  columns, per-file row counts, and parent snapshot (lineage);
+  (``data/snap-<id>/``) of flat Parquet files — readers never see
+  partial writes;
+- a JSON **manifest** per snapshot records schema, per-file paths,
+  sizes and column stats, and parent snapshot (lineage);
+- **one scan per read**: the live files, whichever commits wrote
+  them, are one Parquet ``FileScan``, however many commits there were;
 - a single **pointer file** (``metadata/current``) names the live
   snapshot; commits are atomic pointer swaps (``os.replace``) with
   **optimistic concurrency** — the swap happens only if the table
@@ -22,7 +25,8 @@ implements the same *contract* on plain partitioned Parquet:
   range cannot satisfy the predicate before Spark ever lists them —
   Iceberg's manifest-level ``lower_bounds``/``upper_bounds`` scan
   planning. With ``cluster_by`` layouts (disjoint key ranges per
-  file) a point/range read touches ~one file out of thousands.
+  file) a point/range read touches ~one file out of thousands. This
+  is the one pruning mechanism: there is no directory partitioning.
 
 The API is deliberately shaped so a real Iceberg catalog can replace
 it (``write_table`` ↔ ``df.writeTo(...).append``, ``read_table`` ↔
@@ -127,6 +131,26 @@ def current_snapshot(path: str) -> str | None:
             return f.read().strip()
     except FileNotFoundError:
         return None
+
+
+_UNCHECKED = object()
+
+
+def _set_pointer(path: str, snapshot_id: str, basis: object = _UNCHECKED) -> None:
+    """The one pointer write (write-temp+rename under the commit lock,
+    so a lock timeout leaks nothing): a commit's compare-and-swap on
+    ``basis``, or ``rollback``'s unchecked repoint."""
+    with _commit_lock(path):
+        cur = current_snapshot(path)
+        if basis is not _UNCHECKED and cur != basis:
+            raise CommitConflict(
+                f"table advanced to {cur} since basis {basis}; "
+                f"re-read and retry (snapshot {snapshot_id} orphaned)"
+            )
+        tmp = _pointer(path) + f".tmp-{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as f:
+            f.write(snapshot_id)
+        os.replace(tmp, _pointer(path))
 
 
 def read_manifest(path: str, snapshot_id: str | None = None) -> dict[str, Any]:
@@ -338,7 +362,6 @@ def plan_files(
 def write_table(
     df: DataFrame,
     path: str,
-    partition_by: list[str] | None = None,
     mode: str = "overwrite",
     extra: dict[str, Any] | Callable[[DataFrame], dict[str, Any]] | None = None,
     cluster_by: list[str] | None = None,
@@ -356,8 +379,11 @@ def write_table(
     pointer swap happens under a lock only if the table still points
     at that basis — a racing committer that won in between raises
     ``CommitConflict`` here instead of being silently clobbered
-    (lost update). Pass ``expected_parent`` to pin an explicit basis
-    (e.g. a snapshot id read earlier in a read-modify-write).
+    (lost update). Pass ``expected_parent`` to pin an explicit basis:
+    a read-modify-write (``merge_table``, ``compact``,
+    ``lineage.run_stage``) passes the snapshot id it read, so a commit
+    that lands between its read and its write conflicts instead of
+    being overwritten.
 
     ``extra`` is stored in the manifest as is, or, when it is a
     function, called with a DataFrame over the rows this call wrote
@@ -385,35 +411,9 @@ def write_table(
     if mode not in ("overwrite", "append"):
         raise ValueError(mode)
     parent = current_snapshot(path) if expected_parent == "auto" else expected_parent
-    if cluster_by:
-        cols = [df[c] for c in cluster_by]
-        df = (
-            df.repartitionByRange(n_files, *cols)
-            if n_files
-            else df.repartitionByRange(*cols)
-        ).sortWithinPartitions(*cols)
-    snapshot_id = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-    data_dir = os.path.join(path, "data", f"snap-{snapshot_id}")
-    writer = df.write.mode("errorifexists")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(data_dir)
-
-    files = []
-    for root, _dirs, names in os.walk(data_dir):
-        for n in names:
-            if n.endswith(".parquet"):
-                p = os.path.join(root, n)
-                files.append(
-                    {
-                        "path": os.path.relpath(p, path),
-                        "bytes": os.path.getsize(p),
-                        "stats": collect_file_stats(p),
-                    }
-                )
-    files.sort(key=lambda f: f["path"])  # part order == range order
+    pm = None
     if mode == "append" and parent is not None:
-        pm = read_manifest(path, parent)
+        pm = _flat(path, read_manifest(path, parent))
         # schema evolution (Iceberg add/drop-column semantics): the
         # APPEND's schema becomes the table schema; columns shared
         # with the parent must keep their types (a type change would
@@ -431,16 +431,34 @@ def write_table(
                     f"{fld.name} {old[fld.name].simpleString()} -> "
                     f"{fld.dataType.simpleString()}"
                 )
+    if cluster_by:
+        cols = [df[c] for c in cluster_by]
+        df = (
+            df.repartitionByRange(n_files, *cols)
+            if n_files
+            else df.repartitionByRange(*cols)
+        ).sortWithinPartitions(*cols)
+    snapshot_id = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
+    data_dir = os.path.join(path, "data", f"snap-{snapshot_id}")
+    df.write.mode("errorifexists").parquet(data_dir)
+
+    files = []
+    for n in sorted(os.listdir(data_dir)):  # part order == range order
+        p = os.path.join(data_dir, n)
+        if n.endswith(".parquet"):
+            files.append(
+                {"path": os.path.relpath(p, path), "bytes": os.path.getsize(p), "stats": collect_file_stats(p)}
+            )
+    if pm is not None:
         files = manifest_files(path, pm)[0] + files
     if callable(extra):
-        extra = extra(_scan(df.sparkSession, df.schema, data_dir, [data_dir]))
+        extra = extra(df.sparkSession.read.schema(df.schema).parquet(data_dir))
 
     manifest = {
         "snapshot_id": snapshot_id,
         "parent_snapshot_id": parent,
         "committed_at": time.time(),
         "schema": df.schema.jsonValue(),
-        "partition_by": partition_by or [],
         "mode": mode,
         "extra": extra or {},
     }
@@ -468,34 +486,20 @@ def write_table(
         manifest["files"] = files
     with open(_manifest_path(path, snapshot_id), "w") as f:
         json.dump(manifest, f)
-    # atomic commit: CAS on the basis snapshot, then write-temp+rename
-    # (tmp is created INSIDE the lock so a lock timeout leaks nothing)
-    with _commit_lock(path):
-        cur = current_snapshot(path)
-        if cur != parent:
-            raise CommitConflict(
-                f"table advanced to {cur} since basis {parent}; "
-                f"re-read and retry (snapshot {snapshot_id} orphaned)"
-            )
-        tmp = _pointer(path) + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(snapshot_id)
-        os.replace(tmp, _pointer(path))
+    _set_pointer(path, snapshot_id, basis=parent)
     return snapshot_id
 
 
-def _scan(spark: SparkSession, schema, base: str, paths: list[str]) -> DataFrame:
-    """Parquet ``paths`` (files or directories) under the snapshot
-    directory ``base`` (the one that sits directly above the
-    hive-style partition dirs), read with ``schema``.
-
-    The schema is the reader schema: no parquet footer is opened to
-    infer it, pre-evolution files read added columns as NULL of the
-    declared type, and columns the schema no longer carries are not
-    read. Hive partition columns come out after the data columns, so
-    the schema's column order is restored."""
-    d = spark.read.schema(schema).option("basePath", base).parquet(*paths)
-    return d.select(*schema.fieldNames())
+def _flat(path: str, m: dict[str, Any]) -> dict[str, Any]:
+    """``m``, unless it is an old directory-partitioned manifest, whose
+    partition values a flat scan of its files would read as NULL."""
+    if m.get("partition_by"):
+        raise ValueError(
+            f"{path}: snapshot {m['snapshot_id']} is directory-partitioned by "
+            f"{m['partition_by']}, whose values are not in its files; rewrite "
+            "the table from its snapshot directory with write_table"
+        )
+    return m
 
 
 def read_table(
@@ -508,29 +512,21 @@ def read_table(
     ``[(col, op, literal), ...]`` conjunction — prunes whole files
     via the manifest stats BEFORE Spark lists them, then is ALSO
     applied as a normal residual predicate (so results are exact
-    whatever the stats say; the stats only shrink the scan)."""
+    whatever the stats say; the stats only shrink the scan). The kept
+    files are one scan read with the manifest schema: no footer is
+    opened to infer it, and pre-evolution files read added columns as
+    NULL of the declared type."""
     from pyspark.sql.types import StructType
 
-    m = read_manifest(path, snapshot_id)
+    m = _flat(path, read_manifest(path, snapshot_id))
     schema = StructType.fromJson(m["schema"])
     cand = manifest_files(path, m, filters)[0]
-    use_files = [f for f in cand if not filters or file_matches(f, filters)]
+    use_files = [
+        os.path.join(path, f["path"]) for f in cand if not filters or file_matches(f, filters)
+    ]
     if not use_files:
         return _apply_residual(local_df(spark, [], schema), filters)
-    # group files by their snapshot dir: basePath must sit directly
-    # above the hive-style partition dirs for column recovery
-    by_snap: dict[str, list[str]] = {}
-    for f in use_files:
-        rel = f["path"]  # data/snap-<id>/[k=v/...]file.parquet
-        parts = rel.split(os.sep)
-        base = os.path.join(path, *parts[:2])
-        by_snap.setdefault(base, []).append(os.path.join(path, rel))
-
-    dfs = [_scan(spark, schema, base, files) for base, files in sorted(by_snap.items())]
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return _apply_residual(out, filters)
+    return _apply_residual(spark.read.schema(schema).parquet(*use_files), filters)
 
 
 _OPS = {
@@ -581,19 +577,19 @@ def merge_table(
         if dup:
             raise ValueError(f"merge_table: duplicate update key {dup[0][:len(key_cols)]}")
     m = read_manifest(path)
-    current = read_table(spark, path)
+    current = read_table(spark, path, snapshot_id=m["snapshot_id"])
     keys = updates.select(*key_cols).distinct()
     kept = current.join(keys, key_cols, "left_anti")
-    out = kept if delete else kept.unionByName(updates.select(*current.columns))
+    out = kept if delete else kept.union(updates.select(*current.columns))
     return write_table(
         out,
         path,
-        partition_by=m.get("partition_by") or None,
         mode="overwrite",
         extra={
             "merge": {"keys": key_cols, "delete": delete},
             "source_snapshot": m["snapshot_id"],
         },
+        expected_parent=m["snapshot_id"],
     )
 
 
@@ -608,17 +604,17 @@ def compact(
     state still works until expire_snapshots reclaims it). Rows and
     schema are unchanged — only layout."""
     m = read_manifest(path)
-    df = read_table(spark, path)
+    df = read_table(spark, path, snapshot_id=m["snapshot_id"])
     if not cluster_by:
         df = df.coalesce(target_files)
     return write_table(
         df,
         path,
-        partition_by=m.get("partition_by") or None,
         mode="overwrite",
         extra={"compaction": True, "source_snapshot": m["snapshot_id"]},
         cluster_by=cluster_by,
         n_files=target_files if cluster_by else None,
+        expected_parent=m["snapshot_id"],
     )
 
 
@@ -683,8 +679,4 @@ def rollback(path: str, snapshot_id: str) -> None:
     """Repoint ``current`` to an older snapshot (data retained)."""
     if not os.path.exists(_manifest_path(path, snapshot_id)):
         raise FileNotFoundError(f"snapshot {snapshot_id} not found in {path}")
-    with _commit_lock(path):
-        tmp = _pointer(path) + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(snapshot_id)
-        os.replace(tmp, _pointer(path))
+    _set_pointer(path, snapshot_id)

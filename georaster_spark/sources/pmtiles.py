@@ -493,9 +493,10 @@ def decode_tile(blob: bytes):
     reference's ``ImageReader::with_guessed_format().decode()``
     (``src/pmtiles.rs:30-32``), which trusts tile BYTES, not the
     archive's ``tile_type`` header field. PNG decodes through
-    ``sources/png.py``; WebP (lossless VP8L) through
-    ``sources/webp.py``. Anything else raises ``PmtilesError`` like
-    the reference's ``ImageError`` surface."""
+    ``sources/png.py``; WebP (lossless VP8L, and lossy VP8 through
+    ``sources/vp8.py``) through ``sources/webp.py``. Anything else
+    raises ``PmtilesError`` like the reference's ``ImageError``
+    surface."""
     if blob[:8] == b"\x89PNG\r\n\x1a\n":
         from georaster_spark.sources.png import decode_png
 
@@ -505,7 +506,7 @@ def decode_tile(blob: bytes):
 
         return decode_webp(blob)
     raise PmtilesError(
-        "unsupported tile format (PNG and lossless-WebP tile bytes are "
+        "unsupported tile format (PNG and WebP (lossless or lossy) tile bytes are "
         "decodable; the reference guesses per tile the same way, "
         "src/pmtiles.rs:30-32)"
     )

@@ -118,7 +118,9 @@ def test_chunk_descriptors_grid(width, height, spp, planar, tile, rps):
 
 def test_chunk_descriptors_ragged_planar_tiles_pinned():
     """A 5x3 planar RGB image in 2x2 tiles: 3 x 2 tiles a band, the last
-    of band 2 padded to 1x1 valid pixel; one offset too many raises."""
+    of band 2 padded to 1x1 valid pixel; one offset too many raises, and
+    so does an offset or byte-count list short of the grid, chunky or
+    planar, instead of dropping chunks."""
     got = chunk_descriptors(_header(5, 3, 3, True, (2, 2)))
     assert len(got) == 18
     last = got[-1]
@@ -127,8 +129,17 @@ def test_chunk_descriptors_ragged_planar_tiles_pinned():
     tf = _header(5, 3, 3, True, (2, 2))
     tf.images[0].offsets.append(9999)
     tf.images[0].byte_counts.append(1)
-    with pytest.raises(ValueError, match="beyond 3 band runs"):
+    with pytest.raises(ValueError, match="19 chunk offsets and 19 byte counts .* 3 band runs x 6 = 18"):
         chunk_descriptors(tf)
+    for planar, n in ((False, 4), (True, 12)):  # 4x4 RGB in 2x2 tiles
+        short_offsets = _header(4, 4, 3, planar, (2, 2))
+        short_offsets.images[0].offsets.pop()
+        with pytest.raises(ValueError, match=f"/data/scene.tif: {n - 1} chunk offsets and {n} byte counts"):
+            chunk_descriptors(short_offsets)
+        short_counts = _header(4, 4, 3, planar, (2, 2))
+        short_counts.images[0].byte_counts.pop()
+        with pytest.raises(ValueError, match=f"{n} chunk offsets and {n - 1} byte counts .* = {n} chunks"):
+            chunk_descriptors(short_counts)
 
 
 @pytest.fixture(scope="module")

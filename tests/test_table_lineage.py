@@ -28,7 +28,7 @@ def docs(spark):
 class TestIceTable:
     def test_snapshot_roundtrip(self, spark, docs, tmp_path):
         path = str(tmp_path / "t1")
-        snap1 = icetable.write_table(docs.select("url", "part"), path, partition_by=["part"])
+        snap1 = icetable.write_table(docs.select("url", "part"), path)
         back = icetable.read_table(spark, path)
         assert back.count() == 400
         assert set(back.columns) == {"url", "part"}
@@ -38,8 +38,8 @@ class TestIceTable:
         path = str(tmp_path / "t2")
         half1 = docs.where(F.col("part") < 4).select("url", "part")
         half2 = docs.where(F.col("part") >= 4).select("url", "part")
-        s1 = icetable.write_table(half1, path, partition_by=["part"])
-        s2 = icetable.write_table(half2, path, partition_by=["part"], mode="append")
+        s1 = icetable.write_table(half1, path)
+        s2 = icetable.write_table(half2, path, mode="append")
         assert icetable.read_table(spark, path).count() == 400
         assert icetable.read_table(spark, path, snapshot_id=s1).count() == half1.count()
         icetable.rollback(path, s1)
@@ -49,15 +49,36 @@ class TestIceTable:
         icetable.rollback(path, s2)
         assert [m["snapshot_id"] for m in icetable.committed_chain(path)] == [s1, s2]
 
-    def test_partition_pruning_on_read(self, spark, docs, tmp_path):
-        """Partition columns must survive the manifest read path so
-        filters prune at the file level."""
+    def test_appended_snapshots_read_in_one_scan(self, spark, docs, tmp_path):
+        """A table appended K=3 times reads the rows of all three
+        writes through one FileScan, not one scan per snapshot."""
         path = str(tmp_path / "t3")
-        icetable.write_table(docs.select("url", "part"), path, partition_by=["part"])
-        df = icetable.read_table(spark, path).where(F.col("part") == 3)
-        assert df.count() == 50
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters: [isnotnull(part" in plan
+        d = docs.select("url", "part")
+        writes = [d.where(F.col("part") % 3 == k) for k in range(3)]
+        for k, w in enumerate(writes):
+            icetable.write_table(w, path, mode="append" if k else "overwrite")
+        back = icetable.read_table(spark, path)
+        assert sorted(back.collect()) == sorted(r for w in writes for r in w.collect())
+        plan = back._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 1 and "Union" not in plan
+
+    def test_directory_partitioned_manifest_is_refused(self, spark, docs, tmp_path):
+        """A manifest with partition columns keeps their values in
+        directory names only, so a flat scan would read them as NULL:
+        reading it, or appending onto it, raises instead."""
+        import json
+
+        path = str(tmp_path / "t4")
+        snap = icetable.write_table(docs.select("url", "part"), path)
+        m = icetable.read_manifest(path)
+        m["partition_by"] = ["part"]
+        with open(icetable._manifest_path(path, snap), "w") as f:
+            json.dump(m, f)
+        with pytest.raises(ValueError, match=r"directory-partitioned by \['part'\]"):
+            icetable.read_table(spark, path)
+        with pytest.raises(ValueError, match="directory-partitioned"):
+            icetable.write_table(docs.select("url", "part"), path, mode="append")
+        assert icetable.current_snapshot(path) == snap
 
 
 class TestFileSkipping:
@@ -511,26 +532,6 @@ class TestMerge:
         assert t.where(F.col("part") < 2).count() == 0
 
 
-class TestPartitionedMaintenance:
-    def test_merge_and_compact_preserve_partitioning(self, spark, docs, tmp_path):
-        """merge/compact must carry the table's partition spec through
-        the rewrite — losing it would silently kill partition pruning."""
-        path = str(tmp_path / "t_part_maint")
-        icetable.write_table(docs.select("url", "part"), path, partition_by=["part"])
-        updates = spark.createDataFrame(
-            [("https://new.example/y", 3)], "url string, part long"
-        )
-        icetable.merge_table(spark, path, updates, key_cols=["url"])
-        assert icetable.read_manifest(path)["partition_by"] == ["part"]
-        icetable.compact(spark, path, target_files=2)
-        m = icetable.read_manifest(path)
-        assert m["partition_by"] == ["part"]
-        t = icetable.read_table(spark, path)
-        assert t.count() == 401
-        plan = t.where(F.col("part") == 3)._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters: [isnotnull(part" in plan
-
-
 class TestOptimisticCommit:
     def test_stale_basis_raises_commit_conflict(self, spark, docs, tmp_path):
         """A committer whose basis snapshot is no longer current must
@@ -553,6 +554,65 @@ class TestOptimisticCommit:
         assert icetable.read_table(spark, path).count() == 3
         chain = icetable.committed_chain(path)
         assert [c["snapshot_id"] for c in chain] == [s1, s2]
+
+    @staticmethod
+    def _race_after_read(monkeypatch, path, docs):
+        """Make the first ``icetable.read_table`` call commit a
+        competing append right after it returns; the competitor's
+        snapshot id lands in the returned list."""
+        read, won = icetable.read_table, []
+
+        def racing_read(*args, **kwargs):
+            df = read(*args, **kwargs)
+            if not won:
+                won.append(icetable.write_table(docs.select("url", "part").limit(3), path, mode="append"))
+            return df
+
+        monkeypatch.setattr(icetable, "read_table", racing_read)
+        return won
+
+    def test_merge_conflicts_with_a_commit_after_its_read(self, spark, docs, tmp_path, monkeypatch):
+        path = str(tmp_path / "t_merge_race")
+        icetable.write_table(docs.select("url", "part"), path)
+        won = self._race_after_read(monkeypatch, path, docs)
+        updates = docs.where(F.col("part") == 2).select("url", "part")
+        with pytest.raises(icetable.CommitConflict):
+            icetable.merge_table(spark, path, updates, key_cols=["url"])
+        monkeypatch.undo()
+        assert icetable.current_snapshot(path) == won[0]
+        assert icetable.read_table(spark, path).count() == 403
+
+    def test_compact_conflicts_with_a_commit_after_its_read(self, spark, docs, tmp_path, monkeypatch):
+        path = str(tmp_path / "t_compact_race")
+        icetable.write_table(docs.select("url", "part"), path)
+        won = self._race_after_read(monkeypatch, path, docs)
+        with pytest.raises(icetable.CommitConflict):
+            icetable.compact(spark, path, target_files=2)
+        monkeypatch.undo()
+        assert icetable.current_snapshot(path) == won[0]
+        assert icetable.read_table(spark, path).count() == 403
+
+    def test_run_stage_conflicts_with_a_concurrent_run(self, spark, docs, tmp_path):
+        """A second run of the same stage commits the pending parts
+        while the first is transforming them: the first must conflict,
+        not commit those parts (and their lineage rows) a second time."""
+        out_path = str(tmp_path / "out")
+        xform = TestLineageResume._xform
+        lineage.run_stage(spark, "s1", docs.where(F.col("part") < 4), xform, "part", out_path)
+        won = []
+
+        def racing(df):
+            if not won:
+                won.append(None)
+                lineage.run_stage(spark, "s1", docs, xform, "part", out_path)
+                won[0] = icetable.current_snapshot(out_path)
+            return xform(df)
+
+        with pytest.raises(icetable.CommitConflict):
+            lineage.run_stage(spark, "s1", docs, racing, "part", out_path)
+        assert icetable.current_snapshot(out_path) == won[0]
+        assert sorted(r["part"] for r in lineage.lineage_rows(out_path, "s1")) == list(range(8))
+        assert icetable.read_table(spark, out_path).count() == 400
 
     def test_auto_basis_sequential_commits_still_chain(self, spark, docs, tmp_path):
         path = str(tmp_path / "t2")
@@ -633,9 +693,9 @@ class TestSchemaEvolution:
         assert set(old.columns) == {"doc_id", "lang_id"} and old.count() == 10
 
     def test_read_uses_manifest_schema_and_column_order(self, spark, tmp_path):
-        """A partition column that is not last reads back in place and
-        with its declared type: a zero-padded string and a long, not
-        the int that partition-value inference would guess."""
+        """Columns read back in the manifest's order and with their
+        declared types: a zero-padded string stays a string and a long
+        stays a long."""
         from pyspark.sql import functions as F
 
         from georaster_spark.sources import icetable
@@ -647,7 +707,7 @@ class TestSchemaEvolution:
             (F.col("id") % 2).alias("part"),
             (F.col("id") / 4.0).alias("score"),
         )
-        icetable.write_table(df, path, partition_by=["zone", "part"])
+        icetable.write_table(df, path)
         manifest = [(f["name"], f["type"]) for f in icetable.read_manifest(path)["schema"]["fields"]]
         back = icetable.read_table(spark, path)
         assert [(f.name, f.dataType.typeName()) for f in back.schema] == manifest

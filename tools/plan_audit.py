@@ -26,7 +26,9 @@ Checked invariants:
   Filter repeating the cell encode);
 - raster stencils and resampling: one block Exchange into the kernel,
   no Python evaluator after it;
-- ice_prune: manifest stats prune files before Spark lists them.
+- ice_prune: manifest stats prune files before Spark lists them;
+- ice_appends: a table written as three appended snapshots reads as
+  one Parquet scan, with no Union of per-snapshot scans.
 
     python tools/plan_audit.py
 """
@@ -75,7 +77,8 @@ def _blank_partition_counts(plan: str) -> str:
 def normalize_ids(plan: str) -> str:
     """Blank what a session numbers as it goes (``#<exprId>``,
     ``plan_id=<n>``, ``RDD[<n>]``, lambda-variable suffixes, RDD call
-    sites, the identity hash of a folded array literal) and what
+    sites, the identity hash of a folded array literal, the snapshot
+    and part-file ids in a table's file paths) and what
     follows the core count (the partition count of
     ``hashpartitioning``/``rangepartitioning``, ``splits=Some(<n>)``)
     so dumps from different sessions and hosts diff cleanly; the
@@ -87,6 +90,8 @@ def normalize_ids(plan: str) -> str:
     plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
     plan = re.sub(r"UnsafeArrayData@[0-9a-f]+", "UnsafeArrayData@N", plan)
     plan = re.sub(r"(lambda \w+_)\d+", r"\1N", plan)
+    plan = re.sub(r"snap-\d+-[0-9a-f]+", "snap-N", plan)
+    plan = re.sub(r"(part-\d+)-[0-9a-f-]{36}", r"\1-N", plan)
     return re.sub(r" at (?:\S+\.java|<unknown>):\d+", "", plan)
 
 
@@ -334,6 +339,24 @@ def main() -> int:
         "ice_prune",
         "residual o_date filter pushed to the parquet scan",
         any("o_date" in l and "[]" not in l for l in p.splitlines() if "PushedFilters" in l),
+    )
+
+    # ice_appends: every snapshot's files in one scan, however many
+    # commits wrote the table
+    import shutil as _sh
+
+    _tbl = os.path.join(_tf.gettempdir(), "georaster_plan_audit_appends")
+    _sh.rmtree(_tbl, ignore_errors=True)
+    for k in range(3):
+        _ice.write_table(
+            spark.range(1000 * k, 1000 * (k + 1)), _tbl, mode="append" if k else "overwrite"
+        )
+    p = plans["ice_appends"] = explain_str(_ice.read_table(spark, _tbl))
+    _sh.rmtree(_tbl)
+    check(
+        "ice_appends",
+        "three appended snapshots read as exactly one Scan parquet, no Union",
+        n_nodes(p, "Scan parquet") == 1 and n_nodes(p, "Union") == 0,
     )
 
     # one per-row stage form: session.map_rows's Arrow kernel, never a
